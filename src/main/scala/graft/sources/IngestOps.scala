@@ -615,9 +615,10 @@ object IngestOps {
 
   /** Snapshot-versioned table emulation, written once per (dir,
     * fingerprint): three batch appends land like `Bulk:97-101` commits
-    * (days 1-5, 6-10, 11-15, one file per day partition), and after each
-    * commit a manifest under `metadata/snap-N.txt` records the data files
-    * that snapshot added — the Iceberg metadata-tree shape
+    * (days 1-5, 6-10, 11-15, one file per day partition), each one
+    * [[LakeOps.stage]] + [[LakeOps.commit]] with no ref, so the
+    * manifest `metadata/snap-N.txt` records exactly the data files that
+    * snapshot added — the Iceberg metadata-tree shape
     * (`Debug:164-196`) that makes both the history walk and time-travel
     * reads pure metadata operations afterwards. Returns the table root. */
   private[graft] def snapshotLayout(spark: SparkSession,
@@ -636,26 +637,16 @@ object IngestOps {
         fsExists(spark, s"$root/metadata/version-hint.text")) { tmpRoot =>
       val fs = new org.apache.hadoop.fs.Path(tmpRoot)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val data = s"$tmpRoot/data"
       val ev = eventsWithParts(spark, dir).filter(col("day").between(1, 15))
-      var seen = Set.empty[String]
-      val snapInfo = Seq.newBuilder[(Int, Long, Int)]
-      Seq((1, 5), (6, 10), (11, 15)).zipWithIndex.foreach {
-        case ((lo, hi), idx) =>
-          val mode = if (idx == 0) SaveMode.Overwrite else SaveMode.Append
+      val snapsSeq = Seq((1, 5), (6, 10), (11, 15)).map { case (lo, hi) =>
+        val delta = LakeOps.stage(spark, tmpRoot)(p =>
           ev.filter(col("day").between(lo, hi)).repartition(col("day"))
-            .write.mode(mode).partitionBy("day").parquet(data)
-          val now = listDataFiles(spark, data)
-          val delta = now -- seen
-          writeMetaLines(spark, tmpRoot,
-            s"metadata/snap-${idx + 1}.txt", delta)
-          // per-file stats sidecar (the DataFile metrics Iceberg records
-          // at write time) — priced as one scan of the commit's delta
-          writeStatsManifest(spark, tmpRoot,
-            s"snap-${idx + 1}.stats", delta)
-          snapInfo += ((idx + 1, 1705276800000L + (idx + 1) * 1000L,
-            delta.size))
-          seen = now
+            .write.partitionBy("day").parquet(p))
+        val n = LakeOps.commit(spark, tmpRoot, delta, ref = None)
+        // per-file stats sidecar (the DataFile metrics Iceberg records
+        // at write time) — priced as one scan of the commit's delta
+        writeStatsManifest(spark, tmpRoot, s"snap-$n.stats", delta)
+        (n, 1705276800000L + n * 1000L, delta.size)
       }
       // commit log: snapshot -> committed-at millis (the reference stamps
       // wall clock; deterministic literals per SURVEY §7.3 so the oracle
@@ -667,7 +658,6 @@ object IngestOps {
       // the Iceberg-v2 table-metadata wire format over the same state:
       // real avro manifests + manifest-lists, then the metadata.json
       // pointing at them
-      val snapsSeq = snapInfo.result()
       val lists = writeAvroManifests(spark, tmpRoot, snapsSeq)
       writeIcebergMetadataJson(spark, tmpRoot, snapsSeq, lists)
       fs.create(new org.apache.hadoop.fs.Path(tmpRoot, "metadata/_DONE"),
@@ -964,8 +954,11 @@ object IngestOps {
     // immutable base (LakeOps.cloneTree) — truncating through the link
     // would corrupt the base for every later clone. The unlink breaks
     // the link first, turning the no-in-place-mutation convention into a
-    // structural guarantee (r21 advice).
-    if (fs.exists(p)) fs.delete(p, false)
+    // structural guarantee — so a refused unlink must fail the write,
+    // never fall through to the truncating create.
+    if (fs.exists(p) && !fs.delete(p, false))
+      throw new java.io.IOException(
+        s"could not unlink $p before rewriting it")
     val os = fs.create(p, true)
     os.write(lines.toSeq.sorted.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -983,19 +976,14 @@ object IngestOps {
 
   /** Relative (to `data/`) paths of all parquet data files under `data`. */
   private[graft] def listDataFiles(spark: SparkSession,
-      data: String): Set[String] = listDataFiles(spark, data, Set(".parquet"))
-
-  /** Like [[listDataFiles]] but matching any of `exts` — a snapshot
-    * table's data files need not all be one format. */
-  private[graft] def listDataFiles(spark: SparkSession, data: String,
-      exts: Set[String]): Set[String] = {
+      data: String): Set[String] = {
     val p = new org.apache.hadoop.fs.Path(data)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val it = fs.listFiles(p, true)
     val b = Set.newBuilder[String]
     while (it.hasNext) {
       val f = it.next().getPath.toString
-      if (exts.exists(f.endsWith))
+      if (f.endsWith(".parquet"))
         b += f.substring(f.lastIndexOf("/data/") + 6)
     }
     b.result()
@@ -1203,18 +1191,13 @@ object IngestOps {
     val ev = eventsWithParts(spark, dir)
       .select($"event_id", $"user_id", $"event_type", $"value", $"day")
     // snapshot 1: the parquet era
-    ev.filter($"day".between(1, 5)).repartition($"day")
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("day").parquet(data)
-    val exts = Set(".parquet", ".orc")
-    val snap1 = listDataFiles(spark, data, exts)
-    writeMetaLines(spark, out, "metadata/snap-1.txt", snap1)
+    LakeOps.commit(spark, out, LakeOps.stage(spark, out)(LakeOps.dayParquet(
+      ev.filter($"day".between(1, 5)).repartition($"day"))), ref = None)
     // snapshot 2: the ORC era — appended, era 1 untouched
-    ev.filter($"day".between(6, 10)).repartition($"day")
-      .write.mode(SaveMode.Append).option("compression", "zstd")
-      .partitionBy("day").orc(data)
-    writeMetaLines(spark, out, "metadata/snap-2.txt",
-      listDataFiles(spark, data, exts) -- snap1)
+    LakeOps.commit(spark, out, LakeOps.stage(spark, out)(p =>
+      ev.filter($"day".between(6, 10)).repartition($"day")
+        .write.mode(SaveMode.Overwrite).option("compression", "zstd")
+        .partitionBy("day").orc(p)), ref = None)
     // live read: manifest-driven, each era through its native reader
     val rels = (1 to 2).flatMap(n => snapshotManifest(spark, out, n))
     def era(ext: String, rd: Seq[String] => DataFrame) = {

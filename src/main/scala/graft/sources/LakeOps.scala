@@ -80,7 +80,7 @@ object LakeOps {
     * writer crash inside the window leaves them until the op re-runs.
     * That is inherent to path-listing tables (Hive's insert-overwrite
     * has the same window); the engine's atomic path is the VERSIONED
-    * table ([[appendCommit]]/[[tryCommit]]), where manifests make
+    * table ([[stage]]/[[commit]]), where manifests make
     * every commit all-or-nothing and LakeSpec's fault injection proves
     * it. The keys on this path measure CoW rewrite choreography, not
     * isolation. */
@@ -477,15 +477,19 @@ object LakeOps {
       .orderBy($"day")
   }
 
-  /** One optimistic-concurrency commit attempt: CAS the manifest slot
-    * for snapshot `n`. The manifest is written COMPLETE to a private
-    * attempt file first, then the slot is claimed with an atomic hard
-    * link (link(2) fails with EEXIST) — so the slot can never hold a
-    * partial manifest, a failed write never occupies it, and two
-    * writers can never both win. Returns false when another writer owns
-    * the slot — the caller re-reads the table state and retries on the
-    * next one, exactly Iceberg's commit-retry loop against the catalog
-    * pointer. */
+  /** One optimistic-concurrency commit attempt: CAS the manifest slot for
+    * snapshot `n`. This link is the ONLY place an add manifest
+    * (`snap-N.txt`) of a versioned commit is written: every commit, append
+    * or replace, reaches it through [[stage]] then [[commit]] (EngineSpec
+    * lints the source for any other writer). A replace commit's removal
+    * manifest lands BEFORE this link and needs a single writer (see
+    * [[commit]]). The manifest is written COMPLETE to a private attempt
+    * file first, then the slot is claimed with an atomic hard link (link(2)
+    * fails with EEXIST) — so the slot can never hold a partial manifest, a
+    * failed write never occupies it, and two writers can never both win.
+    * Returns false when another writer owns the slot — the caller re-reads
+    * the table state and retries on the next one, exactly Iceberg's
+    * commit-retry loop against the catalog pointer. */
   private[graft] def tryCommit(spark: SparkSession, root: String, n: Int,
       files: Iterable[String],
       onStep: String => Unit = _ => ()): Boolean = {
@@ -514,9 +518,11 @@ object LakeOps {
   }
 
   /** Next free snapshot slot: max committed + 1 (re-listed per CAS
-    * attempt — the cross-process retry loop's re-read of table state). */
+    * attempt — the cross-process retry loop's re-read of table state);
+    * 1 for a table with no metadata yet. */
   private[graft] def nextSlot(root: String): Int = {
     val meta = java.nio.file.Paths.get(root, "metadata")
+    if (!java.nio.file.Files.isDirectory(meta)) return 1
     val snapRe = """snap-(\d+)\.txt""".r
     val st = java.nio.file.Files.list(meta)
     try st.toArray.toSeq
@@ -526,48 +532,34 @@ object LakeOps {
     finally st.close()
   }
 
-  /** The full append-commit choreography, multi-writer-safe across
-    * PROCESSES, in commit order: (1) data files land in a private
-    * staging dir (unique per writer — the only way to know EXACTLY
-    * which files are this commit's: a before/after directory diff of
-    * `data/` races a concurrent writer and would claim its files);
-    * (2) they move into `data/` under their job-unique names (invisible
-    * — readers plan from manifests, never directory listings); (3) the
-    * snapshot manifest is CAS'd into the next free slot ([[tryCommit]]:
-    * complete-in-attempt-file, then an atomic hard link), re-reading
-    * the slot number and retrying up to `maxAttempts` times when
-    * another writer wins the race — data files are REUSED across
-    * retries, exactly Iceberg's commit-retry loop; (4) the `main` ref
-    * moves, forward-only ([[setRefIfForward]]), so a slower writer can
-    * never unpublish a faster one's higher slot. Each boundary calls
-    * `onStep` ("staged" / "data-written" / "attempt-written" /
-    * "linked") — production passes the no-op, the crash-consistency
-    * specs throw there to prove a writer killed at ANY point leaves
-    * readers on the old snapshot (never a torn one) and leaves only
-    * debris [[orphanSweep]] can reclaim. This is the reference's
-    * atomic-commit contract (`Bulk:97-101`): the manifest link is the
-    * linearization point; everything before it is invisible. Returns
-    * the slot won, or -1 when every CAS attempt lost. */
-  private[graft] def appendCommit(spark: SparkSession, root: String,
-      slice: DataFrame, maxAttempts: Int = 1,
-      onStep: String => Unit = _ => ()): Int = {
-    import slice.sparkSession.implicits._
-    val data = s"$root/data"
-    val stage = s"$root/.stage-${java.lang.ProcessHandle.current().pid()}" +
+  /** The day-partitioned zstd parquet write most commits stage with. */
+  private[sources] def dayParquet(df: DataFrame)(path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).option("compression", "zstd")
+      .partitionBy("day").parquet(path)
+
+  /** Commit step 1, STAGE: `write` puts the commit's data files in a
+    * private staging dir (unique per writer and call), and they move
+    * into `data/` under their job-unique names; returns their paths
+    * relative to `data/`. Staging is how a commit knows EXACTLY which
+    * files are its own — a concurrent writer's files never enter the
+    * stage. Moved files are invisible until a manifest names them
+    * (readers plan from manifests, never directory listings). Hidden
+    * outputs (`_SUCCESS`, `.crc`) are dropped with the staging dir.
+    * Emits "staged" and "data-written". */
+  private[graft] def stage(spark: SparkSession, root: String,
+      onStep: String => Unit = _ => ())(write: String => Unit): Seq[String] = {
+    val dir = s"$root/.stage-${java.lang.ProcessHandle.current().pid()}" +
       s"-${Thread.currentThread().getId}-${System.nanoTime()}"
-    slice.repartition($"day")
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("day").parquet(stage)
+    write(dir)
     onStep("staged")
-    // publish bytes under their (job-UUID-unique) names: collision-free
-    // against any concurrent writer, so delta is known exactly
-    val stRoot = java.nio.file.Paths.get(stage)
+    val stRoot = java.nio.file.Paths.get(dir)
     val w = java.nio.file.Files.walk(stRoot)
-    val delta = try w.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
+    val added = try w.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(p => java.nio.file.Files.isRegularFile(p) &&
+        !p.getFileName.toString.matches("[_.].*"))
       .map { p =>
         val rel = stRoot.relativize(p).toString
-        val dst = java.nio.file.Paths.get(data, rel)
+        val dst = java.nio.file.Paths.get(root, "data", rel)
         java.nio.file.Files.createDirectories(dst.getParent)
         java.nio.file.Files.move(p, dst,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -575,26 +567,79 @@ object LakeOps {
       }
     finally w.close()
     org.apache.spark.network.util.JavaUtils
-      .deleteRecursively(new java.io.File(stage))
+      .deleteRecursively(new java.io.File(dir))
     onStep("data-written")
+    added
+  }
+
+  /** Commit step 2, PUBLISH: CAS a manifest naming `added` into the
+    * next free slot ([[tryCommit]]), re-reading the slot and retrying
+    * up to `maxAttempts` times when another writer wins — staged files
+    * are REUSED across retries. A REPLACE commit (non-empty `removed`)
+    * writes `snap-N.removed.txt` BEFORE the link, so the instant
+    * snapshot N becomes visible both halves exist: no reader can see
+    * the new files without the removal (doubled rows). That pre-link
+    * write is also why a replace commit needs a SINGLE writer — a racer
+    * winning slot N would adopt the removal set as its own — so it
+    * gets exactly one attempt, and callers must not race it. After the
+    * link, `ref` (if any) moves forward-only ([[setRefIfForward]]), so
+    * a slower writer never unpublishes a faster one's higher slot.
+    * Emits "attempt-written" (per attempt) and "linked". Returns the
+    * slot won, or -1 when every attempt lost. */
+  private[graft] def commit(spark: SparkSession, root: String,
+      added: Seq[String], removed: Seq[String] = Nil,
+      ref: Option[String] = Some("main"), maxAttempts: Int = 1,
+      onStep: String => Unit = _ => ()): Int = {
+    require(removed.isEmpty || maxAttempts == 1,
+      "a replace commit needs a single writer and cannot retry on a " +
+        "slot another writer may have taken")
     var attempt = 0
     var won = -1
     while (won < 0 && attempt < maxAttempts) {
       attempt += 1
       val slot = nextSlot(root)
-      if (tryCommit(spark, root, slot, delta, onStep)) won = slot
+      if (removed.nonEmpty)
+        writeManifest(spark, root, s"snap-$slot.removed.txt", removed)
+      if (tryCommit(spark, root, slot, added, onStep)) won = slot
     }
     if (won > 0) {
       onStep("linked")
-      setRefIfForward(spark, root, "main", won)
+      ref.foreach(setRefIfForward(spark, root, _, won))
     }
     won
   }
 
+  /** The append commit: [[stage]] `slice` as day-partitioned parquet, then
+    * [[commit]] it and move `main` — the one commit path every versioned
+    * write takes, here with no removal set, so it may retry and is
+    * multi-writer-safe across PROCESSES (replace commits write their
+    * removals before the link and need a single writer). Steps: "staged",
+    * "data-written", "attempt-written" (per CAS attempt), "linked".
+    * Production passes the no-op `onStep`; the crash-consistency specs
+    * throw there to prove a writer killed at ANY point leaves readers on
+    * the old snapshot (never a torn one) and leaves only debris
+    * [[orphanSweep]] can reclaim. This is the reference's atomic-commit
+    * contract (`Bulk:97-101`): the manifest link is the linearization
+    * point; everything before it is invisible. Returns the slot won, or -1
+    * when every CAS attempt lost. */
+  private[graft] def appendCommit(spark: SparkSession, root: String,
+      slice: DataFrame, maxAttempts: Int = 1,
+      onStep: String => Unit = _ => ()): Int = {
+    import slice.sparkSession.implicits._
+    commit(spark, root,
+      stage(spark, root, onStep)(dayParquet(slice.repartition($"day"))),
+      maxAttempts = maxAttempts, onStep = onStep)
+  }
+
   /** Orphan cleanup (Iceberg's `remove_orphan_files`): reclaim every
     * file a crashed writer left that NO committed snapshot references —
-    * data files absent from all `snap-*.txt` manifests, plus stale
-    * `*.attempt-*` CAS leftovers. Conservative by construction: a file
+    * data files absent from all `snap-*.txt` manifests, stale
+    * `*.attempt-*` CAS leftovers, and `snap-N.removed.txt` files with
+    * no `snap-N.txt` — a replace commit killed between its removal
+    * write and its link (a [[commit]] always links an adds manifest,
+    * empty for a pure delete, so a lone removal set is never a
+    * snapshot; left in place it would be adopted by the next commit
+    * to win slot N). Conservative by construction: a file
     * any manifest names is never touched, so a commit that reached its
     * link (even if the writer died before the ref move) keeps all its
     * files and stays recoverable by rolling the ref forward.
@@ -619,7 +664,8 @@ object LakeOps {
     val snaps = try st.toArray.toSeq
       .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
     finally st.close()
-    val referenced = snaps.collect { case snapRe(n) => n.toInt }
+    val linked = snaps.collect { case snapRe(n) => n.toInt }
+    val referenced = linked
       .flatMap(n => readManifest(spark, root, s"snap-$n.txt")).toSet
     val dataOrphans = (listData(spark, s"$root/data") -- referenced).toSeq
       .filter(rel => aged(java.nio.file.Paths.get(s"$root/data/$rel")))
@@ -627,9 +673,12 @@ object LakeOps {
     dataOrphans.foreach { rel =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/data/$rel"), false)
     }
-    val attemptOrphans = snaps.filter(_.contains(".attempt-"))
-      .filter(a => aged(meta.resolve(a)))
-    attemptOrphans.foreach(a => java.nio.file.Files.deleteIfExists(
+    val removedRe = """snap-(\d+)\.removed\.txt""".r
+    val metaOrphans = snaps.filter {
+      case removedRe(n) => !linked.contains(n.toInt)
+      case a => a.contains(".attempt-")
+    }.filter(a => aged(meta.resolve(a)))
+    metaOrphans.foreach(a => java.nio.file.Files.deleteIfExists(
       meta.resolve(a)))
     // staging dirs a writer abandoned before publishing any byte
     val rootSt = java.nio.file.Files.list(java.nio.file.Paths.get(root))
@@ -640,7 +689,7 @@ object LakeOps {
     stages.foreach(s => org.apache.spark.network.util.JavaUtils
       .deleteRecursively(s.toFile))
     dataOrphans.sorted.map(r => s"data/$r") ++
-      attemptOrphans.sorted.map(a => s"metadata/$a") ++
+      metaOrphans.sorted.map(a => s"metadata/$a") ++
       stages.map(s => s.getFileName.toString).sorted
   }
 
@@ -665,22 +714,14 @@ object LakeOps {
     import spark.implicits._
     val out = IngestOps.tmp("events_occ")
     writeVersioned(spark, dir, out)
-    val data = s"$out/data"
     // one source scan feeds both writers' appends (eager lineage cut)
     val ev = IngestOps.eventsWithParts(spark, dir)
       .select($"event_id", $"user_id", $"event_type", $"value", $"day")
       .filter($"day".between(16, 17))
       .localCheckpoint()
     // both writers' data files land first (data writes never conflict)
-    val before = listData(spark, data)
-    ev.filter($"day" === 16).repartition($"day")
-      .write.mode(SaveMode.Append).option("compression", "zstd")
-      .partitionBy("day").parquet(data)
-    val deltaA = listData(spark, data) -- before
-    ev.filter($"day" === 17).repartition($"day")
-      .write.mode(SaveMode.Append).option("compression", "zstd")
-      .partitionBy("day").parquet(data)
-    val deltaB = listData(spark, data) -- before -- deltaA
+    val Seq(deltaA, deltaB) = Seq(16, 17).map(d => stage(spark, out)(
+      dayParquet(ev.filter($"day" === d).repartition($"day"))))
     // the metadata race: both target slot 4; A wins, B retries on 5
     val aWon = tryCommit(spark, out, 4, deltaA)
     val bFirst = tryCommit(spark, out, 4, deltaB)
@@ -889,37 +930,29 @@ object LakeOps {
     added.filterNot(removed)
   }
 
-  /** Fresh 3-snapshot append table at `out` (days 1-5 / 6-10 / 11-15);
-    * snapshot 1 lands fragmented (≈4 files per day) so a later compaction
-    * commit has real work. */
-  /** Returns the checkpointed source frame so callers committing
-    * further snapshots ([[manifestsLayout]]) reuse the one scan.
-    * `sliceFiles` = files-per-day per commit slice (snapshot 1 lands
-    * fragmented by default so compaction keys have real work). */
+  /** Fresh 3-snapshot append table at `out` (days 1-5 / 6-10 / 11-15),
+    * one [[commit]] per slice and no ref. `sliceFiles` = files per day
+    * per slice: snapshot 1 lands fragmented by default so compaction
+    * keys have real work. Returns the checkpointed source frame so
+    * callers committing further snapshots ([[manifestsLayout]]) reuse
+    * the one scan. */
   private def buildVersioned(spark: SparkSession, dir: String,
       out: String, sliceFiles: Seq[Int] = Seq(4, 1, 1)): DataFrame = {
     import spark.implicits._
     hfs(spark, out).delete(new org.apache.hadoop.fs.Path(out), true)
-    val data = s"$out/data"
     // one source scan feeds all three commit slices (eager lineage cut);
     // without it each append re-reads and re-derives the events table
     val ev = IngestOps.eventsWithParts(spark, dir)
       .filter($"day".between(1, 15))
       .select($"event_id", $"user_id", $"event_type", $"value", $"day")
       .localCheckpoint()
-    var seen = Set.empty[String]
-    Seq((1, 5), (6, 10), (11, 15)).zip(sliceFiles).zipWithIndex.foreach {
-      case (((lo, hi), nf), idx) =>
-        val mode = if (idx == 0) SaveMode.Overwrite else SaveMode.Append
+    Seq((1, 5), (6, 10), (11, 15)).zip(sliceFiles).foreach {
+      case ((lo, hi), nf) =>
         val slice = ev.filter($"day".between(lo, hi))
         val shaped = if (nf == 1) slice.repartition($"day")
           else slice.repartition(nf * (hi - lo + 1),
             $"day", pmod($"event_id", lit(nf)))
-        shaped.write.mode(mode).option("compression", "zstd")
-          .partitionBy("day").parquet(data)
-        val now = listData(spark, data)
-        writeManifest(spark, out, s"snap-${idx + 1}.txt", now -- seen)
-        seen = now
+        commit(spark, out, stage(spark, out)(dayParquet(shaped)), ref = None)
     }
     ev
   }
@@ -1044,22 +1077,13 @@ object LakeOps {
     IngestOps.buildShared(spark, out, root =>
       IngestOps.fsExists(spark, s"$root/metadata/_DONE_HISTORY")) { root =>
       writeVersioned(spark, dir, root)
-      val data = s"$root/data"
-      val before = listData(spark, data)
-      IngestOps.eventsWithParts(spark, dir)
-        .filter($"day".between(11, 12) && $"event_type" === "purchase")
-        .select($"event_id", $"user_id", $"event_type", $"value", $"day")
-        .repartition($"day")
-        .write.mode(SaveMode.Append).option("compression", "zstd")
-        .partitionBy("day").parquet(data)
-      writeManifest(spark, root, "snap-4.txt",
-        listData(spark, data) -- before)
+      commit(spark, root, stage(spark, root)(dayParquet(
+        divergentPurchases(spark, dir).repartition($"day"))))
       writeManifest(spark, root, "parents.txt", Seq("2=1", "3=2", "4=2"))
-      setRef(spark, root, "main", 4)
       // the made-current log (seq=snap): 1, 2, 3 committed; rollback to
-      // 2; divergent 4 lands. Written AFTER setRef (which now appends
-      // main moves itself) so the fixture's exact choreography — five
-      // events including the rollback — is the authoritative log
+      // 2; divergent 4 lands. Written AFTER the commit's main move (which
+      // appends to the log itself) so the fixture's exact choreography —
+      // five events including the rollback — is the authoritative log
       writeManifest(spark, root, "ref-log.txt",
         Seq("1=1", "2=2", "3=3", "4=2", "5=4"))
       // completeness marker LAST — this write is the publish
@@ -1079,21 +1103,17 @@ object LakeOps {
     val out = IngestOps.sharedFor(spark, "events_manifests", dir)
     IngestOps.buildShared(spark, out, root =>
       IngestOps.fsExists(spark, s"$root/metadata/_DONE_MANIFESTS")) { root =>
-      val data = s"$root/data"
       // the three-commit choreography IS buildVersioned's, unfragmented
       // (this fixture exercises manifest planning, not compaction work);
       // the returned checkpointed source feeds the 4th commit below
       val ev = buildVersioned(spark, dir, root, sliceFiles = Seq(1, 1, 1))
-      val seen = listData(spark, data)
       // snapshot 4: compact days 1-3 — new files in, old files removed
       val oldDays = liveFiles(spark, root, 1 to 3)
         .filter(rel => "day=(\\d+)/".r.findFirstMatchIn(rel)
           .exists(_.group(1).toInt <= 3))
-      ev.filter($"day" <= 3).repartition($"day")
-        .write.mode(SaveMode.Append).option("compression", "zstd")
-        .partitionBy("day").parquet(data)
-      writeManifest(spark, root, "snap-4.txt", listData(spark, data) -- seen)
-      writeManifest(spark, root, "snap-4.removed.txt", oldDays)
+      commit(spark, root, stage(spark, root)(dayParquet(
+        ev.filter($"day" <= 3).repartition($"day"))),
+        removed = oldDays, ref = None)
       IngestOps.writeMetaLines(spark, root, "metadata/_DONE_MANIFESTS",
         Seq("done"))
     }
@@ -1245,30 +1265,18 @@ object LakeOps {
     IngestOps.buildShared(spark, base, root =>
       IngestOps.fsExists(spark, s"$root/metadata/_DONE_EXPIREBASE")) { root =>
       writeVersioned(spark, dir, root)
-      val data = s"$root/data"
       // the tag lands before maintenance, like a release pin in real life
       setRef(spark, root, "v1", 1)
       // snapshot 4: compaction replace-commit over the fragmented region
-      val frag = liveFiles(spark, root, Seq(1))
-      val before4 = listData(spark, data)
-      readLive(spark, root, Seq(1)).repartition($"day")
-        .write.mode(SaveMode.Append).option("compression", "zstd")
-        .partitionBy("day").parquet(data)
-      writeManifest(spark, root, "snap-4.txt",
-        listData(spark, data) -- before4)
-      writeManifest(spark, root, "snap-4.removed.txt", frag)
+      commit(spark, root, stage(spark, root)(dayParquet(
+        readLive(spark, root, Seq(1)).repartition($"day"))),
+        removed = liveFiles(spark, root, Seq(1)), ref = None)
       // snapshot 5: re-cluster days 6-10 (replaces snapshot 2's files —
       // the region NO ref pins, so expiry may reclaim the originals)
-      val mid = readManifest(spark, root, "snap-2.txt")
-      val before5 = listData(spark, data)
-      readLive(spark, root, Seq(2)).repartition($"day")
-        .sortWithinPartitions($"user_id")
-        .write.mode(SaveMode.Append).option("compression", "zstd")
-        .partitionBy("day").parquet(data)
-      writeManifest(spark, root, "snap-5.txt",
-        listData(spark, data) -- before5)
-      writeManifest(spark, root, "snap-5.removed.txt", mid)
-      setRef(spark, root, "main", 5)
+      commit(spark, root, stage(spark, root)(dayParquet(
+        readLive(spark, root, Seq(2)).repartition($"day")
+          .sortWithinPartitions($"user_id"))),
+        removed = readManifest(spark, root, "snap-2.txt"))
       IngestOps.writeMetaLines(spark, root, "metadata/_DONE_EXPIREBASE",
         Seq("done"))
     }
@@ -1450,6 +1458,17 @@ object LakeOps {
       .orderBy($"snapshot_id", $"kind")
   }
 
+  /** Snapshot 4 of the rollback lifecycle ([[rollbackSnapshot]] and its
+    * persisted twin [[historyLayout]]): only the day 11-12 purchases,
+    * committed on top of the rolled-back snapshot 2. */
+  private def divergentPurchases(spark: SparkSession,
+      dir: String): DataFrame = {
+    import spark.implicits._
+    IngestOps.eventsWithParts(spark, dir)
+      .filter($"day".between(11, 12) && $"event_type" === "purchase")
+      .select($"event_id", $"user_id", $"event_type", $"value", $"day")
+  }
+
   /** `rollback_snapshot` — time-travel WRITE (`TimeEx:198-230` lists
     * snapshots precisely so one can be rolled back to): current moves
     * from snapshot 3 back to 2 (a metadata pointer write — no data IO),
@@ -1463,16 +1482,9 @@ object LakeOps {
     val out = IngestOps.tmp("events_rollback")
     writeVersioned(spark, dir, out)
     setRef(spark, out, "main", 2) // the rollback: one ref move
-    val data = s"$out/data"
-    val before = listData(spark, data)
-    IngestOps.eventsWithParts(spark, dir)
-      .filter($"day".between(11, 12) && $"event_type" === "purchase")
-      .select($"event_id", $"user_id", $"event_type", $"value", $"day")
-      .repartition($"day")
-      .write.mode(SaveMode.Append).option("compression", "zstd")
-      .partitionBy("day").parquet(data)
-    writeManifest(spark, out, "snap-4.txt", listData(spark, data) -- before)
-    setRef(spark, out, "main", 4)
+    // the divergent snapshot 4 commits on top of 2 and main moves to it
+    commit(spark, out, stage(spark, out)(dayParquet(
+      divergentPurchases(spark, dir).repartition($"day"))))
     readLive(spark, out, Seq(1, 2, 4))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"), countDistinct($"user_id").as("n_users"),
@@ -1504,20 +1516,16 @@ object LakeOps {
     val out = IngestOps.tmp(if (corrupt) "events_wap_fail" else "events_wap")
     writeVersioned(spark, dir, out)
     setRef(spark, out, "main", 3)
-    val data = s"$out/data"
     // stage: commit snapshot 4 on the AUDIT branch — main doesn't move
-    val before = listData(spark, data)
     val stagedIn = IngestOps.eventsWithParts(spark, dir)
       .filter($"day".between(16, 18))
       .select($"event_id", $"user_id", $"event_type", $"value", $"day")
     val shaped = if (corrupt) stagedIn.withColumn("user_id",
       when(pmod($"event_id", lit(10L)) === 0, lit(null)).otherwise($"user_id"))
     else stagedIn
-    shaped.repartition($"day")
-      .write.mode(SaveMode.Append).option("compression", "zstd")
-      .partitionBy("day").parquet(data)
-    writeManifest(spark, out, "snap-4.txt", listData(spark, data) -- before)
-    setRef(spark, out, "audit", 4)
+    commit(spark, out,
+      stage(spark, out)(dayParquet(shaped.repartition($"day"))),
+      ref = Some("audit"))
     // audit: validate ONLY the staged delta (snapshot 4's file list)
     val staged = readLive(spark, out, Seq(4))
     val audit = staged.agg(
@@ -1561,16 +1569,12 @@ object LakeOps {
     setRef(spark, out, "main", 3)
     setRef(spark, out, "v1", 2) // a TAG: an immutable snapshot name
     // commit snapshot 4 on the audit branch; main stays at 3
-    val data = s"$out/data"
-    val before = listData(spark, data)
-    IngestOps.eventsWithParts(spark, dir)
-      .filter($"day".between(16, 18))
-      .select($"event_id", $"user_id", $"event_type", $"value", $"day")
-      .repartition($"day")
-      .write.mode(SaveMode.Append).option("compression", "zstd")
-      .partitionBy("day").parquet(data)
-    writeManifest(spark, out, "snap-4.txt", listData(spark, data) -- before)
-    setRef(spark, out, "audit", 4)
+    commit(spark, out, stage(spark, out)(dayParquet(
+      IngestOps.eventsWithParts(spark, dir)
+        .filter($"day".between(16, 18))
+        .select($"event_id", $"user_id", $"event_type", $"value", $"day")
+        .repartition($"day"))),
+      ref = Some("audit"))
     val refs = readRefs(spark, out)
     Seq("audit", "main", "v1").map { name =>
       readLive(spark, out, 1 to refs(name))

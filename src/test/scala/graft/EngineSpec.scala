@@ -52,12 +52,10 @@ class EngineSpec extends SparkSpecBase {
     }
   }
 
-  test("Fixtures.prewarm covers every buildShared site and every " +
-      "builder completes") {
+  /** (file name, trimmed non-comment lines) of every main source file —
+    * the walk the source cross-checks below share. */
+  private lazy val mainSources: Seq[(String, Seq[String])] = {
     import scala.jdk.CollectionConverters._
-    // tripwire: a new buildShared call site without a Fixtures entry
-    // would rebuild inside the timed bench loop on the next corpus
-    // regeneration (the r10 1.66× artifact)
     val srcRoot = Seq(
       java.nio.file.Paths.get("src/main/scala"),
       java.nio.file.Paths.get(
@@ -66,15 +64,24 @@ class EngineSpec extends SparkSpecBase {
       .find(java.nio.file.Files.isDirectory(_))
       .getOrElse(fail("src/main/scala not found from cwd or " +
         "graft.repo.root — set -Dgraft.repo.root"))
-    val perFile: Seq[Seq[String]] = java.nio.file.Files.walk(srcRoot)
+    java.nio.file.Files.walk(srcRoot)
       .iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .map(p => java.nio.file.Files.readAllLines(p).asScala
+      .map(p => p.getFileName.toString -> java.nio.file.Files
+        .readAllLines(p).asScala
         .map(_.trim)
         .filterNot(l => l.startsWith("//") || l.startsWith("*") ||
           l.startsWith("/*"))   // comments are not call sites
         .toSeq)
       .toSeq
+  }
+
+  test("Fixtures.prewarm covers every buildShared site and every " +
+      "builder completes") {
+    // tripwire: a new buildShared call site without a Fixtures entry
+    // would rebuild inside the timed bench loop on the next corpus
+    // regeneration (the r10 1.66× artifact)
+    val perFile: Seq[Seq[String]] = mainSources.map(_._2)
     def sites(lines: Seq[String], call: String) = lines.count(l =>
       l.contains(call) && !l.contains("def " + call.stripSuffix("(")))
     // per file: direct buildShared call sites are each a layout, EXCEPT
@@ -96,6 +103,51 @@ class EngineSpec extends SparkSpecBase {
         case e: Throwable => fail(s"builder $name failed: ${e.getMessage}")
       }
     }
+  }
+
+  test("snapshot add manifests (snap-<n>.txt) are written only by " +
+      "tryCommit's link, plus an explicit two-entry allowlist") {
+    // every versioned commit publishes through stage → commit →
+    // tryCommit; a hand-written add manifest is a second commit path —
+    // one that skips the CAS and, when it lists data/ before and after
+    // a write, claims a concurrent writer's files as its own
+    val allowed = Map(
+      "manifestRewrite" -> "the FULL manifest re-lists live files, adds none",
+      "tableClone" -> "B|/L| manifests resolve against two storage roots")
+    val addManifest = """snap-(\$\{[^}"]*\}|\$\w+|\d+)\.txt"""".r
+    val writeCall =
+      """\b(writeManifest|writeMetaLines|createLink|write|create|move|copy)\(""".r
+    val defName = """\bdef (\w+)""".r
+    // statements = lines joined until parentheses balance, each tagged
+    // with the innermost def opened before it
+    val writers = mainSources.flatMap { case (file, lines) =>
+      var depth = 0
+      var enclosing = "<top>"
+      val stmt = new StringBuilder
+      lines.map(_.replaceAll("""\s//\s.*$""", "")).flatMap { l =>
+        if (depth == 0)
+          defName.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
+        stmt.append(l).append('\n')
+        depth = math.max(0, depth + l.count(_ == '(') - l.count(_ == ')'))
+        if (depth > 0) None
+        else {
+          val text = stmt.result(); stmt.clear()
+          if (addManifest.findFirstIn(text).isDefined &&
+            writeCall.findFirstIn(text).isDefined)
+            Some(enclosing -> s"$file: ${text.trim.take(160)}")
+          else None
+        }
+      }
+    }
+    val offenders = writers.filterNot(w =>
+      w._1 == "tryCommit" || allowed.contains(w._1))
+    assert(offenders.isEmpty, "snap-<n>.txt written outside tryCommit:\n  " +
+      offenders.map { case (d, t) => s"$d — $t" }.mkString("\n  "))
+    // the lint still sees the real link, and no allowlist entry is stale
+    val found = writers.map(_._1).toSet
+    assert(found("tryCommit"), s"tryCommit's link not found: $found")
+    allowed.foreach { case (d, why) =>
+      assert(found(d), s"stale allowlist entry $d ($why)") }
   }
 
   test("gen_events is deterministic and respects the reference domains") {

@@ -584,6 +584,36 @@ class IngestSpec extends SparkSpecBase {
     assert(v1Mtimes() == before, "column drop rewrote v1 data files")
   }
 
+  test("writeMetaLines fails loudly when the unlink before a rewrite is " +
+      "refused, instead of truncating through a hard link") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import java.nio.file.Files
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.nodelete.impl", classOf[DeleteRefusingFileSystem].getName)
+    hc.setBoolean("fs.nodelete.impl.disable.cache", true)
+    try {
+      val dir = java.nio.file.Paths.get(
+        graft.sources.IngestOps.tmp("meta_nodelete"))
+      Files.createDirectories(dir)
+      val base = dir.resolve("base.txt")
+      val clone = dir.resolve("clone.txt")
+      Seq(clone, base).foreach(Files.deleteIfExists)
+      Files.write(base, "a\nb".getBytes(UTF_8))
+      // a cloned metadata file: a hard link into a shared base
+      Files.createLink(clone, base)
+      val e = intercept[java.io.IOException] {
+        graft.sources.IngestOps.writeMetaLines(spark, s"nodelete://$dir",
+          "clone.txt", Seq("z"))
+      }
+      assert(e.getMessage.contains("unlink"), e.getMessage)
+      assert(new String(Files.readAllBytes(base), UTF_8) == "a\nb",
+        "the rewrite truncated the shared base through the link")
+    } finally {
+      hc.unset("fs.nodelete.impl")
+      hc.unset("fs.nodelete.impl.disable.cache")
+    }
+  }
+
   test("snapshot_mixed_format: era 1 is parquet, era 2 is ORC appended " +
       "without touching era 1, and the union answers correctly") {
     import org.apache.spark.sql.functions._
@@ -919,4 +949,14 @@ class IngestSpec extends SparkSpecBase {
       assert(fp.contains(s"day=$day/"), s"partition tuple wrong: $day")
     }
   }
+}
+
+/** A local filesystem under the `nodelete:` scheme whose deletes all
+  * report failure (as a permission-restricted mount or an object store
+  * may) — [[IngestSpec]] drives `writeMetaLines` through it. */
+class DeleteRefusingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("nodelete:///")
+  override def getScheme: String = "nodelete"
+  override def delete(p: org.apache.hadoop.fs.Path,
+      recursive: Boolean): Boolean = false
 }

@@ -763,14 +763,18 @@ class LakeSpec extends SparkSpecBase {
       s"shuffle under the bucketed join:\n${smj.get}")
   }
 
-  // --- crash consistency: appendCommit killed at every step ------------
+  // --- crash consistency: every commit killed at every step ----------
   // The atomic-commit contract under fault injection: a writer that dies
   // at ANY boundary of the choreography (data files landed / manifest
   // attempt written / manifest linked but ref unmoved) must leave the
   // default reader (follow `main`) bit-identical to the pre-commit view,
   // must never expose a torn snapshot to time travel, and must leave
   // only debris orphanSweep reclaims — after which a retried commit
-  // lands the append exactly once.
+  // lands exactly once. Two inputs run through the same kill points: an
+  // append (appendCommit of day 16), and a REPLACE commit compacting
+  // snapshot 1's fragments with the fragments as its removal set. The
+  // replace writes its removal manifest before the link, so a kill at
+  // 'attempt-written' also leaves an unlinked snap-4.removed.txt.
 
   /** Order-independent exact fingerprint: (row count, multiset checksum
     * of event ids) — wrap-around addition is deterministic. */
@@ -783,30 +787,53 @@ class LakeSpec extends SparkSpecBase {
 
   private case class Kill(step: String) extends RuntimeException(step)
 
-  for (kp <- Seq("staged", "data-written", "attempt-written", "linked"))
-  test(s"crash consistency at '$kp': reader stays on the old snapshot, " +
+  for (replace <- Seq(false, true);
+       kp <- Seq("staged", "data-written", "attempt-written", "linked"))
+  test(if (replace) s"crash consistency of a replace commit at '$kp': " +
+      "pinned and current readers unchanged, orphan sweep reclaims " +
+      "exactly the debris, retry lands exactly once"
+    else s"crash consistency at '$kp': reader stays on the old snapshot, " +
       "orphan sweep reclaims the debris, retry lands exactly once") {
     import spark.implicits._
     val L = sources.LakeOps
-    val out = sources.IngestOps.tmp(s"events_crash_${kp.replace('-', '_')}")
+    val out = sources.IngestOps.tmp(s"events_crash_" +
+      (if (replace) "replace_" else "") + kp.replace('-', '_'))
     L.cloneTree(L.versionedBaseLayout(spark, sf), out)
     L.setRef(spark, out, "main", 3)
     val baseline = fingerprint(L.readCurrent(spark, out))
-    val slice = sources.IngestOps.eventsWithParts(spark, sf)
-      .filter($"day" === 16)
-      .select($"event_id", $"user_id", $"event_type", $"value", $"day")
-      .localCheckpoint()
-    val sliceN = slice.count()
-    assert(sliceN > 0, "fixture must have day-16 rows to append")
-    val sliceSum = slice.agg(sum(pmod(xxhash64($"event_id"),
-      lit(1000000007L)))).collect().head.getLong(0)
+    val pinned = fingerprint(L.readLive(spark, out, Seq(1)))
+    val frag = L.liveFiles(spark, out, Seq(1))
+    // the commit under test, and the (rows, checksum) it adds to the view
+    val (commitWith, (addN, addSum)) = if (replace) {
+      // single-writer rule: a replace commit never enters the retry loop
+      intercept[IllegalArgumentException](
+        L.commit(spark, out, Nil, removed = frag, maxAttempts = 2))
+      val compacted = L.readLive(spark, out, Seq(1)).localCheckpoint()
+      ((onStep: String => Unit) => L.commit(spark, out,
+        L.stage(spark, out, onStep)(p => compacted.repartition($"day")
+          .write.option("compression", "zstd").partitionBy("day").parquet(p)),
+        removed = frag, onStep = onStep), (0L, 0L))
+    } else {
+      val slice = sources.IngestOps.eventsWithParts(spark, sf)
+        .filter($"day" === 16)
+        .select($"event_id", $"user_id", $"event_type", $"value", $"day")
+        .localCheckpoint()
+      val sliceN = slice.count()
+      assert(sliceN > 0, "fixture must have day-16 rows to append")
+      val sliceSum = slice.agg(sum(pmod(xxhash64($"event_id"),
+        lit(1000000007L)))).collect().head.getLong(0)
+      ((onStep: String => Unit) =>
+        L.appendCommit(spark, out, slice, onStep = onStep), (sliceN, sliceSum))
+    }
+    val dataBefore = sources.IngestOps.listDataFiles(spark, s"$out/data")
     intercept[Kill] {
-      L.appendCommit(spark, out, slice,
-        onStep = s => if (s == kp) throw Kill(s))
+      commitWith(s => if (s == kp) throw Kill(s))
     }
     // 1) the default reader is untouched at every kill point
     assert(fingerprint(L.readCurrent(spark, out)) == baseline,
       s"reader view changed after a writer died at $kp")
+    assert(fingerprint(L.readLive(spark, out, Seq(1))) == pinned,
+      s"snapshot-1 reader changed after a writer died at $kp")
     val snap4 = java.nio.file.Paths.get(out, "metadata", "snap-4.txt")
     if (kp == "linked") {
       // the link is the linearization point: snapshot 4 exists and is
@@ -814,7 +841,7 @@ class LakeSpec extends SparkSpecBase {
       // ref move is missing — recovery rolls forward, sweep keeps all
       assert(java.nio.file.Files.exists(snap4))
       assert(fingerprint(L.readLive(spark, out, 1 to 4)) ==
-        (baseline._1 + sliceN, baseline._2 + sliceSum),
+        (baseline._1 + addN, baseline._2 + addSum),
         "linked snapshot must be complete, never torn")
       assert(L.orphanSweep(spark, out).isEmpty,
         "sweep must not reclaim files a linked manifest references")
@@ -825,6 +852,8 @@ class LakeSpec extends SparkSpecBase {
       // data files, the CAS attempt file — by kill point) is sweepable
       assert(!java.nio.file.Files.exists(snap4),
         s"kill at $kp must not publish snapshot 4")
+      val published = (sources.IngestOps.listDataFiles(spark, s"$out/data")
+        -- dataBefore).map("data/" + _)
       val swept = L.orphanSweep(spark, out)
       if (kp == "staged")
         assert(swept.exists(_.startsWith(".stage-")),
@@ -835,13 +864,27 @@ class LakeSpec extends SparkSpecBase {
       if (kp == "attempt-written")
         assert(swept.exists(_.contains(".attempt-")),
           s"sweep after $kp must reclaim the CAS attempt file: $swept")
+      // and EXACTLY the debris: the published files, plus the unlinked
+      // removal manifest a replace commit wrote before dying
+      assert(swept.filter(_.startsWith("data/")).toSet == published,
+        s"sweep after $kp must reclaim exactly the published files")
+      assert(swept.filter(s => s.startsWith("metadata/") &&
+        !s.contains(".attempt-")).toSet ==
+        (if (replace && kp == "attempt-written")
+          Set("metadata/snap-4.removed.txt") else Set.empty[String]),
+        s"sweep after $kp reclaimed the wrong metadata: $swept")
+      assert(fingerprint(L.readLive(spark, out, Seq(1))) == pinned,
+        s"snapshot-1 reader changed by the sweep after $kp")
       assert(L.orphanSweep(spark, out).isEmpty, "sweep must converge")
       // retry of the SAME logical commit lands exactly once
-      assert(L.appendCommit(spark, out, slice) == 4)
+      assert(commitWith(_ => ()) == 4)
     }
     assert(fingerprint(L.readCurrent(spark, out)) ==
-      (baseline._1 + sliceN, baseline._2 + sliceSum),
+      (baseline._1 + addN, baseline._2 + addSum),
       s"recovered table after $kp must hold the append exactly once")
+    if (replace)
+      assert(L.liveFiles(spark, out, 1 to 4).intersect(frag).isEmpty,
+        s"recovered table after $kp still lists replaced fragments")
   }
 
   test("eight concurrent writers through the CAS retry loop: every " +
