@@ -1,9 +1,20 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-/** Dev-only: run named queries once, print timing + plan; not part of the
-  * driver contract. `scripts/run.sh graft.DebugRun <sfDir> <name...>` */
+/** The dev entry point (not part of the driver contract): runs the named
+  * queries in order on one warm session and prints, per run, its wall
+  * time and row count, then its Spark-job breakdown — job count, summed
+  * job seconds, driver-side seconds (wall minus the job sum) and the 12
+  * longest jobs by description or call site — so an optimization
+  * targets the job that actually costs instead of the key's total.
+  * Naming a key N times runs it N times: a min-of-N measurement.
+  * `scripts/run.sh graft.DebugRun <sfDir> <name...>` */
 object DebugRun {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -19,6 +30,35 @@ object DebugRun {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.sources.Tables.warmup(spark)
+    // running jobs (label, start ms) by id; the current run's finished
+    // jobs (label, seconds); each SQL execution's call site by id
+    val started = new ConcurrentHashMap[Int, (String, Long)]
+    val finished = new ConcurrentLinkedQueue[(String, Double)]
+    val sqlSites = new ConcurrentHashMap[Long, String]
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          sqlSites.put(s.executionId, s.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        // a job's call site is its SQL action's (adaptive stages run on
+        // a pool thread whose own stack names no caller), else its
+        // result stage's name
+        val desc = prop("spark.job.description")
+          .orElse(prop("spark.sql.execution.id")
+            .flatMap(id => Option(sqlSites.get(id.toLong))))
+          .orElse(e.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
+          .getOrElse("?")
+        started.put(e.jobId, (desc, e.time))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(started.remove(e.jobId)).foreach { case (d, t0) =>
+          finished.add((d, (e.time - t0) / 1e3)) // listener times are ms
+        }
+    })
     val queries = SparkEntry.queries
     // DEBUG_SKEW_AQE=1: execute inside the scaled-down skew-detector
     // scope EngineSpec uses, so the final adaptive plan shows the
@@ -28,6 +68,9 @@ object DebugRun {
         graft.operators.Joins.withSkewAqeConf(spark)(body)
       else body
     names.foreach { n =>
+      // the previous key's DEBUG_SHOW jobs are not this run's
+      GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+      finished.clear()
       val t0 = System.nanoTime()
       // build ONCE: some keys run eager construction-time work (model
       // collects, lazy-checkpoint planting) that explain/show would
@@ -42,6 +85,17 @@ object DebugRun {
       }
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"[debug] $n%-28s $sec%8.2f s  rows=$cnt")
+      GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+      val jobs = {
+        import scala.jdk.CollectionConverters._
+        finished.asScala.toSeq
+      }
+      val jobSec = jobs.map(_._2).sum
+      println(f"[debug]   jobs=${jobs.size} job_s=$jobSec%.3f " +
+        f"driver_s=${sec - jobSec}%.3f")
+      jobs.sortBy(-_._2).take(12).foreach { case (d, s) =>
+        println(f"[debug]   $s%8.3f s  ${d.take(90)}")
+      }
       if (sys.env.contains("DEBUG_EXPLAIN")) df.explain("formatted")
       // the FINAL adaptive plan (post-execution), where AQE's runtime
       // rewrites — skew splits, coalesced readers — are visible

@@ -6,52 +6,15 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: `size(array_intersect(a, b))` without ever
-  * materializing the intersection ARRAY — the pairwise-dedup confirm
-  * (DedupOps.pairStats) only reads the cardinality, yet the declarative
-  * spelling allocates an up-to-|a|-element array per candidate pair just
-  * to take its length (r21 per-task-work pass; the confirm is the
-  * jaccard/minhash keys' most expensive stage per JaccardProbe). Value
-  * semantics are EXACTLY array_intersect's: the count of DISTINCT
-  * elements present in both arrays, null elements matching null — a
-  * symmetric quantity, so the hash set is built over the smaller side
-  * and counted down from the larger (DedupSpec pins equality against the
-  * declarative spelling on duplicates, nulls, and random arrays). */
-object IntersectionSizeKernel {
-  def intersectSize(a: ArrayData, b: ArrayData): Int = {
-    // symmetric: build over the smaller side, probe with the larger
-    val (small, large) =
-      if (a.numElements() <= b.numElements()) (a, b) else (b, a)
-    val set = new java.util.HashSet[UTF8String](
-      math.max(4, small.numElements() * 2))
-    var smallHasNull = false
-    var i = 0
-    val ns = small.numElements()
-    while (i < ns) {
-      if (small.isNullAt(i)) smallHasNull = true
-      else set.add(small.getUTF8String(i))
-      i += 1
-    }
-    var n = 0
-    var j = 0
-    val nl = large.numElements()
-    while (j < nl && (!set.isEmpty || smallHasNull)) {
-      if (large.isNullAt(j)) {
-        if (smallHasNull) { n += 1; smallHasNull = false }
-      } else if (set.remove(large.getUTF8String(j))) n += 1
-      j += 1
-    }
-    n
-  }
-}
-
-/** Merge-count kernel for SORTED inputs (ascending binary UTF8String
-  * order, nulls first — exactly `sort_array`'s default): the same
-  * distinct-common-elements count as [[IntersectionSizeKernel]] with
-  * no per-pair hash set — no allocation, no hashing, one linear merge
-  * of the two arrays. The caller owns the sortedness contract; both
+/** Merge-count kernel behind [[SortedIntersectionSize]]: the value of
+  * `size(array_intersect(a, b))` — the count of DISTINCT elements present
+  * in both arrays, a null element matching a null — computed without
+  * materializing the intersection array, with no allocation and no
+  * hashing: one linear merge of two SORTED inputs (ascending binary
+  * UTF8String order, nulls first — exactly `sort_array`'s default).
+  * The pairwise-dedup confirm (DedupOps.pairStats) reads only this
+  * cardinality. The caller owns the sortedness contract; both
   * production call sites sort ONCE per doc at the shingle-set build
   * (order is semantics-free there: signatures are min-over-lanes,
   * prefix ranks come from a global window), amortized over every pair
@@ -83,37 +46,10 @@ object SortedIntersectionSizeKernel {
   }
 }
 
-case class IntersectionSize(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"intersection_size expects two array<string>, got " +
-          s"${left.dataType.sql}, ${right.dataType.sql}")
-    }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "intersection_size"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    IntersectionSizeKernel.intersectSize(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.IntersectionSizeKernel" +
-        s".intersectSize($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(newLeft, newRight)
-}
-
-/** [[IntersectionSize]] for inputs the caller guarantees SORTED
-  * (ascending, nulls first): same value, merge-count kernel, no
-  * per-pair hash set. */
+/** Native Catalyst expression `size(array_intersect(a, b))` for
+  * array<string> inputs the caller guarantees SORTED (ascending, nulls
+  * first): [[SortedIntersectionSizeKernel]], null if either array is
+  * null. */
 case class SortedIntersectionSize(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -145,14 +81,10 @@ case class SortedIntersectionSize(left: Expression, right: Expression)
 object IntersectionSizeFunctions {
   import org.apache.spark.sql.GraftBridge
 
-  /** Fused `size(array_intersect(a, b))` over two array<string> columns. */
-  def intersectionSize(a: Column, b: Column): Column =
-    GraftBridge.column(IntersectionSize(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** [[intersectionSize]] over arrays the caller has ALREADY sorted
-    * ascending (nulls first, `sort_array` default) — linear merge, no
-    * per-pair hash set. Wrong results on unsorted input by contract. */
+  /** Fused `size(array_intersect(a, b))` over two array<string> columns
+    * the caller has ALREADY sorted ascending (nulls first, `sort_array`
+    * default) — one linear merge, no intersection array. Wrong results
+    * on unsorted input by contract. */
   def sortedIntersectionSize(a: Column, b: Column): Column =
     GraftBridge.column(SortedIntersectionSize(
       GraftBridge.expression(a), GraftBridge.expression(b)))

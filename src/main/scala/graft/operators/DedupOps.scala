@@ -45,20 +45,13 @@ object DedupOps {
 
   /** Distinct character 3-gram shingles of a doc's text — the fused
     * linear-pass expression ([[graft.functions.Shingles3]]). Value-equal
-    * to the declarative spelling below (DedupSpec proves it on the edge
-    * cases), which is kept as the readable semantics reference and the
-    * generator of the DuckDB twin [[SH]]: the declarative form's
+    * to the declarative spelling the spec suite keeps (ReferenceTwins;
+    * DedupSpec proves it on the edge cases), the readable semantics
+    * reference behind the DuckDB twin [[SH]]: the declarative form's
     * per-substr codepoint scan is O(len²) per doc — fine at test sizes,
     * ruinous on 100 KB documents. */
   private[graft] def shingles3(text: Column): Column =
     graft.functions.TextShingleFunctions.shingles3(text)
-
-  /** The declarative semantics reference for [[shingles3]] (quadratic —
-    * not used in any query path; DedupSpec asserts equivalence). */
-  private[graft] def shingles3Declarative(text: Column): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(text) - 2, lit(1))),
-      i => text.substr(i, lit(3))))
 
   /** Distinct word k-gram shingles of a doc — the TOKEN-level shingle
     * unit (k=8 grams drive the contamination audit).
@@ -127,24 +120,10 @@ object DedupOps {
     * expression — same value, none of the declarative chain's per-call
     * 32-char hex-string + substring + conv-parse allocations (r21
     * per-task-work pass, guide §1.2 step 2; DedupSpec pins
-    * value-equality against [[portableHashDeclarative]]). */
+    * value-equality against the declarative chain, kept in the spec
+    * suite's ReferenceTwins). */
   private[graft] def portableHash(c: Column): Column =
     graft.functions.PortableHashFunctions.md5Prefix60(c)
-
-  /** The declarative semantics reference for [[portableHash]] — the
-    * spelling the DuckDB twins replay (not used in any query path;
-    * DedupSpec asserts value-equality incl. unicode and empty/null). */
-  private[graft] def portableHashDeclarative(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
-  /** The declarative lane spelling of the PORTABLE MinHash signature —
-    * the shape the DuckDB twin replays per lane (not used in any query
-    * path; DedupSpec asserts lane-equality with the fused
-    * [[graft.functions.PortableMinHashSignature]]). */
-  private[graft] def portableSignatureDeclarative(ss: Column,
-      nHashes: Int): Column =
-    array((0 until nHashes).map(j => array_min(transform(ss,
-      s => portableHashDeclarative(concat(lit(j), lit(":"), s))))): _*)
 
   /** `dedup_exact` — exact duplicate removal on raw text: keep min doc_id
     * per identical text, report group sizes. */
@@ -440,8 +419,8 @@ object DedupOps {
     // shingle are the portability contract and stay, but the k array
     // traversals and per-call concat + hex-string + conv allocations
     // of the declarative transform spelling do not (DedupSpec pins
-    // lane-equality against that spelling, kept in
-    // [[portableSignatureDeclarative]]).
+    // lane-equality against that spelling, kept in the spec suite's
+    // ReferenceTwins.portableSignatureDeclarative).
     val sig =
       if (portable) sets.select($"doc_id",
         graft.functions.PortableHashFunctions

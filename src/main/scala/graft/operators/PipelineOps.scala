@@ -131,10 +131,6 @@ object PipelineOps {
       edges: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val t0 = System.nanoTime()
-    def mark(what: String): Unit =
-      if (sys.env.contains("DEBUG_CC")) println(
-        f"[cc] $what at ${(System.nanoTime() - t0) / 1e9}%.2f s")
     // both edge orientations in ONE pass over the (expensive) edge input
     // — a union of edges with its swap would evaluate the similarity-join
     // subtree twice. persist+count (not localCheckpoint) so the edge
@@ -146,7 +142,6 @@ object PipelineOps {
         struct($"dst".as("src"), $"src".as("dst")))).as("e"))
       .select($"e.src", $"e.dst").persist()
     sym.count()
-    mark("sym materialized")
     // only edge-touched nodes enter the loop: in a near-dup graph the
     // overwhelming majority of a 100 TB corpus is singleton docs, and
     // they are their own label by definition — keeping them out of the
@@ -184,14 +179,12 @@ object PipelineOps {
       converged = s == prevSum
       prevSum = s
       steps += 1
-      mark(s"step $steps done")
     }
     if (!converged) {
       // adversarial topology (a chain of chained near-dups has diameter
       // ∝ length): propagation costs O(diameter) rounds and would return
       // silently-wrong labels if capped — switch to the O(log² n)
       // alternating-star algorithm instead of guessing a bigger cap
-      mark("propagation cap hit — falling back to star contraction")
       val out = connectedComponentsStar(nodes,
         sym.select($"src", $"dst"))
       sym.unpersist()
@@ -906,27 +899,14 @@ object PipelineOps {
         cs: IndexedSeq[Double]): org.apache.spark.sql.Column =
       graft.functions.VectorFunctions.l2sq(vs, array(cs.map(lit): _*))
 
-    /** PQ code of subspace `s`: argmin centroid, tie → lowest id. */
-    def codeCol(v: org.apache.spark.sql.Column,
-        s: Int): org.apache.spark.sql.Column = {
-      val vs = slice(v, s * sub + 1, sub)
-      array_min(array((0 until k).map(c =>
-        struct(sliceD2(vs, book(s)(c)).as("d2"), lit(c).as("cid"))): _*))
-        .getField("cid")
-    }
-
     /** all m codes as one array column — the 8-byte index payload.
       * Fused single-pass encode ([[graft.functions.PqEncodeCodes]]):
-      * the declarative m×k slice+l2sq+argmin spelling ([[codeCol]],
-      * kept as the equivalence twin PipelineSpec asserts against) is
-      * allocation-bound — 64 slice arrays and 64 structs per vector. */
+      * the declarative m×k slice+l2sq+argmin spelling (kept in the spec
+      * suite's ReferenceTwins as the equivalence twin PipelineSpec
+      * asserts against) is allocation-bound — 64 slice arrays and 64
+      * structs per vector. */
     def codesCol(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       graft.functions.PqFunctions.pqEncode(v, book)
-
-    /** the declarative spelling of [[codesCol]] — spec twin only. */
-    private[graft] def codesColDeclarative(
-        v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      array((0 until m).map(codeCol(v, _)): _*)
 
     /** coarse (full-vector) distance to centroid `c`: chained subspace
       * sum — identical arithmetic to the oracle's fullv CTE. */

@@ -30,6 +30,7 @@ object CommitWorker {
         IngestOps.tmp(s"warehouse_worker_$day"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    Tables.warmup(spark)
     import spark.implicits._
     val slice = IngestOps.eventsWithParts(spark, sfDir)
       .filter($"day" === day)

@@ -18,12 +18,15 @@ object Tables {
   /** Session prep: force Spark 4's CollationAwareUTF8String static init (a
     * full-Unicode ICU case-mapping table build — deferred to first use of
     * lower()/upper() deep into a session it can run against a saturated JIT
-    * code cache and take 100+ seconds; at startup ~1s), and install the
-    * nanos-timestamp predicate pushdown rule. */
+    * code cache and take 100+ seconds; at startup ~1s), install the
+    * nanos-timestamp predicate pushdown rule, and read TIMESTAMP(NANOS)
+    * parquet columns as long nanos (see [[events]]) for every batch and
+    * streaming scan of the session. */
   def warmup(spark: SparkSession = null): Unit = {
     Class.forName(
       "org.apache.spark.sql.catalyst.util.CollationAwareUTF8String")
     if (spark != null) {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       graft.plans.TimestampPushdownRule.install(spark)
       graft.plans.RankLimitToTopKRule.install(spark)
       // fork-free local FS (see NioLocalFileSystem); evict any cached
@@ -59,7 +62,8 @@ object Tables {
     * TimestampType (UTC-instant) column so downstream operators and the
     * DuckDB oracles agree:
     *   - TIMESTAMP(NANOS): Spark's vectorized reader rejects it
-    *     (SPARK-40819) — read as long nanos; `div 1000` truncates
+    *     (SPARK-40819) — read as long nanos (the session conf
+    *     [[warmup]] sets); `div 1000` truncates
     *     TOWARD ZERO, which is exactly DuckDB's ns→µs cast semantics
     *     (verified: −1500 ns → −1 µs on both engines, NOT floor's −2),
     *     so pre-epoch values agree too;
@@ -67,10 +71,8 @@ object Tables {
     *     cast to TimestampType — the session TZ is pinned UTC, so the
     *     NTZ→instant mapping is bijective and hashes are unchanged;
     *   - timestamp[us] UTC → already TimestampType, untouched. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeTs(apply(s, d, "events"))
-  }
 
   /** Normalize a `ts` column to TimestampType across the three physical
     * encodings the corpus has shipped (see [[events]]). Used by the batch

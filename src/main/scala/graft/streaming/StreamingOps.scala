@@ -239,16 +239,9 @@ object StreamingOps {
     result
   }
 
-  /** Drain a finite streaming query and stop it; with DEBUG_STREAM set,
-    * print per-batch progress (the durationMs breakdown) so harness
-    * constants can be audited per key. */
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery,
-      tag: String = "stream"): Unit =
-    try q.processAllAvailable() finally {
-      if (sys.env.contains("DEBUG_STREAM"))
-        q.recentProgress.foreach(p => println(s"[$tag] ${p.json}"))
-      q.stop()
-    }
+  /** Drain a finite streaming query and stop it. */
+  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    try q.processAllAvailable() finally q.stop()
 
   /** Run `body` with a reduced shuffle-partition count: streaming state
     * stores are per shuffle partition, and for these single-micro-batch
@@ -349,7 +342,6 @@ object StreamingOps {
     * shape, not this one. */
   def streamHourlyRollup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchSchema = eventsSchema(spark, dir)
     val queryName = s"hourly_rollup_${System.nanoTime()}"
     val stream = Tables.normalizeTs(spark.readStream
@@ -387,7 +379,6 @@ object StreamingOps {
     * the production form adds a watermark to age them out. */
   def streamSessionAgg(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchSchema = eventsSchema(spark, dir)
     val queryName = s"session_agg_${System.nanoTime()}"
     val stream = Tables.normalizeTs(spark.readStream
@@ -422,7 +413,6 @@ object StreamingOps {
     * decimal accumulation so the batch twin is the oracle. */
   def streamJoinDim(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchSchema = eventsSchema(spark, dir)
     val queryName = s"join_dim_${System.nanoTime()}"
     val dim = Seq(("click", "0.5"), ("view", "0.1"), ("purchase", "5.0"),
@@ -454,7 +444,6 @@ object StreamingOps {
     * equivalence = SELECT DISTINCT. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchSchema = eventsSchema(spark, dir)
     val queryName = s"stream_dedup_${System.nanoTime()}"
     withStatePartitions(spark, 8) {
@@ -488,7 +477,6 @@ object StreamingOps {
     * ORIGINAL events. */
   def streamDedupWatermark(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchSchema = eventsSchema(spark, dir)
     val queryName = s"stream_dedup_wm_${System.nanoTime()}"
     withoutNoDataBatches(spark) { withStatePartitions(spark, 8) {
@@ -549,7 +537,6 @@ object StreamingOps {
     * so this key must NOT run under [[withoutNoDataBatches]]. */
   def streamSessionWatermark(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchSchema = eventsSchema(spark, dir)
     val queryName = s"session_wm_${System.nanoTime()}"
     val stream = Tables.normalizeTs(spark.readStream
@@ -567,7 +554,7 @@ object StreamingOps {
         .format("memory")
         .queryName(queryName)
         .start()
-      drain(q, tag = "session_wm")
+      drain(q)
     }
     releaseSink(spark, queryName)(spark.table(queryName)
       .select($"user_id", $"session_window.start".as("session_start"),
@@ -583,7 +570,6 @@ object StreamingOps {
   def streamCustomState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchSchema = eventsSchema(spark, dir)
     val queryName = s"stream_state_${System.nanoTime()}"
     val src = Tables.normalizeTs(spark.readStream
@@ -644,7 +630,6 @@ object StreamingOps {
   def streamScd2Current(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.GroupStateTimeout
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchSchema = eventsSchema(spark, dir)
     val queryName = s"scd2_cur_${System.nanoTime()}"
     val src = Tables.normalizeTs(spark.readStream
@@ -673,7 +658,7 @@ object StreamingOps {
         .format("memory")
         .queryName(queryName)
         .start()
-      drain(q, tag = "scd2_cur")
+      drain(q)
     }
     // final state row per key: version is monotone; at a version tie
     // the type is necessarily unchanged, so max_by is deterministic
@@ -699,7 +684,6 @@ object StreamingOps {
   def streamTwsState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchSchema = eventsSchema(spark, dir)
     val queryName = s"tws_state_${System.nanoTime()}"
     val src = Tables.normalizeTs(spark.readStream
@@ -732,7 +716,7 @@ object StreamingOps {
         .format("memory")
         .queryName(queryName)
         .start()
-      drain(q, tag = "tws")
+      drain(q)
     } }
     releaseSink(spark, queryName)(spark.table(queryName)
       .groupBy($"user_id")     // keep the final (monotone) row per key
@@ -758,7 +742,6 @@ object StreamingOps {
   def streamTwsTimers(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchSchema = eventsSchema(spark, dir)
     val queryName = s"tws_timers_${System.nanoTime()}"
     val src = Tables.normalizeTs(spark.readStream
@@ -782,7 +765,7 @@ object StreamingOps {
         .format("memory")
         .queryName(queryName)
         .start()
-      drain(q, tag = "tws_timers")
+      drain(q)
     } }
     releaseSink(spark, queryName)(spark.table(queryName)
       .select($"user_id", $"session_start_us",
@@ -799,7 +782,6 @@ object StreamingOps {
     * the batch interval join — that is the oracle. Bounded to days 1-3. */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchSchema = eventsSchema(spark, dir)
     val queryName = s"stream_join_${System.nanoTime()}"
     def side(eventType: String, prefix: String) = {
@@ -872,7 +854,7 @@ object StreamingOps {
         .format("memory")
         .queryName(queryName)
         .start()
-      drain(q, tag = "late")
+      drain(q)
     }
     releaseSink(spark, queryName)(spark.table(queryName)
       .select($"window.start".as("hour_start"), $"event_type", $"n",
@@ -928,7 +910,6 @@ object StreamingOps {
     * that is the oracle. */
   def streamUpsertSink(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val out = graft.sources.IngestOps.tmp("events_stream_upsert")
     // working copy of the shared immutable days-1-10 base: the key
     // measures the per-batch MERGE commits, not the base-table build
@@ -1009,7 +990,6 @@ object StreamingOps {
   private[graft] def streamUpsertMorRun(spark: SparkSession,
       dir: String): (String, String, String) = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val root = graft.sources.IngestOps.tmp("events_stream_mor")
     val (base, delta, deletes) =
       (s"$root/base", s"$root/delta", s"$root/deletes")
@@ -1213,7 +1193,6 @@ object StreamingOps {
     * that deploys, crashes, and resumes without reprocessing 100 TB. */
   def streamResumeCheckpoint(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = graft.sources.IngestOps.tmp("stream_resume_src")
     val sink = graft.sources.IngestOps.tmp("stream_resume_sink")
     val cp = graft.sources.IngestOps.tmp("stream_resume_cp")

@@ -1,10 +1,10 @@
 package org.apache.spark
 
-/** Test-support bridge into `private[spark]` listener plumbing: specs
-  * that assert on task metrics (e.g. the no-payloads-on-the-driver
-  * proof over sidecar planning) must drain the async listener bus
-  * before reading their accumulators, or the assertion races event
-  * delivery. */
+/** Bridge into `private[spark]` listener plumbing: specs that assert on
+  * task metrics (e.g. the no-payloads-on-the-driver proof over sidecar
+  * planning) and DebugRun's per-job breakdown must drain the async
+  * listener bus before reading what their listeners recorded, or the
+  * read races event delivery. */
 object GraftListenerBridge {
   def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -24,7 +24,7 @@ class DedupSpec extends SparkSpecBase {
       .map { case (s, i) => (i.toLong, s) }.toDF("id", "text")
       .select($"id", $"text",
         operators.DedupOps.shingles3($"text").as("fused"),
-        operators.DedupOps.shingles3Declarative($"text").as("decl"))
+        ReferenceTwins.shingles3Declarative($"text").as("decl"))
     val bad = df.filter(not($"fused" <=> $"decl"))
       .select($"text", $"fused", $"decl").collect()
     assert(bad.isEmpty, s"fused != declarative on: ${bad.take(3).toSeq}")
@@ -160,7 +160,7 @@ class DedupSpec extends SparkSpecBase {
         .map { case (s, i) => (i.toLong, s) }.toDF("id", "s")
         .select($"id", $"s",
           DedupOps.portableHash($"s").as("fused"),
-          DedupOps.portableHashDeclarative($"s").as("decl"))
+          ReferenceTwins.portableHashDeclarative($"s").as("decl"))
       val bad = df.filter(not($"fused" <=> $"decl")).collect()
       assert(bad.isEmpty, s"fused != declarative on: ${bad.take(3).toSeq}")
       // null propagates like the declarative chain
@@ -170,8 +170,9 @@ class DedupSpec extends SparkSpecBase {
     } finally spark.conf.set(key, prev)
   }
 
-  test("fused IntersectionSize equals size(array_intersect) on random " +
-      "arrays, duplicates, nulls, and empties — codegen fallback off") {
+  test("fused SortedIntersectionSize equals size(array_intersect) on " +
+      "sorted random arrays, duplicates, nulls, and empties — codegen " +
+      "fallback off") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val key = "spark.sql.codegen.fallback"
@@ -186,21 +187,6 @@ class DedupSpec extends SparkSpecBase {
         (Seq.empty[String], Seq("a")), (Seq("a"), Seq.empty[String]),
         (Seq(null, "a", "a", null), Seq("a", null)),
         (Seq("x", "y"), Seq("y", "x", "y")))
-      val df = cases.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
-        .toDF("id", "a", "b")
-        .select($"id",
-          graft.functions.IntersectionSizeFunctions
-            .intersectionSize($"a", $"b").as("fused"),
-          size(array_intersect($"a", $"b")).as("decl"))
-      val bad = df.filter(not($"fused" <=> $"decl")).collect()
-      assert(bad.isEmpty, s"fused != size(array_intersect): " +
-        s"${bad.take(3).toSeq}")
-      // null array propagates
-      val nulls = Seq((1L, null.asInstanceOf[Seq[String]], Seq("a")))
-        .toDF("id", "a", "b")
-        .select(graft.functions.IntersectionSizeFunctions
-          .intersectionSize($"a", $"b")).collect()
-      assert(nulls.head.isNullAt(0))
       // the SORTED merge kernel: same value on sort_array'd inputs
       // (the contract both production call sites establish), including
       // duplicates, nulls-first runs, and empties
@@ -239,7 +225,7 @@ class DedupSpec extends SparkSpecBase {
           .portableMinhashSignature($"ss", 16).as("sig"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       val decl = sets.select($"doc_id",
-        DedupOps.portableSignatureDeclarative($"ss", 16).as("sig"))
+        ReferenceTwins.portableSignatureDeclarative($"ss", 16).as("sig"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(fused.keySet == decl.keySet)
       fused.foreach { case (id, sig) =>

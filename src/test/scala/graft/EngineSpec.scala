@@ -150,6 +150,19 @@ class EngineSpec extends SparkSpecBase {
       assert(found(d), s"stale allowlist entry $d ($why)") }
   }
 
+  test("main entry points are exactly Bench, Verify, DebugRun and " +
+      "CommitWorker") {
+    // the driver's two mains, the one dev runner, and the commit client
+    // CrossProcessSpec spawns; a one-off probe belongs in DebugRun or a
+    // spec, not in a new main with its own session builder
+    val mains = mainSources.collect {
+      case (file, lines) if lines.exists(_.contains("def main(")) =>
+        file.stripSuffix(".scala")
+    }.toSet
+    assert(mains == Set("Bench", "Verify", "DebugRun", "CommitWorker"),
+      s"src/main files declaring def main( are ${mains.toSeq.sorted}")
+  }
+
   test("gen_events is deterministic and respects the reference domains") {
     val a = operators.GenOps.genEvents(spark, sf).collect()
     val b = operators.GenOps.genEvents(spark, sf).collect()

@@ -525,7 +525,7 @@ class PipelineSpec extends SparkSpecBase {
         transform($"embedding", x => x.cast("double")).as("v"))
       .select($"vec_id",
         pq.codesCol($"v").as("fused"),
-        pq.codesColDeclarative($"v").as("decl"))
+        new ReferenceTwins.PqTwin(pq).codesColDeclarative($"v").as("decl"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
