@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * [[prewarm]] in its UNTIMED setup so a corpus-fingerprint change costs
   * setup seconds, never query time: the r10 regeneration invalidated
   * every cached layout and the rebuilds landed inside the timed loop,
-  * nearly doubling the headline number on unchanged code. New
+  * nearly doubling the headline number on unchanged code. Every
+  * layout is built through `IngestOps.buildShared`, which owns the
+  * completeness marker (`<layout>.done`, beside the layout); new
   * `buildShared` sites must be added here — EngineSpec cross-checks the
   * builder count against the `buildShared(` call sites in the source
   * tree so a forgotten entry fails a test, not a bench round.
@@ -18,7 +20,7 @@ import org.apache.spark.sql.SparkSession
 object Fixtures {
 
   /** (name, builder) for every shared layout; builders are idempotent
-    * (fingerprint-keyed, atomically published by buildShared). */
+    * (fingerprint-keyed, published by buildShared's marker). */
   def builders(spark: SparkSession, dir: String): Seq[(String, () => Any)] =
     Seq(
       "events_partitioned" ->
@@ -31,6 +33,14 @@ object Fixtures {
         (() => sources.IngestOps.fragmentedLayout(spark, dir)),
       "events_nullstats" ->
         (() => sources.IngestOps.nullStatsLayout(spark, dir)),
+      "events_rename_chain" ->
+        (() => sources.IngestOps.renameChainLayout(spark, dir)),
+      "events_widened" ->
+        (() => sources.IngestOps.widenLayout(spark, dir)),
+      "events_dropped" ->
+        (() => sources.IngestOps.dropLayout(spark, dir)),
+      "events_defaultcol" ->
+        (() => sources.IngestOps.defaultColLayout(spark, dir)),
       "events_spec_evolution" ->
         (() => sources.LakeOps.partitionEvolveLayout(spark, dir)._1),
       "events_cow_base" ->

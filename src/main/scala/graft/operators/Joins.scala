@@ -241,18 +241,17 @@ object Joins {
     * in-flight read of the same files. Now the DATA is a
     * fingerprint-keyed layout published once through
     * [[graft.sources.IngestOps.buildShared]] (cross-process lock,
-    * marker-last, never mutated once complete — parquet's job-commit
-    * `_SUCCESS` is the marker), and each JVM merely REGISTERS an
-    * external bucketed table over it: registration is idempotent
-    * per-catalog and touches no data files, so nothing a reader holds
-    * open is ever deleted. Bucket ids ride in the file names
-    * (Spark's `BucketingUtils` contract), so a re-registered catalog
-    * entry prunes and zip-joins exactly like the writing session's. */
+    * marker-last, never mutated once complete), and each JVM merely
+    * REGISTERS an external bucketed table over it: registration is
+    * idempotent per-catalog and touches no data files, so nothing a
+    * reader holds open is ever deleted. Bucket ids ride in the file
+    * names (Spark's `BucketingUtils` contract), so a re-registered
+    * catalog entry prunes and zip-joins exactly like the writing
+    * session's. */
   private def bucketedTable(spark: SparkSession, dir: String, base: String,
       ddlSchema: String, key: String, srcTable: String)(
       rows: => DataFrame): String = {
-    import graft.sources.IngestOps.{buildShared, fsExists, shared,
-      tableFingerprint}
+    import graft.sources.IngestOps.{buildShared, shared, tableFingerprint}
     spark.sql("CREATE DATABASE IF NOT EXISTS graft")
     // keyed on the SOURCE TABLE's fingerprint (these are the only
     // layouts not derived from events, which the events-anchored
@@ -263,11 +262,10 @@ object Joins {
       tableFingerprint(spark, dir, srcTable)
     val name = s"graft.${base}_$fp"
     val loc = shared(s"${base}_$fp")
-    buildShared(spark, loc, root => fsExists(spark, s"$root/_SUCCESS")) {
-      tmpRoot =>
-        spark.sql(s"DROP TABLE IF EXISTS $name") // stale incomplete build
-        rows.write.bucketBy(8, key).sortBy(key)
-          .option("path", tmpRoot).saveAsTable(name)
+    buildShared(spark, loc) { tmpRoot =>
+      spark.sql(s"DROP TABLE IF EXISTS $name") // stale incomplete build
+      rows.write.bucketBy(8, key).sortBy(key)
+        .option("path", tmpRoot).saveAsTable(name)
     }
     if (!spark.catalog.tableExists(name))
       // IF NOT EXISTS: two threads can reach here after both saw the

@@ -71,8 +71,7 @@ object PipelineOps {
     import spark.implicits._
     import graft.sources.IngestOps
     val out = IngestOps.sharedFor(spark, s"dedup_labels_${maxDoc}", dir)
-    IngestOps.buildShared(spark, out,
-      root => IngestOps.fsExists(spark, s"$root/_DONE")) { tmpRoot =>
+    IngestOps.buildShared(spark, out) { tmpRoot =>
       val docs = Tables.documents(spark, dir).filter($"doc_id" < maxDoc)
       // the reduced-shuffle scope must cover the EDGE CONSTRUCTION, not
       // just the propagation loop: jaccardPairs' lineage cut plans its
@@ -86,9 +85,6 @@ object PipelineOps {
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$tmpRoot/labels")
       }
-      val p = new org.apache.hadoop.fs.Path(tmpRoot, "_DONE")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(p, true).close()
     }
   }
 

@@ -84,8 +84,7 @@ object SimilarityOps {
       dir: String): String = {
     import spark.implicits._
     val out = graft.sources.IngestOps.sharedFor(spark, "ivf_index", dir)
-    graft.sources.IngestOps.buildShared(spark, out, root =>
-      graft.sources.IngestOps.fsExists(spark, s"$root/_DONE")) { tmpRoot =>
+    graft.sources.IngestOps.buildShared(spark, out) { tmpRoot =>
       val e = Tables.embeddingsValid(spark, dir).select($"vec_id", $"embedding")
       val centroids = e.filter($"vec_id" < 8)
         .select($"vec_id".as("c_id"), $"embedding".as("c_emb"))
@@ -94,9 +93,6 @@ object SimilarityOps {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("compression", "zstd")
         .partitionBy("bucket").parquet(s"$tmpRoot/data")
-      val done = new org.apache.hadoop.fs.Path(tmpRoot, "_DONE")
-      done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(done, true).close()
     }
   }
 
@@ -153,10 +149,9 @@ object SimilarityOps {
     // v2: the cache key is (name, source fingerprint) — it does not see
     // builder-code changes, so the write-time null-codes fence below
     // needs a layout-version bump or a pre-fence index would be served
-    // from _DONE forever
+    // from the cache forever
     val out = graft.sources.IngestOps.sharedFor(spark, "ivfpq_index_v2", dir)
-    graft.sources.IngestOps.buildShared(spark, out, root =>
-      graft.sources.IngestOps.fsExists(spark, s"$root/_DONE")) { tmpRoot =>
+    graft.sources.IngestOps.buildShared(spark, out) { tmpRoot =>
       val pq = PipelineOps.pqModel(spark, dir)
       Tables.embeddingsValid(spark, dir)
         .select($"vec_id",
@@ -173,9 +168,6 @@ object SimilarityOps {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("compression", "zstd")
         .partitionBy("bucket").parquet(s"$tmpRoot/data")
-      val done = new org.apache.hadoop.fs.Path(tmpRoot, "_DONE")
-      done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(done, true).close()
     }
   }
 
@@ -218,8 +210,7 @@ object SimilarityOps {
     import spark.implicits._
     // v2: same layout-version bump as [[ivfpqIndexLayout]]
     val out = graft.sources.IngestOps.sharedFor(spark, "ivfpqr_index_v2", dir)
-    graft.sources.IngestOps.buildShared(spark, out, root =>
-      graft.sources.IngestOps.fsExists(spark, s"$root/_DONE")) { tmpRoot =>
+    graft.sources.IngestOps.buildShared(spark, out) { tmpRoot =>
       // coarse assignment + residual encoding from one collect
       val (pq, pqr) = PipelineOps.pqModels(spark, dir)
       Tables.embeddingsValid(spark, dir)
@@ -235,9 +226,6 @@ object SimilarityOps {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("compression", "zstd")
         .partitionBy("bucket").parquet(s"$tmpRoot/data")
-      val done = new org.apache.hadoop.fs.Path(tmpRoot, "_DONE")
-      done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(done, true).close()
     }
   }
 

@@ -480,8 +480,7 @@ object TextOps {
   private[graft] def bpeMergesLayout(spark: SparkSession,
       dir: String): String = {
     val out = graft.sources.IngestOps.sharedFor(spark, "bpe_merges", dir)
-    graft.sources.IngestOps.buildShared(spark, out, root =>
-      graft.sources.IngestOps.fsExists(spark, s"$root/_DONE")) { tmpRoot =>
+    graft.sources.IngestOps.buildShared(spark, out) { tmpRoot =>
       import spark.implicits._
       val (merges, _) = bpeLearn(Tables.documents(spark, dir), BpeSteps)
       merges.map { case (s, l, r, c) => (s.toLong, l, r, c) }
@@ -489,9 +488,6 @@ object TextOps {
         .coalesce(1).write
         .mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$tmpRoot/merges.parquet")
-      val done = new org.apache.hadoop.fs.Path(tmpRoot, "_DONE")
-      done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(done, true).close()
     }
   }
 

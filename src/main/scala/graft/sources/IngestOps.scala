@@ -51,20 +51,6 @@ object IngestOps {
   /** Per-query scratch — isolated per JVM (see [[scratchRoot]]). */
   private[graft] def tmp(name: String) = s"$scratchRoot/$name"
 
-  /** Per-(JVM, source) scratch for `_DONE`-gated build-once layouts:
-    * the gate makes the first build win for the JVM's lifetime, so the
-    * SOURCE must be part of the key — two corpora sharing one scratch
-    * name would serve the first corpus's bytes to the second's queries
-    * (surfaced when RobustnessSpec drove the schema-era layouts over
-    * its hostile corpus before IngestSpec read them for sf0.001). Keyed
-    * by the CONTENT fingerprint like [[sharedFor]], not the sanitized
-    * dir alone: 'sf-1' and 'sf_1' sanitize identically, and a corpus
-    * regenerated mid-session must not keep serving its old bytes. */
-  private[graft] def tmpFor(spark: SparkSession, name: String,
-      dir: String): String =
-    tmp(name + "_" + dir.replaceAll("[^A-Za-z0-9.]+", "_") + "_" +
-      sourceFingerprint(spark, dir))
-
   /** Cross-process shared location for the write-once layouts: they are
     * content-fingerprint-keyed and published atomically by
     * [[buildShared]], so sharing is safe and saves every process
@@ -126,26 +112,40 @@ object IngestOps {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Cross-process-safe write-once build. All writers of a layout
-    * serialize on [[withLayoutLock]]; under the lock the builder clears
-    * any INCOMPLETE artifact (a crashed build, a pre-upgrade format) and
-    * builds in place, writing the completeness marker LAST — that final
-    * write is the publish. Invariant: a layout that ever read as
-    * complete is never deleted or mutated again (the under-lock delete
-    * re-checks completeness first), so a process scanning a complete
+  /** Delete `p`, failing loudly: a delete the file system reports as
+    * failed on a path that still exists throws instead of letting the
+    * caller carry on over files it believes are gone. */
+  private[graft] def deleteOrThrow(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, recursive: Boolean): Unit =
+    if (fs.exists(p) && !fs.delete(p, recursive))
+      throw new java.io.IOException(s"could not delete $p")
+
+  /** Cross-process-safe write-once build — the one build-once path for
+    * every shared layout. All writers of `out` serialize on
+    * [[withLayoutLock]]; under the lock an INCOMPLETE `out` (a crashed
+    * build) is cleared, `build` fills `out` in place, and only then is
+    * the sibling marker `<out>.done` created — that create is the
+    * publish. The marker sits next to `<out>.lock`, outside the tree:
+    * Spark's file index never lists it, and a [[LakeOps.cloneTree]] of
+    * a complete layout can never carry it into a derived layout that
+    * has not finished building. Invariant: a layout that ever read as
+    * complete is never deleted or mutated again (the clear re-checks
+    * the marker under the lock), so a process scanning a complete
     * layout can never have it swapped out from under it; late writers
-    * re-check under the lock and simply reuse the winner's build. */
-  private[graft] def buildShared(spark: SparkSession, out: String,
-      complete: String => Boolean)(build: String => Unit): String = {
-    if (complete(out)) return out
+    * re-check under the lock and simply reuse the winner's build.
+    * Layouts are keyed by corpus, not code: a builder whose output
+    * changes bumps its [[sharedFor]] prefix (`_v2`, `_w2`, ...). */
+  private[graft] def buildShared(spark: SparkSession, out: String)(
+      build: String => Unit): String = {
+    val done = java.nio.file.Paths.get(out + ".done")
+    if (java.nio.file.Files.exists(done)) return out
     withLayoutLock(out) {
-      if (!complete(out)) { // re-check under the lock: a racer may have won
+      if (!java.nio.file.Files.exists(done)) { // a racer may have won
         val outPath = new org.apache.hadoop.fs.Path(out)
-        outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(outPath, true) // only ever deletes an INCOMPLETE layout
+        deleteOrThrow(outPath.getFileSystem(
+          spark.sparkContext.hadoopConfiguration), outPath, recursive = true)
         build(out)
-        if (!complete(out)) throw new IllegalStateException(
-          s"builder for $out did not produce its completeness marker")
+        java.nio.file.Files.createFile(done)
       }
     }
     out
@@ -524,17 +524,16 @@ object IngestOps {
       dir: String): String = {
     import spark.implicits._
     val out = sharedFor(spark, "events_layout", dir)
-    buildShared(spark, out, root => fsExists(spark, s"$root/_SUCCESS")) {
-      tmpRoot =>
-        eventsWithParts(spark, dir)
-          .withColumn("tenant_bucket", pmod($"user_id", lit(4L)))
-          .withColumn("hour", hour($"ts"))
-          .repartition(col("tenant_bucket"), col("year"), col("month"),
-            col("day"), col("hour"))
-          .write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd")
-          .partitionBy("tenant_bucket", "year", "month", "day", "hour")
-          .parquet(tmpRoot)
+    buildShared(spark, out) { tmpRoot =>
+      eventsWithParts(spark, dir)
+        .withColumn("tenant_bucket", pmod($"user_id", lit(4L)))
+        .withColumn("hour", hour($"ts"))
+        .repartition(col("tenant_bucket"), col("year"), col("month"),
+          col("day"), col("hour"))
+        .write.mode(SaveMode.Overwrite)
+        .option("compression", "zstd")
+        .partitionBy("tenant_bucket", "year", "month", "day", "hour")
+        .parquet(tmpRoot)
     }
   }
 
@@ -625,18 +624,9 @@ object IngestOps {
       dir: String): String = {
     // suffix versions the WIRE format (w2 = full-URI pointers + avro
     // key-value metadata + summary counts): a layout cached by an older
-    // build would pass the _DONE gate with the stale emission otherwise
+    // build would otherwise be served with the stale emission
     val out = sharedFor(spark, "events_snapshots_w2", dir)
-    // completeness includes the stats sidecars and the commit log: a
-    // layout built before either existed reads as stale and is rebuilt
-    // (atomically, by buildShared)
-    buildShared(spark, out, root =>
-      fsExists(spark, s"$root/metadata/_DONE") &&
-        fsExists(spark, s"$root/metadata/snap-3.stats.parquet/_SUCCESS") &&
-        fsExists(spark, s"$root/metadata/commits.txt") &&
-        fsExists(spark, s"$root/metadata/version-hint.text")) { tmpRoot =>
-      val fs = new org.apache.hadoop.fs.Path(tmpRoot)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    buildShared(spark, out) { tmpRoot =>
       val ev = eventsWithParts(spark, dir).filter(col("day").between(1, 15))
       val snapsSeq = Seq((1, 5), (6, 10), (11, 15)).map { case (lo, hi) =>
         val delta = LakeOps.stage(spark, tmpRoot)(p =>
@@ -660,8 +650,6 @@ object IngestOps {
       // pointing at them
       val lists = writeAvroManifests(spark, tmpRoot, snapsSeq)
       writeIcebergMetadataJson(spark, tmpRoot, snapsSeq, lists)
-      fs.create(new org.apache.hadoop.fs.Path(tmpRoot, "metadata/_DONE"),
-        true).close()
     }
   }
 
@@ -956,9 +944,7 @@ object IngestOps {
     // the link first, turning the no-in-place-mutation convention into a
     // structural guarantee — so a refused unlink must fail the write,
     // never fall through to the truncating create.
-    if (fs.exists(p) && !fs.delete(p, false))
-      throw new java.io.IOException(
-        s"could not unlink $p before rewriting it")
+    deleteOrThrow(fs, p, recursive = false)
     val os = fs.create(p, true)
     os.write(lines.toSeq.sorted.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1044,8 +1030,8 @@ object IngestOps {
   /** The stats sidecar as a DataFrame — the planning surface.
     * Qualifying-file planners filter/join THIS instead of parsing
     * driver-side text. An ABSENT sidecar throws: every stats-bearing
-    * layout's completeness gate includes the sidecar's _SUCCESS
-    * marker, so a missing dataset at plan time is damage (a partial
+    * layout writes its sidecar before [[buildShared]] publishes it,
+    * so a missing dataset at plan time is damage (a partial
     * cleanup, a botched copy) — treating it as empty would plan ZERO
     * files and silently return empty results, the exact wrong-results
     * mode the CRC/page-checksum posture exists to prevent. (The
@@ -1059,9 +1045,9 @@ object IngestOps {
     val path = s"$root/metadata/$name.parquet"
     if (!fsExists(spark, path))
       throw new IllegalStateException(
-        s"stats sidecar missing at $path — the layout gate requires " +
-          "it, so planning from 'no stats' would silently prune " +
-          "every file; rebuild the layout")
+        s"stats sidecar missing at $path — every stats layout builds " +
+          "it before publishing, so planning from 'no stats' would " +
+          "silently prune every file; rebuild the layout")
     spark.read.schema(statsSchema)
       .option("parquet.page.verify-checksum.enabled", "true")
       .parquet(path)
@@ -1355,12 +1341,11 @@ object IngestOps {
   /** Two-era-chain layout for [[alterRenameChain]]: field 3 starts as
     * physical `a` (holding value), field 5 as physical `c` (holding
     * user_id); rename a→b lands era 2 (b, c), rename c→a lands era 3
-    * (b, a). Built once per JVM (_DONE-gated). */
+    * (b, a). Built once per corpus fingerprint. */
   private[graft] def renameChainLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    val out = tmpFor(spark, "events_rename_chain", dir)
-    if (!fsExists(spark, s"$out/_DONE")) {
+    buildShared(spark, sharedFor(spark, "events_rename_chain", dir)) { out =>
       val ev = eventsWithParts(spark, dir)
         .select($"event_id", $"event_type", $"value", $"user_id", $"day")
         .localCheckpoint()
@@ -1384,11 +1369,7 @@ object IngestOps {
         3 -> "b", 5 -> "c", 4 -> "day"))
       writeSchemaEra(spark, out, 3, Seq(1 -> "event_id", 2 -> "event_type",
         3 -> "b", 5 -> "a", 4 -> "day"))
-      val done = new org.apache.hadoop.fs.Path(out, "_DONE")
-      done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(done, true).close()
     }
-    out
   }
 
   /** `alter_rename_chain` — the rename CHAIN (a→b, then c→a) that
@@ -1418,13 +1399,12 @@ object IngestOps {
     * carry `units` as INT32 and `score` as FLOAT — the narrow physical
     * types stay in the old footers forever; v2 files (days 16+) carry
     * the widened LONG/DOUBLE, with v2 `units` values beyond int32 range
-    * so the promotion is load-bearing, not cosmetic. Built once per JVM
-    * (_DONE-gated) so the spec can prove the merged read never rewrites
-    * a v1 byte. */
+    * so the promotion is load-bearing, not cosmetic. Built once per
+    * corpus fingerprint so the spec can prove the merged read never
+    * rewrites a v1 byte. */
   private[graft] def widenLayout(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val out = tmpFor(spark, "events_widened", dir)
-    if (!fsExists(spark, s"$out/_DONE")) {
+    buildShared(spark, sharedFor(spark, "events_widened", dir)) { out =>
       val ev = eventsWithParts(spark, dir)
         .select($"event_id", $"event_type", $"user_id", $"value", $"day")
         .localCheckpoint()
@@ -1438,11 +1418,7 @@ object IngestOps {
           (($"user_id" % 100000L) + 3000000000L).as("units"),
           $"value".as("score"), $"day")
         .write.mode(SaveMode.Overwrite).parquet(s"$out/v2")
-      val done = new org.apache.hadoop.fs.Path(out, "_DONE")
-      done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(done, true).close()
     }
-    out
   }
 
   /** `alter_widen_type` — TYPE-WIDENING schema evolution (int→long,
@@ -1474,12 +1450,11 @@ object IngestOps {
 
   /** Two-era layout for column DROP: v1 files (days 1-15) carry the
     * doomed `props` column; v2 files (days 16+) are written AFTER the
-    * drop and never contain it. Built once per JVM (_DONE-gated) so the
-    * spec can prove the drop never rewrites a v1 byte. */
+    * drop and never contain it. Built once per corpus fingerprint so
+    * the spec can prove the drop never rewrites a v1 byte. */
   private[graft] def dropLayout(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val out = tmpFor(spark, "events_dropped", dir)
-    if (!fsExists(spark, s"$out/_DONE")) {
+    buildShared(spark, sharedFor(spark, "events_dropped", dir)) { out =>
       val ev = eventsWithParts(spark, dir)
         .select($"event_id", $"event_type", $"value", $"props", $"day")
         .localCheckpoint()
@@ -1487,11 +1462,7 @@ object IngestOps {
         .write.mode(SaveMode.Overwrite).parquet(s"$out/v1")
       ev.filter($"day" > 15).drop("props")
         .write.mode(SaveMode.Overwrite).parquet(s"$out/v2")
-      val done = new org.apache.hadoop.fs.Path(out, "_DONE")
-      done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(done, true).close()
     }
-    out
   }
 
   /** `alter_drop_col` — column DROP, the fifth leg of schema evolution
@@ -1521,14 +1492,13 @@ object IngestOps {
 
   /** Two-era layout for DEFAULT-VALUE column add: v1 files (days 1-15)
     * predate the column entirely; v2 files (days 16+) are written after
-    * the ALTER and store real per-row `tier` values. Built once per JVM
-    * (_DONE-gated) so the spec can prove the add never rewrites a v1
-    * byte. */
+    * the ALTER and store real per-row `tier` values. Built once per
+    * corpus fingerprint so the spec can prove the add never rewrites a
+    * v1 byte. */
   private[graft] def defaultColLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    val out = tmpFor(spark, "events_defaultcol", dir)
-    if (!fsExists(spark, s"$out/_DONE")) {
+    buildShared(spark, sharedFor(spark, "events_defaultcol", dir)) { out =>
       val ev = eventsWithParts(spark, dir)
         .select($"event_id", $"event_type", $"value", $"day")
         .localCheckpoint()
@@ -1538,11 +1508,7 @@ object IngestOps {
         .withColumn("tier",
           when($"value" >= 50.0, lit("premium")).otherwise(lit("standard")))
         .write.mode(SaveMode.Overwrite).parquet(s"$out/v2")
-      val done = new org.apache.hadoop.fs.Path(out, "_DONE")
-      done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(done, true).close()
     }
-    out
   }
 
   /** `alter_add_col_default` — ADD COLUMN ... DEFAULT, the sixth leg of
@@ -1676,14 +1642,10 @@ object IngestOps {
   private[graft] def fragmentedLayout(spark: SparkSession,
       dir: String): String = {
     val out = sharedFor(spark, "events_fragmented", dir)
-    buildShared(spark, out,
-      root => fsExists(spark, s"$root/_DONE")) { tmpRoot =>
+    buildShared(spark, out) { tmpRoot =>
       Tables.events(spark, dir)
         .repartition(64)
         .write.mode(SaveMode.Overwrite).parquet(s"$tmpRoot/data")
-      val p = new org.apache.hadoop.fs.Path(tmpRoot, "_DONE")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(p, true).close()
     }
   }
 
@@ -1802,10 +1764,7 @@ object IngestOps {
   private[graft] def statsLayout(spark: SparkSession, dir: String): String = {
     import spark.implicits._
     val out = sharedFor(spark, "events_valstats", dir)
-    buildShared(spark, out,
-      root => fsExists(spark, s"$root/metadata/_DONE") &&
-        fsExists(spark, s"$root/metadata/files.stats.parquet/_SUCCESS")) {
-      tmpRoot =>
+    buildShared(spark, out) { tmpRoot =>
       eventsWithParts(spark, dir)
         .select($"event_id", $"user_id", $"event_type", $"value", $"day")
         .repartitionByRange(16, $"value")
@@ -1814,9 +1773,6 @@ object IngestOps {
         .option("compression", "zstd").parquet(s"$tmpRoot/data")
       writeStatsManifest(spark, tmpRoot, "files.stats",
         listDataFiles(spark, s"$tmpRoot/data"))
-      val done = new org.apache.hadoop.fs.Path(tmpRoot, "metadata/_DONE")
-      done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(done, true).close()
     }
   }
 
@@ -1891,10 +1847,7 @@ object IngestOps {
       dir: String): String = {
     import spark.implicits._
     val out = sharedFor(spark, "events_nullstats", dir)
-    buildShared(spark, out,
-      root => fsExists(spark, s"$root/metadata/_DONE") &&
-        fsExists(spark, s"$root/metadata/files.stats.parquet/_SUCCESS")) {
-      tmpRoot =>
+    buildShared(spark, out) { tmpRoot =>
       eventsWithParts(spark, dir)
         .select($"event_id", $"user_id", $"event_type",
           when($"event_type" === "click" && $"day".between(3, 7),
@@ -1906,9 +1859,6 @@ object IngestOps {
         .option("compression", "zstd").parquet(s"$tmpRoot/data")
       writeStatsManifest(spark, tmpRoot, "files.stats",
         listDataFiles(spark, s"$tmpRoot/data"))
-      val done = new org.apache.hadoop.fs.Path(tmpRoot, "metadata/_DONE")
-      done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(done, true).close()
     }
   }
 
@@ -1957,22 +1907,17 @@ object IngestOps {
     * 64 KiB covers the largest SF's ~3.4k rows/file with fpp ≈ 1e-4. */
   private[graft] def bloomSidecar(spark: SparkSession, dir: String,
       root: String): String = {
-    val out = sharedFor(spark, "events_blooms_v3", dir)
     // the sidecar records REL PATHS of the snapshot layout's data
-    // files; that layout is itself a rebuildable artifact (its gate
-    // grew in r19 and rebuilt every pre-r19 layout with fresh random
-    // part names), so corpus-keying alone is not enough — the gate
-    // also pins the exact file listing the blooms were built FROM,
-    // and a parent rebuild makes the sidecar rebuild instead of
-    // planning scans from dangling paths
+    // files; that layout is itself a rebuildable artifact (a prefix
+    // bump rebuilds it with fresh random part names), so corpus-keying
+    // alone is not enough — the key also pins the exact file listing
+    // the blooms were built FROM, and a parent rebuild makes the
+    // sidecar rebuild instead of planning scans from dangling paths
     val src = java.util.UUID.nameUUIDFromBytes(
       listDataFiles(spark, s"$root/data").toSeq.sorted.mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
-    buildShared(spark, out,
-      r => fsExists(spark, s"$r/blooms.parquet/_SUCCESS") &&
-        readMetaLines(spark, r, "source.txt") == Seq(src)) { tmpRoot =>
-      buildBloomSidecar(spark, s"$root/data", tmpRoot)
-      writeMetaLines(spark, tmpRoot, "source.txt", Seq(src))
+    buildShared(spark, sharedFor(spark, s"events_blooms_v3_$src", dir)) {
+      tmpRoot => buildBloomSidecar(spark, s"$root/data", tmpRoot)
     }
   }
 

@@ -100,7 +100,8 @@ object LakeOps {
       .partitionBy("day").parquet(out)
     touched.foreach { d =>
       if (before(d).nonEmpty && fileSet(d) == before(d))
-        fs.delete(new org.apache.hadoop.fs.Path(out, s"day=$d"), true)
+        IngestOps.deleteOrThrow(fs,
+          new org.apache.hadoop.fs.Path(out, s"day=$d"), recursive = true)
     }
   }
 
@@ -670,8 +671,8 @@ object LakeOps {
     val dataOrphans = (listData(spark, s"$root/data") -- referenced).toSeq
       .filter(rel => aged(java.nio.file.Paths.get(s"$root/data/$rel")))
     val fs = hfs(spark, root)
-    dataOrphans.foreach { rel =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/data/$rel"), false)
+    dataOrphans.foreach { rel => IngestOps.deleteOrThrow(fs,
+      new org.apache.hadoop.fs.Path(s"$root/data/$rel"), recursive = false)
     }
     val removedRe = """snap-(\d+)\.removed\.txt""".r
     val metaOrphans = snaps.filter {
@@ -787,8 +788,7 @@ object LakeOps {
       dir: String): (String, String) = {
     import spark.implicits._
     val out = IngestOps.sharedFor(spark, "events_specevo", dir)
-    IngestOps.buildShared(spark, out, root =>
-      IngestOps.fsExists(spark, s"$root/_DONE_EVOLVE")) { root =>
+    IngestOps.buildShared(spark, out) { root =>
       val ev = IngestOps.eventsWithParts(spark, dir)
         .withColumn("hour", hour($"ts"))
         .select($"event_id", $"user_id", $"event_type", $"value", $"ts",
@@ -803,7 +803,6 @@ object LakeOps {
         .write.mode(SaveMode.Overwrite)
         .option("compression", "zstd").partitionBy("day", "hour")
         .parquet(s"$root/v2")
-      IngestOps.writeMetaLines(spark, root, "_DONE_EVOLVE", Seq("done"))
     }
     (s"$out/v1", s"$out/v2")
   }
@@ -1006,24 +1005,18 @@ object LakeOps {
   private[graft] def versionedBaseLayout(spark: SparkSession,
       dir: String): String = {
     val out = IngestOps.sharedFor(spark, "events_versioned", dir)
-    IngestOps.buildShared(spark, out, root =>
-      IngestOps.fsExists(spark, s"$root/metadata/_DONE_VERSIONED")) { root =>
+    IngestOps.buildShared(spark, out) { root =>
       buildVersioned(spark, dir, root)
-      IngestOps.writeMetaLines(spark, root, "metadata/_DONE_VERSIONED",
-        Seq("done"))
     }
   }
 
   /** Shared immutable build of the [[writeBase]] day-partitioned
-    * copy-on-write base, fingerprint-keyed; cloned per call. The
-    * `_DONE_BASE` marker starts with an underscore so Spark's file
-    * index ignores it like `_SUCCESS`. */
+    * copy-on-write base, fingerprint-keyed; cloned per call. */
   private[graft] def cowBaseLayout(spark: SparkSession,
       dir: String): String = {
     import org.apache.spark.sql.functions.col
     val out = IngestOps.sharedFor(spark, "events_cowbase", dir)
-    IngestOps.buildShared(spark, out, root =>
-      IngestOps.fsExists(spark, s"$root/_DONE_BASE")) { root =>
+    IngestOps.buildShared(spark, out) { root =>
       IngestOps.eventsWithParts(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), col("day"))
@@ -1031,7 +1024,6 @@ object LakeOps {
         .write.mode(SaveMode.Overwrite)
         .option("compression", "zstd")
         .partitionBy("day").parquet(root)
-      IngestOps.writeMetaLines(spark, root, "_DONE_BASE", Seq("done"))
     }
   }
 
@@ -1049,14 +1041,11 @@ object LakeOps {
     * layout is immutable afterwards). */
   private[graft] def refsLayout(spark: SparkSession, dir: String): String = {
     val out = IngestOps.sharedFor(spark, "events_refs", dir)
-    IngestOps.buildShared(spark, out, root =>
-      IngestOps.fsExists(spark, s"$root/metadata/_DONE_REFS")) { root =>
+    IngestOps.buildShared(spark, out) { root =>
       writeVersioned(spark, dir, root)
       setRef(spark, root, "main", 3)
       setRef(spark, root, "audit", 2)
       setRef(spark, root, "v1", 1)
-      IngestOps.writeMetaLines(spark, root, "metadata/_DONE_REFS",
-        Seq("done"))
     }
   }
 
@@ -1074,8 +1063,7 @@ object LakeOps {
       dir: String): String = {
     import spark.implicits._
     val out = IngestOps.sharedFor(spark, "events_history", dir)
-    IngestOps.buildShared(spark, out, root =>
-      IngestOps.fsExists(spark, s"$root/metadata/_DONE_HISTORY")) { root =>
+    IngestOps.buildShared(spark, out) { root =>
       writeVersioned(spark, dir, root)
       commit(spark, root, stage(spark, root)(dayParquet(
         divergentPurchases(spark, dir).repartition($"day"))))
@@ -1086,9 +1074,6 @@ object LakeOps {
       // five events including the rollback — is the authoritative log
       writeManifest(spark, root, "ref-log.txt",
         Seq("1=1", "2=2", "3=3", "4=2", "5=4"))
-      // completeness marker LAST — this write is the publish
-      IngestOps.writeMetaLines(spark, root, "metadata/_DONE_HISTORY",
-        Seq("done"))
     }
   }
 
@@ -1101,8 +1086,7 @@ object LakeOps {
       dir: String): String = {
     import spark.implicits._
     val out = IngestOps.sharedFor(spark, "events_manifests", dir)
-    IngestOps.buildShared(spark, out, root =>
-      IngestOps.fsExists(spark, s"$root/metadata/_DONE_MANIFESTS")) { root =>
+    IngestOps.buildShared(spark, out) { root =>
       // the three-commit choreography IS buildVersioned's, unfragmented
       // (this fixture exercises manifest planning, not compaction work);
       // the returned checkpointed source feeds the 4th commit below
@@ -1114,8 +1098,6 @@ object LakeOps {
       commit(spark, root, stage(spark, root)(dayParquet(
         ev.filter($"day" <= 3).repartition($"day"))),
         removed = oldDays, ref = None)
-      IngestOps.writeMetaLines(spark, root, "metadata/_DONE_MANIFESTS",
-        Seq("done"))
     }
   }
 
@@ -1262,8 +1244,7 @@ object LakeOps {
       dir: String): String = {
     import spark.implicits._
     val base = IngestOps.sharedFor(spark, "events_expirebase", dir)
-    IngestOps.buildShared(spark, base, root =>
-      IngestOps.fsExists(spark, s"$root/metadata/_DONE_EXPIREBASE")) { root =>
+    IngestOps.buildShared(spark, base) { root =>
       writeVersioned(spark, dir, root)
       // the tag lands before maintenance, like a release pin in real life
       setRef(spark, root, "v1", 1)
@@ -1277,8 +1258,6 @@ object LakeOps {
         readLive(spark, root, Seq(2)).repartition($"day")
           .sortWithinPartitions($"user_id"))),
         removed = readManifest(spark, root, "snap-2.txt"))
-      IngestOps.writeMetaLines(spark, root, "metadata/_DONE_EXPIREBASE",
-        Seq("done"))
     }
   }
 
@@ -1310,7 +1289,8 @@ object LakeOps {
       .flatMap((s: Int) => liveFiles(spark, out, 1 to s).toSet)
     val fs = hfs(spark, data)
     (listData(spark, data) -- reachable).foreach { rel =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$data/$rel"), false)
+      IngestOps.deleteOrThrow(fs, new org.apache.hadoop.fs.Path(s"$data/$rel"),
+        recursive = false)
     }
     // Iceberg removes expired snapshots from METADATA along with their
     // files: a snapshot whose as-of view lost files to the reclaim is

@@ -870,8 +870,7 @@ object StreamingOps {
     import spark.implicits._
     import graft.sources.IngestOps
     val out = IngestOps.sharedFor(spark, "stream_latedrops", dir)
-    IngestOps.buildShared(spark, out,
-      root => IngestOps.fsExists(spark, s"$root/_DONE")) { root =>
+    IngestOps.buildShared(spark, out) { root =>
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val src = s"$root/src"
@@ -893,7 +892,6 @@ object StreamingOps {
       drop("b_advance", ev.filter(dayofmonth($"ts") === 10),
         1705300060000L)
       drop("c_late", ev.filter(dayofmonth($"ts") === 5), 1705300120000L)
-      fs.create(new org.apache.hadoop.fs.Path(root, "_DONE"), true).close()
     }
   }
 
@@ -1051,15 +1049,13 @@ object StreamingOps {
     import spark.implicits._
     import graft.sources.IngestOps
     val out = IngestOps.sharedFor(spark, "events_streambase", dir)
-    IngestOps.buildShared(spark, out,
-      root => IngestOps.fsExists(spark, s"$root/_DONE_BASE")) { root =>
+    IngestOps.buildShared(spark, out) { root =>
       IngestOps.eventsWithParts(spark, dir)
         .filter($"day".between(1, 10))
         .select($"event_id", $"user_id", $"event_type", $"value", $"day")
         .repartition($"day")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("compression", "zstd").partitionBy("day").parquet(root)
-      IngestOps.writeMetaLines(spark, root, "_DONE_BASE", Seq("done"))
     }
   }
 
@@ -1239,8 +1235,7 @@ object StreamingOps {
     import spark.implicits._
     import graft.sources.IngestOps
     val out = IngestOps.sharedFor(spark, "stream_resumebatches", dir)
-    IngestOps.buildShared(spark, out,
-      root => IngestOps.fsExists(spark, s"$root/_DONE")) { root =>
+    IngestOps.buildShared(spark, out) { root =>
       val ev = IngestOps.eventsWithParts(spark, dir)
         .select($"event_id", $"event_type", $"value", $"day")
         .filter($"day".between(1, 8))
@@ -1248,9 +1243,6 @@ object StreamingOps {
         .write.mode(SaveMode.Overwrite).parquet(s"$root/b1")
       ev.filter($"day".between(6, 8))
         .write.mode(SaveMode.Overwrite).parquet(s"$root/b2")
-      val p = new org.apache.hadoop.fs.Path(root, "_DONE")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .create(p, true).close()
     }
   }
 

@@ -94,4 +94,80 @@ class CrossProcessSpec extends SparkSpecBase {
     assert(L.orphanSweep(spark, out).isEmpty,
       "a clean two-writer run must leave no orphans")
   }
+
+  test("buildShared crash contract: a build that throws publishes " +
+      "nothing and the next call clears its files; clones carry no " +
+      "marker") {
+    import java.nio.file.{Files, Path, Paths}
+    val I = sources.IngestOps
+    val L = sources.LakeOps
+    val pid = java.lang.ProcessHandle.current().pid()
+    val out = I.shared(s"spec_buildshared_$pid")
+    val derived = I.shared(s"spec_buildshared_derived_$pid")
+    def done(p: String) = Files.exists(Paths.get(p + ".done"))
+    def files(root: String): Set[String] = {
+      val r = Paths.get(root)
+      val w = Files.walk(r)
+      try w.filter(p => Files.isRegularFile(p)).toArray.toSet
+        .map((p: AnyRef) => r.relativize(p.asInstanceOf[Path]).toString)
+      finally w.close()
+    }
+    def clear(): Unit = for (p <- Seq(out, derived);
+        q <- Seq(p, p + ".done", p + ".lock"))
+      org.apache.spark.network.util.JavaUtils
+        .deleteRecursively(new java.io.File(q))
+    def write(root: String, name: String): Unit = {
+      Files.createDirectories(Paths.get(root))
+      Files.write(Paths.get(root, name), name.getBytes("UTF-8"))
+    }
+    clear()
+    try {
+      // (a) a build that dies midway leaves its files but no marker ...
+      intercept[IllegalStateException] {
+        I.buildShared(spark, out) { root =>
+          write(root, "partial.txt")
+          throw new IllegalStateException("crash mid-build")
+        }
+      }
+      assert(!done(out), "a build that threw was published")
+      assert(files(out) == Set("partial.txt"))
+      // ... and the next call clears them before it rebuilds
+      var leftover = Set.empty[String]
+      I.buildShared(spark, out) { root =>
+        leftover = if (Files.exists(Paths.get(root))) files(root) else Set()
+        write(root, "full.txt")
+      }
+      assert(leftover.isEmpty, s"the rebuild started over $leftover")
+      assert(done(out) && files(out) == Set("full.txt"))
+      // a complete layout is reused, never rebuilt
+      var rebuilt = false
+      I.buildShared(spark, out) { _ => rebuilt = true }
+      assert(!rebuilt, "a complete layout was rebuilt")
+      // (b) a derived build that clones the complete layout and then
+      // dies is not complete: the base's marker stayed beside the base
+      intercept[IllegalStateException] {
+        I.buildShared(spark, derived) { root =>
+          L.cloneTree(out, root)
+          throw new IllegalStateException("crash after the clone")
+        }
+      }
+      assert(files(derived) == Set("full.txt"))
+      assert(!done(derived), "a crashed derived build reads as complete")
+      I.buildShared(spark, derived) { root =>
+        L.cloneTree(out, root)
+        write(root, "derived.txt")
+      }
+      assert(done(derived) && files(derived) == Set("full.txt", "derived.txt"))
+      // (c) cloning a real complete layout copies exactly its files,
+      // and no completeness marker is among them
+      val base = L.versionedBaseLayout(spark, sf)
+      assert(done(base))
+      val clone = I.tmp("buildshared_clone")
+      L.cloneTree(base, clone)
+      assert(files(clone) == files(base))
+      assert(!files(clone).exists(f => f.contains("_DONE") ||
+        f.endsWith(".done")), s"a marker was cloned: ${files(clone)}")
+      assert(!done(clone))
+    } finally clear()
+  }
 }

@@ -76,6 +76,29 @@ class EngineSpec extends SparkSpecBase {
       .toSeq
   }
 
+  /** (file, enclosing def, text) of every main-source statement: lines
+    * joined until parentheses balance, each tagged with the innermost
+    * def opened before it, trailing ` // ` comments dropped. */
+  private lazy val mainStatements: Seq[(String, String, String)] = {
+    val defName = """\bdef (\w+)""".r
+    mainSources.flatMap { case (file, lines) =>
+      var depth = 0
+      var enclosing = "<top>"
+      val stmt = new StringBuilder
+      lines.map(_.replaceAll("""\s//\s.*$""", "")).flatMap { l =>
+        if (depth == 0)
+          defName.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
+        stmt.append(l).append('\n')
+        depth = math.max(0, depth + l.count(_ == '(') - l.count(_ == ')'))
+        if (depth > 0) None
+        else {
+          val text = stmt.result(); stmt.clear()
+          Some((file, enclosing, text))
+        }
+      }
+    }
+  }
+
   test("Fixtures.prewarm covers every buildShared site and every " +
       "builder completes") {
     // tripwire: a new buildShared call site without a Fixtures entry
@@ -117,27 +140,10 @@ class EngineSpec extends SparkSpecBase {
     val addManifest = """snap-(\$\{[^}"]*\}|\$\w+|\d+)\.txt"""".r
     val writeCall =
       """\b(writeManifest|writeMetaLines|createLink|write|create|move|copy)\(""".r
-    val defName = """\bdef (\w+)""".r
-    // statements = lines joined until parentheses balance, each tagged
-    // with the innermost def opened before it
-    val writers = mainSources.flatMap { case (file, lines) =>
-      var depth = 0
-      var enclosing = "<top>"
-      val stmt = new StringBuilder
-      lines.map(_.replaceAll("""\s//\s.*$""", "")).flatMap { l =>
-        if (depth == 0)
-          defName.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
-        stmt.append(l).append('\n')
-        depth = math.max(0, depth + l.count(_ == '(') - l.count(_ == ')'))
-        if (depth > 0) None
-        else {
-          val text = stmt.result(); stmt.clear()
-          if (addManifest.findFirstIn(text).isDefined &&
-            writeCall.findFirstIn(text).isDefined)
-            Some(enclosing -> s"$file: ${text.trim.take(160)}")
-          else None
-        }
-      }
+    val writers = mainStatements.collect {
+      case (file, enclosing, text) if addManifest.findFirstIn(text).isDefined &&
+          writeCall.findFirstIn(text).isDefined =>
+        enclosing -> s"$file: ${text.trim.take(160)}"
     }
     val offenders = writers.filterNot(w =>
       w._1 == "tryCommit" || allowed.contains(w._1))
@@ -148,6 +154,28 @@ class EngineSpec extends SparkSpecBase {
     assert(found("tryCommit"), s"tryCommit's link not found: $found")
     allowed.foreach { case (d, why) =>
       assert(found(d), s"stale allowlist entry $d ($why)") }
+  }
+
+  test("buildShared owns the completeness marker: no other code names " +
+      "a _DONE marker or gates on _SUCCESS, and tmpFor is gone") {
+    // a layout that decides its own completeness is a second build-once
+    // path: one that can read a crashed build as complete, or serve a
+    // clone carrying its base's marker before the clone finished
+    val successGate = """(?s)fsExists\(.*_SUCCESS""".r
+    val offenders = mainStatements.collect {
+      case (file, enclosing, text)
+          if !(file == "IngestOps.scala" && enclosing == "buildShared") &&
+            (text.contains("_DONE") || text.contains("tmpFor") ||
+              successGate.findFirstIn(text).isDefined) =>
+        s"$file ($enclosing): ${text.trim.take(160)}"
+    }
+    assert(offenders.isEmpty, "completeness decided outside " +
+      "IngestOps.buildShared:\n  " + offenders.mkString("\n  "))
+    // and the owner is still there to find
+    assert(mainSources.exists { case (file, lines) =>
+      file == "IngestOps.scala" &&
+        lines.exists(_.contains("def buildShared(")) },
+      "IngestOps.buildShared not found")
   }
 
   test("main entry points are exactly Bench, Verify, DebugRun and " +

@@ -605,9 +605,25 @@ class IngestSpec extends SparkSpecBase {
         graft.sources.IngestOps.writeMetaLines(spark, s"nodelete://$dir",
           "clone.txt", Seq("z"))
       }
-      assert(e.getMessage.contains("unlink"), e.getMessage)
+      assert(e.getMessage.contains(s"$clone"), e.getMessage)
       assert(new String(Files.readAllBytes(base), UTF_8) == "a\nb",
         "the rewrite truncated the shared base through the link")
+      // the same helper guards the recursive deletes (a layout clear, an
+      // emptied partition dir): a refused tree delete names the tree,
+      // while a path that is already gone is not a failure
+      val tree = dir.resolve("tree")
+      Files.createDirectories(tree.resolve("day=1"))
+      Files.write(tree.resolve("day=1/part-0.parquet"), Array[Byte](1))
+      val treePath = new org.apache.hadoop.fs.Path(s"nodelete://$tree")
+      val fs = treePath.getFileSystem(hc)
+      val e2 = intercept[java.io.IOException] {
+        graft.sources.IngestOps.deleteOrThrow(fs, treePath, recursive = true)
+      }
+      assert(e2.getMessage.contains(s"$tree"), e2.getMessage)
+      assert(Files.exists(tree.resolve("day=1/part-0.parquet")))
+      graft.sources.IngestOps.deleteOrThrow(fs,
+        new org.apache.hadoop.fs.Path(s"nodelete://$dir/absent"),
+        recursive = true)
     } finally {
       hc.unset("fs.nodelete.impl")
       hc.unset("fs.nodelete.impl.disable.cache")
