@@ -1013,8 +1013,8 @@ object IngestOps {
     val df =
       if (rels.isEmpty) spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), statsSchema)
-      else spark.read.option("basePath", s"$root/data")
-        .parquet(rels.map(r => s"$root/data/$r").toSeq: _*)
+      else LakeOps.readFiles(spark, s"$root/data",
+          rels.map(r => s"$root/data/$r").toSeq)
         .groupBy(regexp_extract(input_file_name(), "/data/(.*)$", 1)
           .as("rel"))
         .agg(count(lit(1)).as("n_rows"),
@@ -1149,7 +1149,7 @@ object IngestOps {
     val root = snapshotLayout(spark, dir)
     val files = (1 to 2).flatMap(n => snapshotManifest(spark, root, n))
       .map(rel => s"$root/data/$rel")
-    spark.read.option("basePath", s"$root/data").parquet(files: _*)
+    LakeOps.readFiles(spark, s"$root/data", files)
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"), countDistinct($"user_id").as("n_users"))
       .orderBy($"day")
@@ -1191,10 +1191,9 @@ object IngestOps {
       require(fs.nonEmpty, s"mixed-format table lost its $ext era")
       rd(fs)
     }
-    era(".parquet", fs => spark.read.option("basePath", data)
-        .parquet(fs: _*))
-      .unionByName(era(".orc", fs => spark.read.option("basePath", data)
-        .orc(fs: _*)))
+    era(".parquet", LakeOps.readFiles(spark, data, _))
+      .unionByName(era(".orc", LakeOps.readFiles(spark, data, _,
+        new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat)))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"), countDistinct($"user_id").as("n_users"),
         dsum($"value").as("sum_value"))
@@ -1556,7 +1555,7 @@ object IngestOps {
     val snaps = commitLog(spark, root).filter(_._2 <= cutoffMs).map(_._1)
     val files = snaps.flatMap(n => snapshotManifest(spark, root, n))
       .map(rel => s"$root/data/$rel")
-    spark.read.option("basePath", s"$root/data").parquet(files: _*)
+    LakeOps.readFiles(spark, s"$root/data", files)
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"), dsum($"value").as("sum_value"))
       .orderBy($"day")
@@ -1876,10 +1875,8 @@ object IngestOps {
     val hits = statsManifest(spark, root, "files.stats")
       .filter($"n_null_value" > 0).select($"rel")
       .collect().map(r => s"$root/data/${r.getString(0)}").toSeq
-    val src = if (hits.nonEmpty)
-      spark.read.option("basePath", s"$root/data").parquet(hits: _*)
-    else spark.read.parquet(s"$root/data").filter(lit(false))
-    src.filter($"value".isNull)
+    LakeOps.readFiles(spark, s"$root/data", hits)
+      .filter($"value".isNull)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
         countDistinct($"day".cast("long")).as("n_days"),
@@ -2030,13 +2027,10 @@ object IngestOps {
       .collect().map(_.getLong(1)).toSeq.sorted
     val (files, _) = bloomQualifyingFiles(spark, sidecar, keys)
     // zero qualifying files (no probe days in the corpus, or every
-    // bloom excludes) is a valid empty answer, not a schema-inference
-    // crash — the same fallback the stats planners carry
-    val src = if (files.nonEmpty)
-      spark.read.option("basePath", s"$root/data")
-        .parquet(files.map(r => s"$root/data/$r"): _*)
-    else spark.read.parquet(s"$root/data").filter(lit(false))
-    src
+    // bloom excludes) is a valid empty answer: readFiles returns an
+    // empty frame with the table's schema
+    LakeOps.readFiles(spark, s"$root/data",
+        files.map(r => s"$root/data/$r"))
       .filter($"event_id".isin(keys: _*))
       .select($"event_id", $"event_type", $"value")
       .orderBy($"event_id")
@@ -2052,13 +2046,9 @@ object IngestOps {
     import spark.implicits._
     val root = statsLayout(spark, dir)
     val (files, _) = statsQualifyingFiles(spark, root, 180.0, 220.0)
-    // zero qualifying files is a valid plan (empty answer), not an error —
-    // parquet with an empty path list can't infer a schema, so fall back
-    // to a scan the optimizer folds to nothing
-    val src = if (files.nonEmpty)
-      spark.read.option("basePath", s"$root/data").parquet(files: _*)
-    else spark.read.parquet(s"$root/data").filter(lit(false))
-    src.filter($"value".between(180.0, 220.0))
+    // zero qualifying files is a valid plan (empty answer), not an error
+    LakeOps.readFiles(spark, s"$root/data", files)
+      .filter($"value".between(180.0, 220.0))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), countDistinct($"user_id").as("n_users"),
         dsum($"value").as("sum_value"))

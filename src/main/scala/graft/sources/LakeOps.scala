@@ -1,7 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileFormat,
+  FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.types.StructType
 import graft.operators.dsum
 
 /** Lake mutation surface — the table-maintenance operations an Iceberg
@@ -696,10 +702,15 @@ object LakeOps {
 
   /** The default reader: follow the `main` ref to its snapshot and
     * plan from the manifests at or below it — the view every kill
-    * point in [[appendCommit]] must leave intact. */
+    * point in [[appendCommit]] must leave intact. A table with no
+    * `main` ref has never committed, and reading it is an error. */
   private[graft] def readCurrent(spark: SparkSession,
-      root: String): DataFrame =
-    readLive(spark, root, 1 to readRefs(spark, root)("main"))
+      root: String): DataFrame = {
+    val main = readRefs(spark, root).getOrElse("main",
+      throw new IllegalStateException(s"table $root has no main ref: " +
+        "no snapshot has been committed"))
+    readLive(spark, root, 1 to main)
+  }
 
   /** `commit_conflict_retry` — the optimistic-concurrency commit
     * protocol (the serializable-snapshot contract behind the
@@ -744,9 +755,8 @@ object LakeOps {
   def incrementalRead(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = IngestOps.snapshotLayout(spark, dir)
-    val files = IngestOps.snapshotManifest(spark, root, 3)
-      .map(rel => s"$root/data/$rel")
-    spark.read.option("basePath", s"$root/data").parquet(files: _*)
+    readFiles(spark, s"$root/data", IngestOps.snapshotManifest(spark, root, 3)
+        .map(rel => s"$root/data/$rel"))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"), countDistinct($"user_id").as("n_users"))
       .orderBy($"day")
@@ -1113,11 +1123,74 @@ object LakeOps {
           "were reclaimed; read a ref-pinned snapshot instead")
   }
 
+  /** Read the union of snapshots `snaps`: the manifests name the live
+    * files and [[readFiles]] scans exactly those, so membership comes
+    * from metadata alone — an uncommitted file beside a live one is
+    * never read. */
   private[graft] def readLive(spark: SparkSession, root: String,
       snaps: Seq[Int]): DataFrame = {
     if (snaps.nonEmpty) requireNotExpired(spark, root, snaps.max)
-    val files = liveFiles(spark, root, snaps).map(rel => s"$root/data/$rel")
-    spark.read.option("basePath", s"$root/data").parquet(files: _*)
+    readFiles(spark, s"$root/data",
+      liveFiles(spark, root, snaps).map(rel => s"$root/data/$rel"))
+  }
+
+  /** The one manifest-planned read: scan exactly `files` (absolute
+    * paths under the data directory `basePath`, as a manifest names
+    * them), Iceberg's planFiles shape. Spark's own
+    * `read.option("basePath", …).parquet(files)` checks every path and
+    * then lists them all again, above 32 paths as a distributed job
+    * with one task per file; here the relation is built directly:
+    *  - file statuses come from at most one driver `listStatus` per
+    *    distinct parent directory, kept only for the files the list
+    *    names; they fill the index's status cache, so the index lists
+    *    nothing. A named file the listing does not return fails here,
+    *    at plan time, naming the path;
+    *  - partitions are Spark's own inference from `basePath` (`day`
+    *    keeps its inferred type);
+    *  - the data schema is `format.inferSchema` over the index's files
+    *    (the same first footer a plain read touches), minus the
+    *    partition columns, nullable — the steps of
+    *    `DataSource.resolveRelation`.
+    * An empty list reads `basePath` itself filtered to nothing: an
+    * empty frame with the table's schema. */
+  private[graft] def readFiles(spark: SparkSession, basePath: String,
+      files: Seq[String],
+      format: FileFormat with DataSourceRegister = new ParquetFileFormat)
+      : DataFrame = {
+    if (files.isEmpty)
+      return spark.read.format(format.shortName()).load(basePath)
+        .filter(lit(false))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val named = files.map { f =>
+      val p = new Path(f)
+      p.getFileSystem(conf).makeQualified(p)
+    }.distinct
+    val statuses: Map[Path, FileStatus] = named.groupBy(_.getParent)
+      .flatMap { case (dir, inDir) =>
+        val listed = (try dir.getFileSystem(conf).listStatus(dir)
+          catch { case _: java.io.FileNotFoundException => Array.empty })
+          .map(s => s.getPath -> s).toMap
+        inDir.map(p => p -> listed.getOrElse(p,
+          throw new java.io.FileNotFoundException(
+            s"manifest-listed file $p does not exist")))
+      }
+    val manifestOnly = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+        statuses.get(p).map(Array(_))
+      def putLeafFiles(p: Path, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val options = Map("basePath" -> basePath)
+    val index = new InMemoryFileIndex(spark, named, options, None,
+      manifestOnly)
+    val parts = index.partitionSchema
+    val inferred = format.inferSchema(spark, options, index.allFiles())
+      .getOrElse(throw new IllegalStateException(
+        s"cannot infer a schema from ${named.head}"))
+    val dataSchema = StructType(inferred.filterNot(f =>
+      parts.exists(_.name.equalsIgnoreCase(f.name))))
+    GraftBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(index, parts,
+      GraftBridge.asNullable(dataSchema), None, format, options)(spark)))
   }
 
   /** `manifest_rewrite` — MANIFEST compaction (Iceberg's
@@ -1158,8 +1231,7 @@ object LakeOps {
       if (readManifest(spark, root, s"snap-$n.FULL").nonEmpty)
         readManifest(spark, root, s"snap-$n.txt")
       else liveFiles(spark, root, 1 to n)
-    spark.read.option("basePath", s"$root/data")
-      .parquet(files.map(rel => s"$root/data/$rel"): _*)
+    readFiles(spark, s"$root/data", files.map(rel => s"$root/data/$rel"))
   }
 
   /** `table_clone` — ZERO-COPY shallow clone (Delta's SHALLOW CLONE /
@@ -1205,7 +1277,7 @@ object LakeOps {
   }
 
   /** CLONE READ: resolve the manifests against their storage roots as
-    * one basePath-ed read PER ERA, unioned — `day` stays a real
+    * one [[readFiles]] scan PER ERA, unioned — `day` stays a real
     * partition column in both branches, so a day predicate prunes at
     * PLANNING time (directories never listed), instead of being
     * re-derived per row from `input_file_name` and filtered post-scan.
@@ -1226,8 +1298,7 @@ object LakeOps {
     // may carry extra physical columns the clone never adopted)
     val cols = Seq("event_id", "user_id", "event_type", "value", "day")
     resolved.groupBy(_._1).toSeq.sortBy(_._1).map { case (bp, fs) =>
-      spark.read.option("basePath", bp).parquet(fs.map(_._2): _*)
-        .select(cols.map(col): _*)
+      readFiles(spark, bp, fs.map(_._2)).select(cols.map(col): _*)
     }.reduce(_ unionByName _)
   }
 

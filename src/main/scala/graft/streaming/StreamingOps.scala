@@ -1130,11 +1130,10 @@ object StreamingOps {
       "day=(\\d+)/".r.findFirstMatchIn(r).map(_.group(1)))
       .distinct.sorted
     val glob = s"$root/data/day={${days.mkString(",")}}"
-    val sch = spark.read.option("basePath", s"$root/data")
-      .parquet(rels.map(r => s"$root/data/$r"): _*).schema
-    val stream = spark.readStream.schema(sch)
-      .option("basePath", s"$root/data")
-      .parquet(glob)
+    val sch = graft.sources.LakeOps.readFiles(spark, s"$root/data",
+      rels.map(r => s"$root/data/$r")).schema
+    val stream = spark.readStream.option("basePath", s"$root/data")
+      .schema(sch).parquet(glob)
     (stream, root)
   }
 

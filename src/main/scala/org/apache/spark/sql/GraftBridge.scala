@@ -21,6 +21,11 @@ object GraftBridge {
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `schema` with every field, nested ones too, nullable — what a
+    * file relation's data schema is (`asNullable` is private[spark]). */
+  def asNullable(schema: types.StructType): types.StructType =
+    schema.asNullable
+
   /** The (pre-analysis) logical plan backing a Dataset. */
   def plan(df: Dataset[_]): catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan

@@ -178,6 +178,31 @@ class EngineSpec extends SparkSpecBase {
       "IngestOps.buildShared not found")
   }
 
+  test("manifest reads go through LakeOps.readFiles: no other code " +
+      "spells option(\"basePath\", except stream_cdf_read's stream source") {
+    // a basePath-ed read of a file list is a second read path: Spark
+    // re-lists every path it is given (a distributed job above 32), and
+    // nothing stops it being handed a directory instead of a manifest.
+    // The exception is a streaming file source over the delta's day
+    // directories: Spark lists it per micro-batch, and there is no batch
+    // relation to plan.
+    def streamSource(enclosing: String, text: String) =
+      enclosing == "cdfStream" && text.contains("spark.readStream")
+    val sites = mainStatements.filter(_._3.contains("option(\"basePath\""))
+    val offenders = sites.collect {
+      case (file, enclosing, text) if !streamSource(enclosing, text) =>
+        s"$file ($enclosing): ${text.trim.take(160)}"
+    }
+    assert(offenders.isEmpty, "basePath-ed reads outside " +
+      "LakeOps.readFiles:\n  " + offenders.mkString("\n  "))
+    // the helper is still there, and the exception is not stale
+    assert(mainSources.exists { case (file, lines) =>
+      file == "LakeOps.scala" && lines.exists(_.contains("def readFiles(")) },
+      "LakeOps.readFiles not found")
+    assert(sites.exists(s => streamSource(s._2, s._3)),
+      "stale exception: cdfStream's stream source no longer spells basePath")
+  }
+
   test("main entry points are exactly Bench, Verify, DebugRun and " +
       "CommitWorker") {
     // the driver's two mains, the one dev runner, and the commit client

@@ -1081,4 +1081,134 @@ class LakeSpec extends SparkSpecBase {
     } finally spark.conf.unset(key)
     assert(normal == fenced, "delete_mor answer changed under the fence")
   }
+
+  // --- the manifest-planned read path (LakeOps.readFiles) --------------
+
+  /** A fresh table of two appendCommits, each one file per day — more
+    * than 32 live files, past Spark's parallel-listing threshold.
+    * Built once; tests that damage a table work on a [[cloneTree]]. */
+  private lazy val twoCommitTable: String = {
+    import spark.implicits._
+    val L = sources.LakeOps
+    val out = sources.IngestOps.tmp("events_two_commits")
+    org.apache.spark.network.util.JavaUtils
+      .deleteRecursively(new java.io.File(out))
+    Seq("data", "metadata").foreach(d => java.nio.file.Files
+      .createDirectories(java.nio.file.Paths.get(out, d)))
+    val ev = sources.IngestOps.eventsWithParts(spark, sf)
+      .select($"event_id", $"user_id", $"event_type", $"value", $"day")
+      .localCheckpoint()
+    Seq(0, 1).foreach(i =>
+      L.appendCommit(spark, out, ev.filter(pmod($"event_id", lit(2)) === i)))
+    out
+  }
+
+  /** The spelling every manifest read used before [[readFiles]]. */
+  private def listingRead(root: String, rels: Seq[String]) =
+    spark.read.option("basePath", s"$root/data")
+      .parquet(rels.map(r => s"$root/data/$r"): _*)
+
+  private def partitionSchema(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collectFirst {
+      case org.apache.spark.sql.execution.datasources.LogicalRelation(
+          r: org.apache.spark.sql.execution.datasources.HadoopFsRelation,
+          _, _, _, _) => r.partitionSchema
+    }
+
+  test("readCurrent plans from the manifest: no listing job, and the " +
+      "schema, rows and input files of the old basePath-ed read") {
+    val L = sources.LakeOps
+    val out = twoCommitTable
+    val live = L.liveFiles(spark, out, 1 to L.readRefs(spark, out)("main"))
+    assert(live.size > 32, s"only ${live.size} live files")
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descs.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    // plan and run `read`, returning it with the jobs both started
+    // (the old spelling's listing job runs when the read is planned)
+    def jobsOf(read: => org.apache.spark.sql.DataFrame) = {
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
+      descs.clear()
+      val df = read
+      df.collect()
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
+      import scala.jdk.CollectionConverters._
+      (df, descs.asScala.toSeq)
+    }
+    sc.addSparkListener(listener)
+    val ((old, oldJobs), (cur, curJobs)) =
+      try (jobsOf(listingRead(out, live)), jobsOf(L.readCurrent(spark, out)))
+      finally sc.removeSparkListener(listener)
+    // (a) the listener sees the old spelling's listing job, and the
+    // manifest-planned read starts none
+    val listing = "Listing leaf files"
+    assert(oldJobs.exists(_.startsWith(listing)),
+      s"the old read ran no listing job — the listener is blind: $oldJobs")
+    assert(!curJobs.exists(_.startsWith(listing)),
+      s"readCurrent started a listing job: $curJobs")
+    // (b) same fields, types, nullability and partition column
+    assert(cur.schema == old.schema,
+      s"${cur.schema.treeString} vs ${old.schema.treeString}")
+    assert(partitionSchema(cur).map(_.fieldNames.toSeq) == Some(Seq("day")))
+    assert(partitionSchema(cur) == partitionSchema(old))
+    // (c) the same rows
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    assert(rows(cur) == rows(old))
+    // (d) exactly the manifest's live set
+    def local(fs: Seq[String]) = fs.map(f => new Path(f).toUri.getPath).toSet
+    assert(local(cur.inputFiles.toSeq) ==
+      local(live.map(rel => s"$out/data/$rel")))
+  }
+
+  test("readFiles: a live file missing on disk fails at plan time naming " +
+      "it; an unlisted file beside live ones is never read; an empty " +
+      "list is an empty frame with the table's schema") {
+    val L = sources.LakeOps
+    val out = sources.IngestOps.tmp("events_two_commits_damaged")
+    L.cloneTree(twoCommitTable, out)
+    val live = L.liveFiles(spark, out, 1 to 2)
+    val schema = L.readCurrent(spark, out).schema
+    val n = L.readCurrent(spark, out).count()
+    // a file no manifest names, in a live partition directory: a
+    // crashed writer's published debris looks exactly like this
+    val donor = java.nio.file.Paths.get(out, "data", live.head)
+    val stray = donor.resolveSibling("part-99999-stray.c000.zstd.parquet")
+    java.nio.file.Files.copy(donor, stray)
+    val read = L.readCurrent(spark, out)
+      .select(input_file_name().as("f")).distinct()
+      .collect().map(_.getString(0))
+    val strayName = stray.getFileName.toString
+    assert(read.nonEmpty && !read.exists(_.endsWith(strayName)),
+      "a file no manifest names was read")
+    assert(L.readCurrent(spark, out).count() == n)
+    // a manifest-listed file deleted from disk: the read fails when it
+    // is planned (no action runs here), and says which file
+    val gone = java.nio.file.Paths.get(out, "data", live.last)
+    java.nio.file.Files.delete(gone)
+    val e = intercept[java.io.FileNotFoundException](
+      L.readCurrent(spark, out))
+    assert(e.getMessage.contains(gone.toString), e.getMessage)
+    // no files: empty, with the table's schema
+    val empty = L.readFiles(spark, s"$out/data", Nil)
+    assert(empty.schema == schema)
+    assert(empty.count() == 0)
+  }
+
+  test("readCurrent on a table that never committed names the root and " +
+      "says no snapshot was committed") {
+    val out = sources.IngestOps.tmp("events_never_committed")
+    Seq("data", "metadata").foreach(d => java.nio.file.Files
+      .createDirectories(java.nio.file.Paths.get(out, d)))
+    val e = intercept[IllegalStateException](
+      sources.LakeOps.readCurrent(spark, out))
+    assert(e.getMessage.contains(out) &&
+      e.getMessage.contains("no snapshot has been committed"), e.getMessage)
+  }
 }
