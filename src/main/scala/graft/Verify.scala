@@ -43,8 +43,8 @@ object Verify {
         // dumps and failures.json are what keep the gate honest
         try {
           val stale = new org.apache.hadoop.fs.Path(s"$outDir/$name")
-          stale.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(stale, true)
+          sources.IngestOps.deleteOrThrow(stale.getFileSystem(
+            spark.sparkContext.hadoopConfiguration), stale, recursive = true)
         } catch { case e2: Throwable =>
           System.err.println(s"[verify] $name stale-dump delete failed: " +
             e2.getMessage)

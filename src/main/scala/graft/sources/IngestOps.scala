@@ -477,8 +477,8 @@ object IngestOps {
     // managed locations survive — clear the stale dir or CREATE fails
     val loc = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir") + "/graft.db/events_tbl")
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
+    deleteOrThrow(loc.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      loc, recursive = true)
     eventsWithParts(spark, dir)
       .select($"event_id", $"user_id", $"event_type", $"value", $"day")
       .write.mode(SaveMode.Overwrite)
@@ -499,8 +499,8 @@ object IngestOps {
     spark.sql("DROP TABLE IF EXISTS graft.props_tbl")
     val loc = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir") + "/graft.db/props_tbl")
-    loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(loc, true)
+    deleteOrThrow(loc.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      loc, recursive = true)
     spark.sql(
       "CREATE TABLE graft.props_tbl (k INT) USING parquet TBLPROPERTIES (" +
         "'write.parquet.compression-codec'='zstd')")
@@ -1171,8 +1171,8 @@ object IngestOps {
     import spark.implicits._
     val out = tmp("events_mixed_format")
     val outPath = new org.apache.hadoop.fs.Path(out)
-    outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(outPath, true)
+    deleteOrThrow(outPath.getFileSystem(
+      spark.sparkContext.hadoopConfiguration), outPath, recursive = true)
     val data = s"$out/data"
     val ev = eventsWithParts(spark, dir)
       .select($"event_id", $"user_id", $"event_type", $"value", $"day")

@@ -12,31 +12,30 @@ import graft.operators.dsum
 
 /** Lake mutation surface — the table-maintenance operations an Iceberg
   * user runs after the initial load (SURVEY.md §2a extension): MERGE
-  * upsert, DELETE WHERE, and incremental (changelog) reads between
-  * snapshots. The reference holds these as Iceberg library calls
-  * (`overwrite()/newDelete()` commit shapes around
-  * `BulkParquetToIcebergAtomicMultipart.java:97-101`); here each is the
-  * copy-on-write plan Iceberg itself executes: identify affected
-  * partitions from metadata, rewrite ONLY those partitions in one
-  * distributed pass, leave every other data file byte-identical (asserted
-  * in LakeSpec).
+  * upsert, UPDATE and DELETE (copy-on-write and merge-on-read), refs,
+  * expiry and incremental reads. Every table a key mutates is a
+  * versioned table: immutable parquet files under `data/`, and under
+  * `metadata/` one manifest per snapshot plus the refs. A table changes
+  * only through a commit ([[stage]] then [[commit]]), whose manifest
+  * link is the atomic step (the reference's commit,
+  * `BulkParquetToIcebergAtomicMultipart.java:97-101`). A row-level
+  * write is the copy-on-write plan Iceberg itself executes
+  * ([[rewriteDays]]): identify the affected partitions from metadata,
+  * rewrite ONLY those partitions in one distributed pass, and commit
+  * their old files as the removal set — a reader sees the table before
+  * or after, never between, and every other data file keeps its bytes
+  * (asserted in LakeSpec). Reads plan from the manifests
+  * ([[readCurrent]], [[readLive]], [[readFiles]]), never from a
+  * directory listing.
   *
   * Scale shape: the only driver-side materialization is the DISTINCT
-  * PARTITION KEY list of the touched partitions (metadata cardinality —
-  * same as Iceberg's manifest plan), never row data. The rewrite shuffles
-  * once on the partition key; untouched partitions are never read. At
-  * 100 TB a MERGE touching 5 of 10 000 day-partitions reads and writes
-  * 0.05 % of the table.
+  * PARTITION KEY list of the touched partitions and the manifests' file
+  * lists (metadata cardinality — same as Iceberg's manifest plan), never
+  * row data. The rewrite shuffles once on the partition key; untouched
+  * partitions are never read. At 100 TB a MERGE touching 5 of 10 000
+  * day-partitions reads and writes 0.05 % of the table.
   */
 object LakeOps {
-
-  /** Day-partitioned copy-on-write table at `out`, one file per day —
-    * a working clone of the shared immutable base ([[cowBaseLayout]])
-    * so the mutation keys time their commit choreography, not the base
-    * build. */
-  private def writeBase(spark: SparkSession, dir: String,
-      out: String): Unit =
-    cloneTree(cowBaseLayout(spark, dir), out)
 
   /** Size-fenced broadcast hint for MoR delete frames: apply the hint
     * only when the frame's PLANNED size (optimizer stats — file bytes
@@ -65,67 +64,37 @@ object LakeOps {
     else df
   }
 
-  /** Overwrite only the partitions present in `df` (Iceberg's
-    * copy-on-write commit). Dynamic overwrite is scoped PER-WRITE via
-    * the writer option, never the session conf: a concurrent writer
-    * (a streaming micro-batch calls this from its own thread) must not
-    * observe a flipped global mode — static + Overwrite would truncate
-    * every untouched partition in the table. `touched` lists the
-    * partition values the commit's predicate hit: dynamic overwrite
-    * only REPLACES partitions present in the output, so a touched
-    * partition whose EVERY row was deleted would otherwise keep its
-    * stale file and resurrect the doomed rows — such partitions are
-    * detected by their unchanged file set (a rewrite always lands
-    * fresh task-UUID file names) and their directories dropped
-    * explicitly, completing the delete.
-    *
-    * Visibility contract: this is the DIRECTORY-table commit, and the
-    * empty-partition drop is a second filesystem step after the
-    * overwrite — a reader racing the window between them can observe
-    * the doomed rows of a fully-emptied partition once more, and a
-    * writer crash inside the window leaves them until the op re-runs.
-    * That is inherent to path-listing tables (Hive's insert-overwrite
-    * has the same window); the engine's atomic path is the VERSIONED
-    * table ([[stage]]/[[commit]]), where manifests make
-    * every commit all-or-nothing and LakeSpec's fault injection proves
-    * it. The keys on this path measure CoW rewrite choreography, not
-    * isolation. */
-  private[graft] def rewritePartitions(spark: SparkSession, df: DataFrame,
-      out: String, touched: Seq[Int]): Unit = {
-    val fs = hfs(spark, out)
-    def fileSet(d: Int): Set[String] = {
-      val p = new org.apache.hadoop.fs.Path(out, s"day=$d")
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).map(_.getPath.getName).toSet
-    }
-    val before = touched.map(d => d -> fileSet(d)).toMap
-    df.repartition(col("day"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "zstd")
-      .partitionBy("day").parquet(out)
-    touched.foreach { d =>
-      if (before(d).nonEmpty && fileSet(d) == before(d))
-        IngestOps.deleteOrThrow(fs,
-          new org.apache.hadoop.fs.Path(out, s"day=$d"), recursive = true)
-    }
+  /** The copy-on-write commit every row-level write takes (Iceberg's
+    * overwrite-by-filter snapshot): `table` is the table as the mutation
+    * leaves it, and only its `days` are written. Those days' files, taken
+    * from `main`'s live set, are the removal set; their new rows are
+    * staged day-partitioned (the day filter prunes the scan) and
+    * [[commit]] links both halves at once and moves `main`. A day whose
+    * every row was deleted stages no file and so drops out of the live
+    * set; every other day keeps its files. A replace commit has one
+    * writer and one attempt; losing the slot throws. Steps as
+    * [[appendCommit]]. Returns the slot won. */
+  private[graft] def rewriteDays(spark: SparkSession, root: String,
+      table: DataFrame, days: Seq[Int],
+      onStep: String => Unit = _ => ()): Int = {
+    import spark.implicits._
+    val dayRe = "^day=(\\d+)/".r
+    val touched = liveFiles(spark, root, 1 to mainSnapshot(spark, root))
+      .filter(rel => dayRe.findFirstMatchIn(rel)
+        .exists(m => days.contains(m.group(1).toInt)))
+    val rows = table.filter($"day".isin(days.map(Int.box): _*))
+    val won = commit(spark, root,
+      stage(spark, root, onStep)(dayParquet(rows.repartition($"day"))),
+      removed = touched, onStep = onStep)
+    if (won < 0) throw new IllegalStateException(
+      s"copy-on-write commit on $root lost its snapshot slot to another writer")
+    won
   }
 
-  /** `merge_upsert` — MERGE INTO base USING updates ON event_id:
-    * matched rows get the update's value, unmatched update rows are
-    * inserted. Updates = even event_ids of days 8-12 with value doubled,
-    * plus the same rows re-keyed (negated: -id-1, disjoint from every
-    * real id at ANY corpus scale) as inserts. Copy-on-write: the
-    * affected day-partitions are computed from the updates' keys
-    * (metadata-scale collect), rewritten as (base ⟕anti updates) ∪
-    * updates in one shuffle; days outside 8-12 keep their original files
-    * (LakeSpec asserts byte-identical). */
   /** The MERGE fixture's source frame, shared by [[mergeUpsert]] and
     * [[mergeUpsertEvolve]] so the (day window, even-key predicate,
     * value*2, negative re-key, +1000.0) semantics exist exactly once —
-    * both oracles encode the same arithmetic. Updates = even event_ids
-    * of days 8-12 with value doubled, plus the same rows re-keyed into
-    * the negative space as inserts. */
+    * both oracles encode the same arithmetic. */
   private def mergeUpdates(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val matched = IngestOps.eventsWithParts(spark, dir)
@@ -138,19 +107,27 @@ object LakeOps {
         .withColumn("value", $"value" + 1000.0))
   }
 
+  /** `merge_upsert` — MERGE INTO base USING updates ON event_id:
+    * matched rows get the update's value, unmatched update rows are
+    * inserted. Updates = even event_ids of days 8-12 with value doubled,
+    * plus the same rows re-keyed (negated: -id-1, disjoint from every
+    * real id at ANY corpus scale) as inserts. Copy-on-write: the
+    * affected day-partitions are computed from the updates' keys
+    * (metadata-scale collect), rewritten as (base ⟕anti updates) ∪
+    * updates in one shuffle; days outside 8-12 keep their original files
+    * (LakeSpec asserts byte-identical). */
   def mergeUpsert(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = IngestOps.tmp("events_merge")
-    writeBase(spark, dir, out)
+    cloneTree(cowBaseLayout(spark, dir), out)
     val updates = mergeUpdates(spark, dir)
     // partition keys touched by the merge — metadata cardinality only
     val days = touchedDays(updates)
-    val base = spark.read.parquet(out)
-    val merged = base.filter($"day".isin(days.map(Int.box): _*))
+    val merged = readCurrent(spark, out)
       .join(updates.select($"event_id"), Seq("event_id"), "left_anti")
       .unionByName(updates)
-    rewritePartitions(spark, merged, out, days)
-    spark.read.parquet(out)
+    rewriteDays(spark, out, merged, days)
+    readCurrent(spark, out)
       .filter($"day".between(6, 14))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"),
@@ -167,25 +144,23 @@ object LakeOps {
     * survivors there adopt it as NULL), while untouched partitions keep
     * their narrow footers byte-for-byte (LakeSpec asserts both by
     * schema and mtime) — Iceberg's add-column contract fused into the
-    * MERGE commit. A `mergeSchema` read unifies the eras and every v1
-    * row surfaces NULL origin. At 100 TB evolving the schema costs
-    * exactly the partitions the MERGE was rewriting anyway. */
+    * MERGE commit. The read unifies the two eras ([[evolvedRead]]) and
+    * every v1 row surfaces NULL origin. At 100 TB evolving the schema
+    * costs exactly the partitions the MERGE was rewriting anyway. */
   def mergeUpsertEvolve(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = IngestOps.tmp("events_merge_evolve")
-    writeBase(spark, dir, out)
+    cloneTree(cowBaseLayout(spark, dir), out)
     val updates = mergeUpdates(spark, dir)
       .withColumn("origin", lit("cdc"))
     val days = touchedDays(updates)
-    val base = spark.read.parquet(out)
     // the evolution: touched-partition survivors adopt the widened
     // schema (NULL origin); untouched footers are never rewritten
-    val merged = base.filter($"day".isin(days.map(Int.box): _*))
+    val merged = readCurrent(spark, out)
       .join(updates.select($"event_id"), Seq("event_id"), "left_anti")
       .withColumn("origin", lit(null).cast("string"))
       .unionByName(updates)
-    rewritePartitions(spark, merged, out, days)
-    spark.read.option("mergeSchema", "true").parquet(out)
+    evolvedRead(spark, out, rewriteDays(spark, out, merged, days))
       .filter($"day".between(6, 14))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"),
@@ -203,14 +178,12 @@ object LakeOps {
   def deleteWhere(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = IngestOps.tmp("events_delete")
-    writeBase(spark, dir, out)
-    val base = spark.read.parquet(out)
+    cloneTree(cowBaseLayout(spark, dir), out)
+    val base = readCurrent(spark, out)
     val doomed = $"event_type" === "click" && $"day".between(3, 7)
     val days = touchedDays(base.filter(doomed))
-    val survivors = base.filter($"day".isin(days.map(Int.box): _*))
-      .filter(!doomed)
-    rewritePartitions(spark, survivors, out, days)
-    spark.read.parquet(out)
+    rewriteDays(spark, out, base.filter(!doomed), days)
+    readCurrent(spark, out)
       .filter($"day".between(1, 10))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"),
@@ -234,8 +207,8 @@ object LakeOps {
     import spark.implicits._
     val out = IngestOps.tmp("events_mor")
     val del = IngestOps.tmp("events_mor_deletes")
-    writeBase(spark, dir, out)
-    val base = spark.read.parquet(out)
+    cloneTree(cowBaseLayout(spark, dir), out)
+    val base = readCurrent(spark, out)
     // the delete commit: doomed KEYS only, one tiny file
     base.filter($"event_type" === "click" && $"day".between(3, 7))
       .select($"event_id")
@@ -243,7 +216,7 @@ object LakeOps {
       .write.mode(SaveMode.Overwrite).parquet(del)
     // the read path: data files unchanged, delete file anti-joined in
     val deletes = spark.read.parquet(del)
-    spark.read.parquet(out)
+    base
       .join(boundedBroadcast(deletes), Seq("event_id"), "left_anti")
       .filter($"day".between(1, 10))
       .groupBy($"day".cast("long").as("day"))
@@ -265,9 +238,10 @@ object LakeOps {
     import spark.implicits._
     val out = IngestOps.tmp("events_mor_pos")
     val del = IngestOps.tmp("events_mor_pos_deletes")
-    writeBase(spark, dir, out)
+    cloneTree(cowBaseLayout(spark, dir), out)
+    val base = readCurrent(spark, out)
     // the delete commit: physical row addresses of the doomed rows
-    spark.read.parquet(out)
+    base
       .filter($"event_type" === "view" && $"day".between(4, 6))
       .select($"_metadata.file_path".as("d_file"),
         $"_metadata.row_index".as("d_pos"))
@@ -275,7 +249,7 @@ object LakeOps {
       .write.mode(SaveMode.Overwrite).parquet(del)
     // the read path: anti-join on (file, position)
     val deletes = spark.read.parquet(del)
-    spark.read.parquet(out)
+    base
       .select($"*", $"_metadata.file_path".as("f"),
         $"_metadata.row_index".as("p"))
       .join(boundedBroadcast(deletes),
@@ -307,16 +281,17 @@ object LakeOps {
     import spark.implicits._
     val out = IngestOps.tmp("events_mor_dv")
     val dvDir = IngestOps.tmp("events_mor_dv_vectors")
-    writeBase(spark, dir, out)
+    cloneTree(cowBaseLayout(spark, dir), out)
+    val base = readCurrent(spark, out)
     // the delete commit: one bitmap per data file, positions from the
     // same `_metadata` columns a keyless position delete uses
     writeDeletionVectors(spark,
-      spark.read.parquet(out)
+      base
         .filter($"event_type" =!= "purchase" && $"day".between(3, 8))
         .select($"_metadata.file_path".as("file"),
           $"_metadata.row_index".as("pos")),
       dvDir)
-    val (merged, dvB) = readWithDeletionVectors(spark, out, dvDir)
+    val (merged, dvB) = readWithDeletionVectors(spark, base, dvDir)
     // eager: the day-level aggregate (≈10 rows) materializes NOW, so
     // the DV broadcast can be released synchronously instead of
     // accumulating across bench/spec reruns until the ContextCleaner
@@ -369,7 +344,7 @@ object LakeOps {
     * never a per-row deserialize and never a row-count-sized anti-join
     * shuffle. */
   private[graft] def readWithDeletionVectors(spark: SparkSession,
-      out: String, dvDir: String): (DataFrame,
+      base: DataFrame, dvDir: String): (DataFrame,
         org.apache.spark.broadcast.Broadcast[
           Map[String, org.roaringbitmap.RoaringBitmap]]) = {
     import spark.implicits._
@@ -385,7 +360,7 @@ object LakeOps {
     val bc = spark.sparkContext.broadcast(dvs)
     val live = udf((file: String, pos: Long) =>
       !bc.value.get(file).exists(_.contains(pos.toInt)))
-    val df = spark.read.parquet(out)
+    val df = base
       .withColumn("__dv_file", $"_metadata.file_path")
       .withColumn("__dv_pos", $"_metadata.row_index")
       .filter(live($"__dv_file", $"__dv_pos"))
@@ -395,38 +370,36 @@ object LakeOps {
 
   /** `delete_mor_seq` — SEQUENCE-NUMBER-correct merge-on-read (Iceberg
     * v2's data-sequence contract): an equality delete applies only to
-    * data files with a LOWER sequence number than the delete file.
-    * Base data commits at seq 1; a delete file dooms day-5 purchase
-    * keys at seq 2; seq 3 RE-INSERTS corrected rows under the SAME
-    * keys. The read anti-joins the deletes against seq-1 data ONLY, so
-    * the re-inserts survive — the naive spelling (anti-join over all
-    * data, ignoring sequence) would silently delete them (LakeSpec
-    * proves the two diverge and only the sequenced read is right).
-    * This ordering rule is what makes streaming upsert pipelines
-    * (delete+insert per key) correct at any scale. */
+    * data files with a LOWER sequence number than the delete file. The
+    * snapshot number is the data sequence number: base data is snapshot
+    * 1; a delete file dooms its day-5 purchase keys; snapshot 2
+    * RE-INSERTS corrected rows under the SAME keys. The read anti-joins
+    * the deletes against snapshot 1's files ONLY, so the re-inserts
+    * survive — the naive spelling (anti-join over the whole table,
+    * ignoring sequence) would silently delete them (LakeSpec proves the
+    * two diverge and only the sequenced read is right). This ordering
+    * rule is what makes streaming upsert pipelines (delete+insert per
+    * key) correct at any scale. */
   def deleteMorSeq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = IngestOps.tmp("events_mor_seq")
-    val seq1 = s"$out/seq1"; val seq3 = s"$out/seq3"
     val del = s"$out/deletes"
-    writeBase(spark, dir, seq1)
-    val base = spark.read.parquet(seq1)
-    val doomed = base.filter($"event_type" === "purchase" && $"day" === 5)
-    // seq 2: the delete commit — doomed keys only
+    cloneTree(cowBaseLayout(spark, dir), out)
+    val doomed = readCurrent(spark, out)
+      .filter($"event_type" === "purchase" && $"day" === 5)
+    // the delete: doomed keys only, above snapshot 1
     doomed.select($"event_id").repartition(1)
       .write.mode(SaveMode.Overwrite).parquet(del)
-    // seq 3: corrected rows re-inserted under the SAME keys
-    doomed.withColumn("event_type", lit("reinserted"))
-      .withColumn("value", $"value" + 5000.0)
-      .repartition($"day")
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("day").parquet(seq3)
-    // the sequence-aware read: deletes (seq 2) filter ONLY seq-1 data;
-    // seq-3 rows are newer than the delete and ride through untouched
+    // snapshot 2: corrected rows re-inserted under the SAME keys
+    appendCommit(spark, out, doomed
+      .withColumn("event_type", lit("reinserted"))
+      .withColumn("value", $"value" + 5000.0))
+    // the sequence-aware read: the deletes filter ONLY snapshot-1 data;
+    // snapshot-2 rows are newer than the delete and ride through
     val deletes = spark.read.parquet(del)
-    spark.read.parquet(seq1)
+    readLive(spark, out, Seq(1))
       .join(boundedBroadcast(deletes), Seq("event_id"), "left_anti")
-      .unionByName(spark.read.parquet(seq3))
+      .unionByName(readLive(spark, out, Seq(2)))
       .filter($"day".between(1, 10))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"),
@@ -454,8 +427,8 @@ object LakeOps {
     import spark.implicits._
     val out = IngestOps.tmp("events_mor_compact")
     val del = IngestOps.tmp("events_mor_compact_deletes")
-    writeBase(spark, dir, out)
-    val base = spark.read.parquet(out)
+    cloneTree(cowBaseLayout(spark, dir), out)
+    val base = readCurrent(spark, out)
     // the MoR delete commit ([[deleteMor]]'s shape): doomed KEYS only
     base.filter($"event_type" === "purchase" && $"day".between(5, 9))
       .select($"event_id")
@@ -467,15 +440,15 @@ object LakeOps {
     val days = touchedDays(
       base.join(boundedBroadcast(deletes), Seq("event_id"), "left_semi"))
     // fold the deletes into ONLY those partitions' data files
-    val survivors = base.filter($"day".isin(days.map(Int.box): _*))
-      .join(boundedBroadcast(deletes), Seq("event_id"), "left_anti")
-    rewritePartitions(spark, survivors, out, days)
+    rewriteDays(spark, out,
+      base.join(boundedBroadcast(deletes), Seq("event_id"), "left_anti"),
+      days)
     // the delete file is now redundant — remove it; the table is pure
     // data files again
     org.apache.spark.network.util.JavaUtils
       .deleteRecursively(new java.io.File(del))
     // post-compaction read: a plain scan, no merge at read time
-    spark.read.parquet(out)
+    readCurrent(spark, out)
       .filter($"day".between(1, 12))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"),
@@ -528,14 +501,19 @@ object LakeOps {
     * attempt — the cross-process retry loop's re-read of table state);
     * 1 for a table with no metadata yet. */
   private[graft] def nextSlot(root: String): Int = {
-    val meta = java.nio.file.Paths.get(root, "metadata")
-    if (!java.nio.file.Files.isDirectory(meta)) return 1
     val snapRe = """snap-(\d+)\.txt""".r
+    metadataNames(root).collect { case snapRe(n) => n.toInt }
+      .maxOption.getOrElse(0) + 1
+  }
+
+  /** File names under `root/metadata`; none for a table that has never
+    * linked a snapshot (`metadata/` is created by the first CAS). */
+  private def metadataNames(root: String): Seq[String] = {
+    val meta = java.nio.file.Paths.get(root, "metadata")
+    if (!java.nio.file.Files.isDirectory(meta)) return Nil
     val st = java.nio.file.Files.list(meta)
     try st.toArray.toSeq
       .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
-      .collect { case snapRe(n) => n.toInt }
-      .maxOption.getOrElse(0) + 1
     finally st.close()
   }
 
@@ -667,14 +645,15 @@ object LakeOps {
       catch { case _: java.io.IOException => false } // vanished: skip
     val meta = java.nio.file.Paths.get(root, "metadata")
     val snapRe = """snap-(\d+)\.txt""".r
-    val st = java.nio.file.Files.list(meta)
-    val snaps = try st.toArray.toSeq
-      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
-    finally st.close()
+    val snaps = metadataNames(root)
     val linked = snaps.collect { case snapRe(n) => n.toInt }
     val referenced = linked
       .flatMap(n => readManifest(spark, root, s"snap-$n.txt")).toSet
-    val dataOrphans = (listData(spark, s"$root/data") -- referenced).toSeq
+    // a writer killed at "staged" has published nothing to data/ yet
+    val published =
+      if (fsExists(spark, root, "data")) listData(spark, s"$root/data")
+      else Set.empty[String]
+    val dataOrphans = (published -- referenced).toSeq
       .filter(rel => aged(java.nio.file.Paths.get(s"$root/data/$rel")))
     val fs = hfs(spark, root)
     dataOrphans.foreach { rel => IngestOps.deleteOrThrow(fs,
@@ -705,11 +684,28 @@ object LakeOps {
     * point in [[appendCommit]] must leave intact. A table with no
     * `main` ref has never committed, and reading it is an error. */
   private[graft] def readCurrent(spark: SparkSession,
-      root: String): DataFrame = {
-    val main = readRefs(spark, root).getOrElse("main",
+      root: String): DataFrame =
+    readLive(spark, root, 1 to mainSnapshot(spark, root))
+
+  /** The snapshot `main` points at; a table with no `main` ref has never
+    * committed. */
+  private def mainSnapshot(spark: SparkSession, root: String): Int =
+    readRefs(spark, root).getOrElse("main",
       throw new IllegalStateException(s"table $root has no main ref: " +
         "no snapshot has been committed"))
-    readLive(spark, root, 1 to main)
+
+  /** [[mergeUpsertEvolve]]'s table as two eras, the
+    * `alter_add_col_default` read: the files snapshot `evolved` added
+    * carry `origin`; the files it left live predate the column and
+    * project it as NULL. */
+  private[graft] def evolvedRead(spark: SparkSession, root: String,
+      evolved: Int): DataFrame = {
+    val wide = liveFiles(spark, root, Seq(evolved))
+    val narrow = liveFiles(spark, root, 1 to evolved).filterNot(wide.toSet)
+    def era(rels: Seq[String]) =
+      readFiles(spark, s"$root/data", rels.map(rel => s"$root/data/$rel"))
+    era(narrow).withColumn("origin", lit(null).cast("string"))
+      .unionByName(era(wide))
   }
 
   /** `commit_conflict_retry` — the optimistic-concurrency commit
@@ -827,14 +823,14 @@ object LakeOps {
   def updateWhere(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = IngestOps.tmp("events_update")
-    writeBase(spark, dir, out)
-    val base = spark.read.parquet(out)
+    cloneTree(cowBaseLayout(spark, dir), out)
+    val base = readCurrent(spark, out)
     val hit = $"event_type" === "purchase" && $"day".between(3, 7)
     val days = touchedDays(base.filter(hit))
-    val rewritten = base.filter($"day".isin(days.map(Int.box): _*))
-      .withColumn("value", when(hit, $"value" * 2).otherwise($"value"))
-    rewritePartitions(spark, rewritten, out, days)
-    spark.read.parquet(out)
+    rewriteDays(spark, out,
+      base.withColumn("value", when(hit, $"value" * 2).otherwise($"value")),
+      days)
+    readCurrent(spark, out)
       .filter($"day".between(1, 10))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"),
@@ -948,7 +944,8 @@ object LakeOps {
   private def buildVersioned(spark: SparkSession, dir: String,
       out: String, sliceFiles: Seq[Int] = Seq(4, 1, 1)): DataFrame = {
     import spark.implicits._
-    hfs(spark, out).delete(new org.apache.hadoop.fs.Path(out), true)
+    IngestOps.deleteOrThrow(hfs(spark, out),
+      new org.apache.hadoop.fs.Path(out), recursive = true)
     // one source scan feeds all three commit slices (eager lineage cut);
     // without it each append re-reads and re-derives the events table
     val ev = IngestOps.eventsWithParts(spark, dir)
@@ -968,7 +965,7 @@ object LakeOps {
 
   /** Fast local clone of a shared immutable layout into per-query
     * scratch. The mutation keys measure their COMMIT choreography
-    * (partition rewrites, manifest/ref writes, expiry deletes), not the
+    * (replace commits, manifest/ref writes, expiry deletes), not the
     * base-table build — so the base builds once per corpus lifetime
     * ([[versionedBaseLayout]]/[[cowBaseLayout]], prewarmed by Fixtures)
     * and each call starts from a file-level clone instead of re-running
@@ -1020,22 +1017,24 @@ object LakeOps {
     }
   }
 
-  /** Shared immutable build of the [[writeBase]] day-partitioned
-    * copy-on-write base, fingerprint-keyed; cloned per call. */
-  private[graft] def cowBaseLayout(spark: SparkSession,
-      dir: String): String = {
-    import org.apache.spark.sql.functions.col
-    val out = IngestOps.sharedFor(spark, "events_cowbase", dir)
-    IngestOps.buildShared(spark, out) { root =>
-      IngestOps.eventsWithParts(spark, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("day"))
-        .repartition(col("day"))
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd")
-        .partitionBy("day").parquet(root)
+  /** Shared immutable one-snapshot table: `rows` committed by one
+    * [[appendCommit]] (one file per day, `main` at 1), fingerprint-keyed
+    * under `prefix`. The row-level write keys start from a [[cloneTree]]
+    * of one, so they time their own commit, not the base build. */
+  private[graft] def baseTableLayout(spark: SparkSession, prefix: String,
+      dir: String)(rows: => DataFrame): String =
+    IngestOps.buildShared(spark, IngestOps.sharedFor(spark, prefix, dir)) {
+      root => appendCommit(spark, root, rows)
     }
-  }
+
+  /** The copy-on-write base every LakeOps row-level write key clones:
+    * the whole events table, day-partitioned. */
+  private[graft] def cowBaseLayout(spark: SparkSession,
+      dir: String): String =
+    baseTableLayout(spark, "events_cowbase_v2", dir) {
+      IngestOps.eventsWithParts(spark, dir).select(col("event_id"),
+        col("user_id"), col("event_type"), col("value"), col("day"))
+    }
 
   /** Working 3-snapshot table at `out` — cloned from the shared
     * immutable base so the maintenance ops time their own commits, not
@@ -1250,7 +1249,8 @@ object LakeOps {
     import spark.implicits._
     val srcRoot = IngestOps.snapshotLayout(spark, dir)
     val clone = IngestOps.tmp("events_clone")
-    hfs(spark, clone).delete(new org.apache.hadoop.fs.Path(clone), true)
+    IngestOps.deleteOrThrow(hfs(spark, clone),
+      new org.apache.hadoop.fs.Path(clone), recursive = true)
     // CLONE CREATE: copy the manifests (re-tagged as base-inherited) +
     // a base pointer — metadata only, no data bytes move
     IngestOps.writeMetaLines(spark, clone, "metadata/base.txt",
@@ -1426,19 +1426,13 @@ object LakeOps {
     strays.take(3).foreach { rel =>
       Files.setLastModifiedTime(Paths.get(s"$data/$rel"),
         java.nio.file.attribute.FileTime.fromMillis(0L)) }
-    // reachable = every file ANY snapshot added (removed-later included)
-    val reachable = (1 to 3)
-      .flatMap(s => readManifest(spark, out, s"snap-$s.txt")).toSet
-    val cutoffMs = System.currentTimeMillis() - 10L * 60 * 1000
-    val candidates = (listData(spark, data) -- reachable).toSeq.sorted
-    val (aged, recent) = candidates.partition { rel =>
-      Files.getLastModifiedTime(Paths.get(s"$data/$rel"))
-        .toMillis < cutoffMs }
-    aged.foreach(rel => Files.delete(Paths.get(s"$data/$rel")))
+    // the one orphan rule, with a 10-minute `older_than` fence
+    val removed = orphanSweep(spark, out, graceMs = 10L * 60 * 1000)
+    val retained = strays.count(rel => Files.exists(Paths.get(s"$data/$rel")))
     readLive(spark, out, 1 to 3).filter($"day".between(1, 15))
       .agg(count(lit(1)).as("n"), dsum($"value").as("sum_value"))
-      .select(lit(aged.size.toLong).as("orphans_removed"),
-        lit(recent.size.toLong).as("orphans_retained"),
+      .select(lit(removed.size.toLong).as("orphans_removed"),
+        lit(retained.toLong).as("orphans_retained"),
         $"n", $"sum_value")
   }
 

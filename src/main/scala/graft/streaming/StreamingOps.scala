@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{dec, dsum}
-import graft.sources.Tables
+import graft.sources.{LakeOps, Tables}
 
 /** Per-user running state for `stream_custom_state`, carried by
   * mapGroupsWithState (top-level so the Catalyst encoder's generated
@@ -882,7 +882,8 @@ object StreamingOps {
           .map(_.getPath).find(_.getName.endsWith(".parquet")).get
         val dst = new org.apache.hadoop.fs.Path(src, s"$name.parquet")
         require(fs.rename(part, dst), s"single-file publish failed: $name")
-        fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+        IngestOps.deleteOrThrow(fs, new org.apache.hadoop.fs.Path(stage),
+          recursive = true)
         fs.setTimes(dst, mtime, -1)
       }
       val ev = Tables.events(spark, dir)
@@ -896,22 +897,24 @@ object StreamingOps {
   }
 
   /** `stream_upsert_sink` — the streaming→lake bridge: a `foreachBatch`
-    * sink MERGEs each micro-batch into a day-partitioned copy-on-write
-    * table (the CDC-upsert pattern every warehouse-feeding stream runs).
-    * Base = events days 1-10; the stream feeds "late corrections"
-    * (purchases of days 8-12, value+1000) — matched event_ids are
-    * replaced, day-11/12 rows arrive as inserts. Each batch rewrites ONLY
-    * the day partitions its keys touch (LakeSpec asserts days 1-7 files
-    * keep their bytes), so at 100 TB a micro-batch's commit cost is
-    * proportional to the partitions it touches, never the table. Drained
-    * on the finite file stream the final table equals the batch MERGE —
-    * that is the oracle. */
+    * sink MERGEs each micro-batch into a day-partitioned versioned table
+    * (the CDC-upsert pattern every warehouse-feeding stream runs), one
+    * copy-on-write replace commit per batch
+    * ([[graft.sources.LakeOps.rewriteDays]]). Base = events days 1-10;
+    * the stream feeds "late corrections" (purchases of days 8-12,
+    * value+1000) — matched event_ids are replaced, day-11/12 rows arrive
+    * as inserts. Each batch rewrites ONLY the day partitions its keys
+    * touch (LakeSpec asserts days 1-7 files keep their bytes), so at
+    * 100 TB a micro-batch's commit cost is proportional to the
+    * partitions it touches, never the table. Drained on the finite file
+    * stream the final table equals the batch MERGE — that is the
+    * oracle. */
   def streamUpsertSink(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = graft.sources.IngestOps.tmp("events_stream_upsert")
     // working copy of the shared immutable days-1-10 base: the key
     // measures the per-batch MERGE commits, not the base-table build
-    graft.sources.LakeOps.cloneTree(upsertBaseLayout(spark, dir), out)
+    LakeOps.cloneTree(upsertBaseLayout(spark, dir), out)
     val batchSchema = eventsSchema(spark, dir)
     val updates = Tables.normalizeTs(spark.readStream
       .schema(batchSchema)
@@ -935,19 +938,18 @@ object StreamingOps {
             val days = b.select($"day").distinct().collect()
               .map(_.getInt(0)).sorted
             if (days.nonEmpty) {
-              val base = spark.read.parquet(out)
-              val merged = base.filter($"day".isin(days.map(Int.box): _*))
+              val merged = LakeOps.readCurrent(spark, out)
                 .join(b.select($"event_id"), Seq("event_id"), "left_anti")
                 .unionByName(b)
-              graft.sources.LakeOps.rewritePartitions(spark, merged, out,
-                days)
+              LakeOps.rewriteDays(spark, out, merged, days)
             }
+            ()
           } finally b.unpersist()
         }
         .start()
       drain(q)
     }
-    spark.read.parquet(out)
+    LakeOps.readCurrent(spark, out)
       .filter($"day".between(6, 12))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"),
@@ -983,8 +985,9 @@ object StreamingOps {
   }
 
   /** Drain the correction stream into the MoR layout (no compaction):
-    * returns (base, delta, deletes) paths. Split out so LakeSpec can
-    * assert base immutability and then fold with [[compactStreamMor]]. */
+    * returns the base table's root and the delta and deletes sidecar
+    * directories. Split out so LakeSpec can assert base immutability
+    * and then fold with [[compactStreamMor]]. */
   private[graft] def streamUpsertMorRun(spark: SparkSession,
       dir: String): (String, String, String) = {
     import spark.implicits._
@@ -996,7 +999,7 @@ object StreamingOps {
     // working copy of the shared immutable days-1-10 base (the spec's
     // compaction pass mutates it, so each run gets its own clone); the
     // timed path is the per-batch MoR commits
-    graft.sources.LakeOps.cloneTree(upsertBaseLayout(spark, dir), base)
+    LakeOps.cloneTree(upsertBaseLayout(spark, dir), base)
     val batchSchema = eventsSchema(spark, dir)
     val updates = Tables.normalizeTs(spark.readStream
       .schema(batchSchema)
@@ -1040,38 +1043,33 @@ object StreamingOps {
     (base, delta, deletes)
   }
 
-  /** Shared immutable day-partitioned events base (days 1-10) both
-    * upsert sinks start from — built once per corpus fingerprint and
-    * cloned into scratch per call ([[graft.sources.LakeOps.cloneTree]]),
-    * the lake-mutation-base discipline applied to the streaming sinks. */
+  /** Shared immutable versioned events table (days 1-10, one snapshot)
+    * both upsert sinks start from — built once per corpus fingerprint
+    * ([[graft.sources.LakeOps.baseTableLayout]]) and cloned into scratch
+    * per call ([[graft.sources.LakeOps.cloneTree]]), the
+    * lake-mutation-base discipline applied to the streaming sinks. */
   private[graft] def upsertBaseLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    import graft.sources.IngestOps
-    val out = IngestOps.sharedFor(spark, "events_streambase", dir)
-    IngestOps.buildShared(spark, out) { root =>
-      IngestOps.eventsWithParts(spark, dir)
+    LakeOps.baseTableLayout(spark, "events_streambase_v2", dir) {
+      graft.sources.IngestOps.eventsWithParts(spark, dir)
         .filter($"day".between(1, 10))
         .select($"event_id", $"user_id", $"event_type", $"value", $"day")
-        .repartition($"day")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("compression", "zstd").partitionBy("day").parquet(root)
     }
   }
 
-  /** The MoR merge at scan time: base minus deleted keys, plus deltas.
-    * The delete file is KBs → broadcast anti-join, no shuffle of base.
-    * ABSENT sidecars are a legal table state, not an error: a table no
-    * stream has committed to yet (or one just compacted) has no delta
-    * and no delete files — the merged view is simply the base. */
+  /** The MoR merge at scan time: the current snapshot of the base table
+    * at root `base`, minus deleted keys, plus deltas. The delete file is
+    * KBs → broadcast anti-join, no shuffle of base. ABSENT sidecars are
+    * a legal table state, not an error: a table no stream has committed
+    * to yet (or one just compacted) has no delta and no delete files —
+    * the merged view is simply the base. */
   private[graft] def morScan(spark: SparkSession, base: String,
       delta: String, deletes: String): DataFrame = {
-    import spark.implicits._
-    val b = spark.read.parquet(base)
+    val b = LakeOps.readCurrent(spark, base)
     val afterDeletes =
       if (graft.sources.IngestOps.fsExists(spark, deletes))
-        b.join(graft.sources.LakeOps.boundedBroadcast(
-          spark.read.parquet(deletes)),
+        b.join(LakeOps.boundedBroadcast(spark.read.parquet(deletes)),
           Seq("event_id"), "left_anti")
       else b
     if (graft.sources.IngestOps.fsExists(spark, delta))
@@ -1079,10 +1077,12 @@ object StreamingOps {
     else afterDeletes
   }
 
-  /** Fold the streaming MoR sidecars into the base and drop them
+  /** Fold the streaming MoR sidecars into the base table (one
+    * copy-on-write replace commit) and drop them
     * ([[graft.sources.LakeOps.compactMor]]'s planning: only partitions
     * that actually hold doomed or new rows are rewritten). After this a
-    * PLAIN scan of base serves the merged answer. */
+    * PLAIN read of the base's current snapshot serves the merged
+    * answer. */
   private[graft] def compactStreamMor(spark: SparkSession, base: String,
       delta: String, deletes: String): Unit = {
     import spark.implicits._
@@ -1095,20 +1095,17 @@ object StreamingOps {
     if (!hasAdd && !hasDel) return
     val del = if (hasDel) spark.read.parquet(deletes)
       else spark.range(0).select($"id".as("event_id"))
-    val add = if (hasAdd) spark.read.parquet(delta)
-      else spark.read.parquet(base).limit(0)
-    val touched = spark.read.parquet(base)
-      .join(graft.sources.LakeOps.boundedBroadcast(del),
-        Seq("event_id"), "left_semi")
+    val current = LakeOps.readCurrent(spark, base)
+    val add = if (hasAdd) spark.read.parquet(delta) else current.limit(0)
+    val touched = current
+      .join(LakeOps.boundedBroadcast(del), Seq("event_id"), "left_semi")
       .select($"day").distinct().collect().map(_.getInt(0)).toSet
     val days = (touched ++ add.select($"day").distinct().collect()
       .map(_.getInt(0))).toSeq.sorted
-    val merged = spark.read.parquet(base)
-      .filter($"day".isin(days.map(Int.box): _*))
-      .join(graft.sources.LakeOps.boundedBroadcast(del),
-        Seq("event_id"), "left_anti")
+    val merged = current
+      .join(LakeOps.boundedBroadcast(del), Seq("event_id"), "left_anti")
       .unionByName(add)
-    graft.sources.LakeOps.rewritePartitions(spark, merged, base, days)
+    LakeOps.rewriteDays(spark, base, merged, days)
     org.apache.spark.network.util.JavaUtils
       .deleteRecursively(new java.io.File(delta))
     org.apache.spark.network.util.JavaUtils
@@ -1130,7 +1127,7 @@ object StreamingOps {
       "day=(\\d+)/".r.findFirstMatchIn(r).map(_.group(1)))
       .distinct.sorted
     val glob = s"$root/data/day={${days.mkString(",")}}"
-    val sch = graft.sources.LakeOps.readFiles(spark, s"$root/data",
+    val sch = LakeOps.readFiles(spark, s"$root/data",
       rels.map(r => s"$root/data/$r")).schema
     val stream = spark.readStream.option("basePath", s"$root/data")
       .schema(sch).parquet(glob)
@@ -1194,7 +1191,8 @@ object StreamingOps {
     val conf = spark.sparkContext.hadoopConfiguration
     Seq(src, sink, cp).foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(conf).delete(p, true)
+      graft.sources.IngestOps.deleteOrThrow(p.getFileSystem(conf), p,
+        recursive = true)
     }
     // both landing batches come pre-built from the shared layout; a
     // "landing" is a file-level copy into src (what a producer landing

@@ -203,6 +203,55 @@ class EngineSpec extends SparkSpecBase {
       "stale exception: cdfStream's stream source no longer spells basePath")
   }
 
+  test("one mutation path: no code spells partitionOverwriteMode") {
+    // a dynamic partition overwrite is a second commit path: it swaps a
+    // directory's files with no manifest, no CAS and no removal set, so
+    // a reader can see a partial rewrite. Row-level writes are replace
+    // commits (LakeOps.rewriteDays)
+    val offenders = mainStatements.collect {
+      case (file, enclosing, text) if text.contains("partitionOverwriteMode") =>
+        s"$file ($enclosing): ${text.trim.take(160)}"
+    }
+    assert(offenders.isEmpty, "directory overwrites outside the commit " +
+      "path:\n  " + offenders.mkString("\n  "))
+    assert(mainSources.exists { case (file, lines) =>
+      file == "LakeOps.scala" && lines.exists(_.contains("def rewriteDays(")) },
+      "LakeOps.rewriteDays not found")
+  }
+
+  test("file-system deletes go through IngestOps.deleteOrThrow: no other " +
+      "code calls a two-argument delete(path, recursive)") {
+    // FileSystem.delete reports a failure by returning false; a caller
+    // that drops the result carries on over files it believes are gone
+    def args(text: String, open: Int): Int = {
+      var depth = 0; var commas = 0; var i = open
+      do {
+        text(i) match {
+          case '(' => depth += 1
+          case ')' => depth -= 1
+          case ',' if depth == 1 => commas += 1
+          case _ =>
+        }
+        i += 1
+      } while (depth > 0 && i < text.length)
+      commas + 1
+    }
+    def twoArgDelete(text: String) = """\.delete\(""".r.findAllMatchIn(text)
+      .exists(m => args(text, m.end - 1) == 2)
+    def owner(file: String, enclosing: String) =
+      file == "IngestOps.scala" && enclosing == "deleteOrThrow"
+    val sites = mainStatements.filter(s => twoArgDelete(s._3))
+    val offenders = sites.collect {
+      case (file, enclosing, text) if !owner(file, enclosing) =>
+        s"$file ($enclosing): ${text.trim.take(160)}"
+    }
+    assert(offenders.isEmpty, "unchecked deletes:\n  " +
+      offenders.mkString("\n  "))
+    // the lint still sees the one checked call
+    assert(sites.exists(s => owner(s._1, s._2)),
+      "IngestOps.deleteOrThrow's delete call not found")
+  }
+
   test("main entry points are exactly Bench, Verify, DebugRun and " +
       "CommitWorker") {
     // the driver's two mains, the one dev runner, and the commit client

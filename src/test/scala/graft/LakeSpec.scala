@@ -156,12 +156,17 @@ class LakeSpec extends SparkSpecBase {
     assert(untouched.values.max < touched.values.min,
       s"schema evolution rewrote untouched partitions: $mt")
     // untouched footers never learned the new column; touched ones did
-    assert(!spark.read.parquet(s"$out/day=3").columns.contains("origin"),
+    val L = sources.LakeOps
+    val main = L.readRefs(spark, out)("main")
+    def dayRead(d: Int) = L.readFiles(spark, s"$out/data",
+      L.liveFiles(spark, out, 1 to main).filter(_.startsWith(s"day=$d/"))
+        .map(rel => s"$out/data/$rel"))
+    assert(!dayRead(3).columns.contains("origin"),
       "an untouched partition was rewritten with the evolved schema")
-    assert(spark.read.parquet(s"$out/day=9").columns.contains("origin"),
+    assert(dayRead(9).columns.contains("origin"),
       "a touched partition did not adopt the evolved schema")
     // the unified read: v1 rows are NULL in origin, update rows carry it
-    val unified = spark.read.option("mergeSchema", "true").parquet(out)
+    val unified = L.evolvedRead(spark, out, main)
     assert(unified.filter($"day" < 8 && $"origin".isNotNull).count() == 0,
       "a pre-evolution row carries a non-NULL evolved column")
     assert(unified.filter($"origin" === "cdc").count() > 0)
@@ -240,21 +245,23 @@ class LakeSpec extends SparkSpecBase {
   test("copy-on-write rewrite drops a partition whose every row was " +
       "deleted — dynamic overwrite alone would keep its stale file") {
     import spark.implicits._
+    val L = sources.LakeOps
     val out = graft.sources.IngestOps.tmp("events_cow_empty")
     val fs = new Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(out), true)
-    Seq((1L, 1, "a"), (2L, 1, "b"), (3L, 2, "a"), (4L, 2, "a"))
-      .toDF("event_id", "day", "event_type")
-      .write.partitionBy("day").parquet(out)
+    L.appendCommit(spark, out,
+      Seq((1L, 1, "a"), (2L, 1, "b"), (3L, 2, "a"), (4L, 2, "a"))
+        .toDF("event_id", "day", "event_type"))
     // the delete's predicate empties day=2 entirely and thins day=1
-    val base = spark.read.parquet(out)
+    val base = L.readCurrent(spark, out)
     val doomed = $"event_type" === "a"
     val survivors = base.filter(!doomed)
-    sources.LakeOps.rewritePartitions(spark, survivors, out, Seq(1, 2))
-    assert(!fs.exists(new Path(s"$out/day=2")),
-      "emptied partition's stale directory survived the delete")
-    val back = spark.read.parquet(out).collect()
+    assert(L.rewriteDays(spark, out, survivors, Seq(1, 2)) == 2)
+    val live = L.liveFiles(spark, out, 1 to L.readRefs(spark, out)("main"))
+    assert(live.nonEmpty && !live.exists(_.startsWith("day=2/")),
+      s"emptied partition's stale files survived the delete: $live")
+    val back = L.readCurrent(spark, out).collect()
     assert(back.map(_.getLong(0)).toSet == Set(2L),
       s"wrong survivors: ${back.mkString(",")}")
   }
@@ -345,7 +352,7 @@ class LakeSpec extends SparkSpecBase {
     assert(dataMts.values.max <= delFiles.head.getModificationTime,
       "a data file was rewritten by the merge-on-read delete")
     // the delete file holds exactly the doomed keys, nothing more
-    val doomed = spark.read.parquet(root)
+    val doomed = sources.LakeOps.readCurrent(spark, root)
       .filter($"event_type" === "click" && $"day".between(3, 7)).count()
     assert(spark.read.parquet(del).count() == doomed && doomed > 0)
     // same answer as the copy-on-write spelling
@@ -361,7 +368,7 @@ class LakeSpec extends SparkSpecBase {
     val del = graft.sources.IngestOps.tmp("events_mor_pos_deletes")
     val delDf = spark.read.parquet(del)
     assert(delDf.columns.toSeq == Seq("d_file", "d_pos"))
-    val doomed = spark.read.parquet(root)
+    val doomed = sources.LakeOps.readCurrent(spark, root)
       .filter(col("event_type") === "view" && col("day").between(4, 6))
       .count()
     assert(delDf.count() == doomed && doomed > 0)
@@ -369,7 +376,7 @@ class LakeSpec extends SparkSpecBase {
     // same physical row twice
     assert(delDf.distinct().count() == doomed)
     // the position-delete read equals the plain filtered aggregate
-    val direct = spark.read.parquet(root)
+    val direct = sources.LakeOps.readCurrent(spark, root)
       .filter(!(col("event_type") === "view" && col("day").between(4, 6)))
       .filter(col("day").between(1, 10))
       .groupBy(col("day").cast("long").as("day"))
@@ -405,7 +412,7 @@ class LakeSpec extends SparkSpecBase {
     // sidecar cardinality = touched data files, never doomed rows; the
     // recorded cardinalities reconcile with the doomed count
     val dvDf = spark.read.parquet(dv)
-    val base = spark.read.parquet(root)
+    val base = sources.LakeOps.readCurrent(spark, root)
     val doomedPred = col("event_type") =!= "purchase" &&
       col("day").between(3, 8)
     val touched = base.filter(doomedPred)
@@ -446,7 +453,7 @@ class LakeSpec extends SparkSpecBase {
         s"($pairBytes B) for a wide delete")
     // and the DV read serves exactly the survivors
     val (survivors, dvB) = sources.LakeOps
-      .readWithDeletionVectors(spark, wideRoot, wideDv)
+      .readWithDeletionVectors(spark, spark.read.parquet(wideRoot), wideDv)
     try {
       assert(survivors.count() == 50000)
       assert(survivors
@@ -551,7 +558,7 @@ class LakeSpec extends SparkSpecBase {
     val src = sources.IngestOps.eventsWithParts(spark, sf)
     val doomed = src
       .filter($"event_type" === "purchase" && $"day".between(5, 9)).count()
-    val table = spark.read.parquet(root)
+    val table = sources.LakeOps.readCurrent(spark, root)
     assert(doomed > 0)
     assert(table.count() == src.count() - doomed)
     assert(table.filter($"event_type" === "purchase" &&
@@ -706,7 +713,7 @@ class LakeSpec extends SparkSpecBase {
     streaming.StreamingOps.compactStreamMor(spark, base, delta, deletes)
     assert(!new java.io.File(delta).exists, "delta survived compaction")
     assert(!new java.io.File(deletes).exists, "deletes survived compaction")
-    assert(agg(spark.read.parquet(base)) == morRows,
+    assert(agg(sources.LakeOps.readCurrent(spark, base)) == morRows,
       "plain scan after compaction diverged from the MoR answer")
   }
 
@@ -725,8 +732,7 @@ class LakeSpec extends SparkSpecBase {
     // silently kills the newer re-inserts — exactly the bug the
     // sequence-number contract exists to prevent
     val deletes = spark.read.parquet(s"$out/deletes")
-    val naive = spark.read.parquet(s"$out/seq1")
-      .unionByName(spark.read.parquet(s"$out/seq3"))
+    val naive = sources.LakeOps.readCurrent(spark, out)
       .join(broadcast(deletes), Seq("event_id"), "left_anti")
     assert(naive.filter($"event_type" === "reinserted").count() == 0,
       "naive read unexpectedly kept the re-inserts")
@@ -770,11 +776,13 @@ class LakeSpec extends SparkSpecBase {
   // default reader (follow `main`) bit-identical to the pre-commit view,
   // must never expose a torn snapshot to time travel, and must leave
   // only debris orphanSweep reclaims — after which a retried commit
-  // lands exactly once. Two inputs run through the same kill points: an
-  // append (appendCommit of day 16), and a REPLACE commit compacting
-  // snapshot 1's fragments with the fragments as its removal set. The
-  // replace writes its removal manifest before the link, so a kill at
-  // 'attempt-written' also leaves an unlinked snap-4.removed.txt.
+  // lands exactly once. Three inputs run through the same kill points:
+  // an append (appendCommit of day 16), a REPLACE commit compacting
+  // snapshot 1's fragments with the fragments as its removal set, and a
+  // copy-on-write DELETE (rewriteDays) of day 2's clicks, whose removal
+  // set is day 2's live files. Both replace commits write their removal
+  // manifest before the link, so a kill at 'attempt-written' also
+  // leaves an unlinked snap-4.removed.txt.
 
   /** Order-independent exact fingerprint: (row count, multiset checksum
     * of event ids) — wrap-around addition is deterministic. */
@@ -787,24 +795,46 @@ class LakeSpec extends SparkSpecBase {
 
   private case class Kill(step: String) extends RuntimeException(step)
 
-  for (replace <- Seq(false, true);
+  for (input <- Seq("append", "replace", "cow");
        kp <- Seq("staged", "data-written", "attempt-written", "linked"))
-  test(if (replace) s"crash consistency of a replace commit at '$kp': " +
+  test(input match {
+    case "replace" => s"crash consistency of a replace commit at '$kp': " +
       "pinned and current readers unchanged, orphan sweep reclaims " +
       "exactly the debris, retry lands exactly once"
-    else s"crash consistency at '$kp': reader stays on the old snapshot, " +
-      "orphan sweep reclaims the debris, retry lands exactly once") {
+    case "cow" => s"crash consistency of a copy-on-write delete at '$kp': " +
+      "pinned and current readers unchanged, orphan sweep reclaims " +
+      "exactly the debris, retry lands exactly once"
+    case _ => s"crash consistency at '$kp': reader stays on the old " +
+      "snapshot, orphan sweep reclaims the debris, retry lands exactly once"
+  }) {
     import spark.implicits._
     val L = sources.LakeOps
+    val replace = input != "append"
     val out = sources.IngestOps.tmp(s"events_crash_" +
-      (if (replace) "replace_" else "") + kp.replace('-', '_'))
+      (if (replace) s"${input}_" else "") + kp.replace('-', '_'))
     L.cloneTree(L.versionedBaseLayout(spark, sf), out)
     L.setRef(spark, out, "main", 3)
     val baseline = fingerprint(L.readCurrent(spark, out))
     val pinned = fingerprint(L.readLive(spark, out, Seq(1)))
-    val frag = L.liveFiles(spark, out, Seq(1))
+    // the files the commit under test replaces
+    val frag = input match {
+      case "replace" => L.liveFiles(spark, out, Seq(1))
+      case "cow" => L.liveFiles(spark, out, 1 to 3)
+        .filter(_.startsWith("day=2/"))
+      case _ => Nil
+    }
     // the commit under test, and the (rows, checksum) it adds to the view
-    val (commitWith, (addN, addSum)) = if (replace) {
+    val (commitWith, (addN, addSum)) = if (input == "cow") {
+      val doomed = $"event_type" === "click" && $"day" === 2
+      val current = L.readCurrent(spark, out)
+      val (goneN, goneSum) = fingerprint(current.filter(doomed))
+      assert(goneN > 0, "fixture must have day-2 clicks to delete")
+      val survivors = current.filter($"day" === 2 && !doomed)
+        .localCheckpoint()
+      ((onStep: String => Unit) =>
+        L.rewriteDays(spark, out, survivors, Seq(2), onStep),
+        (-goneN, -goneSum))
+    } else if (replace) {
       // single-writer rule: a replace commit never enters the retry loop
       intercept[IllegalArgumentException](
         L.commit(spark, out, Nil, removed = frag, maxAttempts = 2))
@@ -959,6 +989,45 @@ class LakeSpec extends SparkSpecBase {
     // the sweep beyond unreferenced debris
     assert(fingerprint(L.readCurrent(spark, out)) ==
       fingerprint(L.readLive(spark, out, 1 to 3)))
+  }
+
+  test("orphan sweep on a table that never linked a snapshot: a first " +
+      "commit killed at 'data-written' leaves exactly its published files " +
+      "to reclaim, and readCurrent still reports no commit") {
+    import spark.implicits._
+    val L = sources.LakeOps
+    val slice = sources.IngestOps.eventsWithParts(spark, sf)
+      .filter($"day" === 16)
+      .select($"event_id", $"user_id", $"event_type", $"value", $"day")
+    /** A first appendCommit into an empty root, killed at `kp`. */
+    def killedFirstCommit(kp: String): String = {
+      val out = sources.IngestOps.tmp(s"events_first_commit_$kp")
+      org.apache.spark.network.util.JavaUtils
+        .deleteRecursively(new java.io.File(out))
+      intercept[Kill] {
+        L.appendCommit(spark, out, slice,
+          onStep = s => if (s == kp) throw Kill(s))
+      }
+      // the first CAS creates metadata/: a kill before it leaves none
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out,
+        "metadata")), s"a kill at $kp must not create metadata/")
+      out
+    }
+    val out = killedFirstCommit("data-written")
+    val published = sources.IngestOps.listDataFiles(spark, s"$out/data")
+      .map("data/" + _)
+    assert(published.nonEmpty, "the killed commit published no data files")
+    // stage removed its staging dir before 'data-written': the data
+    // files are the whole of the debris
+    assert(L.orphanSweep(spark, out).sorted == published.toSeq.sorted)
+    assert(sources.IngestOps.listDataFiles(spark, s"$out/data").isEmpty)
+    val e = intercept[IllegalStateException](L.readCurrent(spark, out))
+    assert(e.getMessage.contains("no snapshot has been committed"),
+      e.getMessage)
+    // one step earlier not even data/ exists: the staging dir is the
+    // whole of the debris
+    val staged = L.orphanSweep(spark, killedFirstCommit("staged"))
+    assert(staged.size == 1 && staged.head.startsWith(".stage-"), staged)
   }
 
   // --- reader isolation during a compaction replace-commit -------------
