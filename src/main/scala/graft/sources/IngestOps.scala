@@ -613,30 +613,31 @@ object IngestOps {
   }
 
   /** Snapshot-versioned table emulation, written once per (dir,
-    * fingerprint): three batch appends land like `Bulk:97-101` commits
-    * (days 1-5, 6-10, 11-15, one file per day partition), each one
-    * [[LakeOps.stage]] + [[LakeOps.commit]] with no ref, so the
-    * manifest `metadata/snap-N.txt` records exactly the data files that
-    * snapshot added — the Iceberg metadata-tree shape
-    * (`Debug:164-196`) that makes both the history walk and time-travel
-    * reads pure metadata operations afterwards. Returns the table root. */
+    * fingerprint): three batch appends of the five declared columns land
+    * like `Bulk:97-101` commits (days 1-5, 6-10, 11-15, one file per day
+    * partition), each one [[LakeOps.stage]] + [[LakeOps.commit]] with no
+    * ref, so the manifest `metadata/snap-N.txt` records exactly the data
+    * files that snapshot added and the schema it committed — the
+    * Iceberg metadata-tree shape (`Debug:164-196`) that makes both the
+    * history walk and time-travel reads pure metadata operations
+    * afterwards. Returns the table root. */
   private[graft] def snapshotLayout(spark: SparkSession,
       dir: String): String = {
-    // suffix versions the WIRE format (w2 = full-URI pointers + avro
-    // key-value metadata + summary counts): a layout cached by an older
+    // suffix versions the WIRE format (w3 = committed schema records, the
+    // Iceberg schema emitted from them): a layout cached by an older
     // build would otherwise be served with the stale emission
-    val out = sharedFor(spark, "events_snapshots_w2", dir)
+    val out = sharedFor(spark, "events_snapshots_w3", dir)
     buildShared(spark, out) { tmpRoot =>
       val ev = eventsWithParts(spark, dir).filter(col("day").between(1, 15))
+        .select("event_id", "user_id", "event_type", "value", "day")
       val snapsSeq = Seq((1, 5), (6, 10), (11, 15)).map { case (lo, hi) =>
-        val delta = LakeOps.stage(spark, tmpRoot)(p =>
-          ev.filter(col("day").between(lo, hi)).repartition(col("day"))
-            .write.partitionBy("day").parquet(p))
-        val n = LakeOps.commit(spark, tmpRoot, delta, ref = None)
+        val staged = LakeOps.stage(spark, tmpRoot)(
+          ev.filter(col("day").between(lo, hi)).repartition(col("day")))
+        val n = LakeOps.commit(spark, tmpRoot, staged, ref = None)
         // per-file stats sidecar (the DataFile metrics Iceberg records
         // at write time) — priced as one scan of the commit's delta
-        writeStatsManifest(spark, tmpRoot, s"snap-$n.stats", delta)
-        (n, 1705276800000L + n * 1000L, delta.size)
+        writeStatsManifest(spark, tmpRoot, s"snap-$n.stats", n)
+        (n, 1705276800000L + n * 1000L, staged.files.size)
       }
       // commit log: snapshot -> committed-at millis (the reference stamps
       // wall clock; deterministic literals per SURVEY §7.3 so the oracle
@@ -647,9 +648,10 @@ object IngestOps {
         (1 to 3).map(n => s"$n=${1705276800000L + n * 1000L}"))
       // the Iceberg-v2 table-metadata wire format over the same state:
       // real avro manifests + manifest-lists, then the metadata.json
-      // pointing at them
-      val lists = writeAvroManifests(spark, tmpRoot, snapsSeq)
-      writeIcebergMetadataJson(spark, tmpRoot, snapsSeq, lists)
+      // pointing at them, both declaring the committed schema
+      val schema = LakeOps.snapshotSchema(spark, tmpRoot, 3)
+      val lists = writeAvroManifests(spark, tmpRoot, snapsSeq, schema)
+      writeIcebergMetadataJson(spark, tmpRoot, snapsSeq, schema, lists)
     }
   }
 
@@ -667,39 +669,18 @@ object IngestOps {
       .makeQualified(p).toString
   }
 
-  /** The snapshot table's field-id'd Iceberg schema/spec JSON — ONE
-    * source for the metadata.json body and the avro manifests' required
-    * key-value metadata, so the two surfaces cannot drift. */
-  private val SnapshotFieldsJson =
-    Seq((1, "event_id", "long"), (2, "user_id", "long"),
-      (3, "event_type", "string"), (4, "value", "double"),
-      (5, "day", "int")).map { case (id, n, t) =>
-      s"""{"id":$id,"name":"$n","required":false,"type":"$t"}"""
-    }.mkString("[", ",", "]")
-  private val SnapshotSchemaJson =
-    s"""{"type":"struct","schema-id":0,"fields":$SnapshotFieldsJson}"""
-  private val SnapshotSpecFieldsJson =
-    """[{"name":"day","transform":"identity","source-id":5,""" +
-      """"field-id":1000}]"""
-
   /** Write the Iceberg-v2-format `metadata/v{N}.metadata.json` +
-    * `version-hint.text` for a 3-commit snapshot table — the TABLE
-    * METADATA wire format (Iceberg spec §"Table Metadata", the file
-    * `HadoopCatalog` readers resolve through version-hint). Every
-    * required v2 field is emitted with the emulated table's real
-    * state: field-id'd schema (ids match the era/footers discipline),
-    * identity partition spec on `day`, the snapshot list with
-    * parentage/sequence numbers/manifest pointers (full URIs, as the
-    * spec requires) and a summary whose added-data-files/added-records
-    * agree with the stats sidecars, the snapshot log from the SAME
-    * commits.txt the AS-OF reads resolve against, and the refs map.
-    * `manifest-list` points at the REAL avro manifest-list files
-    * ([[writeAvroManifests]]) when provided, falling back to the
-    * engine's newline manifests. IngestSpec parses it back and proves
-    * agreement with the `snapshots`/`history` metadata tables. */
+    * `version-hint.text` for a 3-commit snapshot table (spec §"Table
+    * Metadata", resolved through version-hint by `HadoopCatalog`
+    * readers), every required v2 field from the table's real state: the
+    * committed `schema` and its identity spec, the snapshots with
+    * parentage, sequence numbers, the avro manifest-list URIs and
+    * summaries agreeing with the stats sidecars, the snapshot log from
+    * the commits.txt AS-OF reads resolve against, and the refs.
+    * IngestSpec parses it back against the metadata tables. */
   private[graft] def writeIcebergMetadataJson(spark: SparkSession,
-      root: String, snaps: Seq[(Int, Long, Int)],
-      manifestLists: Map[Int, (String, Long)] = Map.empty): Unit = {
+      root: String, snaps: Seq[(Int, Long, Int)], schema: TableSchema,
+      manifestLists: Map[Int, (String, Long)]): Unit = {
     val uuid = java.util.UUID.nameUUIDFromBytes(
       root.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val qroot = qualifiedUri(spark, root)
@@ -707,18 +688,13 @@ object IngestOps {
     val snapsJson = snaps.map { case (id, ms, nFiles) =>
       val parent = if (id == snaps.head._1) ""
         else s""""parent-snapshot-id":${id - 1},"""
-      // fallback (no avro manifest list): added-records is UNKNOWN here —
-      // omit the key (summary fields are optional per the spec) instead of
-      // emitting "0" beside a real non-zero added-data-files count, which
-      // made the snapshot summary internally inconsistent
-      val (ml, addedRecords) = manifestLists.get(id)
-        .map { case (p, n) => (p, s""","added-records":"$n"""") }
-        .getOrElse((s"$qroot/metadata/snap-$id.txt", ""))
+      val (ml, addedRecords) = manifestLists(id)
       s"""{"snapshot-id":$id,${parent}"sequence-number":$id,""" +
         s""""timestamp-ms":$ms,""" +
         s""""manifest-list":"$ml",""" +
         s""""summary":{"operation":"append",""" +
-        s""""added-data-files":"$nFiles"$addedRecords},"schema-id":0}"""
+        s""""added-data-files":"$nFiles","added-records":"$addedRecords"""" +
+        s"""},"schema-id":0}"""
     }.mkString("[", ",", "]")
     val logJson = snaps.map { case (id, ms, _) =>
       s"""{"timestamp-ms":$ms,"snapshot-id":$id}"""
@@ -726,10 +702,11 @@ object IngestOps {
     val json =
       s"""{"format-version":2,"table-uuid":"$uuid",""" +
         s""""location":"$qroot","last-sequence-number":${last._1},""" +
-        s""""last-updated-ms":${last._2},"last-column-id":5,""" +
-        s""""current-schema-id":0,"schemas":[$SnapshotSchemaJson],""" +
+        s""""last-updated-ms":${last._2},""" +
+        s""""last-column-id":${schema.lastId},""" +
+        s""""current-schema-id":0,"schemas":[${schema.icebergJson}],""" +
         s""""default-spec-id":0,"partition-specs":[{"spec-id":0,""" +
-        s""""fields":$SnapshotSpecFieldsJson}],"last-partition-id":1000,""" +
+        s""""fields":${schema.icebergSpecJson}}],"last-partition-id":1000,""" +
         s""""default-sort-order-id":0,"sort-orders":[{"order-id":0,""" +
         s""""fields":[]}],"properties":{},""" +
         s""""current-snapshot-id":${last._1},"snapshots":$snapsJson,""" +
@@ -809,37 +786,30 @@ object IngestOps {
     } finally w.close() // closes os
   }
 
-  /** Emit REAL avro manifests for the 3-commit snapshot table — the
-    * second Iceberg wire-format piece that needs no Iceberg jar (avro
-    * 1.12 ships with Spark): per snapshot, `manifest-snap-N.avro` holds
-    * one spec-shaped manifest_entry per ADDED data file (status=1,
-    * content=DATA, identity `day` partition tuple parsed from the path,
-    * record_count from the stats sidecar, true file length), and
-    * `manifest-list-snap-N.avro` lists the manifests of snapshots 1..N
-    * with sequence numbers and add counts — the cumulative view a
-    * snapshot's `manifest-list` pointer must serve. Every `file_path`
-    * and `manifest_path` is the full URI the spec requires, and each
-    * avro file carries the required key-value metadata (manifests:
-    * schema/schema-id/partition-spec/partition-spec-id/format-version/
-    * content; lists: format-version plus the owning snapshot ids) — the
-    * properties a HadoopCatalog reader resolves before touching rows.
-    * Returns, keyed by snapshot: the list file's full URI and the
-    * snapshot's added-record count (summed from the same sidecars), so
-    * the metadata.json summary agrees file-for-file. All field-ids ride
-    * the avro schemas as `field-id` attributes, the Iceberg avro id
-    * mapping. The newline text manifests remain the engine's
-    * operational planning surface; these are the wire-format emission
-    * (IngestSpec reads them back and proves agreement). */
+  /** Emit REAL avro manifests for the 3-commit snapshot table (avro
+    * ships with Spark): per snapshot, `manifest-snap-N.avro` holds one
+    * spec-shaped manifest_entry per ADDED data file (status=1,
+    * content=DATA, `day` tuple from the path, record_count from the
+    * stats sidecar, true length), and `manifest-list-snap-N.avro` lists
+    * the manifests of snapshots 1..N — the cumulative view a snapshot's
+    * `manifest-list` pointer serves. Pointers are full URIs, field-ids
+    * ride the avro schemas as `field-id` attributes, and each file
+    * carries the spec's key-value metadata (manifests: the committed
+    * `schema`'s Iceberg JSON, spec, ids, format-version, content; lists:
+    * format-version and snapshot ids). Returns, per snapshot, the list's
+    * URI and added-record count, so the metadata.json summary agrees
+    * file-for-file (IngestSpec reads both back). */
   private[graft] def writeAvroManifests(spark: SparkSession, root: String,
-      snaps: Seq[(Int, Long, Int)]): Map[Int, (String, Long)] = {
+      snaps: Seq[(Int, Long, Int)],
+      schema: TableSchema): Map[Int, (String, Long)] = {
     import org.apache.avro.generic.GenericData
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val qroot = qualifiedUri(spark, root)
     val manifestMeta = Map(
-      "schema" -> SnapshotSchemaJson,
+      "schema" -> schema.icebergJson,
       "schema-id" -> "0",
-      "partition-spec" -> SnapshotSpecFieldsJson,
+      "partition-spec" -> schema.icebergSpecJson,
       "partition-spec-id" -> "0",
       "format-version" -> "2",
       "content" -> "data")
@@ -915,21 +885,30 @@ object IngestOps {
     }.sortBy(_._1)
   }
 
-  /** Read the newline-delimited metadata file `root/rel`; empty when
-    * absent. ONE reader behind every manifest/sidecar/ref/log surface so
-    * the encoding can never diverge between them. */
-  private[graft] def readMetaLines(spark: SparkSession, root: String,
-      rel: String): Seq[String] = {
+  /** Parse the newline-delimited metadata file `root/rel` into its entry
+    * lines and its `#key value` header lines (a snapshot manifest's
+    * `#schema` pointer); both empty when absent. ONE parser behind every
+    * manifest/sidecar/ref/log surface so the encoding can never diverge
+    * between them. */
+  private[graft] def readMetaFile(spark: SparkSession, root: String,
+      rel: String): (Seq[String], Map[String, String]) = {
     val p = new org.apache.hadoop.fs.Path(root, rel)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
+    if (!fs.exists(p)) (Seq.empty, Map.empty)
     else {
       val in = fs.open(p)
       val txt = try new String(in.readAllBytes(),
         java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      txt.split("\n").toSeq.filter(_.nonEmpty)
+      val (headers, entries) =
+        txt.split("\n").toSeq.filter(_.nonEmpty).partition(_.startsWith("#"))
+      (entries, headers.map(_.drop(1).split(" ", 2))
+        .map(kv => kv(0) -> kv.lift(1).getOrElse("")).toMap)
     }
   }
+
+  /** The entry lines of the metadata file `root/rel` ([[readMetaFile]]). */
+  private[graft] def readMetaLines(spark: SparkSession, root: String,
+      rel: String): Seq[String] = readMetaFile(spark, root, rel)._1
 
   /** Overwrite `root/rel` with the sorted newline-delimited lines —
     * [[readMetaLines]]' write-side twin. */
@@ -995,8 +974,8 @@ object IngestOps {
     org.apache.spark.sql.types.StructField("n_null_value",
       org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** Compute per-file stats for `rels` under `$root/data` with ONE scan
-    * of only those files (the write-side cost Iceberg pays in its
+  /** Compute per-file stats for the files snapshot `snap` added with ONE
+    * scan of only those files (the write-side cost Iceberg pays in its
     * writers) and persist them as the PARQUET DATASET
     * `metadata/$name.parquet`, one row per file, written DISTRIBUTED —
     * nothing reaches the driver. At 100 TB ÷ 128 MB ≈ 800k files the
@@ -1007,24 +986,18 @@ object IngestOps {
     * bit-flipped bound fails the plan loudly instead of silently
     * mis-pruning — the posture the old format carried via its CRC. */
   private[graft] def writeStatsManifest(spark: SparkSession, root: String,
-      name: String, rels: Iterable[String]): Unit = {
+      name: String, snap: Int): Unit = {
     import spark.implicits._
-    val out = s"$root/metadata/$name.parquet"
-    val df =
-      if (rels.isEmpty) spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), statsSchema)
-      else LakeOps.readFiles(spark, s"$root/data",
-          rels.map(r => s"$root/data/$r").toSeq)
-        .groupBy(regexp_extract(input_file_name(), "/data/(.*)$", 1)
-          .as("rel"))
-        .agg(count(lit(1)).as("n_rows"),
-          min($"day").cast("int").as("min_day"),
-          max($"day").cast("int").as("max_day"),
-          min($"value").as("min_value"), max($"value").as("max_value"),
-          (count(lit(1)) - count($"value")).as("n_null_value"))
-    df.write.mode(SaveMode.Overwrite)
+    LakeOps.readLive(spark, root, Seq(snap))
+      .groupBy(regexp_extract(input_file_name(), "/data/(.*)$", 1).as("rel"))
+      .agg(count(lit(1)).as("n_rows"),
+        min($"day").cast("int").as("min_day"),
+        max($"day").cast("int").as("max_day"),
+        min($"value").as("min_value"), max($"value").as("max_value"),
+        (count(lit(1)) - count($"value")).as("n_null_value"))
+      .write.mode(SaveMode.Overwrite)
       .option("parquet.page.write-checksum.enabled", "true")
-      .parquet(out)
+      .parquet(s"$root/metadata/$name.parquet")
   }
 
   /** The stats sidecar as a DataFrame — the planning surface.
@@ -1146,10 +1119,7 @@ object IngestOps {
     * a table copy. */
   def snapshotReadAsof(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = snapshotLayout(spark, dir)
-    val files = (1 to 2).flatMap(n => snapshotManifest(spark, root, n))
-      .map(rel => s"$root/data/$rel")
-    LakeOps.readFiles(spark, s"$root/data", files)
+    LakeOps.readLive(spark, snapshotLayout(spark, dir), 1 to 2)
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"), countDistinct($"user_id").as("n_users"))
       .orderBy($"day")
@@ -1158,12 +1128,11 @@ object IngestOps {
   /** `snapshot_mixed_format` — a versioned table whose snapshots carry
     * DIFFERENT file formats: snapshot 1 commits parquet files, snapshot 2
     * commits ORC into the same table — Iceberg's per-DataFile
-    * `file_format` field (every manifest entry names its own format), the
-    * migration path a real lake walks when a table changes formats
-    * without rewriting history. The manifests stay format-agnostic (rel
-    * paths; format read off the extension, as Iceberg reads it off the
-    * DataFile), and the live read plans each era through its native
-    * vectorized reader and unions — era 1's files are never rewritten
+    * `file_format` field, the migration path a real lake walks when a
+    * table changes formats without rewriting history. Each snapshot's
+    * schema record names its format, so the live read plans each era
+    * through its native vectorized reader and unions them
+    * ([[LakeOps.readLive]]) — era 1's files are never rewritten
     * (IngestSpec asserts), so the migration costs zero bytes of history.
     * At 100 TB this is how a decade-old table adopts a new format:
     * per-snapshot, incrementally, invisible to readers. */
@@ -1173,27 +1142,16 @@ object IngestOps {
     val outPath = new org.apache.hadoop.fs.Path(out)
     deleteOrThrow(outPath.getFileSystem(
       spark.sparkContext.hadoopConfiguration), outPath, recursive = true)
-    val data = s"$out/data"
     val ev = eventsWithParts(spark, dir)
       .select($"event_id", $"user_id", $"event_type", $"value", $"day")
-    // snapshot 1: the parquet era
-    LakeOps.commit(spark, out, LakeOps.stage(spark, out)(LakeOps.dayParquet(
-      ev.filter($"day".between(1, 5)).repartition($"day"))), ref = None)
-    // snapshot 2: the ORC era — appended, era 1 untouched
-    LakeOps.commit(spark, out, LakeOps.stage(spark, out)(p =>
-      ev.filter($"day".between(6, 10)).repartition($"day")
-        .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-        .partitionBy("day").orc(p)), ref = None)
-    // live read: manifest-driven, each era through its native reader
-    val rels = (1 to 2).flatMap(n => snapshotManifest(spark, out, n))
-    def era(ext: String, rd: Seq[String] => DataFrame) = {
-      val fs = rels.filter(_.endsWith(ext)).map(r => s"$data/$r")
-      require(fs.nonEmpty, s"mixed-format table lost its $ext era")
-      rd(fs)
+    // snapshot 1: the parquet era; snapshot 2: the ORC era — appended,
+    // era 1 untouched
+    Seq((1, 5, "parquet"), (6, 10, "orc")).foreach { case (lo, hi, fmt) =>
+      LakeOps.commit(spark, out, LakeOps.stage(spark, out)(
+        ev.filter($"day".between(lo, hi)).repartition($"day"), format = fmt),
+        ref = None)
     }
-    era(".parquet", LakeOps.readFiles(spark, data, _))
-      .unionByName(era(".orc", LakeOps.readFiles(spark, data, _,
-        new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat)))
+    LakeOps.readLive(spark, out, 1 to 2)
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"), countDistinct($"user_id").as("n_users"),
         dsum($"value").as("sum_value"))
@@ -1204,40 +1162,29 @@ object IngestOps {
     * leg of schema evolution beside [[alterAddCols]] (add, top-level)
     * and [[alterNestedEvolve]] (add, nested). Parquet resolves columns
     * by NAME, so a rename can never touch old footers — Iceberg solves
-    * this with field-ids; the engine's equivalent is a NAME MAPPING
-    * applied at scan time (v1 files project `val AS value`). Old files
+    * this with field-ids, and so does the engine: era 1 commits field 3
+    * as `val`, era 2 as `value`, both stamped with id 3
+    * ([[withFieldId]]), so the rename commits as a kept id under a new
+    * name and the read projects v1's `val AS value` by id. Old files
     * keep their bytes and both eras serve the new name; the cost is one
     * alias in the v1 scan's projection, not a table rewrite. */
   def alterRenameCol(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = tmp("events_renamed")
-    // one source scan feeds both era writes (eager lineage cut, the
+    val outPath = new org.apache.hadoop.fs.Path(out)
+    deleteOrThrow(outPath.getFileSystem(
+      spark.sparkContext.hadoopConfiguration), outPath, recursive = true)
+    // one source scan feeds both era commits (eager lineage cut, the
     // writeVersioned discipline)
     val ev = eventsWithParts(spark, dir)
       .select($"event_id", $"event_type", $"value", $"day")
       .localCheckpoint()
-    // ids stamped into the footers on write ([[withFieldId]]); the
-    // sidecars below stay as the no-id-footer fallback + current-schema
-    // record
-    ev.filter($"day" <= 15)
-      .select(withFieldId($"event_id", "event_id", 1),
-        withFieldId($"event_type", "event_type", 2),
-        withFieldId($"value", "val", 3), withFieldId($"day", "day", 4))
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/v1")
-    ev.filter($"day" > 15)
-      .select(withFieldId($"event_id", "event_id", 1),
-        withFieldId($"event_type", "event_type", 2),
-        withFieldId($"value", "value", 3), withFieldId($"day", "day", 4))
-      .write.mode(SaveMode.Overwrite).parquet(s"$out/v2")
-    // the field-id sidecars: field 3's PHYSICAL name per era — the id,
-    // not the name, is the stable identity the rename pivots on
-    writeSchemaEra(spark, out, 1, Seq(1 -> "event_id", 2 -> "event_type",
-      3 -> "val", 4 -> "day"))
-    writeSchemaEra(spark, out, 2, Seq(1 -> "event_id", 2 -> "event_type",
-      3 -> "value", 4 -> "day"))
-    val current = readSchemaEra(spark, out, 2)
-    readEraById(spark, out, 1, current)
-      .unionByName(readEraById(spark, out, 2, current))
+    commitEras(spark, out, Seq(ev.filter($"day" <= 15) -> "val",
+      ev.filter($"day" > 15) -> "value").map { case (era, name) =>
+        era.select($"event_id", $"event_type", withFieldId($"value", name, 3),
+          $"day")
+      })
+    LakeOps.readCurrent(spark, out)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), countDistinct($"day").as("n_days"),
         dsum($"value").as("sum_value"))
@@ -1250,124 +1197,43 @@ object IngestOps {
     * SAME numbered-field mechanism `AIGEventsSchemaValidator.java:61-146`
     * builds with `Types.NestedField.required(id, name, type)`, so the
     * era files this engine writes are id-stamped exactly like files an
-    * Iceberg writer produces, readable by any id-resolving reader. */
+    * Iceberg writer produces, and a commit keeps the stamped id in its
+    * schema record ([[TableSchema.numbered]]): how a rename commits. */
   private[graft] def withFieldId(c: org.apache.spark.sql.Column,
       name: String, id: Int): org.apache.spark.sql.Column =
     c.as(name, new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("parquet.field.id", id.toLong).build())
+      .putLong(TableSchema.FieldId, id.toLong).build())
 
-  /** The (field-id → physical name) mapping read FROM PARQUET FOOTERS —
-    * the wire-format source of truth (one footer per era directory;
-    * every file in an era shares its schema by construction). Empty map
-    * when the files carry no ids (a layout written before id stamping,
-    * or by a writer that never numbered its fields) — callers fall back
-    * to the era sidecar. */
-  private[graft] def footerFieldIds(spark: SparkSession,
-      dirPath: String): Map[Int, String] = {
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dirPath)
-    val fs = p.getFileSystem(conf)
-    fs.listStatus(p).map(_.getPath)
-      .find(_.getName.endsWith(".parquet")) match {
-      case None => Map.empty
-      case Some(f) =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(f, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter.getFileMetaData.getSchema.getFields.asScala
-          .flatMap(t => Option(t.getId).map(_.intValue -> t.getName))
-          .toMap
-        finally r.close()
-    }
-  }
+  /** Commit each of `eras` as one snapshot of the versioned table at
+    * `root`, unpartitioned (`day` stays a data column, as the era
+    * footers carry it), moving `main` — the schema-evolution layouts. */
+  private def commitEras(spark: SparkSession, root: String,
+      eras: Seq[DataFrame]): Unit = eras.foreach(era =>
+    LakeOps.commit(spark, root, LakeOps.stage(spark, root)(era, Nil)))
 
-  /** Persist one schema ERA's (field-id → physical column name) mapping
-    * — the engine's equivalent of Iceberg's `NestedField` ids
-    * (`aig/AIGEventsSchemaValidator.java:61-146`), which are what make
-    * renames safe: a column's identity is its id, its name is an era-
-    * scoped label. One sidecar per era under `metadata/`, same encoding
-    * discipline as the manifests. Since r19 this is the FALLBACK: era
-    * writers stamp real footer field-ids ([[withFieldId]]) and
-    * [[readEraById]] binds from footers first. */
-  private[graft] def writeSchemaEra(spark: SparkSession, root: String,
-      era: Int, fields: Seq[(Int, String)]): Unit =
-    writeMetaLines(spark, root, s"metadata/schema-$era.txt",
-      fields.map { case (id, n) => f"$id%03d=$n" })
-
-  /** Read era `era`'s (field-id → physical name) mapping. */
-  private[graft] def readSchemaEra(spark: SparkSession, root: String,
-      era: Int): Seq[(Int, String)] =
-    readMetaLines(spark, root, s"metadata/schema-$era.txt").map { l =>
-      val Array(i, n) = l.split("=", 2)
-      (i.toInt, n)
-    }
-
-  /** Scan era `era`'s files RESOLVED BY FIELD ID against the table's
-    * current schema: each current (id, name) binds to the era file's
-    * physical column carrying that id — never by name. This is what
-    * keeps a rename CHAIN correct: after a→b then c→a, an era-1 file's
-    * physical "a" is field 3 (now named b) while the CURRENT "a" is
-    * field 5 — a name-mapping reader would silently serve field 3's
-    * values as "a". Ids present in the current schema but absent from
-    * the era (columns added later) are skipped here; callers union with
-    * `unionByName(allowMissingColumns)` semantics or project defaults. */
-  private[graft] def readEraById(spark: SparkSession, root: String,
-      era: Int, current: Seq[(Int, String)]): DataFrame = {
-    // footers first (the wire format — ids stamped by the era writers),
-    // COMPLETED by the sidecar where one exists: a mixed/older writer
-    // may have stamped only some fields, and a partial footer map must
-    // not silently narrow the projection when the sidecar still binds
-    // the unstamped ids (ids in neither source are genuinely absent
-    // from the era — columns added later — and are skipped by
-    // contract). Footer wins per-id on disagreement. When the footers
-    // bind every requested id the sidecar is never read; otherwise a
-    // sidecar read failure PROPAGATES — swallowing it would silently
-    // drop requested ids that are present in the era but unstamped
-    // (an absent sidecar file is not a failure: readMetaLines returns
-    // empty, and the ids-absent-from-era contract applies).
-    val fromFooter = footerFieldIds(spark, s"$root/v$era")
-    val sidecar =
-      if (current.forall { case (id, _) => fromFooter.contains(id) })
-        Map.empty[Int, String] // footers bind everything requested
-      else readSchemaEra(spark, root, era).toMap
-    val phys = sidecar ++ fromFooter
-    spark.read.parquet(s"$root/v$era")
-      .select(current.flatMap { case (id, cur) =>
-        phys.get(id).map(p => col(p).as(cur)) }: _*)
-  }
-
-  /** Two-era-chain layout for [[alterRenameChain]]: field 3 starts as
-    * physical `a` (holding value), field 5 as physical `c` (holding
-    * user_id); rename a→b lands era 2 (b, c), rename c→a lands era 3
-    * (b, a). Built once per corpus fingerprint. */
+  /** Three-era rename-chain table for [[alterRenameChain]], one commit
+    * per era: field 3 starts as physical `a` (holding value), field 5 as
+    * physical `c` (holding user_id); rename a→b lands era 2 (b, c),
+    * rename c→a lands era 3 (b, a). Every era stamps its footer ids.
+    * Built once per corpus fingerprint. */
   private[graft] def renameChainLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    buildShared(spark, sharedFor(spark, "events_rename_chain", dir)) { out =>
-      val ev = eventsWithParts(spark, dir)
-        .select($"event_id", $"event_type", $"value", $"user_id", $"day")
-        .localCheckpoint()
-      // every era write stamps footer field-ids — the binding proof in
-      // IngestSpec reads THESE ids, not the sidecars
-      def eraCols(valName: String, uidName: String) = Seq(
-        withFieldId($"event_id", "event_id", 1),
-        withFieldId($"event_type", "event_type", 2),
-        withFieldId($"value", valName, 3),
-        withFieldId($"user_id", uidName, 5),
-        withFieldId($"day", "day", 4))
-      ev.filter($"day" <= 10).select(eraCols("a", "c"): _*)
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/v1")
-      ev.filter($"day".between(11, 20)).select(eraCols("b", "c"): _*)
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/v2")
-      ev.filter($"day" > 20).select(eraCols("b", "a"): _*)
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/v3")
-      writeSchemaEra(spark, out, 1, Seq(1 -> "event_id", 2 -> "event_type",
-        3 -> "a", 5 -> "c", 4 -> "day"))
-      writeSchemaEra(spark, out, 2, Seq(1 -> "event_id", 2 -> "event_type",
-        3 -> "b", 5 -> "c", 4 -> "day"))
-      writeSchemaEra(spark, out, 3, Seq(1 -> "event_id", 2 -> "event_type",
-        3 -> "b", 5 -> "a", 4 -> "day"))
+    buildShared(spark, sharedFor(spark, "events_rename_chain_v2", dir)) {
+      out =>
+        val ev = eventsWithParts(spark, dir)
+          .select($"event_id", $"event_type", $"value", $"user_id", $"day")
+          .localCheckpoint()
+        def eraCols(valName: String, uidName: String) = Seq(
+          withFieldId($"event_id", "event_id", 1),
+          withFieldId($"event_type", "event_type", 2),
+          withFieldId($"value", valName, 3),
+          withFieldId($"user_id", uidName, 5),
+          withFieldId($"day", "day", 4))
+        commitEras(spark, out, Seq(
+          ev.filter($"day" <= 10).select(eraCols("a", "c"): _*),
+          ev.filter($"day".between(11, 20)).select(eraCols("b", "c"): _*),
+          ev.filter($"day" > 20).select(eraCols("b", "a"): _*)))
     }
   }
 
@@ -1375,113 +1241,88 @@ object IngestOps {
     * separates field-id resolution from name mapping: after the chain,
     * the current name `a` denotes a DIFFERENT field than era 1's
     * physical `a`, so a reader that maps old names to new names (the
-    * [[alterRenameCol]] single-rename shortcut) would serve field 3's
-    * values (value) under `a` for era-1 files — silently, with a valid
-    * schema. Resolving every era through its id sidecar
-    * ([[readEraById]]) binds era 1's physical `a` to field 3 (current
-    * name `b`) and leaves current `a` = field 5 (physical `c` there).
-    * The oracle computes b/a from value/user_id directly, so a
+    * single-rename shortcut) would serve field 3's values (value) under
+    * `a` for era-1 files — silently, with a valid schema. The read
+    * resolves every era by field id against the current schema
+    * ([[TableSchema.projectOnto]]): era 1's physical `a` binds to field
+    * 3 (current name `b`) and current `a` = field 5 (physical `c`
+    * there). The oracle computes b/a from value/user_id directly, so a
     * mis-binding flips two aggregate columns and the hash catches it. */
   def alterRenameChain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = renameChainLayout(spark, dir)
-    val current = readSchemaEra(spark, out, 3)
-    (1 to 3).map(readEraById(spark, out, _, current))
-      .reduce(_ unionByName _)
+    LakeOps.readCurrent(spark, renameChainLayout(spark, dir))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), dsum($"b").as("sum_b"),
         sum($"a").as("sum_a"))
       .orderBy($"event_type")
   }
 
-  /** Two-era layout for TYPE-WIDENING evolution: v1 files (days 1-15)
-    * carry `units` as INT32 and `score` as FLOAT — the narrow physical
-    * types stay in the old footers forever; v2 files (days 16+) carry
-    * the widened LONG/DOUBLE, with v2 `units` values beyond int32 range
-    * so the promotion is load-bearing, not cosmetic. Built once per
-    * corpus fingerprint so the spec can prove the merged read never
-    * rewrites a v1 byte. */
+  /** Two-era table for TYPE-WIDENING evolution, one commit per era: v1
+    * files (days 1-15) carry `units` as INT32 and `score` as FLOAT — the
+    * narrow physical types stay in the old footers forever; v2 files
+    * (days 16+) carry the widened LONG/DOUBLE, with v2 `units` values
+    * beyond int32 range so the promotion is load-bearing, not cosmetic.
+    * Built once per corpus fingerprint so the spec can prove the read
+    * never rewrites a v1 byte. */
   private[graft] def widenLayout(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    buildShared(spark, sharedFor(spark, "events_widened", dir)) { out =>
+    buildShared(spark, sharedFor(spark, "events_widened_v2", dir)) { out =>
       val ev = eventsWithParts(spark, dir)
         .select($"event_id", $"event_type", $"user_id", $"value", $"day")
         .localCheckpoint()
-      ev.filter($"day" <= 15)
-        .select($"event_id", $"event_type",
+      commitEras(spark, out, Seq(
+        ev.filter($"day" <= 15).select($"event_id", $"event_type",
           ($"user_id" % 100000L).cast("int").as("units"),
-          $"value".cast("float").as("score"), $"day")
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/v1")
-      ev.filter($"day" > 15)
-        .select($"event_id", $"event_type",
+          $"value".cast("float").as("score"), $"day"),
+        ev.filter($"day" > 15).select($"event_id", $"event_type",
           (($"user_id" % 100000L) + 3000000000L).as("units"),
-          $"value".as("score"), $"day")
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/v2")
+          $"value".as("score"), $"day")))
     }
   }
 
   /** `alter_widen_type` — TYPE-WIDENING schema evolution (int→long,
-    * float→double), the fourth leg beside add ([[alterAddCols]]), nested
-    * add ([[alterNestedEvolve]]) and rename ([[alterRenameCol]]): the
-    * era drift implied by the reference's footer-driven schema path
+    * float→double), the fourth leg beside add, nested add and rename:
+    * the era drift of the reference's footer-driven schema path
     * (`Bulk:109-126`), which Iceberg promotes natively and Spark's
-    * `mergeSchema` REFUSES (int/long unions throw). The engine's answer
-    * is the same scan-time mapping rename uses: each era is read in its
-    * own physical type and CAST to the table type in its projection —
-    * v1 footers keep INT32/FLOAT bytes forever (IngestSpec proves
-    * zero-rewrite by mtime), the cast is codegen'd per batch, and at
-    * 100 TB a type change costs nothing but a cast in the scan
-    * projection instead of a full table rewrite. */
+    * `mergeSchema` REFUSES. The widening commit keeps the fields' ids,
+    * so v1 files are scanned in their physical types and CAST in the
+    * projection — v1 footers keep INT32/FLOAT bytes forever (IngestSpec
+    * proves zero-rewrite by mtime); a type change costs a cast, not a
+    * table rewrite. */
   def alterWidenType(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = widenLayout(spark, dir)
-    // the type mapping: pre-widening files promote in the projection
-    val v1 = spark.read.parquet(s"$out/v1")
-      .withColumn("units", $"units".cast("long"))
-      .withColumn("score", $"score".cast("double"))
-    val v2 = spark.read.parquet(s"$out/v2")
-    v1.unionByName(v2)
+    LakeOps.readCurrent(spark, widenLayout(spark, dir))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"units").as("sum_units"),
         min($"score").as("min_score"), max($"score").as("max_score"))
       .orderBy($"event_type")
   }
 
-  /** Two-era layout for column DROP: v1 files (days 1-15) carry the
-    * doomed `props` column; v2 files (days 16+) are written AFTER the
-    * drop and never contain it. Built once per corpus fingerprint so
-    * the spec can prove the drop never rewrites a v1 byte. */
+  /** Two-era table for column DROP, one commit per era: v1 files (days
+    * 1-15) carry the doomed `props` column; v2 files (days 16+) are
+    * written AFTER the drop and never contain it. Built once per corpus
+    * fingerprint so the spec can prove the drop never rewrites a v1
+    * byte. */
   private[graft] def dropLayout(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    buildShared(spark, sharedFor(spark, "events_dropped", dir)) { out =>
+    buildShared(spark, sharedFor(spark, "events_dropped_v2", dir)) { out =>
       val ev = eventsWithParts(spark, dir)
         .select($"event_id", $"event_type", $"value", $"props", $"day")
         .localCheckpoint()
-      ev.filter($"day" <= 15)
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/v1")
-      ev.filter($"day" > 15).drop("props")
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/v2")
+      commitEras(spark, out,
+        Seq(ev.filter($"day" <= 15), ev.filter($"day" > 15).drop("props")))
     }
   }
 
-  /** `alter_drop_col` — column DROP, the fifth leg of schema evolution
-    * beside add ([[alterAddCols]]), nested add ([[alterNestedEvolve]]),
-    * rename ([[alterRenameCol]]) and widen ([[alterWidenType]]): parquet
-    * files are immutable, so the dropped column's bytes stay in every
-    * pre-drop footer forever — what changes is the TABLE schema, and
-    * each era's scan projects the column away (column pruning even
-    * means the dropped bytes are never READ, not just never served).
-    * Post-drop files never contain it. The drop costs one catalog
-    * write and zero data IO (IngestSpec mtime-proves); storage is
-    * reclaimed lazily by future compactions — Iceberg's drop-column
-    * contract exactly. */
+  /** `alter_drop_col` — column DROP, the fifth leg of schema evolution:
+    * the dropped column's bytes stay in every pre-drop footer forever —
+    * what changes is the TABLE schema, and the v1 scan's projection onto
+    * it leaves the column out (column pruning: the bytes are never even
+    * READ). The drop costs one metadata write and zero data IO
+    * (IngestSpec mtime-proves) — Iceberg's drop-column contract. */
   def alterDropCol(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = dropLayout(spark, dir)
-    val cols = Seq("event_id", "event_type", "value", "day")
-    val v1 = spark.read.parquet(s"$out/v1").select(cols.map(col): _*)
-    val v2 = spark.read.parquet(s"$out/v2").select(cols.map(col): _*)
-    v1.unionByName(v2)
+    LakeOps.readCurrent(spark, dropLayout(spark, dir))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
         count(when($"day" <= 15, 1)).as("n_v1"),
@@ -1489,51 +1330,38 @@ object IngestOps {
       .orderBy($"event_type")
   }
 
-  /** Two-era layout for DEFAULT-VALUE column add: v1 files (days 1-15)
-    * predate the column entirely; v2 files (days 16+) are written after
-    * the ALTER and store real per-row `tier` values. Built once per
-    * corpus fingerprint so the spec can prove the add never rewrites a
-    * v1 byte. */
+  /** Two-era table for DEFAULT-VALUE column add, one commit per era: v1
+    * files (days 1-15) predate the column entirely; v2 files (days 16+)
+    * are written after the ALTER, store real per-row `tier` values and
+    * commit the column with its initial default `'standard'`. Built
+    * once per corpus fingerprint so the spec can prove the add never
+    * rewrites a v1 byte. */
   private[graft] def defaultColLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    buildShared(spark, sharedFor(spark, "events_defaultcol", dir)) { out =>
+    buildShared(spark, sharedFor(spark, "events_defaultcol_v2", dir)) { out =>
       val ev = eventsWithParts(spark, dir)
         .select($"event_id", $"event_type", $"value", $"day")
         .localCheckpoint()
-      ev.filter($"day" <= 15)
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/v1")
-      ev.filter($"day" > 15)
-        .withColumn("tier",
-          when($"value" >= 50.0, lit("premium")).otherwise(lit("standard")))
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/v2")
+      commitEras(spark, out, Seq(ev.filter($"day" <= 15),
+        ev.filter($"day" > 15).withColumn("tier",
+          when($"value" >= 50.0, lit("premium")).otherwise(lit("standard"))
+            .as("tier", new org.apache.spark.sql.types.MetadataBuilder()
+              .putString(TableSchema.InitialDefault, "standard").build()))))
     }
   }
 
   /** `alter_add_col_default` — ADD COLUMN ... DEFAULT, the sixth leg of
-    * schema evolution beside add ([[alterAddCols]]), nested add
-    * ([[alterNestedEvolve]]), rename ([[alterRenameCol]]), widen
-    * ([[alterWidenType]]) and drop ([[alterDropCol]]) — Iceberg v3's
-    * INITIAL-DEFAULT semantics: `ALTER TABLE ADD COLUMN tier STRING
-    * DEFAULT 'standard'` must serve `'standard'` (not NULL, which is
-    * all [[alterAddCols]]' mergeSchema read can surface) for every row
-    * written BEFORE the alter, with zero rewrite. The default is
-    * catalog metadata, applied in the pre-add era's scan projection —
-    * the same name-mapping discipline as rename/widen, with a literal
-    * instead of an alias/cast; post-add files store real values and
-    * serve them verbatim. At 100 TB adding a defaulted column costs one
-    * catalog write; the literal is constant-folded into each scan.
-    * (IngestSpec mtime-proves the zero rewrite and checks the per-era
-    * split: v1 rows all serve the default, v2 rows their stored
-    * values.) */
+    * schema evolution: Iceberg v3's INITIAL-DEFAULT semantics, `ALTER
+    * TABLE ADD COLUMN tier STRING DEFAULT 'standard'` serves
+    * `'standard'` (not the NULL a mergeSchema read surfaces) for every
+    * row written BEFORE the alter, with zero rewrite. The default is
+    * schema metadata, a literal in the pre-add era's projection; post-add
+    * files serve their stored values. (IngestSpec mtime-proves the zero
+    * rewrite and checks the per-era split.) */
   def alterAddColDefault(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = defaultColLayout(spark, dir)
-    // the initial-default mapping: pre-add files project the default
-    val v1 = spark.read.parquet(s"$out/v1")
-      .withColumn("tier", lit("standard"))
-    val v2 = spark.read.parquet(s"$out/v2")
-    v1.unionByName(v2)
+    LakeOps.readCurrent(spark, defaultColLayout(spark, dir))
       .groupBy($"tier")
       .agg(count(lit(1)).as("n"),
         count(when($"day" <= 15, 1)).as("n_v1"),
@@ -1553,9 +1381,7 @@ object IngestOps {
     val root = snapshotLayout(spark, dir)
     val cutoffMs = 1705276800000L + 2500L // between commits 2 and 3
     val snaps = commitLog(spark, root).filter(_._2 <= cutoffMs).map(_._1)
-    val files = snaps.flatMap(n => snapshotManifest(spark, root, n))
-      .map(rel => s"$root/data/$rel")
-    LakeOps.readFiles(spark, s"$root/data", files)
+    LakeOps.readLive(spark, root, snaps)
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"), dsum($"value").as("sum_value"))
       .orderBy($"day")
@@ -1762,16 +1588,13 @@ object IngestOps {
     * same recipe applies per partition). */
   private[graft] def statsLayout(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val out = sharedFor(spark, "events_valstats", dir)
+    val out = sharedFor(spark, "events_valstats_v2", dir)
     buildShared(spark, out) { tmpRoot =>
-      eventsWithParts(spark, dir)
+      commitEras(spark, tmpRoot, Seq(eventsWithParts(spark, dir)
         .select($"event_id", $"user_id", $"event_type", $"value", $"day")
         .repartitionByRange(16, $"value")
-        .sortWithinPartitions($"value")
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(s"$tmpRoot/data")
-      writeStatsManifest(spark, tmpRoot, "files.stats",
-        listDataFiles(spark, s"$tmpRoot/data"))
+        .sortWithinPartitions($"value")))
+      writeStatsManifest(spark, tmpRoot, "files.stats", 1)
     }
   }
 
@@ -1845,19 +1668,16 @@ object IngestOps {
   private[graft] def nullStatsLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    val out = sharedFor(spark, "events_nullstats", dir)
+    val out = sharedFor(spark, "events_nullstats_v2", dir)
     buildShared(spark, out) { tmpRoot =>
-      eventsWithParts(spark, dir)
+      commitEras(spark, tmpRoot, Seq(eventsWithParts(spark, dir)
         .select($"event_id", $"user_id", $"event_type",
           when($"event_type" === "click" && $"day".between(3, 7),
             lit(null).cast("double")).otherwise($"value").as("value"),
           $"day")
         .repartitionByRange(16, $"day", $"event_id")
-        .sortWithinPartitions($"day")
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd").parquet(s"$tmpRoot/data")
-      writeStatsManifest(spark, tmpRoot, "files.stats",
-        listDataFiles(spark, s"$tmpRoot/data"))
+        .sortWithinPartitions($"day")))
+      writeStatsManifest(spark, tmpRoot, "files.stats", 1)
     }
   }
 
@@ -1874,8 +1694,8 @@ object IngestOps {
     val root = nullStatsLayout(spark, dir)
     val hits = statsManifest(spark, root, "files.stats")
       .filter($"n_null_value" > 0).select($"rel")
-      .collect().map(r => s"$root/data/${r.getString(0)}").toSeq
-    LakeOps.readFiles(spark, s"$root/data", hits)
+      .collect().map(_.getString(0)).toSet
+    LakeOps.readLive(spark, root, Seq(1), hits)
       .filter($"value".isNull)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
@@ -2027,10 +1847,9 @@ object IngestOps {
       .collect().map(_.getLong(1)).toSeq.sorted
     val (files, _) = bloomQualifyingFiles(spark, sidecar, keys)
     // zero qualifying files (no probe days in the corpus, or every
-    // bloom excludes) is a valid empty answer: readFiles returns an
-    // empty frame with the table's schema
-    LakeOps.readFiles(spark, s"$root/data",
-        files.map(r => s"$root/data/$r"))
+    // bloom excludes) is a valid empty answer: the read is an empty
+    // frame with the table's schema
+    LakeOps.readLive(spark, root, 1 to 3, files.toSet)
       .filter($"event_id".isin(keys: _*))
       .select($"event_id", $"event_type", $"value")
       .orderBy($"event_id")
@@ -2047,7 +1866,8 @@ object IngestOps {
     val root = statsLayout(spark, dir)
     val (files, _) = statsQualifyingFiles(spark, root, 180.0, 220.0)
     // zero qualifying files is a valid plan (empty answer), not an error
-    LakeOps.readFiles(spark, s"$root/data", files)
+    val hit = files.toSet
+    LakeOps.readLive(spark, root, Seq(1), rel => hit(s"$root/data/$rel"))
       .filter($"value".between(180.0, 220.0))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), countDistinct($"user_id").as("n_users"),

@@ -4,9 +4,9 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileFormat,
   FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import graft.operators.dsum
 
@@ -24,9 +24,10 @@ import graft.operators.dsum
   * rewrite ONLY those partitions in one distributed pass, and commit
   * their old files as the removal set — a reader sees the table before
   * or after, never between, and every other data file keeps its bytes
-  * (asserted in LakeSpec). Reads plan from the manifests
-  * ([[readCurrent]], [[readLive]], [[readFiles]]), never from a
-  * directory listing.
+  * (asserted in LakeSpec). Every commit records the schema it writes
+  * ([[TableSchema]]) and its manifest names that record; reads plan
+  * from the manifests and the records ([[readCurrent]], [[readLive]],
+  * [[readFiles]]), never from a directory listing or a footer.
   *
   * Scale shape: the only driver-side materialization is the DISTINCT
   * PARTITION KEY list of the touched partitions and the manifests' file
@@ -83,9 +84,8 @@ object LakeOps {
       .filter(rel => dayRe.findFirstMatchIn(rel)
         .exists(m => days.contains(m.group(1).toInt)))
     val rows = table.filter($"day".isin(days.map(Int.box): _*))
-    val won = commit(spark, root,
-      stage(spark, root, onStep)(dayParquet(rows.repartition($"day"))),
-      removed = touched, onStep = onStep)
+    val won = commit(spark, root, stage(spark, root, onStep)(
+      rows.repartition($"day")), removed = touched, onStep = onStep)
     if (won < 0) throw new IllegalStateException(
       s"copy-on-write commit on $root lost its snapshot slot to another writer")
     won
@@ -144,9 +144,10 @@ object LakeOps {
     * survivors there adopt it as NULL), while untouched partitions keep
     * their narrow footers byte-for-byte (LakeSpec asserts both by
     * schema and mtime) — Iceberg's add-column contract fused into the
-    * MERGE commit. The read unifies the two eras ([[evolvedRead]]) and
-    * every v1 row surfaces NULL origin. At 100 TB evolving the schema
-    * costs exactly the partitions the MERGE was rewriting anyway. */
+    * MERGE commit. The commit records the widened schema, so the plain
+    * [[readCurrent]] serves `origin`, NULL in every untouched file. At
+    * 100 TB evolving the schema costs exactly the partitions the MERGE
+    * was rewriting anyway. */
   def mergeUpsertEvolve(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = IngestOps.tmp("events_merge_evolve")
@@ -160,7 +161,8 @@ object LakeOps {
       .join(updates.select($"event_id"), Seq("event_id"), "left_anti")
       .withColumn("origin", lit(null).cast("string"))
       .unionByName(updates)
-    evolvedRead(spark, out, rewriteDays(spark, out, merged, days))
+    rewriteDays(spark, out, merged, days)
+    readCurrent(spark, out)
       .filter($"day".between(6, 14))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"),
@@ -475,12 +477,7 @@ object LakeOps {
       onStep: String => Unit = _ => ()): Boolean = {
     val dir = java.nio.file.Paths.get(root, "metadata")
     java.nio.file.Files.createDirectories(dir)
-    // attempt name unique per process AND thread AND call — two threads
-    // of one writer contending the same slot must not clobber each
-    // other's attempt content before the link resolves the race
-    val attempt = dir.resolve(s"snap-$n.txt.attempt-" +
-      s"${java.lang.ProcessHandle.current().pid()}-" +
-      s"${Thread.currentThread().getId}-${System.nanoTime()}")
+    val attempt = dir.resolve(s"snap-$n.txt.attempt$unique")
     java.nio.file.Files.write(attempt, files.toSeq.sorted.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     onStep("attempt-written")
@@ -496,6 +493,12 @@ object LakeOps {
       case _: java.nio.file.NoSuchFileException => false
     } finally java.nio.file.Files.deleteIfExists(attempt)
   }
+
+  /** `-<pid>-<thread>-<nanos>`, unique per process AND thread AND call:
+    * two threads of one writer contending the same slot must not clobber
+    * each other's attempt or staging files before the link resolves. */
+  private def unique: String = s"-${java.lang.ProcessHandle.current().pid()}" +
+    s"-${Thread.currentThread().getId}-${System.nanoTime()}"
 
   /** Next free snapshot slot: max committed + 1 (re-listed per CAS
     * attempt — the cross-process retry loop's re-read of table state);
@@ -517,25 +520,26 @@ object LakeOps {
     finally st.close()
   }
 
-  /** The day-partitioned zstd parquet write most commits stage with. */
-  private[sources] def dayParquet(df: DataFrame)(path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("day").parquet(path)
+  /** What [[stage]] hands [[commit]]: the staged files (relative to
+    * `data/`) and the schema of the frame they hold, not yet numbered. */
+  private[graft] case class Staged(files: Seq[String], schema: TableSchema)
 
-  /** Commit step 1, STAGE: `write` puts the commit's data files in a
-    * private staging dir (unique per writer and call), and they move
-    * into `data/` under their job-unique names; returns their paths
-    * relative to `data/`. Staging is how a commit knows EXACTLY which
-    * files are its own — a concurrent writer's files never enter the
-    * stage. Moved files are invisible until a manifest names them
-    * (readers plan from manifests, never directory listings). Hidden
-    * outputs (`_SUCCESS`, `.crc`) are dropped with the staging dir.
-    * Emits "staged" and "data-written". */
+  /** Commit step 1, STAGE: `rows` are written (zstd, partitioned by
+    * `partitionBy`, in `format`) to a private staging dir (unique per
+    * writer and call), and the files move into `data/` under their
+    * job-unique names; returns them with the frame's schema. Staging is
+    * how a commit knows EXACTLY which files are its own — a concurrent
+    * writer's files never enter the stage. Moved files are invisible
+    * until a manifest names them (readers plan from manifests, never
+    * directory listings). Hidden outputs (`_SUCCESS`, `.crc`) are
+    * dropped with the staging dir. Emits "staged" and "data-written". */
   private[graft] def stage(spark: SparkSession, root: String,
-      onStep: String => Unit = _ => ())(write: String => Unit): Seq[String] = {
-    val dir = s"$root/.stage-${java.lang.ProcessHandle.current().pid()}" +
-      s"-${Thread.currentThread().getId}-${System.nanoTime()}"
-    write(dir)
+      onStep: String => Unit = _ => ())(rows: DataFrame,
+      partitionBy: Seq[String] = Seq("day"),
+      format: String = "parquet"): Staged = {
+    val dir = s"$root/.stage$unique"
+    rows.write.mode(SaveMode.Overwrite).option("compression", "zstd")
+      .partitionBy(partitionBy: _*).format(format).save(dir)
     onStep("staged")
     val stRoot = java.nio.file.Paths.get(dir)
     val w = java.nio.file.Files.walk(stRoot)
@@ -554,16 +558,43 @@ object LakeOps {
     org.apache.spark.network.util.JavaUtils
       .deleteRecursively(new java.io.File(dir))
     onStep("data-written")
-    added
+    Staged(added, TableSchema.written(rows, partitionBy, format))
   }
 
-  /** Commit step 2, PUBLISH: CAS a manifest naming `added` into the
-    * next free slot ([[tryCommit]]), re-reading the slot and retrying
-    * up to `maxAttempts` times when another writer wins — staged files
-    * are REUSED across retries. A REPLACE commit (non-empty `removed`)
-    * writes `snap-N.removed.txt` BEFORE the link, so the instant
-    * snapshot N becomes visible both halves exist: no reader can see
-    * the new files without the removal (doubled rows). That pre-link
+  /** The manifest lines committing `staged` as snapshot `slot`: its files
+    * and a `#schema` header naming its record, numbered on top of
+    * snapshot `slot - 1`'s and written (write-then-link) before the CAS;
+    * an existing copy gets a fresh mtime so an age-gated [[orphanSweep]]
+    * cannot reclaim it before the link. */
+  private[graft] def manifestLines(spark: SparkSession, root: String,
+      slot: Int, staged: Staged): Seq[String] = {
+    val base = if (slot > 1) Some(snapshotSchema(spark, root, slot - 1))
+      else None
+    val record = staged.schema.numbered(base)
+    val dir = java.nio.file.Paths.get(root, "metadata")
+    java.nio.file.Files.createDirectories(dir)
+    val path = dir.resolve(record.name)
+    val attempt = dir.resolve(s"${record.name}.attempt$unique")
+    java.nio.file.Files.write(attempt, record.json
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try java.nio.file.Files.createLink(path, attempt)
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        java.nio.file.Files.setLastModifiedTime(path, java.nio.file.attribute
+          .FileTime.fromMillis(System.currentTimeMillis()))
+    } finally java.nio.file.Files.deleteIfExists(attempt)
+    staged.files :+ s"#schema ${record.name}"
+  }
+
+  /** Commit step 2, PUBLISH: CAS a manifest naming `staged`'s files and
+    * schema record ([[manifestLines]]) into the next free slot
+    * ([[tryCommit]]), re-reading the slot and retrying up to
+    * `maxAttempts` times when another writer wins — staged files are
+    * REUSED across retries, and the schema is renumbered on top of the
+    * snapshot each attempt builds on. A REPLACE commit (non-empty
+    * `removed`) writes `snap-N.removed.txt` BEFORE the link, so the
+    * instant snapshot N becomes visible both halves exist: no reader can
+    * see the new files without the removal (doubled rows). That pre-link
     * write is also why a replace commit needs a SINGLE writer — a racer
     * winning slot N would adopt the removal set as its own — so it
     * gets exactly one attempt, and callers must not race it. After the
@@ -572,7 +603,7 @@ object LakeOps {
     * Emits "attempt-written" (per attempt) and "linked". Returns the
     * slot won, or -1 when every attempt lost. */
   private[graft] def commit(spark: SparkSession, root: String,
-      added: Seq[String], removed: Seq[String] = Nil,
+      staged: Staged, removed: Seq[String] = Nil,
       ref: Option[String] = Some("main"), maxAttempts: Int = 1,
       onStep: String => Unit = _ => ()): Int = {
     require(removed.isEmpty || maxAttempts == 1,
@@ -585,7 +616,8 @@ object LakeOps {
       val slot = nextSlot(root)
       if (removed.nonEmpty)
         writeManifest(spark, root, s"snap-$slot.removed.txt", removed)
-      if (tryCommit(spark, root, slot, added, onStep)) won = slot
+      if (tryCommit(spark, root, slot,
+          manifestLines(spark, root, slot, staged), onStep)) won = slot
     }
     if (won > 0) {
       onStep("linked")
@@ -611,15 +643,15 @@ object LakeOps {
       slice: DataFrame, maxAttempts: Int = 1,
       onStep: String => Unit = _ => ()): Int = {
     import slice.sparkSession.implicits._
-    commit(spark, root,
-      stage(spark, root, onStep)(dayParquet(slice.repartition($"day"))),
+    commit(spark, root, stage(spark, root, onStep)(slice.repartition($"day")),
       maxAttempts = maxAttempts, onStep = onStep)
   }
 
   /** Orphan cleanup (Iceberg's `remove_orphan_files`): reclaim every
     * file a crashed writer left that NO committed snapshot references —
-    * data files absent from all `snap-*.txt` manifests, stale
-    * `*.attempt-*` CAS leftovers, and `snap-N.removed.txt` files with
+    * data files absent from all `snap-*.txt` manifests, schema records
+    * no manifest names, stale `*.attempt-*` CAS leftovers, and
+    * `snap-N.removed.txt` files with
     * no `snap-N.txt` — a replace commit killed between its removal
     * write and its link (a [[commit]] always links an adds manifest,
     * empty for a pure delete, so a lone removal set is never a
@@ -647,8 +679,10 @@ object LakeOps {
     val snapRe = """snap-(\d+)\.txt""".r
     val snaps = metadataNames(root)
     val linked = snaps.collect { case snapRe(n) => n.toInt }
-    val referenced = linked
-      .flatMap(n => readManifest(spark, root, s"snap-$n.txt")).toSet
+    val manifests = linked.map(n =>
+      IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt"))
+    val referenced = manifests.flatMap(_._1).toSet
+    val named = manifests.flatMap(_._2.get("schema")).toSet
     // a writer killed at "staged" has published nothing to data/ yet
     val published =
       if (fsExists(spark, root, "data")) listData(spark, s"$root/data")
@@ -660,8 +694,10 @@ object LakeOps {
       new org.apache.hadoop.fs.Path(s"$root/data/$rel"), recursive = false)
     }
     val removedRe = """snap-(\d+)\.removed\.txt""".r
+    val recordRe = """schema-[-0-9a-f]+\.json""".r
     val metaOrphans = snaps.filter {
       case removedRe(n) => !linked.contains(n.toInt)
+      case r @ recordRe() => !named.contains(r)
       case a => a.contains(".attempt-")
     }.filter(a => aged(meta.resolve(a)))
     metaOrphans.foreach(a => java.nio.file.Files.deleteIfExists(
@@ -694,20 +730,6 @@ object LakeOps {
       throw new IllegalStateException(s"table $root has no main ref: " +
         "no snapshot has been committed"))
 
-  /** [[mergeUpsertEvolve]]'s table as two eras, the
-    * `alter_add_col_default` read: the files snapshot `evolved` added
-    * carry `origin`; the files it left live predate the column and
-    * project it as NULL. */
-  private[graft] def evolvedRead(spark: SparkSession, root: String,
-      evolved: Int): DataFrame = {
-    val wide = liveFiles(spark, root, Seq(evolved))
-    val narrow = liveFiles(spark, root, 1 to evolved).filterNot(wide.toSet)
-    def era(rels: Seq[String]) =
-      readFiles(spark, s"$root/data", rels.map(rel => s"$root/data/$rel"))
-    era(narrow).withColumn("origin", lit(null).cast("string"))
-      .unionByName(era(wide))
-  }
-
   /** `commit_conflict_retry` — the optimistic-concurrency commit
     * protocol (the serializable-snapshot contract behind the
     * reference's atomic commit, `Bulk:97-101`): writers A and B both
@@ -729,11 +751,12 @@ object LakeOps {
       .localCheckpoint()
     // both writers' data files land first (data writes never conflict)
     val Seq(deltaA, deltaB) = Seq(16, 17).map(d => stage(spark, out)(
-      dayParquet(ev.filter($"day" === d).repartition($"day"))))
+      ev.filter($"day" === d).repartition($"day")))
     // the metadata race: both target slot 4; A wins, B retries on 5
-    val aWon = tryCommit(spark, out, 4, deltaA)
-    val bFirst = tryCommit(spark, out, 4, deltaB)
-    val bRetry = !bFirst && tryCommit(spark, out, 5, deltaB)
+    val aWon = tryCommit(spark, out, 4, manifestLines(spark, out, 4, deltaA))
+    val bFirst = tryCommit(spark, out, 4, manifestLines(spark, out, 4, deltaB))
+    val bRetry = !bFirst &&
+      tryCommit(spark, out, 5, manifestLines(spark, out, 5, deltaB))
     require(aWon && !bFirst && bRetry, "optimistic commit protocol broke")
     readLive(spark, out, 1 to 5)
       .filter($"day".between(14, 17))
@@ -750,9 +773,7 @@ object LakeOps {
     * input_file_name assertion). */
   def incrementalRead(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = IngestOps.snapshotLayout(spark, dir)
-    readFiles(spark, s"$root/data", IngestOps.snapshotManifest(spark, root, 3)
-        .map(rel => s"$root/data/$rel"))
+    readLive(spark, IngestOps.snapshotLayout(spark, dir), Seq(3))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"), countDistinct($"user_id").as("n_users"))
       .orderBy($"day")
@@ -841,7 +862,8 @@ object LakeOps {
 
   // ---- versioned-table emulation for the maintenance ops --------------
   // Delta manifests: metadata/snap-N.txt lists the data files snapshot N
-  // ADDED, metadata/snap-N.removed.txt the files it logically REPLACED.
+  // ADDED under a `#schema` header naming its schema record,
+  // metadata/snap-N.removed.txt the files it logically REPLACED.
   // Live view of snapshot S = union(adds 1..S) − union(removes 1..S) —
   // the Iceberg metadata tree (`Debug:164-196`) reduced to its delta
   // essence, so every read below is file-list-driven (metadata cost),
@@ -928,12 +950,37 @@ object LakeOps {
 
   /** Live file list (relative to data/) as of snapshot `s`. */
   private[graft] def liveFiles(spark: SparkSession, root: String,
-      snaps: Seq[Int]): Seq[String] = {
-    val added = snaps.flatMap(n => readManifest(spark, root, s"snap-$n.txt"))
+      snaps: Seq[Int]): Seq[String] = liveEras(spark, root, snaps).flatMap(_._2)
+
+  /** The live files of `snaps`, per snapshot, each with the name of the
+    * schema record the snapshot that added it names (`#schema`). */
+  private def liveEras(spark: SparkSession, root: String,
+      snaps: Seq[Int]): Seq[(Option[String], Seq[String])] = {
     val removed = snaps.flatMap(n =>
       readManifest(spark, root, s"snap-$n.removed.txt")).toSet
-    added.filterNot(removed)
+    snaps.map { n =>
+      val (files, headers) =
+        IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt")
+      headers.get("schema") -> files.filterNot(removed)
+    }
   }
+
+  /** The schema record snapshot `n` of `root` names. */
+  private[graft] def snapshotSchema(spark: SparkSession, root: String,
+      n: Int): TableSchema = schemaRecord(spark, root,
+    IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt")._2
+      .getOrElse("schema", throw noRecord(root, n)))
+
+  private def noRecord(root: String, n: Int) =
+    new IllegalStateException(s"snapshot $n of $root names no schema record")
+
+  private def schemaRecord(spark: SparkSession, root: String,
+      name: String): TableSchema =
+    readManifest(spark, root, name) match {
+      case Seq() => throw new IllegalStateException(
+        s"schema record $name of $root is missing")
+      case lines => TableSchema.parse(lines.mkString("\n"))
+    }
 
   /** Fresh 3-snapshot append table at `out` (days 1-5 / 6-10 / 11-15),
     * one [[commit]] per slice and no ref. `sliceFiles` = files per day
@@ -958,7 +1005,7 @@ object LakeOps {
         val shaped = if (nf == 1) slice.repartition($"day")
           else slice.repartition(nf * (hi - lo + 1),
             $"day", pmod($"event_id", lit(nf)))
-        commit(spark, out, stage(spark, out)(dayParquet(shaped)), ref = None)
+        commit(spark, out, stage(spark, out)(shaped), ref = None)
     }
     ev
   }
@@ -1011,7 +1058,7 @@ object LakeOps {
     * fingerprint-keyed; [[writeVersioned]] clones it per call. */
   private[graft] def versionedBaseLayout(spark: SparkSession,
       dir: String): String = {
-    val out = IngestOps.sharedFor(spark, "events_versioned", dir)
+    val out = IngestOps.sharedFor(spark, "events_versioned_v2", dir)
     IngestOps.buildShared(spark, out) { root =>
       buildVersioned(spark, dir, root)
     }
@@ -1031,7 +1078,7 @@ object LakeOps {
     * the whole events table, day-partitioned. */
   private[graft] def cowBaseLayout(spark: SparkSession,
       dir: String): String =
-    baseTableLayout(spark, "events_cowbase_v2", dir) {
+    baseTableLayout(spark, "events_cowbase_v3", dir) {
       IngestOps.eventsWithParts(spark, dir).select(col("event_id"),
         col("user_id"), col("event_type"), col("value"), col("day"))
     }
@@ -1049,7 +1096,7 @@ object LakeOps {
     * fixtures; the refs are written INSIDE the build, so the published
     * layout is immutable afterwards). */
   private[graft] def refsLayout(spark: SparkSession, dir: String): String = {
-    val out = IngestOps.sharedFor(spark, "events_refs", dir)
+    val out = IngestOps.sharedFor(spark, "events_refs_v2", dir)
     IngestOps.buildShared(spark, out) { root =>
       writeVersioned(spark, dir, root)
       setRef(spark, root, "main", 3)
@@ -1071,11 +1118,11 @@ object LakeOps {
   private[graft] def historyLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    val out = IngestOps.sharedFor(spark, "events_history", dir)
+    val out = IngestOps.sharedFor(spark, "events_history_v2", dir)
     IngestOps.buildShared(spark, out) { root =>
       writeVersioned(spark, dir, root)
-      commit(spark, root, stage(spark, root)(dayParquet(
-        divergentPurchases(spark, dir).repartition($"day"))))
+      commit(spark, root, stage(spark, root)(
+        divergentPurchases(spark, dir).repartition($"day")))
       writeManifest(spark, root, "parents.txt", Seq("2=1", "3=2", "4=2"))
       // the made-current log (seq=snap): 1, 2, 3 committed; rollback to
       // 2; divergent 4 lands. Written AFTER the commit's main move (which
@@ -1094,7 +1141,7 @@ object LakeOps {
   private[graft] def manifestsLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    val out = IngestOps.sharedFor(spark, "events_manifests", dir)
+    val out = IngestOps.sharedFor(spark, "events_manifests_v2", dir)
     IngestOps.buildShared(spark, out) { root =>
       // the three-commit choreography IS buildVersioned's, unfragmented
       // (this fixture exercises manifest planning, not compaction work);
@@ -1104,8 +1151,8 @@ object LakeOps {
       val oldDays = liveFiles(spark, root, 1 to 3)
         .filter(rel => "day=(\\d+)/".r.findFirstMatchIn(rel)
           .exists(_.group(1).toInt <= 3))
-      commit(spark, root, stage(spark, root)(dayParquet(
-        ev.filter($"day" <= 3).repartition($"day"))),
+      commit(spark, root, stage(spark, root)(
+        ev.filter($"day" <= 3).repartition($"day")),
         removed = oldDays, ref = None)
     }
   }
@@ -1122,43 +1169,57 @@ object LakeOps {
           "were reclaimed; read a ref-pinned snapshot instead")
   }
 
-  /** Read the union of snapshots `snaps`: the manifests name the live
-    * files and [[readFiles]] scans exactly those, so membership comes
-    * from metadata alone — an uncommitted file beside a live one is
-    * never read. */
+  /** Read the union of snapshots `snaps` (those of its live files `keep`
+    * accepts) as one table of the newest snapshot's schema: the
+    * manifests name the live files and [[readEras]] scans exactly those,
+    * so membership comes from metadata alone — an uncommitted file
+    * beside a live one is never read. */
   private[graft] def readLive(spark: SparkSession, root: String,
-      snaps: Seq[Int]): DataFrame = {
-    if (snaps.nonEmpty) requireNotExpired(spark, root, snaps.max)
-    readFiles(spark, s"$root/data",
-      liveFiles(spark, root, snaps).map(rel => s"$root/data/$rel"))
+      snaps: Seq[Int], keep: String => Boolean = _ => true): DataFrame = {
+    require(snaps.nonEmpty, s"no snapshot of $root to read")
+    requireNotExpired(spark, root, snaps.max)
+    val eras = liveEras(spark, root, snaps).zip(snaps).map {
+      case ((s, fs), n) => (s"$root/data", s.getOrElse(throw noRecord(root, n)),
+        fs.filter(keep).map(rel => s"$root/data/$rel"))
+    }
+    readEras(spark, root, eras,
+      schemaRecord(spark, root, eras(snaps.indexOf(snaps.max))._2))
   }
 
-  /** The one manifest-planned read: scan exactly `files` (absolute
-    * paths under the data directory `basePath`, as a manifest names
-    * them), Iceberg's planFiles shape. Spark's own
-    * `read.option("basePath", …).parquet(files)` checks every path and
-    * then lists them all again, above 32 paths as a distributed job
-    * with one task per file; here the relation is built directly:
-    *  - file statuses come from at most one driver `listStatus` per
-    *    distinct parent directory, kept only for the files the list
-    *    names; they fill the index's status cache, so the index lists
-    *    nothing. A named file the listing does not return fails here,
-    *    at plan time, naming the path;
-    *  - partitions are Spark's own inference from `basePath` (`day`
-    *    keeps its inferred type);
-    *  - the data schema is `format.inferSchema` over the index's files
-    *    (the same first footer a plain read touches), minus the
-    *    partition columns, nullable — the steps of
-    *    `DataSource.resolveRelation`.
-    * An empty list reads `basePath` itself filtered to nothing: an
-    * empty frame with the table's schema. */
+  /** Scan `eras` — (data dir, schema record name, files) — as one table
+    * of schema `current`: the files of each (dir, record) pair are one
+    * [[readFiles]] scan under that record, projected by field id onto
+    * `current` ([[TableSchema.projectOnto]]) unless it IS `current`, and
+    * the scans are unioned by name. Records resolve in `root/metadata`. */
+  private def readEras(spark: SparkSession, root: String,
+      eras: Seq[(String, String, Seq[String])],
+      current: TableSchema): DataFrame = {
+    val scans = eras.filter(_._3.nonEmpty).map(e => (e._1, e._2)).distinct
+    if (scans.isEmpty) readFiles(spark, s"$root/data", Nil, current)
+    else scans.map { case (dir, name) =>
+      val record =
+        if (name == current.name) current else schemaRecord(spark, root, name)
+      val df = readFiles(spark, dir,
+        eras.filter(e => e._1 == dir && e._2 == name).flatMap(_._3), record)
+      if (name == current.name) df else record.projectOnto(df, current)
+    }.reduce(_ unionByName _)
+  }
+
+  /** The one manifest-planned scan: exactly `files` (absolute paths under
+    * the data directory `basePath`, as a manifest names them) under the
+    * committed `schema`, Iceberg's planFiles shape, built without a job
+    * (Spark's own `read.option("basePath", …).parquet(files)` lists the
+    * paths again, above 32 as a distributed job, and infers the schema
+    * from a footer in another): file statuses come from at most one
+    * driver `listStatus` per parent directory and fill the index's
+    * cache, so the index lists nothing, and a named file missing there
+    * fails at plan time naming it; types and format are the record's
+    * ([[TableSchema.readSchema]], no field ids). An empty list is an
+    * empty frame of the record's schema. */
   private[graft] def readFiles(spark: SparkSession, basePath: String,
-      files: Seq[String],
-      format: FileFormat with DataSourceRegister = new ParquetFileFormat)
-      : DataFrame = {
-    if (files.isEmpty)
-      return spark.read.format(format.shortName()).load(basePath)
-        .filter(lit(false))
+      files: Seq[String], schema: TableSchema): DataFrame = {
+    if (files.isEmpty) return spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema.readSchema)
     val conf = spark.sparkContext.hadoopConfiguration
     val named = files.map { f =>
       val p = new Path(f)
@@ -1180,16 +1241,16 @@ object LakeOps {
       def invalidateAll(): Unit = ()
     }
     val options = Map("basePath" -> basePath)
-    val index = new InMemoryFileIndex(spark, named, options, None,
-      manifestOnly)
-    val parts = index.partitionSchema
-    val inferred = format.inferSchema(spark, options, index.allFiles())
-      .getOrElse(throw new IllegalStateException(
-        s"cannot infer a schema from ${named.head}"))
-    val dataSchema = StructType(inferred.filterNot(f =>
-      parts.exists(_.name.equalsIgnoreCase(f.name))))
-    GraftBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(index, parts,
-      GraftBridge.asNullable(dataSchema), None, format, options)(spark)))
+    val index = new InMemoryFileIndex(spark, named, options,
+      Some(schema.readSchema), manifestOnly)
+    val format: FileFormat = schema.format match {
+      case "parquet" => new ParquetFileFormat
+      case "orc" => new OrcFileFormat
+      case f => throw new IllegalArgumentException(s"unknown file format $f")
+    }
+    GraftBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(index,
+      index.partitionSchema, StructType(schema.readSchema.take(
+        schema.data.size)), None, format, options)(spark)))
   }
 
   /** `manifest_rewrite` — MANIFEST compaction (Iceberg's
@@ -1209,9 +1270,11 @@ object LakeOps {
     val out = IngestOps.tmp("events_manifest_rw")
     writeVersioned(spark, dir, out)
     // the rewrite commit: one full manifest = the consolidated live list
-    // of snapshots 1-3; metadata-only, no data file touched
+    // of snapshots 1-3 under their schema; metadata-only, no data file
+    // touched
     val live = liveFiles(spark, out, 1 to 3)
-    writeManifest(spark, out, "snap-4.txt", live)
+    writeManifest(spark, out, "snap-4.txt",
+      live :+ s"#schema ${snapshotSchema(spark, out, 3).name}")
     writeManifest(spark, out, "snap-4.FULL", Seq("full"))
     readLiveCompacted(spark, out, 4)
       .filter($"day".between(1, 15))
@@ -1220,18 +1283,19 @@ object LakeOps {
       .orderBy($"day")
   }
 
-  /** Read snapshot `n`: ONE manifest when `n` is a FULL (compacted)
-    * snapshot, else the usual delta union — Iceberg's planFiles over a
-    * rewritten manifest list. */
+  /** Read snapshot `n`: ONE manifest, under the schema it names, when `n`
+    * is a FULL (compacted) snapshot, else the usual delta union —
+    * Iceberg's planFiles over a rewritten manifest list. */
   private[graft] def readLiveCompacted(spark: SparkSession, root: String,
-      n: Int): DataFrame = {
-    requireNotExpired(spark, root, n)
-    val files =
-      if (readManifest(spark, root, s"snap-$n.FULL").nonEmpty)
-        readManifest(spark, root, s"snap-$n.txt")
-      else liveFiles(spark, root, 1 to n)
-    readFiles(spark, s"$root/data", files.map(rel => s"$root/data/$rel"))
-  }
+      n: Int): DataFrame =
+    if (readManifest(spark, root, s"snap-$n.FULL").isEmpty)
+      readLive(spark, root, 1 to n)
+    else {
+      requireNotExpired(spark, root, n)
+      readFiles(spark, s"$root/data", readManifest(spark, root,
+        s"snap-$n.txt").map(rel => s"$root/data/$rel"),
+        snapshotSchema(spark, root, n))
+    }
 
   /** `table_clone` — ZERO-COPY shallow clone (Delta's SHALLOW CLONE /
     * Iceberg's snapshot-ref pattern): the clone is a new table whose
@@ -1251,24 +1315,27 @@ object LakeOps {
     val clone = IngestOps.tmp("events_clone")
     IngestOps.deleteOrThrow(hfs(spark, clone),
       new org.apache.hadoop.fs.Path(clone), recursive = true)
-    // CLONE CREATE: copy the manifests (re-tagged as base-inherited) +
-    // a base pointer — metadata only, no data bytes move
+    // CLONE CREATE: copy the manifests (re-tagged as base-inherited) and
+    // their schema records + a base pointer — metadata only, no data
+    // bytes move
     IngestOps.writeMetaLines(spark, clone, "metadata/base.txt",
       Seq(s"$srcRoot/data"))
     (1 to 3).foreach { n =>
       val rels = IngestOps.snapshotManifest(spark, srcRoot, n)
-      writeManifest(spark, clone, s"snap-$n.txt", rels.map("B|" + _))
+      writeManifest(spark, clone, s"snap-$n.txt", manifestLines(spark, clone,
+        n, Staged(rels.map("B|" + _), snapshotSchema(spark, srcRoot, n))))
     }
     // CLONE EVOLVE: snapshot 4 appends days 16-17 into clone-LOCAL data
     val data = s"$clone/data"
-    IngestOps.eventsWithParts(spark, dir)
+    val local = IngestOps.eventsWithParts(spark, dir)
       .filter($"day".between(16, 17))
       .select($"event_id", $"user_id", $"event_type", $"value", $"day")
-      .repartition($"day")
+    local.repartition($"day")
       .write.mode(SaveMode.Append).option("compression", "zstd")
       .partitionBy("day").parquet(data)
-    writeManifest(spark, clone, "snap-4.txt",
-      listData(spark, data).map("L|" + _))
+    writeManifest(spark, clone, "snap-4.txt", manifestLines(spark, clone, 4,
+      Staged(listData(spark, data).toSeq.map("L|" + _),
+        TableSchema.written(local))))
     cloneRead(spark, clone)
       .filter($"day".between(1, 17))
       .groupBy($"day".cast("long").as("day"))
@@ -1277,7 +1344,8 @@ object LakeOps {
   }
 
   /** CLONE READ: resolve the manifests against their storage roots as
-    * one [[readFiles]] scan PER ERA, unioned — `day` stays a real
+    * one scan PER ERA under its schema record ([[readEras]]) — `day`
+    * stays a real
     * partition column in both branches, so a day predicate prunes at
     * PLANNING time (directories never listed), instead of being
     * re-derived per row from `input_file_name` and filtered post-scan.
@@ -1287,19 +1355,17 @@ object LakeOps {
       clone: String): DataFrame = {
     val base = IngestOps.readMetaLines(spark, clone, "metadata/base.txt").head
     val data = s"$clone/data"
-    val lines = (1 to 4)
-      .flatMap(n => readManifest(spark, clone, s"snap-$n.txt"))
-    val resolved = lines.map {
-      case l if l.startsWith("B|") => base -> s"$base/${l.drop(2)}"
-      case l if l.startsWith("L|") => data -> s"$data/${l.drop(2)}"
-      case l => throw new IllegalStateException(s"untagged manifest: $l")
+    val eras = (1 to 4).flatMap { n =>
+      val (lines, headers) =
+        IngestOps.readMetaFile(spark, clone, s"metadata/snap-$n.txt")
+      val record = headers.getOrElse("schema", throw noRecord(clone, n))
+      lines.map {
+        case l if l.startsWith("B|") => (base, record, Seq(s"$base/${l.drop(2)}"))
+        case l if l.startsWith("L|") => (data, record, Seq(s"$data/${l.drop(2)}"))
+        case l => throw new IllegalStateException(s"untagged manifest: $l")
+      }
     }
-    // each era projects to the clone's declared schema (the base table
-    // may carry extra physical columns the clone never adopted)
-    val cols = Seq("event_id", "user_id", "event_type", "value", "day")
-    resolved.groupBy(_._1).toSeq.sortBy(_._1).map { case (bp, fs) =>
-      readFiles(spark, bp, fs.map(_._2)).select(cols.map(col): _*)
-    }.reduce(_ unionByName _)
+    readEras(spark, clone, eras, snapshotSchema(spark, clone, 4))
   }
 
   /** Shared immutable PRE-EXPIRY table: the 3-snapshot base plus the
@@ -1314,20 +1380,20 @@ object LakeOps {
   private[graft] def expireBaseLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    val base = IngestOps.sharedFor(spark, "events_expirebase", dir)
+    val base = IngestOps.sharedFor(spark, "events_expirebase_v2", dir)
     IngestOps.buildShared(spark, base) { root =>
       writeVersioned(spark, dir, root)
       // the tag lands before maintenance, like a release pin in real life
       setRef(spark, root, "v1", 1)
       // snapshot 4: compaction replace-commit over the fragmented region
-      commit(spark, root, stage(spark, root)(dayParquet(
-        readLive(spark, root, Seq(1)).repartition($"day"))),
+      commit(spark, root, stage(spark, root)(
+        readLive(spark, root, Seq(1)).repartition($"day")),
         removed = liveFiles(spark, root, Seq(1)), ref = None)
       // snapshot 5: re-cluster days 6-10 (replaces snapshot 2's files —
       // the region NO ref pins, so expiry may reclaim the originals)
-      commit(spark, root, stage(spark, root)(dayParquet(
+      commit(spark, root, stage(spark, root)(
         readLive(spark, root, Seq(2)).repartition($"day")
-          .sortWithinPartitions($"user_id"))),
+          .sortWithinPartitions($"user_id")),
         removed = readManifest(spark, root, "snap-2.txt"))
     }
   }
@@ -1528,8 +1594,8 @@ object LakeOps {
     writeVersioned(spark, dir, out)
     setRef(spark, out, "main", 2) // the rollback: one ref move
     // the divergent snapshot 4 commits on top of 2 and main moves to it
-    commit(spark, out, stage(spark, out)(dayParquet(
-      divergentPurchases(spark, dir).repartition($"day"))))
+    commit(spark, out, stage(spark, out)(
+      divergentPurchases(spark, dir).repartition($"day")))
     readLive(spark, out, Seq(1, 2, 4))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"), countDistinct($"user_id").as("n_users"),
@@ -1569,7 +1635,7 @@ object LakeOps {
       when(pmod($"event_id", lit(10L)) === 0, lit(null)).otherwise($"user_id"))
     else stagedIn
     commit(spark, out,
-      stage(spark, out)(dayParquet(shaped.repartition($"day"))),
+      stage(spark, out)(shaped.repartition($"day")),
       ref = Some("audit"))
     // audit: validate ONLY the staged delta (snapshot 4's file list)
     val staged = readLive(spark, out, Seq(4))
@@ -1614,11 +1680,11 @@ object LakeOps {
     setRef(spark, out, "main", 3)
     setRef(spark, out, "v1", 2) // a TAG: an immutable snapshot name
     // commit snapshot 4 on the audit branch; main stays at 3
-    commit(spark, out, stage(spark, out)(dayParquet(
+    commit(spark, out, stage(spark, out)(
       IngestOps.eventsWithParts(spark, dir)
         .filter($"day".between(16, 18))
         .select($"event_id", $"user_id", $"event_type", $"value", $"day")
-        .repartition($"day"))),
+        .repartition($"day")),
       ref = Some("audit"))
     val refs = readRefs(spark, out)
     Seq("audit", "main", "v1").map { name =>

@@ -320,11 +320,6 @@ object GraftMetaSource {
     }
   }
 
-  /** Files-table planning eval (see [[evalFilterOn]]). */
-  private[sources] def evalFilter(f: Filter, snap: Int,
-      day: Int): Option[Boolean] =
-    evalFilterOn(f, lookupFor("files", snap, day))
-
   /** One [[MetaEntry]] per manifest line, stats joined from the
     * commit's stats sidecar (absent sidecar → NULL stats, so a
     * pre-stats table still lists with its unknowns visible). */
@@ -340,16 +335,12 @@ object GraftMetaSource {
     val snaps = fs.listStatus(metaDir).map(_.getPath.getName)
       .collect { case AddsManifest(n) => n.toInt }.sorted
     snaps.flatMap { n =>
-      val p = new org.apache.hadoop.fs.Path(metaDir, s"snap-$n.txt")
-      val in = fs.open(p)
-      val txt = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
       val stats: Map[String, IngestOps.FileStats] =
         if (!fs.exists(new org.apache.hadoop.fs.Path(metaDir,
           s"snap-$n.stats.parquet"))) Map.empty
         else IngestOps.readStatsManifest(spark, root, s"snap-$n.stats")
           .map(s => s.rel -> s).toMap
-      txt.split("\n").filter(_.nonEmpty).map { rel =>
+      IngestOps.readMetaLines(spark, root, s"metadata/snap-$n.txt").map { rel =>
         val day = "day=(\\d+)/".r.findFirstMatchIn(rel)
           .map(_.group(1).toInt).getOrElse(-1)
         val size = fs.getFileStatus(

@@ -1051,7 +1051,7 @@ object StreamingOps {
   private[graft] def upsertBaseLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    LakeOps.baseTableLayout(spark, "events_streambase_v2", dir) {
+    LakeOps.baseTableLayout(spark, "events_streambase_v3", dir) {
       graft.sources.IngestOps.eventsWithParts(spark, dir)
         .filter($"day".between(1, 10))
         .select($"event_id", $"user_id", $"event_type", $"value", $"day")
@@ -1114,8 +1114,9 @@ object StreamingOps {
 
   /** The raw change-feed stream: a file source over ONLY the files
     * committed by snapshots newer than the consumer's last-seen snapshot
-    * (here 2 — so snapshot 3's delta). The file list comes from the
-    * manifests (pure metadata); the day-directory glob it induces is
+    * (here 2 — so snapshot 3's delta). The file list and the stream's
+    * schema come from snapshot 3's manifest and the schema record it
+    * names (pure metadata); the day-directory glob it induces is
     * exact because the layout's commits are whole day partitions.
     * Shared with LakeSpec's only-delta-files-streamed proof. */
   private[graft] def cdfStream(spark: SparkSession,
@@ -1127,8 +1128,7 @@ object StreamingOps {
       "day=(\\d+)/".r.findFirstMatchIn(r).map(_.group(1)))
       .distinct.sorted
     val glob = s"$root/data/day={${days.mkString(",")}}"
-    val sch = LakeOps.readFiles(spark, s"$root/data",
-      rels.map(r => s"$root/data/$r")).schema
+    val sch = LakeOps.snapshotSchema(spark, root, 3).readSchema
     val stream = spark.readStream.option("basePath", s"$root/data")
       .schema(sch).parquet(glob)
     (stream, root)

@@ -203,6 +203,26 @@ class EngineSpec extends SparkSpecBase {
       "stale exception: cdfStream's stream source no longer spells basePath")
   }
 
+  test("one schema source: no code infers a schema from files or reads " +
+      "a hand-built schema era, so every lake read plans from the " +
+      "committed record") {
+    // a footer-inferred or hand-split schema is a second schema: it drops
+    // columns only later snapshots carry, and inferring it costs a Spark
+    // job per read. (MetaSource's `override def inferSchema` declares the
+    // DSv2 API; it is not a call.)
+    val banned = Seq(".inferSchema(", "readEraById", "evolvedRead",
+      "schema-$")
+    val offenders = mainStatements.collect {
+      case (file, enclosing, text) if banned.exists(text.contains) =>
+        s"$file ($enclosing): ${text.trim.take(160)}"
+    }
+    assert(offenders.isEmpty, "schemas outside the committed record:\n  " +
+      offenders.mkString("\n  "))
+    assert(mainSources.exists { case (file, lines) =>
+      file == "TableSchema.scala" && lines.exists(_.contains("def numbered(")) },
+      "TableSchema.numbered not found")
+  }
+
   test("one mutation path: no code spells partitionOverwriteMode") {
     // a dynamic partition overwrite is a second commit path: it swaps a
     // directory's files with no manifest, no CAS and no removal set, so

@@ -9,6 +9,28 @@ import org.apache.spark.sql.functions._
   * `TimeEx:180-195` pruning). */
 class IngestSpec extends SparkSpecBase {
 
+  /** The data files snapshot `n` of the versioned table `root` added —
+    * one schema era of the evolution layouts. */
+  private def eraFiles(root: String, n: Int): Seq[String] =
+    graft.sources.LakeOps.liveFiles(spark, root, Seq(n))
+      .map(rel => s"$root/data/$rel")
+
+  /** Era `n`'s files read as they are, by their footers. */
+  private def eraRead(root: String, n: Int) =
+    spark.read.parquet(eraFiles(root, n): _*)
+
+  /** (field id → column name) of the parquet footer of `file`. */
+  private def footerFieldIds(file: String): Map[Int, String] = {
+    import scala.jdk.CollectionConverters._
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file),
+        spark.sparkContext.hadoopConfiguration))
+    try r.getFooter.getFileMetaData.getSchema.getFields.asScala
+      .flatMap(t => Option(t.getId).map(_.intValue -> t.getName)).toMap
+    finally r.close()
+  }
+
   test("write_partitioned produces Hive-style year=/month=/day= layout " +
     "with one file per partition") {
     import spark.implicits._
@@ -477,22 +499,12 @@ class IngestSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     val root = graft.sources.IngestOps.widenLayout(spark, sf)
-    val p = new org.apache.hadoop.fs.Path(s"$root/v1")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def v1Mtimes(): Map[String, Long] = {
-      val it = fs.listFiles(p, true)
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.toString.endsWith(".parquet"))
-          b += f.getPath.toString -> f.getModificationTime
-      }
-      b.result()
-    }
+    def v1Mtimes(): Map[String, Long] = eraFiles(root, 1)
+      .map(f => f -> new java.io.File(f).lastModified).toMap
     val before = v1Mtimes()
     assert(before.nonEmpty)
     // the narrow physical types really are in the old footers
-    val v1Schema = spark.read.parquet(s"$root/v1").schema
+    val v1Schema = eraRead(root, 1).schema
     assert(v1Schema("units").dataType == IntegerType)
     assert(v1Schema("score").dataType == FloatType)
     // the widening read: promoted types served, v1 bytes untouched
@@ -502,7 +514,7 @@ class IngestSpec extends SparkSpecBase {
     val rows = served.collect()
     assert(rows.nonEmpty)
     // v2 eras carry units beyond int32 range — the promotion is real
-    val maxUnits = spark.read.parquet(s"$root/v2")
+    val maxUnits = eraRead(root, 2)
       .agg(max(col("units"))).head.getLong(0)
     assert(maxUnits > Int.MaxValue.toLong)
     assert(v1Mtimes() == before,
@@ -513,22 +525,12 @@ class IngestSpec extends SparkSpecBase {
       "with zero rewrite; post-add rows serve their stored values") {
     import org.apache.spark.sql.functions._
     val root = graft.sources.IngestOps.defaultColLayout(spark, sf)
-    val p = new org.apache.hadoop.fs.Path(s"$root/v1")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def v1Mtimes(): Map[String, Long] = {
-      val it = fs.listFiles(p, true)
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.toString.endsWith(".parquet"))
-          b += f.getPath.toString -> f.getModificationTime
-      }
-      b.result()
-    }
+    def v1Mtimes(): Map[String, Long] = eraFiles(root, 1)
+      .map(f => f -> new java.io.File(f).lastModified).toMap
     val before = v1Mtimes()
     assert(before.nonEmpty)
     // the pre-add footers genuinely lack the column
-    assert(!spark.read.parquet(s"$root/v1").columns.contains("tier"))
+    assert(!eraRead(root, 1).columns.contains("tier"))
     val rows = graft.sources.IngestOps.alterAddColDefault(spark, sf)
       .collect()
     assert(rows.nonEmpty)
@@ -536,8 +538,8 @@ class IngestSpec extends SparkSpecBase {
       "adding a defaulted column rewrote pre-add data files")
     // per-era split: every v1 row serves the default; v2 rows serve
     // BOTH stored values (the default is initial, not a constant)
-    val v1n = spark.read.parquet(s"$root/v1").count()
-    val v2 = spark.read.parquet(s"$root/v2")
+    val v1n = eraRead(root, 1).count()
+    val v2 = eraRead(root, 2)
     val v2premium = v2.filter(col("tier") === "premium").count()
     val v2standard = v2.filter(col("tier") === "standard").count()
     assert(v2premium > 0 && v2standard > 0,
@@ -555,23 +557,13 @@ class IngestSpec extends SparkSpecBase {
       "from the scan") {
     import org.apache.spark.sql.functions._
     val root = graft.sources.IngestOps.dropLayout(spark, sf)
-    val p = new org.apache.hadoop.fs.Path(s"$root/v1")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def v1Mtimes(): Map[String, Long] = {
-      val it = fs.listFiles(p, true)
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.toString.endsWith(".parquet"))
-          b += f.getPath.toString -> f.getModificationTime
-      }
-      b.result()
-    }
+    def v1Mtimes(): Map[String, Long] = eraFiles(root, 1)
+      .map(f => f -> new java.io.File(f).lastModified).toMap
     val before = v1Mtimes()
     // the dropped column's bytes are still in the pre-drop footers;
     // post-drop files never carried it
-    assert(spark.read.parquet(s"$root/v1").columns.contains("props"))
-    assert(!spark.read.parquet(s"$root/v2").columns.contains("props"))
+    assert(eraRead(root, 1).columns.contains("props"))
+    assert(!eraRead(root, 2).columns.contains("props"))
     val served = graft.sources.IngestOps.alterDropCol(spark, sf)
     assert(!served.columns.contains("props"))
     served.collect()
@@ -660,11 +652,11 @@ class IngestSpec extends SparkSpecBase {
       "(a name-mapping reader would flip the two columns in era 1)") {
     import spark.implicits._
     val root = graft.sources.IngestOps.renameChainLayout(spark, sf)
-    val current = graft.sources.IngestOps.readSchemaEra(spark, root, 3)
     // era 1's file carries PHYSICAL columns a (field 3) and c (field 5);
     // resolved against the current schema, its field 3 must surface as
     // `b` (the value column) and field 5 as `a` (the user_id column)
-    val era1 = graft.sources.IngestOps.readEraById(spark, root, 1, current)
+    val era1 = graft.sources.LakeOps.readCurrent(spark, root)
+      .filter($"day" <= 10)
     val mismatch = era1.join(
         graft.sources.IngestOps.eventsWithParts(spark, sf)
           .filter($"day" <= 10)
@@ -689,7 +681,7 @@ class IngestSpec extends SparkSpecBase {
     assert(got == exp)
     // and a NAME-mapped read of era 1 (the single-rename shortcut)
     // really does differ — the guard the ids exist to provide
-    val nameMapped = spark.read.parquet(s"$root/v1")
+    val nameMapped = eraRead(root, 1)
       .withColumnRenamed("c", "ignored") // name mapping can't know c→a
     assert(nameMapped.columns.contains("a"),
       "era-1 physical a would collide with the current a by name")
@@ -703,14 +695,15 @@ class IngestSpec extends SparkSpecBase {
     // 1) the footers of every era carry the NestedField-style ids the
     //    era writers stamped — the same numbered-field mechanism the
     //    reference builds with Types.NestedField.required(id, name, _)
-    assert(graft.sources.IngestOps.footerFieldIds(spark, s"$root/v1") ==
+    assert(footerFieldIds(eraFiles(root, 1).head) ==
       Map(1 -> "event_id", 2 -> "event_type", 3 -> "a", 5 -> "c",
         4 -> "day"))
-    assert(graft.sources.IngestOps.footerFieldIds(spark, s"$root/v3") ==
+    assert(footerFieldIds(eraFiles(root, 3).head) ==
       Map(1 -> "event_id", 2 -> "event_type", 3 -> "b", 5 -> "a",
         4 -> "day"))
-    // 2) sidecar-free binding: a fixture with id-stamped footers and NO
-    //    metadata/ dir resolves purely from the footers
+    // 2) the stamped ids are REAL parquet field ids: Spark's own
+    //    fieldId.read reader (the Iceberg-compatible resolution mode)
+    //    binds by id across the rename with names that match nothing
     val solo = graft.sources.IngestOps.tmp("fid_solo")
     Seq((10L, 1.5, 77L), (11L, 2.5, 78L))
       .toDF("event_id", "value", "user_id")
@@ -718,15 +711,6 @@ class IngestSpec extends SparkSpecBase {
         graft.sources.IngestOps.withFieldId($"value", "a", 3),
         graft.sources.IngestOps.withFieldId($"user_id", "c", 5))
       .write.mode("overwrite").parquet(s"$solo/v1")
-    val bound = graft.sources.IngestOps.readEraById(spark, solo, 1,
-      Seq(1 -> "event_id", 3 -> "b", 5 -> "a"))
-      .orderBy($"event_id").collect()
-    assert(bound.map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-      .toSeq == Seq((10L, 1.5, 77L), (11L, 2.5, 78L)),
-      "footer-id binding failed without a sidecar")
-    // 3) the stamped ids are REAL parquet field ids: Spark's own
-    //    fieldId.read reader (the Iceberg-compatible resolution mode)
-    //    binds by id across the rename with names that match nothing
     val readSchema = org.apache.spark.sql.types.StructType(Seq(
       ("event_id", org.apache.spark.sql.types.LongType, 1L),
       ("b", org.apache.spark.sql.types.DoubleType, 3L),
@@ -738,8 +722,9 @@ class IngestSpec extends SparkSpecBase {
     })
     //    (non-vectorized reader: Spark 4.1's vectorized path mis-binds
     //    when an id-renamed column's OLD name still exists in the file
-    //    with a different id — name shadowing; the engine's own era
-    //    reads use the footer-projection path, which has no such hole)
+    //    with a different id — name shadowing; the engine's own reads
+    //    hand the scan no ids and project by the committed record's ids,
+    //    which has no such hole)
     val keys = Seq("spark.sql.parquet.fieldId.read.enabled" -> "true",
       "spark.sql.parquet.enableVectorizedReader" -> "false")
     val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -761,31 +746,35 @@ class IngestSpec extends SparkSpecBase {
       "mis-bind): a future change routing readEraById through the " +
       "native vectorized resolution fails here") {
     import spark.implicits._
-    // shadowing fixture: physical columns (event_id id1, a id3, c id5);
-    // the era mapping renames id3→b and id5→a, so the requested name
-    // "a" COLLIDES with a physical "a" that carries a different id —
-    // exactly the case where Spark 4.1's vectorized fieldId.read reader
-    // binds the wrong column. The engine's footer-projection path must
+    // shadowing fixture: era 1 commits physical columns (event_id id1,
+    // a id3, c id5); era 2 commits the renames id3→b and id5→a, so the
+    // current name "a" COLLIDES with era 1's physical "a" that carries a
+    // different id — exactly the case where Spark 4.1's vectorized
+    // fieldId.read reader binds the wrong column. The engine read must
     // stay immune regardless of session conf.
     val solo = graft.sources.IngestOps.tmp("fid_vec_pin")
-    Seq((10L, 1.5, 77L), (11L, 2.5, 78L))
-      .toDF("event_id", "value", "user_id")
+    org.apache.spark.network.util.JavaUtils
+      .deleteRecursively(new java.io.File(solo))
+    def era(rows: Seq[(Long, Double, Long)], valName: String,
+        uidName: String) = rows.toDF("event_id", "value", "user_id")
       .select(graft.sources.IngestOps.withFieldId($"event_id", "event_id", 1),
-        graft.sources.IngestOps.withFieldId($"value", "a", 3),
-        graft.sources.IngestOps.withFieldId($"user_id", "c", 5))
-      .write.mode("overwrite").parquet(s"$solo/v1")
+        graft.sources.IngestOps.withFieldId($"value", valName, 3),
+        graft.sources.IngestOps.withFieldId($"user_id", uidName, 5),
+        lit(1).as("day"))
+    Seq(era(Seq((10L, 1.5, 77L), (11L, 2.5, 78L)), "a", "c"),
+      era(Seq((12L, 3.5, 79L)), "b", "a"))
+      .foreach(graft.sources.LakeOps.appendCommit(spark, solo, _))
     val keys = Seq("spark.sql.parquet.fieldId.read.enabled" -> "true",
       "spark.sql.parquet.enableVectorizedReader" -> "true")
     val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      val bound = graft.sources.IngestOps.readEraById(spark, solo, 1,
-        Seq(1 -> "event_id", 3 -> "b", 5 -> "a"))
-        .orderBy($"event_id").collect()
+      val bound = graft.sources.LakeOps.readCurrent(spark, solo)
+        .select($"event_id", $"b", $"a").orderBy($"event_id").collect()
       assert(bound.map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-        .toSeq == Seq((10L, 1.5, 77L), (11L, 2.5, 78L)),
-        "readEraById mis-bound under vectorized fieldId.read session " +
-          "conf — era reads must resolve via footer projection")
+        .toSeq == Seq((10L, 1.5, 77L), (11L, 2.5, 78L), (12L, 3.5, 79L)),
+        "the engine read mis-bound under vectorized fieldId.read session " +
+          "conf — era reads must resolve by the committed record's ids")
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

@@ -29,6 +29,22 @@ class LakeSpec extends SparkSpecBase {
     b.result().groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
   }
 
+  /** A MERGE commit's row accounting on `root`: each day 8-12 holds its
+    * base rows plus one insert per even event_id, none of them twice. */
+  private def assertMergeRows(root: String): Unit = {
+    import spark.implicits._
+    val merged = $"day".between(8, 12)
+    val exp = sources.IngestOps.eventsWithParts(spark, sf).filter(merged)
+      .groupBy($"day").agg(count(lit(1)) +
+        count(when(pmod($"event_id", lit(2L)) === 0, 1)))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val got = sources.LakeOps.readCurrent(spark, root).filter(merged)
+      .groupBy($"day").agg(count(lit(1)), countDistinct($"event_id"))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(exp.nonEmpty && got == exp.map { case (d, n) => d -> (n, n) },
+      s"merged days must hold base + inserts, none doubled: $got vs $exp")
+  }
+
   test("merge_upsert rewrites ONLY day partitions 8-12; merged rows " +
       "carry doubled values and re-keyed inserts") {
     val rows = sources.LakeOps.mergeUpsert(spark, sf).collect()
@@ -46,6 +62,7 @@ class LakeSpec extends SparkSpecBase {
       if (d >= 8 && d <= 12) assert(nIns > 0, s"day=$d expected inserts")
       else assert(nIns == 0, s"day=$d unexpected inserts")
     }
+    assertMergeRows(graft.sources.IngestOps.tmp("events_merge"))
   }
 
   test("delete_where removes clicks from days 3-7 only, rewriting only " +
@@ -155,18 +172,20 @@ class LakeSpec extends SparkSpecBase {
     assert(touched.nonEmpty && untouched.nonEmpty)
     assert(untouched.values.max < touched.values.min,
       s"schema evolution rewrote untouched partitions: $mt")
+    // the copy-on-write commit replaced the touched days' rows
+    assertMergeRows(out)
     // untouched footers never learned the new column; touched ones did
     val L = sources.LakeOps
     val main = L.readRefs(spark, out)("main")
-    def dayRead(d: Int) = L.readFiles(spark, s"$out/data",
+    def dayRead(d: Int) = spark.read.option("basePath", s"$out/data").parquet(
       L.liveFiles(spark, out, 1 to main).filter(_.startsWith(s"day=$d/"))
-        .map(rel => s"$out/data/$rel"))
+        .map(rel => s"$out/data/$rel"): _*)
     assert(!dayRead(3).columns.contains("origin"),
       "an untouched partition was rewritten with the evolved schema")
     assert(dayRead(9).columns.contains("origin"),
       "a touched partition did not adopt the evolved schema")
     // the unified read: v1 rows are NULL in origin, update rows carry it
-    val unified = L.evolvedRead(spark, out, main)
+    val unified = L.readCurrent(spark, out)
     assert(unified.filter($"day" < 8 && $"origin".isNotNull).count() == 0,
       "a pre-evolution row carries a non-NULL evolved column")
     assert(unified.filter($"origin" === "cdc").count() > 0)
@@ -178,6 +197,23 @@ class LakeSpec extends SparkSpecBase {
       else assert(nOrigin == 0 && nInserted == 0,
         s"day=$day outside the merge range carries evolved rows")
     }
+  }
+
+  test("merge_upsert_evolve: readCurrent serves the committed widened " +
+      "schema — origin is a column of the table, NULL on every row of an " +
+      "untouched day") {
+    import spark.implicits._
+    sources.LakeOps.mergeUpsertEvolve(spark, sf).collect()
+    val cur = sources.LakeOps.readCurrent(spark,
+      graft.sources.IngestOps.tmp("events_merge_evolve"))
+    assert(cur.columns.contains("origin"),
+      s"readCurrent lost the evolved column: ${cur.columns.mkString(",")}")
+    val untouched = cur.filter(!$"day".between(8, 12))
+    assert(untouched.count() > 0)
+    assert(untouched.filter($"origin".isNotNull).count() == 0,
+      "an untouched-day row carries a non-NULL origin")
+    assert(cur.filter($"day".between(8, 12) && $"origin" === "cdc")
+      .count() > 0, "the merged days lost their origin values")
   }
 
   test("expire_snapshots is ref-aware: unreachable files are deleted, " +
@@ -795,7 +831,12 @@ class LakeSpec extends SparkSpecBase {
 
   private case class Kill(step: String) extends RuntimeException(step)
 
-  for (input <- Seq("append", "replace", "cow");
+  /** The schema records the linked snapshots (1-4) of `root` name. */
+  private def namedRecords(root: String): Set[String] = (1 to 4)
+    .flatMap(n => sources.IngestOps.readMetaFile(spark, root,
+      s"metadata/snap-$n.txt")._2.get("schema")).toSet
+
+  for (input <- Seq("append", "replace", "cow", "evolve");
        kp <- Seq("staged", "data-written", "attempt-written", "linked"))
   test(input match {
     case "replace" => s"crash consistency of a replace commit at '$kp': " +
@@ -804,17 +845,21 @@ class LakeSpec extends SparkSpecBase {
     case "cow" => s"crash consistency of a copy-on-write delete at '$kp': " +
       "pinned and current readers unchanged, orphan sweep reclaims " +
       "exactly the debris, retry lands exactly once"
+    case "evolve" => "crash consistency of a column-adding append at " +
+      s"'$kp': readers keep the old schema record or see the new one, " +
+      "the sweep never removes a named record, retry lands exactly once"
     case _ => s"crash consistency at '$kp': reader stays on the old " +
       "snapshot, orphan sweep reclaims the debris, retry lands exactly once"
   }) {
     import spark.implicits._
     val L = sources.LakeOps
-    val replace = input != "append"
+    val replace = input == "replace" || input == "cow"
     val out = sources.IngestOps.tmp(s"events_crash_" +
-      (if (replace) s"${input}_" else "") + kp.replace('-', '_'))
+      (if (input != "append") s"${input}_" else "") + kp.replace('-', '_'))
     L.cloneTree(L.versionedBaseLayout(spark, sf), out)
     L.setRef(spark, out, "main", 3)
     val baseline = fingerprint(L.readCurrent(spark, out))
+    val oldSchema = L.readCurrent(spark, out).schema
     val pinned = fingerprint(L.readLive(spark, out, Seq(1)))
     // the files the commit under test replaces
     val frag = input match {
@@ -836,18 +881,20 @@ class LakeSpec extends SparkSpecBase {
         (-goneN, -goneSum))
     } else if (replace) {
       // single-writer rule: a replace commit never enters the retry loop
-      intercept[IllegalArgumentException](
-        L.commit(spark, out, Nil, removed = frag, maxAttempts = 2))
       val compacted = L.readLive(spark, out, Seq(1)).localCheckpoint()
+      intercept[IllegalArgumentException](L.commit(spark, out,
+        L.Staged(Nil, sources.TableSchema.written(compacted)),
+        removed = frag, maxAttempts = 2))
       ((onStep: String => Unit) => L.commit(spark, out,
-        L.stage(spark, out, onStep)(p => compacted.repartition($"day")
-          .write.option("compression", "zstd").partitionBy("day").parquet(p)),
+        L.stage(spark, out, onStep)(compacted.repartition($"day")),
         removed = frag, onStep = onStep), (0L, 0L))
     } else {
-      val slice = sources.IngestOps.eventsWithParts(spark, sf)
+      val rows = sources.IngestOps.eventsWithParts(spark, sf)
         .filter($"day" === 16)
         .select($"event_id", $"user_id", $"event_type", $"value", $"day")
-        .localCheckpoint()
+      // the evolving append adds a column the table has never had
+      val slice = (if (input == "evolve")
+        rows.withColumn("origin", lit("evolved")) else rows).localCheckpoint()
       val sliceN = slice.count()
       assert(sliceN > 0, "fixture must have day-16 rows to append")
       val sliceSum = slice.agg(sum(pmod(xxhash64($"event_id"),
@@ -864,6 +911,8 @@ class LakeSpec extends SparkSpecBase {
       s"reader view changed after a writer died at $kp")
     assert(fingerprint(L.readLive(spark, out, Seq(1))) == pinned,
       s"snapshot-1 reader changed after a writer died at $kp")
+    assert(L.readCurrent(spark, out).schema == oldSchema,
+      s"reader schema changed after a writer died at $kp")
     val snap4 = java.nio.file.Paths.get(out, "metadata", "snap-4.txt")
     if (kp == "linked") {
       // the link is the linearization point: snapshot 4 exists and is
@@ -875,6 +924,8 @@ class LakeSpec extends SparkSpecBase {
         "linked snapshot must be complete, never torn")
       assert(L.orphanSweep(spark, out).isEmpty,
         "sweep must not reclaim files a linked manifest references")
+      namedRecords(out).foreach(r => assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(out, "metadata", r)), s"record $r swept"))
       L.setRef(spark, out, "main", 4) // roll-forward recovery
     } else {
       // pre-link kills: slot 4 never exists, so time travel cannot
@@ -884,7 +935,19 @@ class LakeSpec extends SparkSpecBase {
         s"kill at $kp must not publish snapshot 4")
       val published = (sources.IngestOps.listDataFiles(spark, s"$out/data")
         -- dataBefore).map("data/" + _)
+      // the one metadata debris an evolving append adds: the new schema
+      // record, written just before its CAS attempt and named by nothing
+      val newRecord =
+        if (input == "evolve" && kp == "attempt-written") {
+          val meta = new java.io.File(s"$out/metadata").list().toSet
+          val unnamed = meta.filter(_.matches("schema-.*\\.json")) --
+            namedRecords(out)
+          assert(unnamed.size == 1, s"expected one new record: $unnamed")
+          unnamed.map("metadata/" + _)
+        } else Set.empty[String]
       val swept = L.orphanSweep(spark, out)
+      namedRecords(out).foreach(r => assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(out, "metadata", r)), s"record $r swept"))
       if (kp == "staged")
         assert(swept.exists(_.startsWith(".stage-")),
           s"sweep after $kp must reclaim the staging dir: $swept")
@@ -901,7 +964,7 @@ class LakeSpec extends SparkSpecBase {
       assert(swept.filter(s => s.startsWith("metadata/") &&
         !s.contains(".attempt-")).toSet ==
         (if (replace && kp == "attempt-written")
-          Set("metadata/snap-4.removed.txt") else Set.empty[String]),
+          Set("metadata/snap-4.removed.txt") else newRecord),
         s"sweep after $kp reclaimed the wrong metadata: $swept")
       assert(fingerprint(L.readLive(spark, out, Seq(1))) == pinned,
         s"snapshot-1 reader changed by the sweep after $kp")
@@ -915,6 +978,13 @@ class LakeSpec extends SparkSpecBase {
     if (replace)
       assert(L.liveFiles(spark, out, 1 to 4).intersect(frag).isEmpty,
         s"recovered table after $kp still lists replaced fragments")
+    // the recovered reader has exactly the committed record's schema: the
+    // old one, or the evolving append's, which adds only its column
+    val recovered = L.readCurrent(spark, out).schema
+    assert(recovered == L.snapshotSchema(spark, out, 4).readSchema)
+    assert(recovered.fieldNames.toSeq == (if (input == "evolve")
+      oldSchema.fieldNames.toSeq.init ++ Seq("origin", "day")
+      else oldSchema.fieldNames.toSeq), recovered.treeString)
   }
 
   test("eight concurrent writers through the CAS retry loop: every " +
@@ -1064,7 +1134,8 @@ class LakeSpec extends SparkSpecBase {
       "metadata/snap-4.removed.txt", frag)
     assertPinned("after the removal manifest landed")
     // (3) the link publishes snapshot 4 atomically — both halves live
-    assert(L.tryCommit(spark, out, 4, delta))
+    assert(L.tryCommit(spark, out, 4,
+      delta.toSeq :+ s"#schema ${L.snapshotSchema(spark, out, 3).name}"))
     assertPinned("after the manifest link")
     assert(fingerprint(L.readLive(spark, out, 1 to 4)) == pinned,
       "the replace commit must be content-preserving the instant it " +
@@ -1199,21 +1270,29 @@ class LakeSpec extends SparkSpecBase {
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse(""))
     }
-    // plan and run `read`, returning it with the jobs both started
-    // (the old spelling's listing job runs when the read is planned)
-    def jobsOf(read: => org.apache.spark.sql.DataFrame) = {
+    // plan and (unless `run` is off) run `read`, returning it with the
+    // jobs both started (the old spelling's listing job runs when the
+    // read is planned)
+    def jobsOf(read: => org.apache.spark.sql.DataFrame, run: Boolean = true) = {
       org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
       descs.clear()
       val df = read
-      df.collect()
+      if (run) df.collect()
       org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
       import scala.jdk.CollectionConverters._
       (df, descs.asScala.toSeq)
     }
     sc.addSparkListener(listener)
-    val ((old, oldJobs), (cur, curJobs)) =
-      try (jobsOf(listingRead(out, live)), jobsOf(L.readCurrent(spark, out)))
+    val ((old, oldJobs), (cur, curJobs), building, oldBuilding) =
+      try (jobsOf(listingRead(out, live)), jobsOf(L.readCurrent(spark, out)),
+        jobsOf(L.readCurrent(spark, out), run = false)._2,
+        jobsOf(listingRead(out, live), run = false)._2)
       finally sc.removeSparkListener(listener)
+    // building the frame starts no job at all: no listing, and no schema
+    // inference over a footer (the schema is the committed record);
+    // the old spelling's build starts jobs (the listener sees them)
+    assert(building.isEmpty, s"building readCurrent started jobs: $building")
+    assert(oldBuilding.nonEmpty, "the old build started no job")
     // (a) the listener sees the old spelling's listing job, and the
     // manifest-planned read starts none
     val listing = "Listing leaf files"
@@ -1265,7 +1344,8 @@ class LakeSpec extends SparkSpecBase {
       L.readCurrent(spark, out))
     assert(e.getMessage.contains(gone.toString), e.getMessage)
     // no files: empty, with the table's schema
-    val empty = L.readFiles(spark, s"$out/data", Nil)
+    val empty = L.readFiles(spark, s"$out/data", Nil,
+      L.snapshotSchema(spark, out, 2))
     assert(empty.schema == schema)
     assert(empty.count() == 0)
   }
