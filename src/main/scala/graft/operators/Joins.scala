@@ -251,7 +251,7 @@ object Joins {
   private def bucketedTable(spark: SparkSession, dir: String, base: String,
       ddlSchema: String, key: String, srcTable: String)(
       rows: => DataFrame): String = {
-    import graft.sources.IngestOps.{buildShared, shared, tableFingerprint}
+    import graft.sources.IngestOps.{buildShared, layoutFor, tableFingerprint}
     spark.sql("CREATE DATABASE IF NOT EXISTS graft")
     // keyed on the SOURCE TABLE's fingerprint (these are the only
     // layouts not derived from events, which the events-anchored
@@ -261,7 +261,7 @@ object Joins {
     val fp = dir.replaceAll("[^A-Za-z0-9]+", "_") + "_" +
       tableFingerprint(spark, dir, srcTable)
     val name = s"graft.${base}_$fp"
-    val loc = shared(s"${base}_$fp")
+    val loc = layoutFor(s"${base}_$fp", dir)
     buildShared(spark, loc) { tmpRoot =>
       spark.sql(s"DROP TABLE IF EXISTS $name") // stale incomplete build
       rows.write.bucketBy(8, key).sortBy(key)

@@ -57,14 +57,21 @@ object IngestOps {
     * rebuilding ingest-time artifacts. */
   private[graft] def shared(name: String) = s"/root/repo/target/tmp/$name"
 
+  /** Where the layout `name` of the corpus at `dir` lives: [[shared]],
+    * unless the corpus lies under this JVM's [[scratchRoot]] — it dies
+    * with the JVM, and so do its layouts, in `layouts/` there. */
+  private[graft] def layoutFor(name: String, dir: String): String =
+    if (dir.startsWith(s"$scratchRoot/")) s"$scratchRoot/layouts/$name"
+    else shared(name)
+
   /** Fingerprint-keyed shared-layout path: the ONE spelling of the
     * cache key (prefix + sanitized dir + source fingerprint). Layouts
     * derive their key here — a drifted sanitizer or separator in a
     * hand-copied variant would silently fork that layout's cache. */
   private[graft] def sharedFor(spark: SparkSession, prefix: String,
       dir: String): String =
-    shared(prefix + "_" + dir.replaceAll("[^A-Za-z0-9.]+", "_") + "_" +
-      sourceFingerprint(spark, dir))
+    layoutFor(prefix + "_" + dir.replaceAll("[^A-Za-z0-9.]+", "_") + "_" +
+      sourceFingerprint(spark, dir), dir)
 
   /** Per-(session, root) resolved relation for IMMUTABLE shared
     * layouts. A raw-path `spark.read.parquet(root)` re-lists the tree
@@ -88,7 +95,7 @@ object IngestOps {
     // misuse guard: per-JVM scratch (tmp(), "/jvm-<pid>/") is MUTABLE —
     // serving a cached relation of a path a mutation key rewrites would
     // return stale files. Only the write-once shared() namespace enters.
-    require(!root.contains("/jvm-"),
+    require(!root.contains("/jvm-") || root.startsWith(s"$scratchRoot/layouts/"),
       s"readSharedTable is for immutable shared layouts, got scratch: $root")
     val key = (org.apache.spark.sql.GraftBridge.sessionId(spark), root)
     // piggybacked eviction on the MISS path only (the hot cached-read
@@ -617,16 +624,17 @@ object IngestOps {
     * like `Bulk:97-101` commits (days 1-5, 6-10, 11-15, one file per day
     * partition), each one [[LakeOps.stage]] + [[LakeOps.commit]] with no
     * ref, so the manifest `metadata/snap-N.txt` records exactly the data
-    * files that snapshot added and the schema it committed — the
+    * files that snapshot added, with their stats, and the schema it
+    * committed — the
     * Iceberg metadata-tree shape (`Debug:164-196`) that makes both the
     * history walk and time-travel reads pure metadata operations
     * afterwards. Returns the table root. */
   private[graft] def snapshotLayout(spark: SparkSession,
       dir: String): String = {
-    // suffix versions the WIRE format (w3 = committed schema records, the
-    // Iceberg schema emitted from them): a layout cached by an older
-    // build would otherwise be served with the stale emission
-    val out = sharedFor(spark, "events_snapshots_w3", dir)
+    // suffix versions the WIRE format (w4 = stats in the manifest
+    // entries): a layout cached by an older build would otherwise be
+    // served with the stale emission
+    val out = sharedFor(spark, "events_snapshots_w4", dir)
     buildShared(spark, out) { tmpRoot =>
       val ev = eventsWithParts(spark, dir).filter(col("day").between(1, 15))
         .select("event_id", "user_id", "event_type", "value", "day")
@@ -634,9 +642,6 @@ object IngestOps {
         val staged = LakeOps.stage(spark, tmpRoot)(
           ev.filter(col("day").between(lo, hi)).repartition(col("day")))
         val n = LakeOps.commit(spark, tmpRoot, staged, ref = None)
-        // per-file stats sidecar (the DataFile metrics Iceberg records
-        // at write time) — priced as one scan of the commit's delta
-        writeStatsManifest(spark, tmpRoot, s"snap-$n.stats", n)
         (n, 1705276800000L + n * 1000L, staged.files.size)
       }
       // commit log: snapshot -> committed-at millis (the reference stamps
@@ -675,7 +680,7 @@ object IngestOps {
     * readers), every required v2 field from the table's real state: the
     * committed `schema` and its identity spec, the snapshots with
     * parentage, sequence numbers, the avro manifest-list URIs and
-    * summaries agreeing with the stats sidecars, the snapshot log from
+    * summaries agreeing with the manifest entries, the snapshot log from
     * the commits.txt AS-OF reads resolve against, and the refs.
     * IngestSpec parses it back against the metadata tables. */
   private[graft] def writeIcebergMetadataJson(spark: SparkSession,
@@ -722,8 +727,8 @@ object IngestOps {
   /** Iceberg avro schema of one MANIFEST entry (spec §"Manifests", v2):
     * the required fields with their spec field-ids carried as the
     * `field-id` attribute — the id mapping Iceberg's avro codec uses.
-    * Unlisted optional columns (bounds, null counts) live in the
-    * parquet stats sidecars, the engine's planning surface. */
+    * Unlisted optional columns (bounds, null counts) live in the text
+    * manifest entries, the engine's planning surface. */
   private val ManifestEntrySchema = new org.apache.avro.Schema.Parser()
     .parse("""{"type":"record","name":"manifest_entry","fields":[
       |{"name":"status","type":"int","field-id":0},
@@ -789,8 +794,8 @@ object IngestOps {
   /** Emit REAL avro manifests for the 3-commit snapshot table (avro
     * ships with Spark): per snapshot, `manifest-snap-N.avro` holds one
     * spec-shaped manifest_entry per ADDED data file (status=1,
-    * content=DATA, `day` tuple from the path, record_count from the
-    * stats sidecar, true length), and `manifest-list-snap-N.avro` lists
+    * content=DATA, `day` tuple from the path, record_count and length
+    * from the manifest entry), and `manifest-list-snap-N.avro` lists
     * the manifests of snapshots 1..N — the cumulative view a snapshot's
     * `manifest-list` pointer serves. Pointers are full URIs, field-ids
     * ride the avro schemas as `field-id` attributes, and each file
@@ -814,8 +819,8 @@ object IngestOps {
       "format-version" -> "2",
       "content" -> "data")
     val perSnap = snaps.map { case (id, _, _) =>
-      val stats = readStatsManifest(spark, root, s"snap-$id.stats")
-      val entries = stats.sortBy(_.rel).map { st =>
+      val added = readMetaFile(spark, root, s"metadata/snap-$id.txt")._1
+      val entries = added.sortBy(_.rel).map { st =>
         val e = new GenericData.Record(ManifestEntrySchema)
         e.put("status", 1) // ADDED
         e.put("snapshot_id", id.toLong)
@@ -828,20 +833,17 @@ object IngestOps {
         df.put("file_format", "PARQUET")
         val part = new GenericData.Record(ManifestEntrySchema
           .getField("data_file").schema().getField("partition").schema())
-        val day = """day=(\d+)/""".r.findFirstMatchIn(st.rel)
-          .map(_.group(1).toInt)
-        part.put("day", day.map(Int.box).orNull)
+        part.put("day", st.partition("day").map(Int.box).orNull)
         df.put("partition", part)
-        df.put("record_count", st.nRows)
-        df.put("file_size_in_bytes", fs.getFileStatus(
-          new org.apache.hadoop.fs.Path(s"$root/data/${st.rel}")).getLen)
+        df.put("record_count", st.recorded.rows)
+        df.put("file_size_in_bytes", st.recorded.size)
         e.put("data_file", df)
         e
       }
       val mpath = s"metadata/manifest-snap-$id.avro"
       writeAvro(spark, s"$root/$mpath", ManifestEntrySchema, entries,
         manifestMeta)
-      (id, mpath, entries.size, stats.map(_.nRows).sum)
+      (id, mpath, entries.size, added.map(_.recorded.rows).sum)
     }
     snaps.map { case (id, _, _) =>
       val rows = perSnap.filter(_._1 <= id).map {
@@ -885,13 +887,16 @@ object IngestOps {
     }.sortBy(_._1)
   }
 
-  /** Parse the newline-delimited metadata file `root/rel` into its entry
-    * lines and its `#key value` header lines (a snapshot manifest's
-    * `#schema` pointer); both empty when absent. ONE parser behind every
-    * manifest/sidecar/ref/log surface so the encoding can never diverge
-    * between them. */
+  /** Parse the newline-delimited metadata file `root/rel` into its
+    * entries ([[ManifestEntry]]: a path or value, and a snapshot
+    * manifest's per-file stats) and its `#key value` header lines (a
+    * snapshot manifest's `#schema` pointer and `#crc` checksum); both
+    * empty when absent. A file whose `#crc` disagrees with its other
+    * lines ([[ManifestEntry.seal]]) throws. ONE parser behind every
+    * manifest/ref/log surface so the encoding can never diverge between
+    * them. */
   private[graft] def readMetaFile(spark: SparkSession, root: String,
-      rel: String): (Seq[String], Map[String, String]) = {
+      rel: String): (Seq[ManifestEntry], Map[String, String]) = {
     val p = new org.apache.hadoop.fs.Path(root, rel)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) (Seq.empty, Map.empty)
@@ -899,16 +904,22 @@ object IngestOps {
       val in = fs.open(p)
       val txt = try new String(in.readAllBytes(),
         java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val (headers, entries) =
-        txt.split("\n").toSeq.filter(_.nonEmpty).partition(_.startsWith("#"))
-      (entries, headers.map(_.drop(1).split(" ", 2))
-        .map(kv => kv(0) -> kv.lift(1).getOrElse("")).toMap)
+      val lines = txt.split("\n").toSeq.filter(_.nonEmpty)
+      val (headers, entries) = lines.partition(_.startsWith("#"))
+      val hs = headers.map(_.drop(1).split(" ", 2))
+        .map(kv => kv(0) -> kv.lift(1).getOrElse("")).toMap
+      hs.get("crc").foreach { crc =>
+        val got = ManifestEntry.crc(lines.filterNot(_.startsWith("#crc ")))
+        if (got != crc) throw new IllegalStateException(s"$root/$rel is " +
+          s"damaged: its lines checksum to $got, its #crc header says $crc")
+      }
+      (entries.map(ManifestEntry.parse), hs)
     }
   }
 
-  /** The entry lines of the metadata file `root/rel` ([[readMetaFile]]). */
+  /** The entry paths of the metadata file `root/rel` ([[readMetaFile]]). */
   private[graft] def readMetaLines(spark: SparkSession, root: String,
-      rel: String): Seq[String] = readMetaFile(spark, root, rel)._1
+      rel: String): Seq[String] = readMetaFile(spark, root, rel)._1.map(_.rel)
 
   /** Overwrite `root/rel` with the sorted newline-delimited lines —
     * [[readMetaLines]]' write-side twin. */
@@ -930,16 +941,9 @@ object IngestOps {
     os.close()
   }
 
-  /** Per-file column statistics carried by a stats manifest — the
-    * reference's DataFile metrics (record count, per-column bounds:
-    * `LocalReadParquetToS3Iceberg.java:126-132`,
-    * `aig/AIGEventsTableCreator.java:424-430`) for the two columns the
-    * engine's scan planning prunes on. */
-  private[graft] case class FileStats(rel: String, nRows: Long,
-      minDay: Int, maxDay: Int, minValue: Double, maxValue: Double,
-      nNullValue: Long = 0L)
-
-  /** Relative (to `data/`) paths of all parquet data files under `data`. */
+  /** Relative (to `data/`) paths of every data file under `data`: each
+    * regular file whose path has no hidden (`_`/`.`) component, of any
+    * format — an ORC commit's files are data files too. */
   private[graft] def listDataFiles(spark: SparkSession,
       data: String): Set[String] = {
     val p = new org.apache.hadoop.fs.Path(data)
@@ -948,127 +952,10 @@ object IngestOps {
     val b = Set.newBuilder[String]
     while (it.hasNext) {
       val f = it.next().getPath.toString
-      if (f.endsWith(".parquet"))
-        b += f.substring(f.lastIndexOf("/data/") + 6)
+      val rel = f.substring(f.lastIndexOf("/data/") + 6)
+      if (!rel.split("/").exists(_.matches("[_.].*"))) b += rel
     }
     b.result()
-  }
-
-  /** Stats-sidecar dataset schema: one row per data file. Bounds are
-    * NATIVE NULLS when a file has none (all-NULL column) — min/max
-    * aggregation and range predicates then handle them soundly for
-    * free, where the old text encoding needed NaN/Int sentinels. */
-  private[graft] val statsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("rel",
-      org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("n_rows",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("min_day",
-      org.apache.spark.sql.types.IntegerType, nullable = true),
-    org.apache.spark.sql.types.StructField("max_day",
-      org.apache.spark.sql.types.IntegerType, nullable = true),
-    org.apache.spark.sql.types.StructField("min_value",
-      org.apache.spark.sql.types.DoubleType, nullable = true),
-    org.apache.spark.sql.types.StructField("max_value",
-      org.apache.spark.sql.types.DoubleType, nullable = true),
-    org.apache.spark.sql.types.StructField("n_null_value",
-      org.apache.spark.sql.types.LongType, nullable = false)))
-
-  /** Compute per-file stats for the files snapshot `snap` added with ONE
-    * scan of only those files (the write-side cost Iceberg pays in its
-    * writers) and persist them as the PARQUET DATASET
-    * `metadata/$name.parquet`, one row per file, written DISTRIBUTED —
-    * nothing reaches the driver. At 100 TB ÷ 128 MB ≈ 800k files the
-    * old one-text-artifact form held every summary row on the driver
-    * before writing; a sidecar dataset prices the build as a normal
-    * aggregate+write and lets planners read it as a table. Page
-    * checksums are written (and verified on every sidecar read) so a
-    * bit-flipped bound fails the plan loudly instead of silently
-    * mis-pruning — the posture the old format carried via its CRC. */
-  private[graft] def writeStatsManifest(spark: SparkSession, root: String,
-      name: String, snap: Int): Unit = {
-    import spark.implicits._
-    LakeOps.readLive(spark, root, Seq(snap))
-      .groupBy(regexp_extract(input_file_name(), "/data/(.*)$", 1).as("rel"))
-      .agg(count(lit(1)).as("n_rows"),
-        min($"day").cast("int").as("min_day"),
-        max($"day").cast("int").as("max_day"),
-        min($"value").as("min_value"), max($"value").as("max_value"),
-        (count(lit(1)) - count($"value")).as("n_null_value"))
-      .write.mode(SaveMode.Overwrite)
-      .option("parquet.page.write-checksum.enabled", "true")
-      .parquet(s"$root/metadata/$name.parquet")
-  }
-
-  /** The stats sidecar as a DataFrame — the planning surface.
-    * Qualifying-file planners filter/join THIS instead of parsing
-    * driver-side text. An ABSENT sidecar throws: every stats-bearing
-    * layout writes its sidecar before [[buildShared]] publishes it,
-    * so a missing dataset at plan time is damage (a partial
-    * cleanup, a botched copy) — treating it as empty would plan ZERO
-    * files and silently return empty results, the exact wrong-results
-    * mode the CRC/page-checksum posture exists to prevent. (The
-    * tolerant reader for possibly-pre-stats tables is
-    * [[readStatsManifest]], whose DSv2 consumers surface absence as
-    * NULL stats columns, not as an empty file list.) Page-checksum
-    * verification is forced on: pruning metadata must fail loudly
-    * when damaged, never silently shrink a file list. */
-  private[graft] def statsManifest(spark: SparkSession, root: String,
-      name: String): org.apache.spark.sql.DataFrame = {
-    val path = s"$root/metadata/$name.parquet"
-    if (!fsExists(spark, path))
-      throw new IllegalStateException(
-        s"stats sidecar missing at $path — every stats layout builds " +
-          "it before publishing, so planning from 'no stats' would " +
-          "silently prune every file; rebuild the layout")
-    spark.read.schema(statsSchema)
-      .option("parquet.page.verify-checksum.enabled", "true")
-      .parquet(path)
-  }
-
-  /** Driver-side [[FileStats]] view of a stats sidecar — ONLY for
-    * metadata-cardinality consumers (the DSv2 metadata tables, the
-    * snapshot log), never for scan planning: planners go through
-    * [[statsManifest]]. Reads the parquet dataset DIRECTLY in the
-    * planning JVM (parquet-mr, page checksums verified) — exactly how
-    * Iceberg's planner reads a manifest: a per-commit sidecar is
-    * KB-scale, and paying a Spark job per metadata read put a ~0.2 s
-    * scheduling wave in front of every history walk and every DSv2
-    * metadata-table plan (measured 6-7× on snapshot_log/meta_files).
-    * Null bounds map to the legacy sentinels the row consumers expect
-    * (NaN / full day range). */
-  private[graft] def readStatsManifest(spark: SparkSession, root: String,
-      name: String): Seq[FileStats] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$root/metadata/$name.parquet")
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    conf.setBoolean("parquet.page.verify-checksum.enabled", true)
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return Seq.empty
-    val parts = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    val out = Seq.newBuilder[FileStats]
-    parts.foreach { p =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
-        .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          def has(f: String) = g.getFieldRepetitionCount(f) > 0
-          out += FileStats(
-            g.getString("rel", 0),
-            g.getLong("n_rows", 0),
-            if (has("min_day")) g.getInteger("min_day", 0) else Int.MinValue,
-            if (has("max_day")) g.getInteger("max_day", 0) else Int.MaxValue,
-            if (has("min_value")) g.getDouble("min_value", 0) else Double.NaN,
-            if (has("max_value")) g.getDouble("max_value", 0) else Double.NaN,
-            g.getLong("n_null_value", 0))
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    out.result().sortBy(_.rel)
   }
 
   /** Data-file relative paths recorded by snapshot N's manifest. */
@@ -1081,9 +968,10 @@ object IngestOps {
     * cumulative size) over the emulated snapshot table. Pure METADATA, no
     * data scan: the reference walks `table.snapshots()` whose summaries
     * come from manifest metrics recorded at commit time, and this engine's
-    * stats sidecars (written from one scan of each commit's delta, see
-    * [[writeStatsManifest]]) carry exactly those per-file record counts —
-    * so the log is 7 tiny metadata reads regardless of table size, which
+    * manifest entries (stats read from each file's footer when its commit
+    * staged it, [[LakeOps.stage]]) carry exactly those per-file record
+    * counts — so the log is 4 tiny metadata reads regardless of table
+    * size, which
     * is what makes a history walk over a 100 TB table instant. `n_files`
     * is the snapshot's distinct-day count — the layout's one-file-per-day
     * commit discipline — so a writer-side file split (e.g. a non-default
@@ -1098,11 +986,10 @@ object IngestOps {
     val commits = commitLog(spark, root).toMap
     var cum = 0L
     (1 to 3).map { n =>
-      val stats = readStatsManifest(spark, root, s"snap-$n.stats")
-      val nRows = stats.map(_.nRows).sum
-      val nFiles = stats.map(f =>
-        "day=(\\d+)/".r.findFirstMatchIn(f.rel).map(_.group(1))
-          .getOrElse(f.rel)).distinct.size.toLong
+      val added = readMetaFile(spark, root, s"metadata/snap-$n.txt")._1
+      val nRows = added.map(_.recorded.rows).sum
+      val nFiles = added.map(f => f.partition("day").fold(f.rel)(_.toString))
+        .distinct.size.toLong
       cum += nRows
       (n.toLong, commits(n), "append", nFiles, nRows, cum)
     }.toDF("snapshot_id", "committed_ms", "operation", "n_files",
@@ -1219,7 +1106,7 @@ object IngestOps {
   private[graft] def renameChainLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    buildShared(spark, sharedFor(spark, "events_rename_chain_v2", dir)) {
+    buildShared(spark, sharedFor(spark, "events_rename_chain_v3", dir)) {
       out =>
         val ev = eventsWithParts(spark, dir)
           .select($"event_id", $"event_type", $"value", $"user_id", $"day")
@@ -1266,7 +1153,7 @@ object IngestOps {
     * never rewrites a v1 byte. */
   private[graft] def widenLayout(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    buildShared(spark, sharedFor(spark, "events_widened_v2", dir)) { out =>
+    buildShared(spark, sharedFor(spark, "events_widened_v3", dir)) { out =>
       val ev = eventsWithParts(spark, dir)
         .select($"event_id", $"event_type", $"user_id", $"value", $"day")
         .localCheckpoint()
@@ -1305,7 +1192,7 @@ object IngestOps {
     * byte. */
   private[graft] def dropLayout(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    buildShared(spark, sharedFor(spark, "events_dropped_v2", dir)) { out =>
+    buildShared(spark, sharedFor(spark, "events_dropped_v3", dir)) { out =>
       val ev = eventsWithParts(spark, dir)
         .select($"event_id", $"event_type", $"value", $"props", $"day")
         .localCheckpoint()
@@ -1339,7 +1226,7 @@ object IngestOps {
   private[graft] def defaultColLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    buildShared(spark, sharedFor(spark, "events_defaultcol_v2", dir)) { out =>
+    buildShared(spark, sharedFor(spark, "events_defaultcol_v3", dir)) { out =>
       val ev = eventsWithParts(spark, dir)
         .select($"event_id", $"event_type", $"value", $"day")
         .localCheckpoint()
@@ -1554,73 +1441,61 @@ object IngestOps {
   }
 
   /** `manifest_stats` — per-snapshot file/row counts and column bounds
-    * answered ENTIRELY from the stats sidecars ([[writeStatsManifest]]):
-    * the Iceberg `table.files()` stats walk (`Debug:164-196`, DataFile
-    * metrics `Local:126-132`) with zero data IO — where [[datafileStats]]
-    * proves the physical layout by scanning, this serves the same truths
-    * from metadata, which is what makes stats maintenance worth its
-    * write-time cost at 100 TB. The aggregation runs DISTRIBUTED over
-    * the sidecar datasets — per-file rows never visit the driver, so
-    * the same walk prices identically over an 800k-file table. Null
-    * bounds (all-NULL files) drop out of min/max natively. */
+    * answered ENTIRELY from the manifest entries' stats: the Iceberg
+    * `table.files()` stats walk (`Debug:164-196`, DataFile metrics
+    * `Local:126-132`) with zero data IO and no Spark job — where
+    * [[datafileStats]] proves the physical layout by scanning, this
+    * serves the same truths from metadata, which is what makes stats
+    * maintenance worth its write-time cost at 100 TB. Days come from the
+    * entries' partition paths; a file without `value` bounds (all NULL)
+    * drops out of min/max. */
   def manifestStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = snapshotLayout(spark, dir)
     (1 to 3).map { n =>
-      statsManifest(spark, root, s"snap-$n.stats")
-        .select(lit(n.toLong).as("snapshot_id"), $"n_rows",
-          $"min_day", $"max_day", $"min_value", $"max_value")
-    }.reduce(_ unionByName _)
-      .groupBy($"snapshot_id")
-      .agg(count(lit(1)).as("n_files"), sum($"n_rows").as("n_rows"),
-        min($"min_day").cast("long").as("min_day"),
-        max($"max_day").cast("long").as("max_day"),
-        min($"min_value").as("min_value"),
-        max($"max_value").as("max_value"))
-      .orderBy($"snapshot_id")
+      val id = LakeOps.snapshotSchema(spark, root, n).id("value")
+      val added = readMetaFile(spark, root, s"metadata/snap-$n.txt")._1
+      val days = added.map(_.partition("day").get.toLong)
+      val stats = added.map(_.recorded)
+      (n.toLong, added.size.toLong, stats.map(_.rows).sum, days.min,
+        days.max, stats.flatMap(_.lower.get(id)).map(_.toDouble).minOption,
+        stats.flatMap(_.upper.get(id)).map(_.toDouble).maxOption)
+    }.toDF("snapshot_id", "n_files", "n_rows", "min_day", "max_day",
+      "min_value", "max_value")
   }
 
   /** Write-once value-clustered stats table: events range-partitioned and
-    * sorted by `value` into 16 files, per-file bounds recorded in a stats
-    * manifest at write time. The clustering is what gives the stats their
+    * sorted by `value` into 16 files, per-file bounds recorded in their
+    * manifest entries at commit. The clustering is what gives the stats their
     * pruning power — each file covers a tight, near-disjoint value band
     * (Iceberg's sort-order + column-metrics discipline; at 100 TB the
     * same recipe applies per partition). */
   private[graft] def statsLayout(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    val out = sharedFor(spark, "events_valstats_v2", dir)
+    val out = sharedFor(spark, "events_valstats_v3", dir)
     buildShared(spark, out) { tmpRoot =>
       commitEras(spark, tmpRoot, Seq(eventsWithParts(spark, dir)
         .select($"event_id", $"user_id", $"event_type", $"value", $"day")
         .repartitionByRange(16, $"value")
         .sortWithinPartitions($"value")))
-      writeStatsManifest(spark, tmpRoot, "files.stats", 1)
     }
   }
 
-  /** Stats-qualifying file list for a `value`-range predicate over the
-    * stats layout — planned from the stats manifest ALONE (no directory
-    * listing, no footer reads): exactly Iceberg's metrics-based planFiles
-    * (`aig/TimeBasedPartitioningExamples.java:180-195` one level below
-    * directory pruning). The overlap predicate runs as a SCAN of the
-    * sidecar dataset; the driver receives one (rel, verdict) row per
-    * file — the file LIST a planner materializes anyway (Iceberg's
-    * planFiles does the same) — but never a stats payload. A null
-    * bound (all-NULL file) fails the range predicate and is excluded,
-    * exactly the old NaN semantics. Shared with IngestSpec's
+  /** Stats-qualifying file list (and the live file count) for a
+    * `value`-range predicate over snapshot 1 of the stats layout —
+    * planned from its manifest entries ALONE, on the driver, with no
+    * Spark job, directory listing or footer read: exactly Iceberg's
+    * metrics-based planFiles (`aig/TimeBasedPartitioningExamples.java:
+    * 180-195` one level below directory pruning). An all-NULL file is
+    * excluded; a file without bounds, or an entry without stats, is
+    * kept ([[FileStats.mayOverlap]]). Shared with IngestSpec's
     * never-opened proof. */
   private[graft] def statsQualifyingFiles(spark: SparkSession, root: String,
       lo: Double, hi: Double): (Seq[String], Int) = {
-    // ONE pass: every row ships its rel + overlap verdict (strings and
-    // booleans only — never the stats payload), so the plan costs one
-    // job instead of a qualify job plus a count job
-    val rows = statsManifest(spark, root, "files.stats")
-      .select(col("rel"),
-        (col("max_value") >= lo && col("min_value") <= hi).as("q"))
-      .collect()
-    val hits = rows.filter(r => !r.isNullAt(1) && r.getBoolean(1))
-      .map(r => s"$root/data/${r.getString(0)}").toSeq.sorted
-    (hits, rows.length)
+    val id = LakeOps.snapshotSchema(spark, root, 1).id("value")
+    val live = LakeOps.liveEntries(spark, root, Seq(1))
+    (live.filter(_.stats.forall(_.mayOverlap(id, lo, hi)))
+      .map(e => s"$root/data/${e.rel}").sorted, live.size)
   }
 
   /** `ingest_quarantine` — VALIDATING ingest with a reject table: rows
@@ -1662,13 +1537,13 @@ object IngestOps {
   /** Write-once layout for NULL-COUNT stats: `value` is NULL for clicks
     * of days 3-7 (a sensor-dropout band), files clustered by day so the
     * nulls concentrate in few files; per-file stats — including the
-    * null counts [[writeStatsManifest]] now records, the metric
+    * null counts the manifest entries record, the metric
     * `manifest_stats`' min/max bounds cannot express — are written at
     * ingest. Iceberg's null_value_counts column metrics. */
   private[graft] def nullStatsLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    val out = sharedFor(spark, "events_nullstats_v2", dir)
+    val out = sharedFor(spark, "events_nullstats_v3", dir)
     buildShared(spark, out) { tmpRoot =>
       commitEras(spark, tmpRoot, Seq(eventsWithParts(spark, dir)
         .select($"event_id", $"user_id", $"event_type",
@@ -1677,24 +1552,24 @@ object IngestOps {
           $"day")
         .repartitionByRange(16, $"day", $"event_id")
         .sortWithinPartitions($"day")))
-      writeStatsManifest(spark, tmpRoot, "files.stats", 1)
     }
   }
 
   /** `manifest_null_prune` — an `IS NULL` query whose scan file list is
     * planned from per-file NULL COUNTS alone ([[manifestPruneScan]]'s
     * discipline extended to the predicate min/max bounds can never
-    * serve): only files whose recorded null count is positive are
-    * opened; a file with zero nulls is excluded by metadata, not by
-    * reading it (IngestSpec proves via the executed scan's file index).
+    * serve): only files whose recorded null count is positive, or
+    * unrecorded, are opened; a file with zero nulls is excluded by
+    * metadata, not by reading it, and the plan starts no Spark job
+    * (IngestSpec proves via the executed scan's file index).
     * At 100 TB an `IS NULL` audit over a mostly-complete column reads
     * the handful of files with gaps instead of the whole table. */
   def manifestNullPrune(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = nullStatsLayout(spark, dir)
-    val hits = statsManifest(spark, root, "files.stats")
-      .filter($"n_null_value" > 0).select($"rel")
-      .collect().map(_.getString(0)).toSet
+    val id = LakeOps.snapshotSchema(spark, root, 1).id("value")
+    val hits = LakeOps.liveEntries(spark, root, Seq(1))
+      .filter(_.stats.forall(_.nulls.get(id).forall(_ > 0))).map(_.rel).toSet
     LakeOps.readLive(spark, root, Seq(1), hits)
       .filter($"value".isNull)
       .groupBy($"event_type")
@@ -1761,7 +1636,7 @@ object IngestOps {
       .parquet(s"$outRoot/blooms.parquet")
   }
 
-  /** Bloom-sidecar dataset schema, pinned like [[statsSchema]]: a
+  /** Bloom-sidecar dataset schema, pinned: a
     * schema'd read skips the inference footer pass (one fewer job on
     * the ~0.15 s/job scheduling floor the planner path budgets), and a
     * writer-side type drift (e.g. crc written as int) fails as a clear

@@ -79,10 +79,9 @@ object LakeOps {
       table: DataFrame, days: Seq[Int],
       onStep: String => Unit = _ => ()): Int = {
     import spark.implicits._
-    val dayRe = "^day=(\\d+)/".r
-    val touched = liveFiles(spark, root, 1 to mainSnapshot(spark, root))
-      .filter(rel => dayRe.findFirstMatchIn(rel)
-        .exists(m => days.contains(m.group(1).toInt)))
+    val touched = liveEntries(spark, root, 1 to mainSnapshot(spark, root))
+      .filter(_.partition("day").exists(days.contains))
+      .map(_.rel)
     val rows = table.filter($"day".isin(days.map(Int.box): _*))
     val won = commit(spark, root, stage(spark, root, onStep)(
       rows.repartition($"day")), removed = touched, onStep = onStep)
@@ -521,8 +520,12 @@ object LakeOps {
   }
 
   /** What [[stage]] hands [[commit]]: the staged files (relative to
-    * `data/`) and the schema of the frame they hold, not yet numbered. */
-  private[graft] case class Staged(files: Seq[String], schema: TableSchema)
+    * `data/`), the schema of the frame they hold, not yet numbered, and
+    * their footer stats by column name; plus `carried` entries an
+    * earlier commit wrote (stats by field id), repeated as they are. */
+  private[graft] case class Staged(files: Seq[String], schema: TableSchema,
+      footers: Map[String, FileStats[String]] = Map.empty,
+      carried: Seq[ManifestEntry] = Nil)
 
   /** Commit step 1, STAGE: `rows` are written (zstd, partitioned by
     * `partitionBy`, in `format`) to a private staging dir (unique per
@@ -532,7 +535,9 @@ object LakeOps {
     * writer's files never enter the stage. Moved files are invisible
     * until a manifest names them (readers plan from manifests, never
     * directory listings). Hidden outputs (`_SUCCESS`, `.crc`) are
-    * dropped with the staging dir. Emits "staged" and "data-written". */
+    * dropped with the staging dir. Each moved file's stats come from its
+    * footer: one small driver read per file of the commit. Emits
+    * "staged" and "data-written". */
   private[graft] def stage(spark: SparkSession, root: String,
       onStep: String => Unit = _ => ())(rows: DataFrame,
       partitionBy: Seq[String] = Seq("day"),
@@ -558,14 +563,17 @@ object LakeOps {
     org.apache.spark.network.util.JavaUtils
       .deleteRecursively(new java.io.File(dir))
     onStep("data-written")
-    Staged(added, TableSchema.written(rows, partitionBy, format))
+    Staged(added, TableSchema.written(rows, partitionBy, format),
+      added.map(rel => rel -> ManifestEntry.footer(
+        spark.sparkContext.hadoopConfiguration, s"$root/data/$rel", format)).toMap)
   }
 
-  /** The manifest lines committing `staged` as snapshot `slot`: its files
-    * and a `#schema` header naming its record, numbered on top of
+  /** The manifest lines committing `staged` as snapshot `slot`, sealed
+    * ([[ManifestEntry.seal]]): one entry per file, stats keyed by field
+    * id, and a `#schema` header naming its record, numbered on top of
     * snapshot `slot - 1`'s and written (write-then-link) before the CAS;
-    * an existing copy gets a fresh mtime so an age-gated [[orphanSweep]]
-    * cannot reclaim it before the link. */
+    * an existing record gets a fresh mtime so an age-gated
+    * [[orphanSweep]] cannot reclaim it before the link. */
   private[graft] def manifestLines(spark: SparkSession, root: String,
       slot: Int, staged: Staged): Seq[String] = {
     val base = if (slot > 1) Some(snapshotSchema(spark, root, slot - 1))
@@ -583,7 +591,11 @@ object LakeOps {
         java.nio.file.Files.setLastModifiedTime(path, java.nio.file.attribute
           .FileTime.fromMillis(System.currentTimeMillis()))
     } finally java.nio.file.Files.deleteIfExists(attempt)
-    staged.files :+ s"#schema ${record.name}"
+    val ids = record.data.flatMap(f => TableSchema.idOf(f).map(f.name -> _)).toMap
+    val added = staged.files.map(f => staged.footers.get(f)
+      .fold(ManifestEntry(f))(st => ManifestEntry.of(f, st.rekey(ids.get))))
+    ManifestEntry.seal((added ++ staged.carried).map(_.line) :+
+      s"#schema ${record.name}")
   }
 
   /** Commit step 2, PUBLISH: CAS a manifest naming `staged`'s files and
@@ -681,7 +693,7 @@ object LakeOps {
     val linked = snaps.collect { case snapRe(n) => n.toInt }
     val manifests = linked.map(n =>
       IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt"))
-    val referenced = manifests.flatMap(_._1).toSet
+    val referenced = manifests.flatMap(_._1.map(_.rel)).toSet
     val named = manifests.flatMap(_._2.get("schema")).toSet
     // a writer killed at "staged" has published nothing to data/ yet
     val published =
@@ -862,7 +874,8 @@ object LakeOps {
 
   // ---- versioned-table emulation for the maintenance ops --------------
   // Delta manifests: metadata/snap-N.txt lists the data files snapshot N
-  // ADDED under a `#schema` header naming its schema record,
+  // ADDED, one ManifestEntry line each (path, TAB, stats JSON), under a
+  // `#schema` header naming its schema record and a `#crc` checksum;
   // metadata/snap-N.removed.txt the files it logically REPLACED.
   // Live view of snapshot S = union(adds 1..S) − union(removes 1..S) —
   // the Iceberg metadata tree (`Debug:164-196`) reduced to its delta
@@ -950,18 +963,23 @@ object LakeOps {
 
   /** Live file list (relative to data/) as of snapshot `s`. */
   private[graft] def liveFiles(spark: SparkSession, root: String,
-      snaps: Seq[Int]): Seq[String] = liveEras(spark, root, snaps).flatMap(_._2)
+      snaps: Seq[Int]): Seq[String] = liveEntries(spark, root, snaps).map(_.rel)
 
-  /** The live files of `snaps`, per snapshot, each with the name of the
+  /** The live files' manifest entries: what stats planning filters. */
+  private[graft] def liveEntries(spark: SparkSession, root: String,
+      snaps: Seq[Int]): Seq[ManifestEntry] =
+    liveEras(spark, root, snaps).flatMap(_._2)
+
+  /** The live entries of `snaps`, per snapshot, each with the name of the
     * schema record the snapshot that added it names (`#schema`). */
   private def liveEras(spark: SparkSession, root: String,
-      snaps: Seq[Int]): Seq[(Option[String], Seq[String])] = {
+      snaps: Seq[Int]): Seq[(Option[String], Seq[ManifestEntry])] = {
     val removed = snaps.flatMap(n =>
       readManifest(spark, root, s"snap-$n.removed.txt")).toSet
     snaps.map { n =>
-      val (files, headers) =
+      val (entries, headers) =
         IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt")
-      headers.get("schema") -> files.filterNot(removed)
+      headers.get("schema") -> entries.filterNot(e => removed(e.rel))
     }
   }
 
@@ -1058,7 +1076,7 @@ object LakeOps {
     * fingerprint-keyed; [[writeVersioned]] clones it per call. */
   private[graft] def versionedBaseLayout(spark: SparkSession,
       dir: String): String = {
-    val out = IngestOps.sharedFor(spark, "events_versioned_v2", dir)
+    val out = IngestOps.sharedFor(spark, "events_versioned_v3", dir)
     IngestOps.buildShared(spark, out) { root =>
       buildVersioned(spark, dir, root)
     }
@@ -1078,7 +1096,7 @@ object LakeOps {
     * the whole events table, day-partitioned. */
   private[graft] def cowBaseLayout(spark: SparkSession,
       dir: String): String =
-    baseTableLayout(spark, "events_cowbase_v3", dir) {
+    baseTableLayout(spark, "events_cowbase_v4", dir) {
       IngestOps.eventsWithParts(spark, dir).select(col("event_id"),
         col("user_id"), col("event_type"), col("value"), col("day"))
     }
@@ -1096,7 +1114,7 @@ object LakeOps {
     * fixtures; the refs are written INSIDE the build, so the published
     * layout is immutable afterwards). */
   private[graft] def refsLayout(spark: SparkSession, dir: String): String = {
-    val out = IngestOps.sharedFor(spark, "events_refs_v2", dir)
+    val out = IngestOps.sharedFor(spark, "events_refs_v3", dir)
     IngestOps.buildShared(spark, out) { root =>
       writeVersioned(spark, dir, root)
       setRef(spark, root, "main", 3)
@@ -1118,7 +1136,7 @@ object LakeOps {
   private[graft] def historyLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    val out = IngestOps.sharedFor(spark, "events_history_v2", dir)
+    val out = IngestOps.sharedFor(spark, "events_history_v3", dir)
     IngestOps.buildShared(spark, out) { root =>
       writeVersioned(spark, dir, root)
       commit(spark, root, stage(spark, root)(
@@ -1141,16 +1159,15 @@ object LakeOps {
   private[graft] def manifestsLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    val out = IngestOps.sharedFor(spark, "events_manifests_v2", dir)
+    val out = IngestOps.sharedFor(spark, "events_manifests_v3", dir)
     IngestOps.buildShared(spark, out) { root =>
       // the three-commit choreography IS buildVersioned's, unfragmented
       // (this fixture exercises manifest planning, not compaction work);
       // the returned checkpointed source feeds the 4th commit below
       val ev = buildVersioned(spark, dir, root, sliceFiles = Seq(1, 1, 1))
       // snapshot 4: compact days 1-3 — new files in, old files removed
-      val oldDays = liveFiles(spark, root, 1 to 3)
-        .filter(rel => "day=(\\d+)/".r.findFirstMatchIn(rel)
-          .exists(_.group(1).toInt <= 3))
+      val oldDays = liveEntries(spark, root, 1 to 3)
+        .filter(_.partition("day").exists(_ <= 3)).map(_.rel)
       commit(spark, root, stage(spark, root)(
         ev.filter($"day" <= 3).repartition($"day")),
         removed = oldDays, ref = None)
@@ -1180,7 +1197,7 @@ object LakeOps {
     requireNotExpired(spark, root, snaps.max)
     val eras = liveEras(spark, root, snaps).zip(snaps).map {
       case ((s, fs), n) => (s"$root/data", s.getOrElse(throw noRecord(root, n)),
-        fs.filter(keep).map(rel => s"$root/data/$rel"))
+        fs.map(_.rel).filter(keep).map(rel => s"$root/data/$rel"))
     }
     readEras(spark, root, eras,
       schemaRecord(spark, root, eras(snaps.indexOf(snaps.max))._2))
@@ -1269,12 +1286,12 @@ object LakeOps {
     import spark.implicits._
     val out = IngestOps.tmp("events_manifest_rw")
     writeVersioned(spark, dir, out)
-    // the rewrite commit: one full manifest = the consolidated live list
-    // of snapshots 1-3 under their schema; metadata-only, no data file
-    // touched
-    val live = liveFiles(spark, out, 1 to 3)
-    writeManifest(spark, out, "snap-4.txt",
-      live :+ s"#schema ${snapshotSchema(spark, out, 3).name}")
+    // the rewrite commit: one full manifest = the consolidated live
+    // entries of snapshots 1-3, stats and all, under their schema;
+    // metadata-only, no data file touched
+    writeManifest(spark, out, "snap-4.txt", manifestLines(spark, out, 4,
+      Staged(Nil, snapshotSchema(spark, out, 3),
+        carried = liveEntries(spark, out, 1 to 3))))
     writeManifest(spark, out, "snap-4.FULL", Seq("full"))
     readLiveCompacted(spark, out, 4)
       .filter($"day".between(1, 15))
@@ -1315,15 +1332,16 @@ object LakeOps {
     val clone = IngestOps.tmp("events_clone")
     IngestOps.deleteOrThrow(hfs(spark, clone),
       new org.apache.hadoop.fs.Path(clone), recursive = true)
-    // CLONE CREATE: copy the manifests (re-tagged as base-inherited) and
-    // their schema records + a base pointer — metadata only, no data
-    // bytes move
+    // CLONE CREATE: copy the manifests (re-tagged as base-inherited,
+    // stats kept) and their schema records + a base pointer — metadata
+    // only, no data bytes move
     IngestOps.writeMetaLines(spark, clone, "metadata/base.txt",
       Seq(s"$srcRoot/data"))
     (1 to 3).foreach { n =>
-      val rels = IngestOps.snapshotManifest(spark, srcRoot, n)
+      val entries = IngestOps.readMetaFile(spark, srcRoot,
+        s"metadata/snap-$n.txt")._1.map(e => e.copy(rel = "B|" + e.rel))
       writeManifest(spark, clone, s"snap-$n.txt", manifestLines(spark, clone,
-        n, Staged(rels.map("B|" + _), snapshotSchema(spark, srcRoot, n))))
+        n, Staged(Nil, snapshotSchema(spark, srcRoot, n), carried = entries)))
     }
     // CLONE EVOLVE: snapshot 4 appends days 16-17 into clone-LOCAL data
     val data = s"$clone/data"
@@ -1333,9 +1351,11 @@ object LakeOps {
     local.repartition($"day")
       .write.mode(SaveMode.Append).option("compression", "zstd")
       .partitionBy("day").parquet(data)
+    val written = listData(spark, data).toSeq.map(rel => ("L|" + rel) ->
+      ManifestEntry.footer(spark.sparkContext.hadoopConfiguration,
+        s"$data/$rel", "parquet"))
     writeManifest(spark, clone, "snap-4.txt", manifestLines(spark, clone, 4,
-      Staged(listData(spark, data).toSeq.map("L|" + _),
-        TableSchema.written(local))))
+      Staged(written.map(_._1), TableSchema.written(local), written.toMap)))
     cloneRead(spark, clone)
       .filter($"day".between(1, 17))
       .groupBy($"day".cast("long").as("day"))
@@ -1359,7 +1379,7 @@ object LakeOps {
       val (lines, headers) =
         IngestOps.readMetaFile(spark, clone, s"metadata/snap-$n.txt")
       val record = headers.getOrElse("schema", throw noRecord(clone, n))
-      lines.map {
+      lines.map(_.rel).map {
         case l if l.startsWith("B|") => (base, record, Seq(s"$base/${l.drop(2)}"))
         case l if l.startsWith("L|") => (data, record, Seq(s"$data/${l.drop(2)}"))
         case l => throw new IllegalStateException(s"untagged manifest: $l")
@@ -1380,7 +1400,7 @@ object LakeOps {
   private[graft] def expireBaseLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    val base = IngestOps.sharedFor(spark, "events_expirebase_v2", dir)
+    val base = IngestOps.sharedFor(spark, "events_expirebase_v3", dir)
     IngestOps.buildShared(spark, base) { root =>
       writeVersioned(spark, dir, root)
       // the tag lands before maintenance, like a release pin in real life

@@ -46,8 +46,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    rollbacks included) with parentage and the is-current-ancestor
   *    flag (Iceberg's `history` table).
   *  - `manifests`: one row per physical manifest file — adds / removes /
-  *    stats / full-rewrite, entry counts, bytes (Iceberg's `manifests`
-  *    table).
+  *    full-rewrite, entry counts, bytes (Iceberg's `manifests` table).
   *
   * The rows come from the manifests + a driver-side listing — metadata
   * scale, like the system it mirrors — but the CONNECTOR mechanics are
@@ -83,20 +82,19 @@ object GraftMetaSource {
     * writers in LakeOps/IngestOps spell the same names. */
   private[sources] val AddsManifest = "snap-(\\d+)\\.txt".r
   private[sources] val RemovesManifest = "snap-(\\d+)\\.removed\\.txt".r
-  private[sources] val StatsManifest = "snap-(\\d+)\\.stats\\.parquet".r
 
   /** One row per data file per committing snapshot — the Iceberg
     * `files` metadata-table shape: identity, size, and the per-file
-    * stats the writer recorded (record count + column bounds,
-    * `Local:126-132`), served from the commit's stats sidecar. */
+    * stats the writer recorded (record count + `value` bounds,
+    * `Local:126-132`), served from the file's manifest entry. */
   val FILES_SCHEMA: StructType = StructType(Seq(
     StructField("snapshot_id", IntegerType, nullable = false),
     StructField("day", IntegerType, nullable = false),
     StructField("rel_path", StringType, nullable = false),
-    StructField("size_bytes", LongType, nullable = false),
-    // stats are NULLABLE: a commit written before stats sidecars existed
-    // has UNKNOWN stats, which must stay distinguishable from real data
-    // (a 0 row count would silently read as an empty file)
+    // stats are NULLABLE: an entry that records none has UNKNOWN stats,
+    // which must stay distinguishable from real data (a 0 row count
+    // would silently read as an empty file)
+    StructField("size_bytes", LongType, nullable = true),
     StructField("n_rows", LongType, nullable = true),
     StructField("min_value", DoubleType, nullable = true),
     StructField("max_value", DoubleType, nullable = true)))
@@ -109,7 +107,7 @@ object GraftMetaSource {
     StructField("committed_ms", LongType, nullable = true),
     StructField("n_files_added", LongType, nullable = false),
     StructField("n_files_removed", LongType, nullable = false),
-    StructField("bytes_added", LongType, nullable = false),
+    StructField("bytes_added", LongType, nullable = true),
     StructField("n_rows_added", LongType, nullable = true)))
 
   /** One row per LIVE partition — Iceberg's `partitions` metadata
@@ -117,7 +115,7 @@ object GraftMetaSource {
   val PARTITIONS_SCHEMA: StructType = StructType(Seq(
     StructField("day", IntegerType, nullable = false),
     StructField("n_files", LongType, nullable = false),
-    StructField("total_bytes", LongType, nullable = false),
+    StructField("total_bytes", LongType, nullable = true),
     StructField("n_rows", LongType, nullable = true)))
 
   /** One row per named ref — Iceberg's `refs` metadata table: the
@@ -143,7 +141,7 @@ object GraftMetaSource {
 
   /** One row per physical MANIFEST file — Iceberg's `manifests` table:
     * which metadata files a planner must union per snapshot, their kind
-    * (adds / removes / stats / full rewrite), entry counts and bytes. */
+    * (adds / removes / full rewrite), entry counts and bytes. */
   val MANIFESTS_SCHEMA: StructType = StructType(Seq(
     StructField("snapshot_id", IntegerType, nullable = false),
     StructField("path", StringType, nullable = false),
@@ -164,15 +162,23 @@ object GraftMetaSource {
         "manifests)")
   }
 
+  // Each row case class below holds its table's columns in schema order:
+  // the reader ([[GraftMetaReaderFactory]]) projects them by position.
   private[sources] case class MetaEntry(snap: Int, day: Int, rel: String,
-      size: Long, stats: Option[IngestOps.FileStats])
+      size: Option[Long], rows: Option[Long], minValue: Option[Double],
+      maxValue: Option[Double])
 
   private[sources] case class SnapshotRow(snap: Int,
       committedMs: Option[Long], nAdded: Long, nRemoved: Long,
-      bytesAdded: Long, rowsAdded: Option[Long])
+      bytesAdded: Option[Long], rowsAdded: Option[Long])
 
   private[sources] case class PartitionRow(day: Int, nFiles: Long,
-      totalBytes: Long, nRows: Option[Long])
+      totalBytes: Option[Long], nRows: Option[Long])
+
+  /** The sum of `vs`, None when any is unknown — a partial sum would read
+    * as a real total. */
+  private def total(vs: Seq[Option[Long]]): Option[Long] =
+    if (vs.forall(_.isDefined)) Some(vs.flatten.sum) else None
 
   private[sources] case class RefRow(name: String, snap: Int)
 
@@ -238,9 +244,8 @@ object GraftMetaSource {
 
   /** One [[ManifestRow]] per physical manifest under `metadata/` —
     * adds (`snap-N.txt`, kind `full` when the `snap-N.FULL` rewrite
-    * marker is present), removes (`snap-N.removed.txt`) and stats
-    * sidecar datasets (`snap-N.stats.parquet`), with entry counts and
-    * byte sizes. */
+    * marker is present) and removes (`snap-N.removed.txt`), with entry
+    * counts and byte sizes. */
   private[sources] def manifestRows(root: String): Seq[ManifestRow] = {
     val spark = SparkSession.active
     val metaDir = new org.apache.hadoop.fs.Path(root, "metadata")
@@ -258,21 +263,11 @@ object GraftMetaSource {
         case AddsManifest(n) =>
           Some(n.toInt -> (if (full(n.toInt)) "full" else "adds"))
         case RemovesManifest(n) => Some(n.toInt -> "removes")
-        case StatsManifest(n) => Some(n.toInt -> "stats")
         case _ => None
       }
       kind.map { case (n, k) =>
-        // stats sidecars are parquet DATASETS (a directory): entries =
-        // row count, bytes = the directory's content length; text
-        // manifests keep their line count + file length
-        val (lines, bytes) =
-          if (k == "stats")
-            (IngestOps.readStatsManifest(spark, root,
-              s"snap-$n.stats").size.toLong,
-              fs.getContentSummary(st.getPath).getLength)
-          else (IngestOps.readMetaLines(spark, root,
-            s"metadata/$name").size.toLong, st.getLen)
-        ManifestRow(n, s"metadata/$name", k, lines, bytes)
+        ManifestRow(n, s"metadata/$name", k, IngestOps.readMetaLines(spark,
+          root, s"metadata/$name").size.toLong, st.getLen)
       }
     }.sortBy(r => (r.snap, r.kind))
   }
@@ -320,32 +315,30 @@ object GraftMetaSource {
     }
   }
 
-  /** One [[MetaEntry]] per manifest line, stats joined from the
-    * commit's stats sidecar (absent sidecar → NULL stats, so a
-    * pre-stats table still lists with its unknowns visible). */
+  /** One [[MetaEntry]] per manifest entry, its stats read from the
+    * entry (`value` bounds by the id the snapshot's schema record gives
+    * it); an entry that records none lists with NULL stats, its
+    * unknowns visible. */
   private[sources] def listEntries(root: String): Seq[MetaEntry] = {
     val spark = SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(conf)
     val metaDir = new org.apache.hadoop.fs.Path(root, "metadata")
-    // match ONLY plain add-manifests (snap-<n>.txt) — sidecars like
-    // snap-<n>.stats.parquet and snap-<n>.removed.txt are different
-    // surfaces
+    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // match ONLY plain add-manifests (snap-<n>.txt) — snap-<n>.removed.txt
+    // is a different surface
     val snaps = fs.listStatus(metaDir).map(_.getPath.getName)
       .collect { case AddsManifest(n) => n.toInt }.sorted
     snaps.flatMap { n =>
-      val stats: Map[String, IngestOps.FileStats] =
-        if (!fs.exists(new org.apache.hadoop.fs.Path(metaDir,
-          s"snap-$n.stats.parquet"))) Map.empty
-        else IngestOps.readStatsManifest(spark, root, s"snap-$n.stats")
-          .map(s => s.rel -> s).toMap
-      IngestOps.readMetaLines(spark, root, s"metadata/snap-$n.txt").map { rel =>
-        val day = "day=(\\d+)/".r.findFirstMatchIn(rel)
-          .map(_.group(1).toInt).getOrElse(-1)
-        val size = fs.getFileStatus(
-          new org.apache.hadoop.fs.Path(s"$root/data/$rel")).getLen
-        MetaEntry(n, day, rel, size, stats.get(rel))
+      val (entries, headers) =
+        IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt")
+      val value = headers.get("schema").flatMap(_ => LakeOps
+        .snapshotSchema(spark, root, n).fields.find(_.name == "value")
+        .flatMap(TableSchema.idOf))
+      entries.map { e =>
+        def bound(m: FileStats[Int] => Map[Int, String]) = for {
+          s <- e.stats; id <- value; b <- m(s).get(id) } yield b.toDouble
+        MetaEntry(n, e.partition("day").getOrElse(-1), e.rel,
+          e.stats.map(_.size), e.stats.map(_.rows), bound(_.lower),
+          bound(_.upper))
       }
     }.toSeq
   }
@@ -363,34 +356,30 @@ object GraftMetaSource {
   }
 
   /** One [[SnapshotRow]] per commit: add/remove deltas from the
-    * manifests, row deltas from the stats sidecars (None when ANY added
-    * file lacks stats — a partial sum would read as a real total),
-    * timestamps from the commit log. A pure-delete commit (removes, no
-    * adds) still gets its row. */
+    * manifests, byte and row deltas from the entries' stats (None when
+    * ANY added file lacks stats), timestamps from the commit log. A
+    * pure-delete commit (removes, no adds) still gets its row. */
   private[sources] def snapshotRows(root: String): Seq[SnapshotRow] = {
     val bySnap = listEntries(root).groupBy(_.snap)
     val removed = listRemoved(root)
     val commits = IngestOps.commitLog(SparkSession.active, root).toMap
     (bySnap.keySet ++ removed.keySet).toSeq.sorted.map { n =>
       val es = bySnap.getOrElse(n, Seq.empty)
-      val rows = if (es.nonEmpty && es.forall(_.stats.isDefined))
-        Some(es.map(_.stats.get.nRows).sum) else None
       SnapshotRow(n, commits.get(n), es.size.toLong,
-        removed.getOrElse(n, Set.empty).size.toLong,
-        es.map(_.size).sum, rows)
+        removed.getOrElse(n, Set.empty).size.toLong, total(es.map(_.size)),
+        if (es.isEmpty) None else total(es.map(_.rows)))
     }
   }
 
   /** One [[PartitionRow]] per LIVE partition: every added file not
     * logically replaced by a later remove, grouped by partition value.
-    * Row totals are None when any live file lacks stats. */
+    * Byte and row totals are None when any live file lacks stats. */
   private[sources] def partitionRows(root: String): Seq[PartitionRow] = {
     val dead = listRemoved(root).values.flatten.toSet
     listEntries(root).filterNot(e => dead(e.rel))
       .groupBy(_.day).toSeq.sortBy(_._1).map { case (day, es) =>
-        val rows = if (es.forall(_.stats.isDefined))
-          Some(es.map(_.stats.get.nRows).sum) else None
-        PartitionRow(day, es.size.toLong, es.map(_.size).sum, rows)
+        PartitionRow(day, es.size.toLong, total(es.map(_.size)),
+          total(es.map(_.rows)))
       }
   }
 }
@@ -451,6 +440,10 @@ private[sources] class GraftMetaScan(root: String, table: String,
       throw new IllegalStateException(
         s"graft_meta_$table holds pushed filter $f it cannot evaluate"))
 
+  /** One input partition per row: pushdown visible as a partition count. */
+  private def each(rows: Seq[Product]): Array[InputPartition] =
+    rows.map(r => GraftMetaPartition(Array(r)): InputPartition).toArray
+
   override def planInputPartitions(): Array[InputPartition] = table match {
     case "files" =>
       val survivors = GraftMetaSource.listEntries(root)
@@ -458,112 +451,53 @@ private[sources] class GraftMetaScan(root: String, table: String,
       // one partition per surviving snapshot: pushdown on snapshot_id is
       // visible as a smaller partition count (asserted in the spec)
       survivors.groupBy(_.snap).toSeq.sortBy(_._1).map { case (_, es) =>
-        GraftMetaPartition(es.toArray): InputPartition
+        GraftMetaPartition(es.toArray[Product]): InputPartition
       }.toArray
     case "snapshots" =>
-      // one partition per surviving commit — pushdown on snapshot_id
-      // visible as a smaller partition count, like the files table
-      GraftMetaSource.snapshotRows(root)
-        .filter(r => pushed.forall(keep(r.snap, -1)))
-        .map(r => GraftSnapshotPartition(r): InputPartition).toArray
+      each(GraftMetaSource.snapshotRows(root)
+        .filter(r => pushed.forall(keep(r.snap, -1))))
     case "partitions" =>
-      GraftMetaSource.partitionRows(root)
-        .filter(r => pushed.forall(keep(-1, r.day)))
-        .map(r => GraftPartitionPartition(r): InputPartition).toArray
+      each(GraftMetaSource.partitionRows(root)
+        .filter(r => pushed.forall(keep(-1, r.day))))
     case "refs" =>
-      // pushdown on snapshot_id: a ref pointing outside the predicate
-      // never becomes an InputPartition (MetaSourceSpec asserts)
-      GraftMetaSource.refRows(root)
-        .filter(r => pushed.forall(keep(r.snap, -1)))
-        .map(r => GraftRefPartition(r): InputPartition).toArray
+      // a ref pointing outside the predicate never becomes an
+      // InputPartition (MetaSourceSpec asserts)
+      each(GraftMetaSource.refRows(root)
+        .filter(r => pushed.forall(keep(r.snap, -1))))
     case "history" =>
       // a made-current entry outside the snapshot predicate is pruned
       // at planning (ancestry is still computed over the FULL log —
       // pruning the output must not rewrite history)
-      GraftMetaSource.historyRows(root)
-        .filter(r => pushed.forall(keep(r.snap, -1)))
-        .map(r => GraftHistoryPartition(r): InputPartition).toArray
+      each(GraftMetaSource.historyRows(root)
+        .filter(r => pushed.forall(keep(r.snap, -1))))
     case "manifests" =>
-      GraftMetaSource.manifestRows(root)
-        .filter(r => pushed.forall(keep(r.snap, -1)))
-        .map(r => GraftManifestPartition(r): InputPartition).toArray
+      each(GraftMetaSource.manifestRows(root)
+        .filter(r => pushed.forall(keep(r.snap, -1))))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftMetaReaderFactory(required.fieldNames)
+    new GraftMetaReaderFactory(GraftMetaSource.schemaFor(table),
+      required.fieldNames)
 }
 
-private[sources] case class GraftMetaPartition(
-    entries: Array[GraftMetaSource.MetaEntry]) extends InputPartition
-private[sources] case class GraftSnapshotPartition(
-    row: GraftMetaSource.SnapshotRow) extends InputPartition
-private[sources] case class GraftPartitionPartition(
-    row: GraftMetaSource.PartitionRow) extends InputPartition
-private[sources] case class GraftRefPartition(
-    row: GraftMetaSource.RefRow) extends InputPartition
-private[sources] case class GraftHistoryPartition(
-    row: GraftMetaSource.HistoryRow) extends InputPartition
-private[sources] case class GraftManifestPartition(
-    row: GraftMetaSource.ManifestRow) extends InputPartition
+/** Rows of one metadata table: case classes whose fields follow the
+  * table's schema, column for column. */
+private[sources] case class GraftMetaPartition(rows: Array[Product])
+    extends InputPartition
 
-private[sources] class GraftMetaReaderFactory(fields: Array[String])
-    extends PartitionReaderFactory {
-
-  /** Iterator of projected rows for one input partition, by table. */
-  private def rows(partition: InputPartition): Iterator[InternalRow] =
-    partition match {
-      case GraftMetaPartition(entries) => entries.iterator.map { e =>
-        new GenericInternalRow(fields.map {
-          case "snapshot_id" => e.snap
-          case "day" => e.day
-          case "rel_path" => UTF8String.fromString(e.rel)
-          case "size_bytes" => e.size
-          case "n_rows" => e.stats.map(s => Long.box(s.nRows)).orNull
-          case "min_value" => e.stats.map(s => Double.box(s.minValue)).orNull
-          case "max_value" => e.stats.map(s => Double.box(s.maxValue)).orNull
-        }.toArray[Any])
-      }
-      case GraftSnapshotPartition(r) => Iterator.single(
-        new GenericInternalRow(fields.map {
-          case "snapshot_id" => r.snap
-          case "committed_ms" => r.committedMs.map(Long.box).orNull
-          case "n_files_added" => r.nAdded
-          case "n_files_removed" => r.nRemoved
-          case "bytes_added" => r.bytesAdded
-          case "n_rows_added" => r.rowsAdded.map(Long.box).orNull
-        }.toArray[Any]))
-      case GraftPartitionPartition(r) => Iterator.single(
-        new GenericInternalRow(fields.map {
-          case "day" => r.day
-          case "n_files" => r.nFiles
-          case "total_bytes" => r.totalBytes
-          case "n_rows" => r.nRows.map(Long.box).orNull
-        }.toArray[Any]))
-      case GraftRefPartition(r) => Iterator.single(
-        new GenericInternalRow(fields.map {
-          case "ref_name" => UTF8String.fromString(r.name)
-          case "snapshot_id" => r.snap
-        }.toArray[Any]))
-      case GraftHistoryPartition(r) => Iterator.single(
-        new GenericInternalRow(fields.map {
-          case "seq" => r.seq
-          case "snapshot_id" => r.snap
-          case "parent_id" => r.parent.map(Int.box).orNull
-          case "is_current_ancestor" => r.isCurrentAncestor
-        }.toArray[Any]))
-      case GraftManifestPartition(r) => Iterator.single(
-        new GenericInternalRow(fields.map {
-          case "snapshot_id" => r.snap
-          case "path" => UTF8String.fromString(r.path)
-          case "kind" => UTF8String.fromString(r.kind)
-          case "n_entries" => r.nEntries
-          case "size_bytes" => r.sizeBytes
-        }.toArray[Any]))
-    }
+private[sources] class GraftMetaReaderFactory(schema: StructType,
+    fields: Array[String]) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
-    val it = rows(partition)
+    val at = fields.map(schema.fieldIndex)
+    val it = partition.asInstanceOf[GraftMetaPartition].rows.iterator.map {
+      r => new GenericInternalRow(at.map(i => r.productElement(i) match {
+        case o: Option[_] => o.getOrElse(null)
+        case s: String => UTF8String.fromString(s)
+        case v => v
+      }))
+    }
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _
       override def next(): Boolean = { val h = it.hasNext; if (h) cur = it.next(); h }

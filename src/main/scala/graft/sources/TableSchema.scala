@@ -18,6 +18,10 @@ private[graft] case class TableSchema(data: StructType,
 
   def fields: Seq[StructField] = data.fields.toSeq ++ partition.fields
 
+  /** The field id of the field named `name`. */
+  def id(name: String): Int = fields.find(_.name == name).flatMap(idOf)
+    .getOrElse(throw new IllegalArgumentException(s"no numbered field $name"))
+
   /** The record: Spark's own `StructType.json` of both field lists. */
   def json: String = s"""{"format":"$format","last-column-id":$lastId,""" +
     s""""partition":${partition.json},"schema":${data.json}}"""

@@ -1051,7 +1051,7 @@ object StreamingOps {
   private[graft] def upsertBaseLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    LakeOps.baseTableLayout(spark, "events_streambase_v3", dir) {
+    LakeOps.baseTableLayout(spark, "events_streambase_v4", dir) {
       graft.sources.IngestOps.eventsWithParts(spark, dir)
         .filter($"day".between(1, 10))
         .select($"event_id", $"user_id", $"event_type", $"value", $"day")

@@ -52,9 +52,8 @@ class EngineSpec extends SparkSpecBase {
     }
   }
 
-  /** (file name, trimmed non-comment lines) of every main source file —
-    * the walk the source cross-checks below share. */
-  private lazy val mainSources: Seq[(String, Seq[String])] = {
+  /** (file name, text) of every main source file. */
+  private lazy val mainFiles: Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
     val srcRoot = Seq(
       java.nio.file.Paths.get("src/main/scala"),
@@ -67,37 +66,74 @@ class EngineSpec extends SparkSpecBase {
     java.nio.file.Files.walk(srcRoot)
       .iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .map(p => p.getFileName.toString -> java.nio.file.Files
-        .readAllLines(p).asScala
-        .map(_.trim)
-        .filterNot(l => l.startsWith("//") || l.startsWith("*") ||
-          l.startsWith("/*"))   // comments are not call sites
-        .toSeq)
+      .map(p => p.getFileName.toString -> new String(
+        java.nio.file.Files.readAllBytes(p), "UTF-8"))
       .toSeq
   }
 
+  private def isComment(trimmed: String) = trimmed.startsWith("//") ||
+    trimmed.startsWith("*") || trimmed.startsWith("/*")
+
+  /** (file name, trimmed non-comment lines) of every main source file —
+    * the walk the source cross-checks below share. */
+  private lazy val mainSources: Seq[(String, Seq[String])] =
+    mainFiles.map { case (file, text) =>
+      file -> text.split("\n", -1).toSeq.map(_.trim).filterNot(isComment)
+    }
+
+  /** The Scala parser the def ranges come from (parse only, no typer). */
+  private lazy val scalaParser = {
+    val settings = new scala.tools.nsc.Settings()
+    settings.Yrangepos.value = true
+    settings.usejavacp.value = true
+    val g = new scala.tools.nsc.Global(settings,
+      new scala.tools.nsc.reporters.StoreReporter(settings))
+    new g.Run
+    g
+  }
+
+  /** (start, end, name) of every def in `text`, from its parse tree. */
+  private def defRanges(file: String, text: String): Seq[(Int, Int, String)] = {
+    val g = scalaParser
+    val unit = new g.CompilationUnit(
+      new scala.reflect.internal.util.BatchSourceFile(file, text))
+    g.newUnitParser(unit).parse().collect {
+      case d: g.DefDef if d.pos.isRange && d.name != g.nme.CONSTRUCTOR =>
+        (d.pos.start, d.pos.end, d.name.decoded)
+    }
+  }
+
   /** (file, enclosing def, text) of every main-source statement: lines
-    * joined until parentheses balance, each tagged with the innermost
-    * def opened before it, trailing ` // ` comments dropped. */
-  private lazy val mainStatements: Seq[(String, String, String)] = {
-    val defName = """\bdef (\w+)""".r
-    mainSources.flatMap { case (file, lines) =>
+    * joined until parentheses balance, trailing ` // ` comments dropped,
+    * each tagged with the innermost def whose parsed source range holds
+    * the statement's last character — a statement after a nested or
+    * anonymous-class def belongs to the def around it. */
+  private lazy val mainStatements: Seq[(String, String, String)] =
+    mainFiles.flatMap { case (file, text) =>
+      val defs = defRanges(file, text)
+      def enclosing(at: Int) = defs.filter(d => d._1 <= at && at < d._2)
+        .maxByOption(_._1).fold("<top>")(_._3)
       var depth = 0
-      var enclosing = "<top>"
+      var offset = 0
       val stmt = new StringBuilder
-      lines.map(_.replaceAll("""\s//\s.*$""", "")).flatMap { l =>
-        if (depth == 0)
-          defName.findFirstMatchIn(l).foreach(m => enclosing = m.group(1))
-        stmt.append(l).append('\n')
-        depth = math.max(0, depth + l.count(_ == '(') - l.count(_ == ')'))
-        if (depth > 0) None
+      text.split("\n", -1).toSeq.flatMap { raw =>
+        val lineStart = offset
+        offset += raw.length + 1
+        val l = raw.trim
+        if (isComment(l)) None
         else {
-          val text = stmt.result(); stmt.clear()
-          Some((file, enclosing, text))
+          val code = l.replaceAll("""\s//\s.*$""", "")
+          stmt.append(code).append('\n')
+          depth = math.max(0, depth + code.count(_ == '(') - code.count(_ == ')'))
+          if (depth > 0) None
+          else {
+            val last = lineStart + raw.indexOf(l) + code.stripTrailing.length - 1
+            val t = stmt.result(); stmt.clear()
+            Some((file, enclosing(last), t))
+          }
         }
       }
     }
-  }
 
   test("Fixtures.prewarm covers every buildShared site and every " +
       "builder completes") {
@@ -270,6 +306,22 @@ class EngineSpec extends SparkSpecBase {
     // the lint still sees the one checked call
     assert(sites.exists(s => owner(s._1, s._2)),
       "IngestOps.deleteOrThrow's delete call not found")
+  }
+
+  test("per-file stats live in the manifest entries: no main source " +
+      "spells a stats sidecar") {
+    // a second stats model beside the manifests (a parquet dataset per
+    // commit) needs a job to write and one to plan, and can drift from
+    // the entries it describes
+    val banned = Seq("stats.parquet", "StatsManifest", "writeStatsManifest")
+    val offenders = mainFiles.flatMap { case (file, text) =>
+      banned.filter(text.contains).map(b => s"$file: $b")
+    }
+    assert(offenders.isEmpty, "stats sidecar spellings in src/main:\n  " +
+      offenders.mkString("\n  "))
+    assert(mainSources.exists { case (file, lines) =>
+      file == "ManifestEntry.scala" && lines.exists(_.contains("def footer(")) },
+      "ManifestEntry.footer not found")
   }
 
   test("main entry points are exactly Bench, Verify, DebugRun and " +

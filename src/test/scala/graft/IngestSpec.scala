@@ -19,6 +19,38 @@ class IngestSpec extends SparkSpecBase {
   private def eraRead(root: String, n: Int) =
     spark.read.parquet(eraFiles(root, n): _*)
 
+  /** One entry's recorded stats of `value`: NaN for a missing bound. */
+  private case class ValueStats(rel: String, nRows: Long, minValue: Double,
+      maxValue: Double, nNullValue: Long)
+
+  /** The `value` stats of the entries snapshot `n` of `root` added. */
+  private def valueStats(root: String, n: Int = 1): Seq[ValueStats] = {
+    val id = graft.sources.LakeOps.snapshotSchema(spark, root, n).id("value")
+    graft.sources.IngestOps.readMetaFile(spark, root,
+      s"metadata/snap-$n.txt")._1.map { e =>
+      val s = e.recorded
+      ValueStats(e.rel, s.rows, s.lower.get(id).fold(Double.NaN)(_.toDouble),
+        s.upper.get(id).fold(Double.NaN)(_.toDouble), s.nulls(id))
+    }.sortBy(_.rel)
+  }
+
+  /** The number of Spark jobs `body` starts. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   /** (field id → column name) of the parquet footer of `file`. */
   private def footerFieldIds(file: String): Map[Int, String] = {
     import scala.jdk.CollectionConverters._
@@ -198,8 +230,7 @@ class IngestSpec extends SparkSpecBase {
       s"scanned=${scan.metrics("numFiles").value}, planned=${hits.size}")
     val scanRels = scan.relation.location.inputFiles
       .map(f => f.substring(f.lastIndexOf("/data/") + 6)).toSet
-    val excluded = graft.sources.IngestOps
-      .readStatsManifest(spark, root, "files.stats")
+    val excluded = valueStats(root)
       .filter(s => s.maxValue < 180.0 || s.minValue > 220.0)
       .map(_.rel).toSet
     assert(excluded.nonEmpty && scanRels.nonEmpty)
@@ -240,8 +271,7 @@ class IngestSpec extends SparkSpecBase {
       "files recorded null-free are never opened") {
     import spark.implicits._
     val root = graft.sources.IngestOps.nullStatsLayout(spark, sf)
-    val stats = graft.sources.IngestOps
-      .readStatsManifest(spark, root, "files.stats")
+    val stats = valueStats(root)
     val (withNulls, nullFree) = stats.partition(_.nNullValue > 0)
     // the nulls are day-clustered: most of the 16 files are null-free
     assert(stats.size == 16 && withNulls.nonEmpty && nullFree.nonEmpty)
@@ -307,8 +337,8 @@ class IngestSpec extends SparkSpecBase {
     assert(none.isEmpty, s"phantom key qualified files: $none")
   }
 
-  test("corrupt pruning metadata fails the plan loudly — a damaged " +
-      "bloom or stats sidecar must never silently shrink the file list") {
+  test("corrupt blooms and manifests fail the plan loudly, never " +
+      "shrinking the file list") {
     import spark.implicits._
     import graft.sources.IngestOps
     // a bit-flipped bloom DESERIALIZES fine but answers 'definitely
@@ -339,41 +369,52 @@ class IngestSpec extends SparkSpecBase {
       .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
       .mkString("\n")
     assert(msgs.contains("CRC mismatch"), msgs)
-    // stats sidecars are parquet with page checksums written and
-    // verified — pin that physical damage (a truncated part-file)
-    // throws rather than planning from a damaged manifest
+    // a snapshot manifest carries a #crc of its entries: a truncated
+    // manifest and a bound edited by one digit both throw when a stats
+    // planner reads them. Damage a byte COPY (a clone hard-links, and
+    // shared layouts are never mutated)
     val statsRoot = IngestOps.statsLayout(spark, sf)
-    val statsTmp = java.nio.file.Files
-      .createTempDirectory("stats_corrupt").toString
-    val srcDir = java.nio.file.Paths
-      .get(s"$statsRoot/metadata/files.stats.parquet")
-    val dstDir = java.nio.file.Paths
-      .get(s"$statsTmp/metadata/files.stats.parquet")
-    java.nio.file.Files.createDirectories(dstDir)
-    val parts = java.nio.file.Files.list(srcDir).toArray
-      .map(_.asInstanceOf[java.nio.file.Path])
-    parts.foreach(p => java.nio.file.Files.copy(p,
-      dstDir.resolve(p.getFileName.toString)))
-    val victim = java.nio.file.Files.list(dstDir).toArray
-      .map(_.asInstanceOf[java.nio.file.Path])
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .maxBy(java.nio.file.Files.size(_))
-    val ch = java.nio.channels.FileChannel.open(victim,
-      java.nio.file.StandardOpenOption.WRITE)
-    try ch.truncate(math.max(4, java.nio.file.Files.size(victim) - 16))
-    finally ch.close()
-    assertThrows[Exception] {
-      IngestOps.statsManifest(spark, statsTmp, "files.stats").collect()
+    val manifest = "metadata/snap-1.txt"
+    def damaged(name: String)(edit: String => String): String = {
+      val dir = IngestOps.tmp(name)
+      graft.sources.LakeOps.cloneTree(statsRoot, dir)
+      val p = java.nio.file.Paths.get(dir, manifest)
+      val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      java.nio.file.Files.delete(p)
+      java.nio.file.Files.write(p, edit(text).getBytes("UTF-8"))
+      dir
     }
-    // an ABSENT sidecar must also fail the plan (gates guarantee its
-    // presence, so absence is damage) — an empty default would plan
+    val truncated = damaged("stats_truncated")(t => t.take(t.length * 2 / 3))
+    val bound = """"upper_bounds":\{"(\d+)":"(\d)""".r
+    val edited = damaged("stats_edited") { t =>
+      val m = bound.findFirstMatchIn(t).get
+      t.patch(m.end(2) - 1, ((m.group(2).toInt + 1) % 10).toString, 1)
+    }
+    Seq(truncated, edited).foreach { root =>
+      val e = intercept[IllegalStateException] {
+        IngestOps.statsQualifyingFiles(spark, root, 180.0, 220.0)
+      }
+      assert(e.getMessage.contains("damaged"), e.getMessage)
+    }
+    // an ABSENT manifest fails the plan too: an empty default would plan
     // zero files and return silently-empty results
-    val e2 = intercept[IllegalStateException] {
-      IngestOps.statsManifest(spark,
-        java.nio.file.Files.createTempDirectory("no_sidecar").toString,
-        "files.stats")
+    intercept[IllegalStateException] {
+      IngestOps.statsQualifyingFiles(spark, IngestOps.tmp("no_manifest"),
+        180.0, 220.0)
     }
-    assert(e2.getMessage.contains("sidecar missing"), e2.getMessage)
+    // an entry that records no stats is never pruned: strip one
+    // excluded file's stats (and re-seal), and it qualifies again
+    val (hits, _) = IngestOps.statsQualifyingFiles(spark, statsRoot, 180.0, 220.0)
+    val strip = graft.sources.LakeOps.liveFiles(spark, statsRoot, Seq(1))
+      .find(rel => !hits.contains(s"$statsRoot/data/$rel")).get
+    val bare = damaged("stats_bare") { t =>
+      graft.sources.ManifestEntry.seal(t.split("\n").toSeq
+        .filterNot(_.startsWith("#crc "))
+        .map(l => if (l.startsWith(strip + "\t")) strip else l)).mkString("\n")
+    }
+    val (bareHits, _) = IngestOps.statsQualifyingFiles(spark, bare, 180.0, 220.0)
+    assert(bareHits.map(_.stripPrefix(s"$bare/data/")).toSet ==
+      hits.map(_.stripPrefix(s"$statsRoot/data/")).toSet + strip)
   }
 
   test("sidecar planning never materializes payloads on the driver: " +
@@ -429,62 +470,61 @@ class IngestSpec extends SparkSpecBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("stats planning holds at metadata scale: a 100k-file sidecar " +
-      "plans in ONE job and the driver receives only qualifying rels") {
+  test("stats planning holds at metadata scale: a 100k-entry manifest " +
+      "plans with no job") {
     import spark.implicits._
-    import graft.sources.IngestOps
-    val tmp = IngestOps.tmp("mega_sidecar")
+    import graft.sources.{FileStats, IngestOps, ManifestEntry, TableSchema}
+    val tmp = IngestOps.tmp("mega_manifest")
     // synthetic per-file stats at the 100 TB file count's order of
     // magnitude: file i covers the value band [i, i+1)
-    spark.range(100000).select(
-      concat(lit("part-"), lpad($"id".cast("string"), 6, "0"),
-        lit(".parquet")).as("rel"),
-      lit(1000L).as("n_rows"),
-      lit(1).cast("int").as("min_day"), lit(30).cast("int").as("max_day"),
-      $"id".cast("double").as("min_value"),
-      ($"id" + 1).cast("double").as("max_value"),
-      lit(0L).as("n_null_value"))
-      .write.mode("overwrite")
-      .parquet(s"$tmp/metadata/files.stats.parquet")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    val record = TableSchema.written(spark.range(1)
+      .select($"id".cast("double").as("value")), Nil).numbered(None)
+    val id = record.id("value")
+    IngestOps.writeMetaLines(spark, tmp, s"metadata/${record.name}",
+      Seq(record.json))
+    IngestOps.writeMetaLines(spark, tmp, "metadata/snap-1.txt",
+      ManifestEntry.seal((0 until 100000).map(i => ManifestEntry.of(
+        f"part-$i%06d.parquet", FileStats(4096L, 1000L, Map(id -> 0L),
+          Map(id -> i.toDouble.toString), Map(id -> (i + 1).toDouble.toString)))
+        .line) :+ s"#schema ${record.name}"))
+    var planned: (Seq[String], Int) = null
+    val jobs = jobsOf {
+      planned = IngestOps.statsQualifyingFiles(spark, tmp, 500.5, 503.5)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (hits, total) =
-        IngestOps.statsQualifyingFiles(spark, tmp, 500.5, 503.5)
-      org.apache.spark.GraftListenerBridge
-        .waitUntilEmpty(spark.sparkContext)
-      assert(total == 100000)
-      // bands overlapping [500.5, 503.5]: i in 500..503 — exact
-      assert(hits.map(_.split("/").last) ==
-        (500 to 503).map(i => f"part-$i%06d.parquet"),
-        s"got ${hits.size} hits: ${hits.take(5)}")
-      // one scan job plans the whole 100k-file manifest — the explicit
-      // sidecar schema means no inference job, and the total count
-      // rides the qualify pass instead of a second action
-      assert(jobs.get() == 1, s"planning cost ${jobs.get()} jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (hits, total) = planned
+    assert(total == 100000)
+    // bands overlapping [500.5, 503.5]: i in 500..503 — exact
+    assert(hits.map(_.split("/").last) ==
+      (500 to 503).map(i => f"part-$i%06d.parquet"),
+      s"got ${hits.size} hits: ${hits.take(5)}")
+    // the whole 100k-entry manifest plans on the driver: no Spark job
+    assert(jobs == 0, s"planning cost $jobs jobs")
+  }
+
+  test("building the stats-planned frames of manifest_prune_scan, " +
+      "manifest_null_prune and manifest_stats starts no Spark job") {
+    import graft.sources.IngestOps
+    val keys = Seq[(org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame](IngestOps.manifestPruneScan,
+      IngestOps.manifestNullPrune, IngestOps.manifestStats)
+    keys.foreach(k => k(spark, sf)) // layouts built outside the window
+    keys.foreach { k =>
+      val jobs = jobsOf(k(spark, sf))
+      assert(jobs == 0, s"building the frame started $jobs jobs")
+    }
   }
 
   test("manifest_stats answers from metadata only — its plan reads no " +
       "data files") {
-    // layout is built (a write-time cost); the QUERY plan itself must
-    // aggregate the sidecar DATASETS — every scanned file lives under
-    // metadata/, never under data/ (the distributed form of the old
-    // "zero parquet scans" local-relation claim)
+    // layout is built (a write-time cost); the QUERY plan itself is the
+    // manifest entries' stats, folded on the driver: it scans no file
     graft.sources.IngestOps.snapshotLayout(spark, sf)
     val q = graft.sources.IngestOps.manifestStats(spark, sf)
     q.collect()
     val scannedFiles = fileScans(q.queryExecution.executedPlan)
       .flatMap(_.relation.location.inputFiles)
-    assert(scannedFiles.nonEmpty, "expected sidecar-dataset scans")
-    assert(scannedFiles.forall(f =>
-      f.contains("/metadata/") && !f.contains("/data/")),
-      s"manifest_stats read data files: ${scannedFiles.mkString(",")}")
+    assert(scannedFiles.isEmpty,
+      s"manifest_stats scanned files: ${scannedFiles.mkString(",")}")
     val rows = q.collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
     // stats agree with a direct scan of the table
@@ -492,6 +532,25 @@ class IngestSpec extends SparkSpecBase {
       .parquet(s"${graft.sources.IngestOps.snapshotLayout(spark, sf)}/data")
       .count()
     assert(rows.map(_.getLong(2)).sum == direct)
+  }
+
+  test("a layout of a corpus under the JVM's scratch dir is kept in that " +
+      "dir, so the dead-JVM reap removes it") {
+    import graft.sources.IngestOps
+    val corpus = IngestOps.tmp("scratch_corpus")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(corpus))
+    java.nio.file.Files.write(java.nio.file.Paths.get(corpus, "events.parquet"),
+      Array[Byte](1, 2, 3))
+    val layout = IngestOps.sharedFor(spark, "scratch_probe", corpus)
+    assert(layout.startsWith(s"${IngestOps.scratchRoot}/"), layout)
+    // it is still an immutable shared layout to readSharedTable; a
+    // mutable scratch table is still refused
+    spark.range(3).write.mode("overwrite").parquet(layout)
+    assert(IngestOps.readSharedTable(spark, layout).count() == 3)
+    intercept[IllegalArgumentException](
+      IngestOps.readSharedTable(spark, IngestOps.tmp("scratch_table")))
+    // a corpus outside the scratch dir keeps the cross-process location
+    assert(!IngestOps.sharedFor(spark, "scratch_probe", sf).contains("/jvm-"))
   }
 
   test("alter_widen_type: v1 footers stay INT32/FLOAT and are never " +
@@ -832,12 +891,11 @@ class IngestSpec extends SparkSpecBase {
         s"manifest-list $ml missing")
     }
     // snapshot summaries: operation + add counts agreeing with the
-    // stats sidecars (what a real reader surfaces in its UI)
+    // manifest entries' stats (what a real reader surfaces in its UI)
     snaps.foreach { s =>
       val id = (s \ "snapshot-id").extract[Int]
       assert((s \ "summary" \ "operation").extract[String] == "append")
-      val sidecar = graft.sources.IngestOps
-        .readStatsManifest(spark, root, s"snap-$id.stats")
+      val sidecar = valueStats(root, id)
       assert((s \ "summary" \ "added-data-files").extract[String]
         == sidecar.size.toString,
         s"summary added-data-files drifted from sidecar for snap $id")
@@ -938,8 +996,7 @@ class IngestSpec extends SparkSpecBase {
       .get("file_path").toString).toSet
     assert(avroFiles == txtFiles,
       "avro manifest and text manifest disagree on snapshot 1's files")
-    val statsRows = graft.sources.IngestOps
-      .readStatsManifest(spark, root, "snap-1.stats")
+    val statsRows = valueStats(root)
       .map(st => s"file:$root/data/${st.rel}" -> st.nRows).toMap
     erows.foreach { e =>
       val df = e.get("data_file")

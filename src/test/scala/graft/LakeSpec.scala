@@ -1360,4 +1360,111 @@ class LakeSpec extends SparkSpecBase {
     assert(e.getMessage.contains(out) &&
       e.getMessage.contains("no snapshot has been committed"), e.getMessage)
   }
+
+  test("an ORC commit killed at 'data-written' leaves debris the orphan " +
+      "sweep reclaims: no unreferenced file remains") {
+    import spark.implicits._
+    val L = sources.LakeOps
+    val out = sources.IngestOps.tmp("events_orc_killed")
+    org.apache.spark.network.util.JavaUtils
+      .deleteRecursively(new java.io.File(out))
+    val slice = sources.IngestOps.eventsWithParts(spark, sf)
+      .filter($"day".between(1, 3))
+      .select($"event_id", $"user_id", $"event_type", $"value", $"day")
+    intercept[Kill] {
+      L.stage(spark, out, s => if (s == "data-written") throw Kill(s))(
+        slice.repartition($"day"), format = "orc")
+    }
+    // every regular file under data/, whatever its name
+    def onDisk: Seq[String] = {
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(out, "data"))
+      try w.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(java.nio.file.Files.isRegularFile(_)).map(_.toString)
+      finally w.close()
+    }
+    assert(onDisk.nonEmpty && onDisk.forall(_.endsWith(".orc")), onDisk)
+    L.orphanSweep(spark, out, graceMs = 0)
+    assert(onDisk.isEmpty, s"unreferenced files survive the sweep: $onDisk")
+  }
+
+  test("manifest entry stats are exact: row count, size, bounds and null " +
+      "counts of a multi-row-group file agree with a Spark aggregate") {
+    import spark.implicits._
+    val L = sources.LakeOps
+    val out = sources.IngestOps.tmp("events_entry_stats")
+    org.apache.spark.network.util.JavaUtils
+      .deleteRecursively(new java.io.File(out))
+    // ±Infinity bound `inf`; a -0.0 minimum in `zero`; an all-NULL
+    // column; NaN in `nan`; tabs and newlines in the strings of `s`
+    val rows = spark.range(3000).select($"id",
+      when($"id" === 0, lit(Double.PositiveInfinity))
+        .when($"id" === 1, lit(Double.NegativeInfinity))
+        .otherwise($"id" * 0.5 - 700).as("inf"),
+      when($"id" % 2 === 0, lit(-0.0)).otherwise($"id".cast("double"))
+        .as("zero"),
+      lit(null).cast("double").as("gone"),
+      when($"id" % 7 === 0, lit(Double.NaN)).otherwise($"id".cast("double"))
+        .as("nan"),
+      when($"id" % 5 === 0, lit(null).cast("string")).otherwise(concat(
+        lit("s\t"), $"id".cast("string"), lit("\nx"))).as("s"))
+      .coalesce(1)
+    spark.conf.set("parquet.block.size", "4096")
+    val staged = try L.stage(spark, out)(rows, Nil)
+      finally spark.conf.unset("parquet.block.size")
+    assert(L.commit(spark, out, staged) == 1)
+    val Seq(rel) = staged.files
+    val file = s"$out/data/$rel"
+    val groups = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new Path(file), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getBlocks.size finally r.close()
+    }
+    assert(groups > 1, s"one row group only: the fixture proves no fold")
+    // the entry is ONE line: tabs and newlines inside bounds are escaped
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(out, "metadata", "snap-1.txt")), "UTF-8")
+    assert(text.split("\n").filterNot(_.startsWith("#")).toSeq ==
+      Seq(sources.IngestOps.readMetaFile(spark, out,
+        "metadata/snap-1.txt")._1.head.line))
+    val record = L.snapshotSchema(spark, out, 1)
+    val st = sources.IngestOps.readMetaFile(spark, out,
+      "metadata/snap-1.txt")._1.head.recorded
+    val data = spark.read.parquet(file)
+    assert(st.rows == data.count() && st.rows == 3000)
+    assert(st.size == new java.io.File(file).length)
+    Seq("id", "inf", "zero", "gone", "nan", "s").foreach { c =>
+      assert(st.nulls(record.id(c)) == data.filter(col(c).isNull).count(),
+        s"null count of $c")
+    }
+    def agg(c: String) = data.agg(min(col(c)), max(col(c))).head
+    val id = agg("id")
+    assert(st.lower(record.id("id")).toLong == id.getLong(0) &&
+      st.upper(record.id("id")).toLong == id.getLong(1))
+    Seq("inf", "zero").foreach { c =>
+      val a = agg(c)
+      assert(st.lower(record.id(c)).toDouble == a.getDouble(0) &&
+        st.upper(record.id(c)).toDouble == a.getDouble(1),
+        s"bounds of $c: ${st.lower.get(record.id(c))} " +
+          s"${st.upper.get(record.id(c))} vs $a")
+    }
+    assert(st.lower(record.id("inf")) == "-Infinity" &&
+      st.upper(record.id("inf")) == "Infinity")
+    val s = agg("s")
+    assert(st.lower(record.id("s")) == s.getString(0) &&
+      st.upper(record.id("s")) == s.getString(1))
+    // no bounds where the footer has none: an all-NULL column, and a
+    // NaN-bearing double (Spark orders NaN above every value, so bounds
+    // that skipped it would prune a file a `nan > x` predicate matches)
+    Seq("gone", "nan").foreach { c =>
+      assert(!st.lower.contains(record.id(c)) &&
+        !st.upper.contains(record.id(c)), s"$c has bounds")
+    }
+    // so a range predicate never prunes the NaN-bearing file, while the
+    // all-NULL column excludes it, and real bounds prune as they say
+    assert(st.mayOverlap(record.id("nan"), 1e300, 1e301))
+    assert(!st.mayOverlap(record.id("gone"), -1e300, 1e300))
+    assert(st.mayOverlap(record.id("zero"), -1.0, 0.0) &&
+      !st.mayOverlap(record.id("zero"), 3000.0, 4000.0))
+  }
 }
