@@ -350,12 +350,12 @@ object IngestOps {
       .orderBy($"pos")
   }
 
-  /** `schema_infer_sample` — infer table schema from files in a directory
-    * (`Bulk:109-118` reads the first footer; Spark merges all footers,
-    * strictly stronger). */
+  /** `schema_infer_sample` — infer a table's schema from its file's
+    * footer on the driver, as `Bulk:109-118` reads the first footer
+    * ([[Tables.apply]]). */
   def schemaInferSample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/orders.parquet").schema
+    val schema = Tables.orders(spark, dir).schema
     schema.fields.zipWithIndex
       .map { case (f, i) => (i.toLong, f.name, f.dataType.sql) }
       .toSeq.toDF("pos", "col_name", "data_type")
@@ -1453,8 +1453,8 @@ object IngestOps {
     import spark.implicits._
     val root = snapshotLayout(spark, dir)
     (1 to 3).map { n =>
-      val id = LakeOps.snapshotSchema(spark, root, n).id("value")
-      val added = readMetaFile(spark, root, s"metadata/snap-$n.txt")._1
+      val (added, headers) = readMetaFile(spark, root, s"metadata/snap-$n.txt")
+      val id = LakeOps.namedSchema(spark, root, n, headers).id("value")
       val days = added.map(_.partition("day").get.toLong)
       val stats = added.map(_.recorded)
       (n.toLong, added.size.toLong, stats.map(_.rows).sum, days.min,
@@ -1492,9 +1492,17 @@ object IngestOps {
     * never-opened proof. */
   private[graft] def statsQualifyingFiles(spark: SparkSession, root: String,
       lo: Double, hi: Double): (Seq[String], Int) = {
-    val id = LakeOps.snapshotSchema(spark, root, 1).id("value")
-    val live = LakeOps.liveEntries(spark, root, Seq(1))
-    (live.filter(_.stats.forall(_.mayOverlap(id, lo, hi)))
+    val (_, hits, total) = statsPlanned(spark, root, lo, hi)
+    (hits, total)
+  }
+
+  /** [[statsQualifyingFiles]] with the schema record it planned under,
+    * from one read of the manifest. */
+  private def statsPlanned(spark: SparkSession, root: String, lo: Double,
+      hi: Double): (TableSchema, Seq[String], Int) = {
+    val (schema, live) = LakeOps.liveSnapshot(spark, root, 1)
+    val id = schema.id("value")
+    (schema, live.filter(_.stats.forall(_.mayOverlap(id, lo, hi)))
       .map(e => s"$root/data/${e.rel}").sorted, live.size)
   }
 
@@ -1567,10 +1575,11 @@ object IngestOps {
   def manifestNullPrune(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = nullStatsLayout(spark, dir)
-    val id = LakeOps.snapshotSchema(spark, root, 1).id("value")
-    val hits = LakeOps.liveEntries(spark, root, Seq(1))
-      .filter(_.stats.forall(_.nulls.get(id).forall(_ > 0))).map(_.rel).toSet
-    LakeOps.readLive(spark, root, Seq(1), hits)
+    val (schema, live) = LakeOps.liveSnapshot(spark, root, 1)
+    val id = schema.id("value")
+    val hits = live.filter(_.stats.forall(_.nulls.get(id).forall(_ > 0)))
+    LakeOps.readFiles(spark, s"$root/data",
+      hits.map(e => s"$root/data/${e.rel}"), schema)
       .filter($"value".isNull)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
@@ -1739,10 +1748,9 @@ object IngestOps {
   def manifestPruneScan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = statsLayout(spark, dir)
-    val (files, _) = statsQualifyingFiles(spark, root, 180.0, 220.0)
+    val (schema, files, _) = statsPlanned(spark, root, 180.0, 220.0)
     // zero qualifying files is a valid plan (empty answer), not an error
-    val hit = files.toSet
-    LakeOps.readLive(spark, root, Seq(1), rel => hit(s"$root/data/$rel"))
+    LakeOps.readFiles(spark, s"$root/data", files, schema)
       .filter($"value".between(180.0, 220.0))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), countDistinct($"user_id").as("n_users"),

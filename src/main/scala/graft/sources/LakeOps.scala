@@ -985,9 +985,23 @@ object LakeOps {
 
   /** The schema record snapshot `n` of `root` names. */
   private[graft] def snapshotSchema(spark: SparkSession, root: String,
-      n: Int): TableSchema = schemaRecord(spark, root,
-    IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt")._2
-      .getOrElse("schema", throw noRecord(root, n)))
+      n: Int): TableSchema = namedSchema(spark, root, n,
+    IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt")._2)
+
+  /** The schema record that snapshot `n`'s manifest `headers` name, for a
+    * caller that has read the manifest already. */
+  private[graft] def namedSchema(spark: SparkSession, root: String, n: Int,
+      headers: Map[String, String]): TableSchema = schemaRecord(spark, root,
+    headers.getOrElse("schema", throw noRecord(root, n)))
+
+  /** Snapshot `n`'s live entries ([[liveEntries]]) with the schema record
+    * it names, from one read of its manifest. */
+  private[graft] def liveSnapshot(spark: SparkSession, root: String,
+      n: Int): (TableSchema, Seq[ManifestEntry]) = {
+    val (name, entries) = liveEras(spark, root, Seq(n)).head
+    (schemaRecord(spark, root, name.getOrElse(throw noRecord(root, n))),
+      entries)
+  }
 
   private def noRecord(root: String, n: Int) =
     new IllegalStateException(s"snapshot $n of $root names no schema record")

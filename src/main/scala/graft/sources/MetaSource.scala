@@ -331,7 +331,7 @@ object GraftMetaSource {
       val (entries, headers) =
         IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt")
       val value = headers.get("schema").flatMap(_ => LakeOps
-        .snapshotSchema(spark, root, n).fields.find(_.name == "value")
+        .namedSchema(spark, root, n, headers).fields.find(_.name == "value")
         .flatMap(TableSchema.idOf))
       entries.map { e =>
         def bound(m: FileStats[Int] => Map[Int, String]) = for {

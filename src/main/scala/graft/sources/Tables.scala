@@ -1,6 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  InMemoryFileIndex, LogicalRelation, NoopCache}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver corpus (TESTDATA.md / FIXTURES.md §A).
   *
@@ -10,6 +16,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Spark vectorized parquet source: projection and predicates are pushed
   * down by Catalyst, so `Tables.lineitem(s, d).select(...).filter(...)`
   * reads only the needed columns/row-groups.
+  *
+  * Building a frame starts no Spark job. The schema comes from the file's
+  * footer, read on the driver as the reference reads it (`Main:30-37`);
+  * `spark.read.parquet` infers it with a one-task job per call instead.
+  * Every call lists the file and reads its footer afresh, so a file
+  * rewritten in place reads as it now is, and every frame has fresh
+  * attributes, so two frames of one table self-join.
   */
 object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
@@ -48,7 +61,57 @@ object Tables {
   }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** The parquet file, or directory of files, at `path`, as
+    * `spark.read.parquet(path)` reads it, built with no job: the index
+    * lists `path` on the driver, and the schema is the footer of the file
+    * Spark's inference would pick (a `_common_metadata`, else a
+    * `_metadata` summary, else the first data file in path order). */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val index = new InMemoryFileIndex(spark,
+      Seq(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(p)), Map.empty, None, NoopCache)
+    val summaries = Seq("_common_metadata", "_metadata")
+    val first = index.allFiles().minByOption { f =>
+      val name = f.getPath.getName
+      (summaries.indexOf(name) match { case -1 => 2; case i => i },
+        f.getPath.toString)
+    }.getOrElse(throw new IllegalArgumentException(s"no parquet file at $path"))
+    GraftBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(index,
+      index.partitionSchema, GraftBridge.asNullable(footerSchema(spark, first)),
+      None, new ParquetFileFormat, Map.empty)(spark)))
+  }
+
+  /** Footer-only read options, built once (building them loads the codec
+    * factory): the schema needs no row-group metadata. */
+  private lazy val SchemaOnly = org.apache.parquet.ParquetReadOptions
+    .builder().withMetadataFilter(org.apache.parquet.format.converter
+      .ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+
+  /** The Spark schema of the parquet file `status` from its footer,
+    * converted as Spark's schema inference converts one footer: the
+    * schema Spark wrote into the file if any, else the parquet schema
+    * under the session's binary, INT96, NTZ, nanos and unknown-type
+    * settings (the converter defaults for the rest, as inference has). */
+  private def footerSchema(spark: SparkSession, status: FileStatus)
+      : StructType = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status,
+        spark.sparkContext.hadoopConfiguration), SchemaOnly)
+    val footer = try r.getFooter finally r.close()
+    val conf = GraftBridge.sqlConf(spark)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(status.getPath, footer),
+      new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation =
+          conf.parquetReaderRespectUnknownTypeAnnotation))
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")

@@ -308,29 +308,11 @@ object StreamingOps {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** Cached footer-inferred schema of the events corpus file. Every
-    * file-source streaming key needs the batch schema up front
-    * (readStream.schema(...) is mandatory for file sources), and the
-    * inference read costs one scheduled job (~0.1 s) PER INVOCATION —
-    * across ~13 streaming keys × 2 bench samples that was ~2-3 s of
-    * pure re-inference of a schema that cannot change within a JVM
-    * (the corpus contract pins one flat file per table per sf dir;
-    * a corpus REGENERATION restarts the engine process). Keyed by
-    * path so multi-sf test sessions stay correct. */
-  private val eventsSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
+  /** The batch schema of the events corpus file (readStream.schema(...)
+    * is mandatory for file sources), from its footer with no job. */
   private def eventsSchema(spark: SparkSession, dir: String)
       : org.apache.spark.sql.types.StructType =
-    inferredSchema(spark, s"$dir/events.parquet")
-
-  /** Path-keyed inference cache — valid for corpus files AND for the
-    * fingerprint-keyed stream fixtures (their path changes whenever
-    * their content could, so a stale entry is unreachable). */
-  private def inferredSchema(spark: SparkSession, path: String)
-      : org.apache.spark.sql.types.StructType =
-    eventsSchemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    Tables(spark, dir, "events").schema
 
   /** `stream_hourly_rollup` — file-source stream over the events parquet →
     * 1-hour tumbling window counts/sums per event_type → memory sink in
@@ -839,7 +821,7 @@ object StreamingOps {
     // fingerprint-keyed layout, so the timed path is the stream drain,
     // not three single-file publishes
     val src = s"${lateDropLayout(spark, dir)}/src"
-    val schema = inferredSchema(spark, src)
+    val schema = Tables.parquet(spark, src).schema
     val queryName = s"stream_late_${System.nanoTime()}"
     val agg = spark.readStream
       .schema(schema)
@@ -1209,11 +1191,7 @@ object StreamingOps {
       } finally ls.close()
     }
     land("b1")
-    // cache key = the fingerprinted LAYOUT, not the fixed-path landing
-    // dir (src is deleted/re-landed per invocation, so its path could
-    // serve a stale entry across corpora; the layout path changes
-    // whenever its content could)
-    val schema = inferredSchema(spark, s"$lay/b1")
+    val schema = Tables.parquet(spark, s"$lay/b1").schema
     drainResumeOnce(spark, src, sink, cp, schema) // processes days 1-5
     land("b2")
     drainResumeOnce(spark, src, sink, cp, schema) // restart: days 6-8 only

@@ -26,6 +26,10 @@ object GraftBridge {
   def asNullable(schema: types.StructType): types.StructType =
     schema.asNullable
 
+  /** The session's SQL conf (`sessionState` is private[sql]). */
+  def sqlConf(spark: SparkSession): internal.SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
   /** The (pre-analysis) logical plan backing a Dataset. */
   def plan(df: Dataset[_]): catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan

@@ -52,6 +52,46 @@ class EngineSpec extends SparkSpecBase {
     }
   }
 
+  test("agg_approx_distinct plans distinct-first: per flag its exact and " +
+      "raw HLL counts equal the single-aggregate spelling's, and no " +
+      "aggregate grouped by l_orderkey carries an HLL buffer") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.aggregate.HyperLogLogPlusPlus
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    def perFlag(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val ours = operators.Aggregates.approxDistinctPerFlag(spark, sf)
+    val single = sources.Tables.lineitem(spark, sf)
+      .groupBy($"l_returnflag")
+      .agg(countDistinct($"l_orderkey").as("exact_orders"),
+        approx_count_distinct($"l_orderkey", 0.02).as("approx"))
+    val got = perFlag(ours)
+    assert(got.nonEmpty)
+    assert(got == perFlag(single))
+    // the aggregates that carry a sketch per order: grouped by the key
+    // the sketch counts
+    def sketchPerOrder(df: org.apache.spark.sql.DataFrame) = {
+      def aggs(p: org.apache.spark.sql.execution.SparkPlan)
+          : Seq[BaseAggregateExec] = p match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          aggs(a.executedPlan)
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          aggs(q.plan)
+        case a: BaseAggregateExec => a +: a.children.flatMap(aggs)
+        case o => o.children.flatMap(aggs)
+      }
+      aggs(df.queryExecution.executedPlan).filter(a =>
+        a.groupingExpressions.exists(_.references.exists(
+          _.name == "l_orderkey")) &&
+        a.aggregateExpressions.exists(_.aggregateFunction
+          .isInstanceOf[HyperLogLogPlusPlus]))
+    }
+    assert(sketchPerOrder(single).nonEmpty,
+      "the check no longer sees the single-aggregate plan's sketch")
+    assert(sketchPerOrder(ours).isEmpty, "an aggregate grouped by " +
+      s"l_orderkey carries an HLL buffer:\n${ours.queryExecution.executedPlan}")
+  }
+
   /** (file name, text) of every main source file. */
   private lazy val mainFiles: Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
@@ -257,6 +297,26 @@ class EngineSpec extends SparkSpecBase {
     assert(mainSources.exists { case (file, lines) =>
       file == "TableSchema.scala" && lines.exists(_.contains("def numbered(")) },
       "TableSchema.numbered not found")
+  }
+
+  test("corpus files are read only through Tables: no other code reads " +
+      "a \"$dir/<table>.parquet\" file with spark.read") {
+    // spark.read.parquet over a corpus file infers its schema with a
+    // Spark job on every call; Tables reads the footer on the driver
+    val corpusFile = ("\"\\$\\{?\\w+\\}?/(\\$\\{?\\w+\\}?|" +
+      sources.Tables.all.mkString("|") + ")\\.parquet\"").r
+    val batchRead = """spark\.read\b""".r
+    val offenders = mainStatements.collect {
+      case (file, enclosing, text) if file != "Tables.scala" &&
+          batchRead.findFirstIn(text).isDefined &&
+          corpusFile.findFirstIn(text).isDefined =>
+        s"$file ($enclosing): ${text.trim.take(160)}"
+    }
+    assert(offenders.isEmpty, "corpus reads outside Tables:\n  " +
+      offenders.mkString("\n  "))
+    assert(mainSources.exists { case (file, lines) =>
+      file == "Tables.scala" && lines.exists(_.contains("def apply(")) },
+      "Tables.apply not found")
   }
 
   test("one mutation path: no code spells partitionOverwriteMode") {

@@ -34,23 +34,6 @@ class IngestSpec extends SparkSpecBase {
     }.sortBy(_.rel)
   }
 
-  /** The number of Spark jobs `body` starts. */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
-
   /** (field id → column name) of the parquet footer of `file`. */
   private def footerFieldIds(file: String): Map[Int, String] = {
     import scala.jdk.CollectionConverters._
@@ -470,13 +453,13 @@ class IngestSpec extends SparkSpecBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("stats planning holds at metadata scale: a 100k-entry manifest " +
-      "plans with no job") {
+  /** A table root holding only a 100k-entry snapshot-1 manifest and its
+    * schema record: synthetic per-file stats at the 100 TB file count's
+    * order of magnitude, file i covering the value band [i, i+1). */
+  private lazy val megaManifest: String = {
     import spark.implicits._
     import graft.sources.{FileStats, IngestOps, ManifestEntry, TableSchema}
     val tmp = IngestOps.tmp("mega_manifest")
-    // synthetic per-file stats at the 100 TB file count's order of
-    // magnitude: file i covers the value band [i, i+1)
     val record = TableSchema.written(spark.range(1)
       .select($"id".cast("double").as("value")), Nil).numbered(None)
     val id = record.id("value")
@@ -487,6 +470,13 @@ class IngestSpec extends SparkSpecBase {
         f"part-$i%06d.parquet", FileStats(4096L, 1000L, Map(id -> 0L),
           Map(id -> i.toDouble.toString), Map(id -> (i + 1).toDouble.toString)))
         .line) :+ s"#schema ${record.name}"))
+    tmp
+  }
+
+  test("stats planning holds at metadata scale: a 100k-entry manifest " +
+      "plans with no job") {
+    import graft.sources.IngestOps
+    val tmp = megaManifest
     var planned: (Seq[String], Int) = null
     val jobs = jobsOf {
       planned = IngestOps.statsQualifyingFiles(spark, tmp, 500.5, 503.5)
@@ -499,6 +489,24 @@ class IngestSpec extends SparkSpecBase {
       s"got ${hits.size} hits: ${hits.take(5)}")
     // the whole 100k-entry manifest plans on the driver: no Spark job
     assert(jobs == 0, s"planning cost $jobs jobs")
+  }
+
+  test("stats planning over the 100k-entry manifest opens it once, and " +
+      "its schema record once") {
+    import scala.jdk.CollectionConverters._
+    val tmp = megaManifest
+    spark.sparkContext.hadoopConfiguration.set("fs.opencount.impl",
+      classOf[OpenCountingFileSystem].getName)
+    OpenCountingFileSystem.opens.clear()
+    val (hits, total) = graft.sources.IngestOps.statsQualifyingFiles(spark,
+      s"${OpenCountingFileSystem.Scheme}://$tmp", 500.5, 503.5)
+    assert(total == 100000 && hits.size == 4)
+    val opens = OpenCountingFileSystem.opens.asScala.toMap
+      .map { case (p, n) => p.stripPrefix(s"$tmp/") -> n.intValue }
+    val record = opens.keys.filter(_.startsWith("metadata/schema-")).toSeq
+    assert(record.size == 1, s"opened: $opens")
+    assert(opens == Map("metadata/snap-1.txt" -> 1, record.head -> 1),
+      s"opened: $opens")
   }
 
   test("building the stats-planned frames of manifest_prune_scan, " +

@@ -8,6 +8,23 @@ trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
   val sf: String = "/root/testdata/sf0.001"
 
+  /** The number of Spark jobs `body` starts. */
+  def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   /** All FileSourceScanExec nodes of an executed plan, descending
     * through the AQE wrappers (AdaptiveSparkPlanExec holds the live
     * plan; QueryStageExec is a LEAF whose real subtree hangs off

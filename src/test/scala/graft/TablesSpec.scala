@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -105,6 +107,60 @@ class TablesSpec extends SparkSpecBase {
     val bad = ev.select($"ts", timestamp_micros(unix_micros($"ts")).as("rt"))
       .filter($"ts" =!= $"rt").count()
     assert(bad == 0, s"$bad rows lost precision in the micros round-trip")
+  }
+
+  test("building corpus frames starts no Spark job; spark.read.parquet " +
+      "infers the schema with one") {
+    import graft.sources.Tables
+    Tables.lineitem(spark, sf) // first use loads the reader classes
+    val jobs = jobsOf {
+      Tables.lineitem(spark, sf); Tables.events(spark, sf)
+      Tables.orders(spark, sf)
+    }
+    assert(jobs == 0, s"building three frames started $jobs jobs")
+    val inferred = jobsOf(spark.read.parquet(s"$sf/orders.parquet"))
+    assert(inferred > 0, "spark.read.parquet no longer starts an " +
+      "inference job: the footer read in Tables saves nothing")
+  }
+
+  test("two orders frames self-join on their own columns, matching the " +
+      "spark.read.parquet spelling") {
+    def selfJoin(a: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame) =
+      a.join(b, a("o_custkey") === b("o_custkey") &&
+          a("o_orderkey") < b("o_orderkey"))
+        .select(a("o_orderkey"), b("o_orderkey"), b("o_totalprice"))
+        .collect().map(_.toSeq).toSeq.sortBy(r => (r(0).toString, r(1).toString))
+    val got = selfJoin(graft.sources.Tables.orders(spark, sf),
+      graft.sources.Tables.orders(spark, sf))
+    val want = selfJoin(spark.read.parquet(s"$sf/orders.parquet"),
+      spark.read.parquet(s"$sf/orders.parquet"))
+    assert(got.nonEmpty)
+    assert(got == want)
+  }
+
+  test("a corpus file rewritten in place reads with its new schema in " +
+      "the same session") {
+    import spark.implicits._
+    val root = graft.sources.IngestOps.tmp("tables_rewrite")
+    val file = java.nio.file.Paths.get(root, "orders.parquet")
+    def writeFlat(df: org.apache.spark.sql.DataFrame): Unit = {
+      val stage = s"$root/stage"
+      df.coalesce(1).write.mode("overwrite").parquet(stage)
+      val part = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
+        .iterator().asScala.filter(_.toString.endsWith(".parquet")).next()
+      java.nio.file.Files.move(part, file,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeFlat(Seq(1L, 2L).toDF("o_orderkey"))
+    val before = graft.sources.Tables.orders(spark, root)
+    assert(before.columns.toSeq == Seq("o_orderkey"))
+    assert(before.count() == 2)
+    writeFlat(Seq((3L, "x"), (4L, "y"), (5L, "z")).toDF("o_orderkey", "tag"))
+    val after = graft.sources.Tables.orders(spark, root)
+    assert(after.columns.toSeq == Seq("o_orderkey", "tag"))
+    assert(after.as[(Long, String)].collect().sorted.toSeq ==
+      Seq((3L, "x"), (4L, "y"), (5L, "z")))
   }
 
   test("local FS listings carry eagerly-loaded permissions (no lazy " +
