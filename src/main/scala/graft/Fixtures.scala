@@ -49,6 +49,8 @@ object Fixtures {
         (() => sources.LakeOps.versionedBaseLayout(spark, dir)),
       "events_refs" ->
         (() => sources.LakeOps.refsLayout(spark, dir)),
+      "events_branches" ->
+        (() => sources.LakeOps.branchesLayout(spark, dir)),
       "events_history" ->
         (() => sources.LakeOps.historyLayout(spark, dir)),
       "events_manifests" ->

@@ -888,33 +888,36 @@ object IngestOps {
   }
 
   /** Parse the newline-delimited metadata file `root/rel` into its
-    * entries ([[ManifestEntry]]: a path or value, and a snapshot
-    * manifest's per-file stats) and its `#key value` header lines (a
-    * snapshot manifest's `#schema` pointer and `#crc` checksum); both
-    * empty when absent. A file whose `#crc` disagrees with its other
-    * lines ([[ManifestEntry.seal]]) throws. ONE parser behind every
-    * manifest/ref/log surface so the encoding can never diverge between
-    * them. */
+    * entries ([[ManifestEntry]]: a path or value, with a snapshot
+    * manifest's stats), its `#key value` headers and, apart, a snapshot
+    * manifest's removal entries — ONE parser behind every manifest/ref/log
+    * surface. A `#crc` mismatch ([[ManifestEntry.seal]]) throws, and so
+    * does an absent `metadata/snap-N.txt`, whose files a reader taking it
+    * as empty would drop; any other absent file reads as empty. */
   private[graft] def readMetaFile(spark: SparkSession, root: String,
-      rel: String): (Seq[ManifestEntry], Map[String, String]) = {
+      rel: String): (Seq[ManifestEntry], Map[String, String],
+      Seq[ManifestEntry]) = {
     val p = new org.apache.hadoop.fs.Path(root, rel)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) (Seq.empty, Map.empty)
-    else {
-      val in = fs.open(p)
-      val txt = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val lines = txt.split("\n").toSeq.filter(_.nonEmpty)
-      val (headers, entries) = lines.partition(_.startsWith("#"))
-      val hs = headers.map(_.drop(1).split(" ", 2))
-        .map(kv => kv(0) -> kv.lift(1).getOrElse("")).toMap
-      hs.get("crc").foreach { crc =>
-        val got = ManifestEntry.crc(lines.filterNot(_.startsWith("#crc ")))
-        if (got != crc) throw new IllegalStateException(s"$root/$rel is " +
-          s"damaged: its lines checksum to $got, its #crc header says $crc")
-      }
-      (entries.map(ManifestEntry.parse), hs)
+    val in = try fs.open(p) catch {
+      case e: java.io.FileNotFoundException =>
+        if (rel.matches("metadata/snap-\\d+\\.txt")) throw
+          new IllegalStateException(s"$root/$rel is missing", e)
+        return (Seq.empty, Map.empty, Seq.empty)
     }
+    val txt = try new String(in.readAllBytes(),
+      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+    val lines = txt.split("\n").toSeq.filter(_.nonEmpty)
+    val (headers, entries) = lines.partition(_.startsWith("#"))
+    val hs = headers.map(_.drop(1).split(" ", 2))
+      .map(kv => kv(0) -> kv.lift(1).getOrElse("")).toMap
+    hs.get("crc").foreach { crc =>
+      val got = ManifestEntry.crc(lines.filterNot(_.startsWith("#crc ")))
+      if (got != crc) throw new IllegalStateException(s"$root/$rel is " +
+        s"damaged: its lines checksum to $got, its #crc header says $crc")
+    }
+    val (removed, added) = entries.map(ManifestEntry.parse).partition(_.removed)
+    (added, hs, removed)
   }
 
   /** The entry paths of the metadata file `root/rel` ([[readMetaFile]]). */
@@ -1453,7 +1456,8 @@ object IngestOps {
     import spark.implicits._
     val root = snapshotLayout(spark, dir)
     (1 to 3).map { n =>
-      val (added, headers) = readMetaFile(spark, root, s"metadata/snap-$n.txt")
+      val (added, headers, _) =
+        readMetaFile(spark, root, s"metadata/snap-$n.txt")
       val id = LakeOps.namedSchema(spark, root, n, headers).id("value")
       val days = added.map(_.partition("day").get.toLong)
       val stats = added.map(_.recorded)

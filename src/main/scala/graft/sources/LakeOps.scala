@@ -67,28 +67,28 @@ object LakeOps {
 
   /** The copy-on-write commit every row-level write takes (Iceberg's
     * overwrite-by-filter snapshot): `table` is the table as the mutation
-    * leaves it, and only its `days` are written. Those days' files, taken
-    * from `main`'s live set, are the removal set; their new rows are
-    * staged day-partitioned (the day filter prunes the scan) and
-    * [[commit]] links both halves at once and moves `main`. A day whose
-    * every row was deleted stages no file and so drops out of the live
-    * set; every other day keeps its files. A replace commit has one
-    * writer and one attempt; losing the slot throws. Steps as
-    * [[appendCommit]]. Returns the slot won. */
+    * leaves it, read at snapshot `base` ([[readMain]]); only its `days`
+    * are staged, day-partitioned, and their files live at `base` are the
+    * removal set, so a day whose every row was deleted drops out. A lost
+    * slot retries up to [[RewriteAttempts]] times; a conflict
+    * ([[validate]]) throws. Steps as [[appendCommit]]. Returns the slot. */
   private[graft] def rewriteDays(spark: SparkSession, root: String,
-      table: DataFrame, days: Seq[Int],
+      base: Int, table: DataFrame, days: Seq[Int],
       onStep: String => Unit = _ => ()): Int = {
     import spark.implicits._
-    val touched = liveEntries(spark, root, 1 to mainSnapshot(spark, root))
-      .filter(_.partition("day").exists(days.contains))
-      .map(_.rel)
+    val touched = liveEntries(spark, root, 1 to base)
+      .collect { case e if e.partition("day").exists(days.contains) => e.rel }
     val rows = table.filter($"day".isin(days.map(Int.box): _*))
     val won = commit(spark, root, stage(spark, root, onStep)(
-      rows.repartition($"day")), removed = touched, onStep = onStep)
-    if (won < 0) throw new IllegalStateException(
-      s"copy-on-write commit on $root lost its snapshot slot to another writer")
+      rows.repartition($"day")), Some(Removal(base, touched)),
+      maxAttempts = RewriteAttempts, onStep = onStep)
+    if (won < 0) throw new IllegalStateException(s"copy-on-write commit " +
+      s"on $root lost $RewriteAttempts snapshot slots to other writers")
     won
   }
+
+  /** CAS attempts a [[rewriteDays]] commit makes before it gives up. */
+  private val RewriteAttempts = 10
 
   /** The MERGE fixture's source frame, shared by [[mergeUpsert]] and
     * [[mergeUpsertEvolve]] so the (day window, even-key predicate,
@@ -122,10 +122,11 @@ object LakeOps {
     val updates = mergeUpdates(spark, dir)
     // partition keys touched by the merge — metadata cardinality only
     val days = touchedDays(updates)
-    val merged = readCurrent(spark, out)
+    val (base, current) = readMain(spark, out)
+    val merged = current
       .join(updates.select($"event_id"), Seq("event_id"), "left_anti")
       .unionByName(updates)
-    rewriteDays(spark, out, merged, days)
+    rewriteDays(spark, out, base, merged, days)
     readCurrent(spark, out)
       .filter($"day".between(6, 14))
       .groupBy($"day".cast("long").as("day"))
@@ -156,11 +157,12 @@ object LakeOps {
     val days = touchedDays(updates)
     // the evolution: touched-partition survivors adopt the widened
     // schema (NULL origin); untouched footers are never rewritten
-    val merged = readCurrent(spark, out)
+    val (base, current) = readMain(spark, out)
+    val merged = current
       .join(updates.select($"event_id"), Seq("event_id"), "left_anti")
       .withColumn("origin", lit(null).cast("string"))
       .unionByName(updates)
-    rewriteDays(spark, out, merged, days)
+    rewriteDays(spark, out, base, merged, days)
     readCurrent(spark, out)
       .filter($"day".between(6, 14))
       .groupBy($"day".cast("long").as("day"))
@@ -180,10 +182,10 @@ object LakeOps {
     import spark.implicits._
     val out = IngestOps.tmp("events_delete")
     cloneTree(cowBaseLayout(spark, dir), out)
-    val base = readCurrent(spark, out)
+    val (at, base) = readMain(spark, out)
     val doomed = $"event_type" === "click" && $"day".between(3, 7)
     val days = touchedDays(base.filter(doomed))
-    rewriteDays(spark, out, base.filter(!doomed), days)
+    rewriteDays(spark, out, at, base.filter(!doomed), days)
     readCurrent(spark, out)
       .filter($"day".between(1, 10))
       .groupBy($"day".cast("long").as("day"))
@@ -429,7 +431,7 @@ object LakeOps {
     val out = IngestOps.tmp("events_mor_compact")
     val del = IngestOps.tmp("events_mor_compact_deletes")
     cloneTree(cowBaseLayout(spark, dir), out)
-    val base = readCurrent(spark, out)
+    val (at, base) = readMain(spark, out)
     // the MoR delete commit ([[deleteMor]]'s shape): doomed KEYS only
     base.filter($"event_type" === "purchase" && $"day".between(5, 9))
       .select($"event_id")
@@ -441,7 +443,7 @@ object LakeOps {
     val days = touchedDays(
       base.join(boundedBroadcast(deletes), Seq("event_id"), "left_semi"))
     // fold the deletes into ONLY those partitions' data files
-    rewriteDays(spark, out,
+    rewriteDays(spark, out, at,
       base.join(boundedBroadcast(deletes), Seq("event_id"), "left_anti"),
       days)
     // the delete file is now redundant — remove it; the table is pure
@@ -459,18 +461,13 @@ object LakeOps {
   }
 
   /** One optimistic-concurrency commit attempt: CAS the manifest slot for
-    * snapshot `n`. This link is the ONLY place an add manifest
-    * (`snap-N.txt`) of a versioned commit is written: every commit, append
-    * or replace, reaches it through [[stage]] then [[commit]] (EngineSpec
-    * lints the source for any other writer). A replace commit's removal
-    * manifest lands BEFORE this link and needs a single writer (see
-    * [[commit]]). The manifest is written COMPLETE to a private attempt
-    * file first, then the slot is claimed with an atomic hard link (link(2)
-    * fails with EEXIST) — so the slot can never hold a partial manifest, a
-    * failed write never occupies it, and two writers can never both win.
-    * Returns false when another writer owns the slot — the caller re-reads
-    * the table state and retries on the next one, exactly Iceberg's
-    * commit-retry loop against the catalog pointer. */
+    * snapshot `n`, the ONLY place a versioned commit's `snap-N.txt` is
+    * written (EngineSpec lints for any other writer). The manifest, adds
+    * and removal entries alike, is written COMPLETE to a private attempt
+    * file, then the slot is claimed with an atomic hard link (link(2)
+    * fails with EEXIST): the slot never holds a partial manifest and two
+    * writers never both win. Returns false when another writer owns the
+    * slot — Iceberg's commit-retry loop against the catalog pointer. */
   private[graft] def tryCommit(spark: SparkSession, root: String, n: Int,
       files: Iterable[String],
       onStep: String => Unit = _ => ()): Boolean = {
@@ -570,12 +567,13 @@ object LakeOps {
 
   /** The manifest lines committing `staged` as snapshot `slot`, sealed
     * ([[ManifestEntry.seal]]): one entry per file, stats keyed by field
-    * id, and a `#schema` header naming its record, numbered on top of
-    * snapshot `slot - 1`'s and written (write-then-link) before the CAS;
-    * an existing record gets a fresh mtime so an age-gated
-    * [[orphanSweep]] cannot reclaim it before the link. */
+    * id, one removal entry per `removed` file, and a `#schema` header
+    * naming its record, numbered on top of snapshot `slot - 1`'s and
+    * written (write-then-link) before the CAS; an existing record gets a
+    * fresh mtime so an age-gated [[orphanSweep]] cannot reclaim it
+    * before the link. */
   private[graft] def manifestLines(spark: SparkSession, root: String,
-      slot: Int, staged: Staged): Seq[String] = {
+      slot: Int, staged: Staged, removed: Seq[String] = Nil): Seq[String] = {
     val base = if (slot > 1) Some(snapshotSchema(spark, root, slot - 1))
       else None
     val record = staged.schema.numbered(base)
@@ -594,42 +592,36 @@ object LakeOps {
     val ids = record.data.flatMap(f => TableSchema.idOf(f).map(f.name -> _)).toMap
     val added = staged.files.map(f => staged.footers.get(f)
       .fold(ManifestEntry(f))(st => ManifestEntry.of(f, st.rekey(ids.get))))
-    ManifestEntry.seal((added ++ staged.carried).map(_.line) :+
+    ManifestEntry.seal((added ++ staged.carried ++
+      removed.map(ManifestEntry(_, removed = true))).map(_.line) :+
       s"#schema ${record.name}")
   }
 
-  /** Commit step 2, PUBLISH: CAS a manifest naming `staged`'s files and
-    * schema record ([[manifestLines]]) into the next free slot
-    * ([[tryCommit]]), re-reading the slot and retrying up to
-    * `maxAttempts` times when another writer wins — staged files are
-    * REUSED across retries, and the schema is renumbered on top of the
-    * snapshot each attempt builds on. A REPLACE commit (non-empty
-    * `removed`) writes `snap-N.removed.txt` BEFORE the link, so the
-    * instant snapshot N becomes visible both halves exist: no reader can
-    * see the new files without the removal (doubled rows). That pre-link
-    * write is also why a replace commit needs a SINGLE writer — a racer
-    * winning slot N would adopt the removal set as its own — so it
-    * gets exactly one attempt, and callers must not race it. After the
-    * link, `ref` (if any) moves forward-only ([[setRefIfForward]]), so
-    * a slower writer never unpublishes a faster one's higher slot.
-    * Emits "attempt-written" (per attempt) and "linked". Returns the
-    * slot won, or -1 when every attempt lost. */
+  /** A replace commit's removal set: `files` (relative to `data/`), live
+    * at snapshot `base`, the snapshot its staged rows were read at. */
+  private[graft] case class Removal(base: Int, files: Seq[String])
+
+  /** Commit step 2, PUBLISH: CAS a manifest of `staged`'s files,
+    * `removal`'s as removal entries and the schema record
+    * ([[manifestLines]]) into the next free slot ([[tryCommit]]),
+    * retrying on the next slot up to `maxAttempts` times with the same
+    * staged files. A replace commit is [[validate]]d before each attempt.
+    * After the link `ref` (if any) moves forward-only
+    * ([[setRefIfForward]]). Emits "attempt-written" (per attempt) and
+    * "linked". Returns the slot won, or -1 when every attempt lost. */
   private[graft] def commit(spark: SparkSession, root: String,
-      staged: Staged, removed: Seq[String] = Nil,
+      staged: Staged, removal: Option[Removal] = None,
       ref: Option[String] = Some("main"), maxAttempts: Int = 1,
       onStep: String => Unit = _ => ()): Int = {
-    require(removed.isEmpty || maxAttempts == 1,
-      "a replace commit needs a single writer and cannot retry on a " +
-        "slot another writer may have taken")
     var attempt = 0
     var won = -1
     while (won < 0 && attempt < maxAttempts) {
       attempt += 1
       val slot = nextSlot(root)
-      if (removed.nonEmpty)
-        writeManifest(spark, root, s"snap-$slot.removed.txt", removed)
-      if (tryCommit(spark, root, slot,
-          manifestLines(spark, root, slot, staged), onStep)) won = slot
+      removal.foreach(validate(spark, root, slot, staged, _))
+      if (tryCommit(spark, root, slot, manifestLines(spark, root, slot,
+          staged, removal.fold(Seq.empty[String])(_.files)), onStep))
+        won = slot
     }
     if (won > 0) {
       onStep("linked")
@@ -638,19 +630,37 @@ object LakeOps {
     won
   }
 
+  /** Conflict validation of a replace commit about to take `slot`
+    * (Iceberg's `validateNoConflictingDataFiles`): a snapshot linked after
+    * the base that removed a file of the removal set, or changed a file in
+    * a `day` the commit removes from or writes to (no `day` = every day),
+    * throws naming it; the staged files are left to [[orphanSweep]]. */
+  private def validate(spark: SparkSession, root: String, slot: Int,
+      staged: Staged, removal: Removal): Unit = {
+    val files = removal.files.toSet
+    val days = (staged.files ++ files).map(ManifestEntry(_).partition("day"))
+    (removal.base + 1 until slot).foreach { n =>
+      val (added, _, removed) =
+        IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt")
+      def conflict(what: String) = throw new IllegalStateException(
+        s"replace commit on $root (base snapshot ${removal.base}) " +
+          s"conflicts with snapshot $n, which $what")
+      removed.find(e => files(e.rel))
+        .foreach(e => conflict(s"removed ${e.rel}"))
+      (added ++ removed).map(e => e -> e.partition("day")).find {
+        case (_, d) => d.isEmpty || days.contains(None) || days.contains(d) }
+        .foreach { case (e, d) => conflict(d.fold(s"changed ${e.rel}")(
+          day => s"changed day $day")) }
+    }
+  }
+
   /** The append commit: [[stage]] `slice` as day-partitioned parquet, then
-    * [[commit]] it and move `main` — the one commit path every versioned
-    * write takes, here with no removal set, so it may retry and is
-    * multi-writer-safe across PROCESSES (replace commits write their
-    * removals before the link and need a single writer). Steps: "staged",
-    * "data-written", "attempt-written" (per CAS attempt), "linked".
-    * Production passes the no-op `onStep`; the crash-consistency specs
-    * throw there to prove a writer killed at ANY point leaves readers on
-    * the old snapshot (never a torn one) and leaves only debris
-    * [[orphanSweep]] can reclaim. This is the reference's atomic-commit
-    * contract (`Bulk:97-101`): the manifest link is the linearization
-    * point; everything before it is invisible. Returns the slot won, or -1
-    * when every CAS attempt lost. */
+    * [[commit]] it and move `main`; multi-writer-safe across PROCESSES.
+    * Steps: "staged", "data-written", "attempt-written" (per CAS attempt),
+    * "linked" — the crash-consistency specs throw there to prove a writer
+    * killed at ANY point leaves readers on the old snapshot and only debris
+    * [[orphanSweep]] reclaims: the manifest link is the linearization point
+    * (`Bulk:97-101`). Returns the slot won, or -1 when every attempt lost. */
   private[graft] def appendCommit(spark: SparkSession, root: String,
       slice: DataFrame, maxAttempts: Int = 1,
       onStep: String => Unit = _ => ()): Int = {
@@ -661,26 +671,14 @@ object LakeOps {
 
   /** Orphan cleanup (Iceberg's `remove_orphan_files`): reclaim every
     * file a crashed writer left that NO committed snapshot references —
-    * data files absent from all `snap-*.txt` manifests, schema records
-    * no manifest names, stale `*.attempt-*` CAS leftovers, and
-    * `snap-N.removed.txt` files with
-    * no `snap-N.txt` — a replace commit killed between its removal
-    * write and its link (a [[commit]] always links an adds manifest,
-    * empty for a pure delete, so a lone removal set is never a
-    * snapshot; left in place it would be adopted by the next commit
-    * to win slot N). Conservative by construction: a file
-    * any manifest names is never touched, so a commit that reached its
-    * link (even if the writer died before the ref move) keeps all its
-    * files and stays recoverable by rolling the ref forward.
-    *
-    * `graceMs` is Iceberg's `older_than` contract: debris younger than
-    * the grace window is an IN-FLIGHT writer's working set, not an
-    * orphan — a commit's files exist unreferenced between publish and
-    * link, and a bare sweep racing that window would reclaim a live
-    * commit's data. With a grace longer than any plausible
-    * stage-to-link latency the sweep is safe to run beside writers;
-    * grace 0 is the post-mortem form the crash specs use. Returns the
-    * reclaimed root-relative paths. */
+    * data files no `snap-*.txt` names, schema records none names, stale
+    * `*.attempt-*` CAS files and `.stage-*` dirs. Every slot below
+    * [[nextSlot]] is read (a missing manifest throws), so a commit that
+    * linked but died before its ref move keeps every file. `graceMs` is
+    * Iceberg's `older_than`: younger debris is an IN-FLIGHT writer's
+    * working set, so a grace longer than any stage-to-link latency makes
+    * the sweep safe beside writers; grace 0 is the post-mortem form the
+    * crash specs use. Returns the reclaimed root-relative paths. */
   private[graft] def orphanSweep(spark: SparkSession, root: String,
       graceMs: Long = 0L): Seq[String] = {
     val cutoff = System.currentTimeMillis() - graceMs
@@ -688,27 +686,21 @@ object LakeOps {
       try java.nio.file.Files.getLastModifiedTime(p).toMillis <= cutoff
       catch { case _: java.io.IOException => false } // vanished: skip
     val meta = java.nio.file.Paths.get(root, "metadata")
-    val snapRe = """snap-(\d+)\.txt""".r
-    val snaps = metadataNames(root)
-    val linked = snaps.collect { case snapRe(n) => n.toInt }
-    val manifests = linked.map(n =>
+    val manifests = (1 until nextSlot(root)).map(n =>
       IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt"))
     val referenced = manifests.flatMap(_._1.map(_.rel)).toSet
     val named = manifests.flatMap(_._2.get("schema")).toSet
     // a writer killed at "staged" has published nothing to data/ yet
-    val published =
-      if (fsExists(spark, root, "data")) listData(spark, s"$root/data")
-      else Set.empty[String]
+    val published = if (!IngestOps.fsExists(spark, s"$root/data"))
+      Set.empty[String] else IngestOps.listDataFiles(spark, s"$root/data")
     val dataOrphans = (published -- referenced).toSeq
       .filter(rel => aged(java.nio.file.Paths.get(s"$root/data/$rel")))
     val fs = hfs(spark, root)
     dataOrphans.foreach { rel => IngestOps.deleteOrThrow(fs,
       new org.apache.hadoop.fs.Path(s"$root/data/$rel"), recursive = false)
     }
-    val removedRe = """snap-(\d+)\.removed\.txt""".r
     val recordRe = """schema-[-0-9a-f]+\.json""".r
-    val metaOrphans = snaps.filter {
-      case removedRe(n) => !linked.contains(n.toInt)
+    val metaOrphans = metadataNames(root).filter {
       case r @ recordRe() => !named.contains(r)
       case a => a.contains(".attempt-")
     }.filter(a => aged(meta.resolve(a)))
@@ -729,18 +721,20 @@ object LakeOps {
 
   /** The default reader: follow the `main` ref to its snapshot and
     * plan from the manifests at or below it — the view every kill
-    * point in [[appendCommit]] must leave intact. A table with no
-    * `main` ref has never committed, and reading it is an error. */
+    * point in [[appendCommit]] must leave intact. */
   private[graft] def readCurrent(spark: SparkSession,
-      root: String): DataFrame =
-    readLive(spark, root, 1 to mainSnapshot(spark, root))
+      root: String): DataFrame = readMain(spark, root)._2
 
-  /** The snapshot `main` points at; a table with no `main` ref has never
-    * committed. */
-  private def mainSnapshot(spark: SparkSession, root: String): Int =
-    readRefs(spark, root).getOrElse("main",
-      throw new IllegalStateException(s"table $root has no main ref: " +
+  /** `main`'s snapshot and the table as of it: the base a replace commit
+    * ([[rewriteDays]]) plans from. A table with no `main` ref has never
+    * committed, and reading it is an error. */
+  private[graft] def readMain(spark: SparkSession,
+      root: String): (Int, DataFrame) = {
+    val s = readRefs(spark, root).getOrElse("main", throw
+      new IllegalStateException(s"table $root has no main ref: " +
         "no snapshot has been committed"))
+    s -> readLive(spark, root, 1 to s)
+  }
 
   /** `commit_conflict_retry` — the optimistic-concurrency commit
     * protocol (the serializable-snapshot contract behind the
@@ -857,10 +851,10 @@ object LakeOps {
     import spark.implicits._
     val out = IngestOps.tmp("events_update")
     cloneTree(cowBaseLayout(spark, dir), out)
-    val base = readCurrent(spark, out)
+    val (at, base) = readMain(spark, out)
     val hit = $"event_type" === "purchase" && $"day".between(3, 7)
     val days = touchedDays(base.filter(hit))
-    rewriteDays(spark, out,
+    rewriteDays(spark, out, at,
       base.withColumn("value", when(hit, $"value" * 2).otherwise($"value")),
       days)
     readCurrent(spark, out)
@@ -874,9 +868,9 @@ object LakeOps {
 
   // ---- versioned-table emulation for the maintenance ops --------------
   // Delta manifests: metadata/snap-N.txt lists the data files snapshot N
-  // ADDED, one ManifestEntry line each (path, TAB, stats JSON), under a
-  // `#schema` header naming its schema record and a `#crc` checksum;
-  // metadata/snap-N.removed.txt the files it logically REPLACED.
+  // ADDED, one ManifestEntry line each (path, TAB, stats JSON), and, as
+  // `-<path>` removal entries, the files it logically REPLACED, under a
+  // `#schema` header naming its schema record and a `#crc` checksum.
   // Live view of snapshot S = union(adds 1..S) − union(removes 1..S) —
   // the Iceberg metadata tree (`Debug:164-196`) reduced to its delta
   // essence, so every read below is file-list-driven (metadata cost),
@@ -894,9 +888,6 @@ object LakeOps {
   private def hfs(spark: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def listData(spark: SparkSession, data: String): Set[String] =
-    IngestOps.listDataFiles(spark, data)
 
   private def writeManifest(spark: SparkSession, root: String,
       name: String, files: Iterable[String]): Unit =
@@ -974,13 +965,11 @@ object LakeOps {
     * schema record the snapshot that added it names (`#schema`). */
   private def liveEras(spark: SparkSession, root: String,
       snaps: Seq[Int]): Seq[(Option[String], Seq[ManifestEntry])] = {
-    val removed = snaps.flatMap(n =>
-      readManifest(spark, root, s"snap-$n.removed.txt")).toSet
-    snaps.map { n =>
-      val (entries, headers) =
-        IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt")
-      headers.get("schema") -> entries.filterNot(e => removed(e.rel))
-    }
+    val read = snaps.map(n =>
+      IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt"))
+    val removed = read.flatMap(_._3.map(_.rel)).toSet
+    read.map { case (entries, headers, _) =>
+      headers.get("schema") -> entries.filterNot(e => removed(e.rel)) }
   }
 
   /** The schema record snapshot `n` of `root` names. */
@@ -1137,6 +1126,26 @@ object LakeOps {
     }
   }
 
+  /** Shared fingerprint-keyed BRANCHES fixture, the [[branchRead]] table:
+    * [[writeVersioned]], `main` at 3, the `v1` tag at 2 and snapshot 4
+    * (days 16-18) committed on the `audit` branch. */
+  private[graft] def branchesLayout(spark: SparkSession,
+      dir: String): String = {
+    import spark.implicits._
+    val out = IngestOps.sharedFor(spark, "events_branches_v1", dir)
+    IngestOps.buildShared(spark, out) { root =>
+      writeVersioned(spark, dir, root)
+      setRef(spark, root, "main", 3)
+      setRef(spark, root, "v1", 2) // a TAG: an immutable snapshot name
+      commit(spark, root, stage(spark, root)(
+        IngestOps.eventsWithParts(spark, dir)
+          .filter($"day".between(16, 18))
+          .select($"event_id", $"user_id", $"event_type", $"value", $"day")
+          .repartition($"day")),
+        ref = Some("audit"))
+    }
+  }
+
   /** Shared fingerprint-keyed HISTORY fixture — the [[metaHistory]]
     * choreography (commits 1→2→3, rollback to 2, divergent 4, with the
     * made-current log and parentage persisted) built ONCE per corpus
@@ -1166,14 +1175,14 @@ object LakeOps {
   }
 
   /** Shared fingerprint-keyed MANIFESTS fixture — the [[metaManifests]]
-    * choreography (three appends + a day≤3 compaction that commits an
-    * adds AND a removes manifest), built once per corpus lifetime (see
+    * choreography (three appends + a day≤3 compaction whose manifest
+    * holds adds AND removal entries), built once per corpus lifetime (see
     * [[historyLayout]] for why the metadata tables share their
     * fixtures). */
   private[graft] def manifestsLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    val out = IngestOps.sharedFor(spark, "events_manifests_v3", dir)
+    val out = IngestOps.sharedFor(spark, "events_manifests_v4", dir)
     IngestOps.buildShared(spark, out) { root =>
       // the three-commit choreography IS buildVersioned's, unfragmented
       // (this fixture exercises manifest planning, not compaction work);
@@ -1184,7 +1193,7 @@ object LakeOps {
         .filter(_.partition("day").exists(_ <= 3)).map(_.rel)
       commit(spark, root, stage(spark, root)(
         ev.filter($"day" <= 3).repartition($"day")),
-        removed = oldDays, ref = None)
+        Some(Removal(3, oldDays)), ref = None)
     }
   }
 
@@ -1365,9 +1374,9 @@ object LakeOps {
     local.repartition($"day")
       .write.mode(SaveMode.Append).option("compression", "zstd")
       .partitionBy("day").parquet(data)
-    val written = listData(spark, data).toSeq.map(rel => ("L|" + rel) ->
-      ManifestEntry.footer(spark.sparkContext.hadoopConfiguration,
-        s"$data/$rel", "parquet"))
+    val written = IngestOps.listDataFiles(spark, data).toSeq.map(rel =>
+      ("L|" + rel) -> ManifestEntry.footer(
+        spark.sparkContext.hadoopConfiguration, s"$data/$rel", "parquet"))
     writeManifest(spark, clone, "snap-4.txt", manifestLines(spark, clone, 4,
       Staged(written.map(_._1), TableSchema.written(local), written.toMap)))
     cloneRead(spark, clone)
@@ -1390,7 +1399,7 @@ object LakeOps {
     val base = IngestOps.readMetaLines(spark, clone, "metadata/base.txt").head
     val data = s"$clone/data"
     val eras = (1 to 4).flatMap { n =>
-      val (lines, headers) =
+      val (lines, headers, _) =
         IngestOps.readMetaFile(spark, clone, s"metadata/snap-$n.txt")
       val record = headers.getOrElse("schema", throw noRecord(clone, n))
       lines.map(_.rel).map {
@@ -1414,7 +1423,7 @@ object LakeOps {
   private[graft] def expireBaseLayout(spark: SparkSession,
       dir: String): String = {
     import spark.implicits._
-    val base = IngestOps.sharedFor(spark, "events_expirebase_v3", dir)
+    val base = IngestOps.sharedFor(spark, "events_expirebase_v4", dir)
     IngestOps.buildShared(spark, base) { root =>
       writeVersioned(spark, dir, root)
       // the tag lands before maintenance, like a release pin in real life
@@ -1422,13 +1431,13 @@ object LakeOps {
       // snapshot 4: compaction replace-commit over the fragmented region
       commit(spark, root, stage(spark, root)(
         readLive(spark, root, Seq(1)).repartition($"day")),
-        removed = liveFiles(spark, root, Seq(1)), ref = None)
+        Some(Removal(3, liveFiles(spark, root, Seq(1)))), ref = None)
       // snapshot 5: re-cluster days 6-10 (replaces snapshot 2's files —
       // the region NO ref pins, so expiry may reclaim the originals)
       commit(spark, root, stage(spark, root)(
         readLive(spark, root, Seq(2)).repartition($"day")
           .sortWithinPartitions($"user_id")),
-        removed = readManifest(spark, root, "snap-2.txt"))
+        Some(Removal(4, readManifest(spark, root, "snap-2.txt"))))
     }
   }
 
@@ -1459,7 +1468,7 @@ object LakeOps {
     val reachable = readRefs(spark, out).values.toSet
       .flatMap((s: Int) => liveFiles(spark, out, 1 to s).toSet)
     val fs = hfs(spark, data)
-    (listData(spark, data) -- reachable).foreach { rel =>
+    (IngestOps.listDataFiles(spark, data) -- reachable).foreach { rel =>
       IngestOps.deleteOrThrow(fs, new org.apache.hadoop.fs.Path(s"$data/$rel"),
         recursive = false)
     }
@@ -1469,7 +1478,7 @@ object LakeOps {
     // "snapshot expired" instead of dangling into FileNotFound at scan
     // (the manifests themselves stay — history records are never
     // falsified, the snapshot is just no longer a readable target)
-    val remaining = listData(spark, data)
+    val remaining = IngestOps.listDataFiles(spark, data)
     val expired = (1 to 5).filterNot(s =>
       liveFiles(spark, out, 1 to s).forall(remaining.contains))
     writeManifest(spark, out, "expired.txt", expired.map(_.toString))
@@ -1683,9 +1692,7 @@ object LakeOps {
     // publish: fast-forward main to the audit branch — or, on audit
     // failure, leave main untouched (the staged branch never goes live)
     if (passed) setRef(spark, out, "main", readRefs(spark, out)("audit"))
-    val current = readRefs(spark, out)("main")
-    readLive(spark, out, (1 to current).filter(n =>
-        fsExists(spark, out, s"metadata/snap-$n.txt")))
+    readCurrent(spark, out)
       .filter($"day".between(14, 18))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"),
@@ -1693,10 +1700,6 @@ object LakeOps {
         dsum($"value").as("sum_value"))
       .orderBy($"day")
   }
-
-  private def fsExists(spark: SparkSession, root: String,
-      rel: String): Boolean =
-    IngestOps.fsExists(spark, s"$root/$rel")
 
   /** `branch_read` — read a table BY REF NAME: `main` (a branch at
     * snapshot 3), `audit` (a branch carrying a staged snapshot 4 main
@@ -1706,20 +1709,11 @@ object LakeOps {
     * throughout). This is the consumption side of the refs surface
     * [[wapRun]] stages on — at 100 TB, `main` vs `audit` is the
     * difference between production dashboards and the data team's
-    * pre-publish validation, on one physical table. */
+    * pre-publish validation, on one physical table. The table is
+    * [[branchesLayout]], so the key only reads. */
   def branchRead(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val out = IngestOps.tmp("events_branches")
-    writeVersioned(spark, dir, out)
-    setRef(spark, out, "main", 3)
-    setRef(spark, out, "v1", 2) // a TAG: an immutable snapshot name
-    // commit snapshot 4 on the audit branch; main stays at 3
-    commit(spark, out, stage(spark, out)(
-      IngestOps.eventsWithParts(spark, dir)
-        .filter($"day".between(16, 18))
-        .select($"event_id", $"user_id", $"event_type", $"value", $"day")
-        .repartition($"day")),
-      ref = Some("audit"))
+    val out = branchesLayout(spark, dir)
     val refs = readRefs(spark, out)
     Seq("audit", "main", "v1").map { name =>
       readLive(spark, out, 1 to refs(name))

@@ -26,12 +26,15 @@ private[graft] case class FileStats[K](size: Long, rows: Long,
 /** One snapshot-manifest line: the data file's path relative to `data/`
   * and, after a TAB, its [[FileStats]] as JSON with Iceberg's DataFile
   * field names. Stats parse on first use, so a reader of the file list
-  * never pays for them. */
-private[graft] case class ManifestEntry(rel: String, statsJson: String = "") {
+  * never pays for them. A `removed` entry (Iceberg's DELETED status) is
+  * the path of a file the snapshot replaced, spelled `-<path>`. */
+private[graft] case class ManifestEntry(rel: String, statsJson: String = "",
+    removed: Boolean = false) {
   lazy val stats: Option[FileStats[Int]] =
     Option.when(statsJson.nonEmpty)(ManifestEntry.parseStats(statsJson))
 
-  def line: String = if (statsJson.isEmpty) rel else s"$rel\t$statsJson"
+  def line: String = (if (removed) "-" else "") +
+    (if (statsJson.isEmpty) rel else s"$rel\t$statsJson")
 
   /** The stats, which every entry a commit wrote carries. */
   def recorded: FileStats[Int] = stats.getOrElse(throw
@@ -46,10 +49,12 @@ private[graft] case class ManifestEntry(rel: String, statsJson: String = "") {
 private[graft] object ManifestEntry {
   private val Mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  def parse(line: String): ManifestEntry = line.indexOf('\t') match {
-    case -1 => ManifestEntry(line)
-    case i => ManifestEntry(line.take(i), line.drop(i + 1))
-  }
+  def parse(line: String): ManifestEntry =
+    if (line.startsWith("-")) parse(line.drop(1)).copy(removed = true)
+    else line.indexOf('\t') match {
+      case -1 => ManifestEntry(line)
+      case i => ManifestEntry(line.take(i), line.drop(i + 1))
+    }
 
   def of(rel: String, stats: FileStats[Int]): ManifestEntry = {
     val o = Mapper.createObjectNode()

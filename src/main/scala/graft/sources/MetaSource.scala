@@ -45,8 +45,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `history`: one row per made-current event (`metadata/ref-log.txt`,
   *    rollbacks included) with parentage and the is-current-ancestor
   *    flag (Iceberg's `history` table).
-  *  - `manifests`: one row per physical manifest file — adds / removes /
-  *    full-rewrite, entry counts, bytes (Iceberg's `manifests` table).
+  *  - `manifests`: one row per manifest kind of each snapshot — adds /
+  *    removes / full-rewrite, entry counts, bytes (Iceberg's `manifests`
+  *    table).
   *
   * The rows come from the manifests + a driver-side listing — metadata
   * scale, like the system it mirrors — but the CONNECTOR mechanics are
@@ -78,10 +79,8 @@ class GraftMetaSource extends TableProvider {
 
 object GraftMetaSource {
   /** The manifest naming contract, defined ONCE for every consumer in
-    * this file (planning, the manifests table, the removed map) — the
-    * writers in LakeOps/IngestOps spell the same names. */
+    * this file — the writers in LakeOps/IngestOps spell the same name. */
   private[sources] val AddsManifest = "snap-(\\d+)\\.txt".r
-  private[sources] val RemovesManifest = "snap-(\\d+)\\.removed\\.txt".r
 
   /** One row per data file per committing snapshot — the Iceberg
     * `files` metadata-table shape: identity, size, and the per-file
@@ -242,10 +241,10 @@ object GraftMetaSource {
     }
   }
 
-  /** One [[ManifestRow]] per physical manifest under `metadata/` —
-    * adds (`snap-N.txt`, kind `full` when the `snap-N.FULL` rewrite
-    * marker is present) and removes (`snap-N.removed.txt`), with entry
-    * counts and byte sizes. */
+  /** One [[ManifestRow]] per manifest kind under `metadata/`: adds
+    * (`snap-N.txt`; `full` when the `snap-N.FULL` rewrite marker is
+    * present) and, if it removed files, removes (its removal entries),
+    * with entry counts and the file's byte size. */
   private[sources] def manifestRows(root: String): Seq[ManifestRow] = {
     val spark = SparkSession.active
     val metaDir = new org.apache.hadoop.fs.Path(root, "metadata")
@@ -259,15 +258,16 @@ object GraftMetaSource {
       .collect { case fullRe(n) => n.toInt }.toSet
     listing.flatMap { st =>
       val name = st.getPath.getName
-      val kind = name match {
+      name match {
         case AddsManifest(n) =>
-          Some(n.toInt -> (if (full(n.toInt)) "full" else "adds"))
-        case RemovesManifest(n) => Some(n.toInt -> "removes")
-        case _ => None
-      }
-      kind.map { case (n, k) =>
-        ManifestRow(n, s"metadata/$name", k, IngestOps.readMetaLines(spark,
-          root, s"metadata/$name").size.toLong, st.getLen)
+          val (added, _, removed) =
+            IngestOps.readMetaFile(spark, root, s"metadata/$name")
+          (Seq((if (full(n.toInt)) "full" else "adds") -> added) ++
+            Option.when(removed.nonEmpty)("removes" -> removed)).map {
+            case (k, es) => ManifestRow(n.toInt, s"metadata/$name", k,
+              es.size.toLong, st.getLen)
+          }
+        case _ => Nil
       }
     }.sortBy(r => (r.snap, r.kind))
   }
@@ -315,21 +315,29 @@ object GraftMetaSource {
     }
   }
 
-  /** One [[MetaEntry]] per manifest entry, its stats read from the
-    * entry (`value` bounds by the id the snapshot's schema record gives
-    * it); an entry that records none lists with NULL stats, its
-    * unknowns visible. */
-  private[sources] def listEntries(root: String): Seq[MetaEntry] = {
+  /** A snapshot manifest's adds, headers and removals. */
+  private[sources] type Manifest = (Seq[ManifestEntry], Map[String, String],
+    Seq[ManifestEntry])
+
+  /** Every linked snapshot's manifest ([[IngestOps.readMetaFile]]), read
+    * once, by snapshot id. */
+  private[sources] def manifests(root: String): Seq[(Int, Manifest)] = {
     val spark = SparkSession.active
     val metaDir = new org.apache.hadoop.fs.Path(root, "metadata")
     val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // match ONLY plain add-manifests (snap-<n>.txt) — snap-<n>.removed.txt
-    // is a different surface
-    val snaps = fs.listStatus(metaDir).map(_.getPath.getName)
-      .collect { case AddsManifest(n) => n.toInt }.sorted
-    snaps.flatMap { n =>
-      val (entries, headers) =
-        IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt")
+    fs.listStatus(metaDir).map(_.getPath.getName)
+      .collect { case AddsManifest(n) => n.toInt }.sorted.toSeq.map(n =>
+        n -> IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt"))
+  }
+
+  /** One [[MetaEntry]] per added entry of the `read` manifests, its stats
+    * read from the entry (`value` bounds by the id the snapshot's schema
+    * record gives it); an entry that records none lists with NULL stats,
+    * its unknowns visible. */
+  private[sources] def listEntries(root: String,
+      read: Seq[(Int, Manifest)]): Seq[MetaEntry] = {
+    val spark = SparkSession.active
+    read.flatMap { case (n, (entries, headers, _)) =>
       val value = headers.get("schema").flatMap(_ => LakeOps
         .namedSchema(spark, root, n, headers).fields.find(_.name == "value")
         .flatMap(TableSchema.idOf))
@@ -340,19 +348,7 @@ object GraftMetaSource {
           e.stats.map(_.size), e.stats.map(_.rows), bound(_.lower),
           bound(_.upper))
       }
-    }.toSeq
-  }
-
-  /** Per-snapshot logically-removed file sets (`snap-<n>.removed.txt`). */
-  private[sources] def listRemoved(root: String): Map[Int, Set[String]] = {
-    val spark = SparkSession.active
-    val metaDir = new org.apache.hadoop.fs.Path(root, "metadata")
-    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(metaDir).map(_.getPath.getName)
-      .collect { case RemovesManifest(n) => n.toInt ->
-        IngestOps.readMetaLines(spark, root,
-          s"metadata/snap-$n.removed.txt").toSet }
-      .toMap
+    }
   }
 
   /** One [[SnapshotRow]] per commit: add/remove deltas from the
@@ -360,14 +356,13 @@ object GraftMetaSource {
     * ANY added file lacks stats), timestamps from the commit log. A
     * pure-delete commit (removes, no adds) still gets its row. */
   private[sources] def snapshotRows(root: String): Seq[SnapshotRow] = {
-    val bySnap = listEntries(root).groupBy(_.snap)
-    val removed = listRemoved(root)
+    val read = manifests(root)
+    val bySnap = listEntries(root, read).groupBy(_.snap)
     val commits = IngestOps.commitLog(SparkSession.active, root).toMap
-    (bySnap.keySet ++ removed.keySet).toSeq.sorted.map { n =>
+    read.map { case (n, (_, _, removed)) =>
       val es = bySnap.getOrElse(n, Seq.empty)
-      SnapshotRow(n, commits.get(n), es.size.toLong,
-        removed.getOrElse(n, Set.empty).size.toLong, total(es.map(_.size)),
-        if (es.isEmpty) None else total(es.map(_.rows)))
+      SnapshotRow(n, commits.get(n), es.size.toLong, removed.size.toLong,
+        total(es.map(_.size)), if (es.isEmpty) None else total(es.map(_.rows)))
     }
   }
 
@@ -375,8 +370,9 @@ object GraftMetaSource {
     * logically replaced by a later remove, grouped by partition value.
     * Byte and row totals are None when any live file lacks stats. */
   private[sources] def partitionRows(root: String): Seq[PartitionRow] = {
-    val dead = listRemoved(root).values.flatten.toSet
-    listEntries(root).filterNot(e => dead(e.rel))
+    val read = manifests(root)
+    val dead = read.flatMap(_._2._3.map(_.rel)).toSet
+    listEntries(root, read).filterNot(e => dead(e.rel))
       .groupBy(_.day).toSeq.sortBy(_._1).map { case (day, es) =>
         PartitionRow(day, es.size.toLong, total(es.map(_.size)),
           total(es.map(_.rows)))
@@ -446,7 +442,8 @@ private[sources] class GraftMetaScan(root: String, table: String,
 
   override def planInputPartitions(): Array[InputPartition] = table match {
     case "files" =>
-      val survivors = GraftMetaSource.listEntries(root)
+      val survivors = GraftMetaSource.listEntries(root,
+        GraftMetaSource.manifests(root))
         .filter(e => pushed.forall(keep(e.snap, e.day)))
       // one partition per surviving snapshot: pushdown on snapshot_id is
       // visible as a smaller partition count (asserted in the spec)

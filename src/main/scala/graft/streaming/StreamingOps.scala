@@ -920,10 +920,11 @@ object StreamingOps {
             val days = b.select($"day").distinct().collect()
               .map(_.getInt(0)).sorted
             if (days.nonEmpty) {
-              val merged = LakeOps.readCurrent(spark, out)
+              val (at, current) = LakeOps.readMain(spark, out)
+              val merged = current
                 .join(b.select($"event_id"), Seq("event_id"), "left_anti")
                 .unionByName(b)
-              LakeOps.rewriteDays(spark, out, merged, days)
+              LakeOps.rewriteDays(spark, out, at, merged, days)
             }
             ()
           } finally b.unpersist()
@@ -1077,7 +1078,7 @@ object StreamingOps {
     if (!hasAdd && !hasDel) return
     val del = if (hasDel) spark.read.parquet(deletes)
       else spark.range(0).select($"id".as("event_id"))
-    val current = LakeOps.readCurrent(spark, base)
+    val (at, current) = LakeOps.readMain(spark, base)
     val add = if (hasAdd) spark.read.parquet(delta) else current.limit(0)
     val touched = current
       .join(LakeOps.boundedBroadcast(del), Seq("event_id"), "left_semi")
@@ -1087,7 +1088,7 @@ object StreamingOps {
     val merged = current
       .join(LakeOps.boundedBroadcast(del), Seq("event_id"), "left_anti")
       .unionByName(add)
-    LakeOps.rewriteDays(spark, base, merged, days)
+    LakeOps.rewriteDays(spark, base, at, merged, days)
     org.apache.spark.network.util.JavaUtils
       .deleteRecursively(new java.io.File(delta))
     org.apache.spark.network.util.JavaUtils

@@ -35,21 +35,16 @@ class CrossProcessSpec extends SparkSpecBase {
       "graft.sources.CommitWorker") ++ args
   }
 
-  test("two writer PROCESSES contending one table: both appends land " +
-      "exactly once, manifests are disjoint, the pointer only moves " +
-      "forward") {
-    import spark.implicits._
-    val L = sources.LakeOps
-    val out = sources.IngestOps.tmp("events_xproc")
-    L.cloneTree(L.versionedBaseLayout(spark, sf), out)
-    L.setRef(spark, out, "main", 3)
-    val baseline = fingerprint(L.readCurrent(spark, out))
-    val expect = sources.IngestOps.eventsWithParts(spark, sf)
-      .filter($"day".isin(16, 17))
-      .select($"event_id", $"user_id", $"event_type", $"value", $"day")
-    val expectFp = fingerprint(expect)
-    assert(expectFp._1 > 0, "fixture must have day-16/17 rows")
-    val barrier = sources.IngestOps.tmp("xproc_barrier")
+  /** Appends days 16 and 17 to `out` from two [[sources.CommitWorker]]
+    * processes, released at once through the go-file barrier in the
+    * fresh directory `barrierName` once both are staged; runs `atGo` in
+    * this JVM right after the release, then waits for both workers to
+    * exit cleanly. */
+  private def raceWorkers[T](out: String, barrierName: String)(
+      atGo: => T): T = {
+    val barrier = sources.IngestOps.tmp(barrierName)
+    org.apache.spark.network.util.JavaUtils
+      .deleteRecursively(new java.io.File(barrier))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(barrier))
     val go = s"$barrier/go"
     val procs = Seq(16, 17).map { day =>
@@ -70,12 +65,31 @@ class CrossProcessSpec extends SparkSpecBase {
       }
       java.nio.file.Files.write(java.nio.file.Paths.get(go),
         "go".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val result = atGo
       procs.foreach { case (day, p) =>
         assert(p.waitFor(180, java.util.concurrent.TimeUnit.SECONDS),
           s"worker $day hung")
         assert(p.exitValue() == 0, s"worker $day failed")
       }
+      result
     } finally procs.foreach(_._2.destroyForcibly())
+  }
+
+  test("two writer PROCESSES contending one table: both appends land " +
+      "exactly once, manifests are disjoint, the pointer only moves " +
+      "forward") {
+    import spark.implicits._
+    val L = sources.LakeOps
+    val out = sources.IngestOps.tmp("events_xproc")
+    L.cloneTree(L.versionedBaseLayout(spark, sf), out)
+    L.setRef(spark, out, "main", 3)
+    val baseline = fingerprint(L.readCurrent(spark, out))
+    val expect = sources.IngestOps.eventsWithParts(spark, sf)
+      .filter($"day".isin(16, 17))
+      .select($"event_id", $"user_id", $"event_type", $"value", $"day")
+    val expectFp = fingerprint(expect)
+    assert(expectFp._1 > 0, "fixture must have day-16/17 rows")
+    raceWorkers(out, "xproc_barrier")(())
     // both slots exist and claim DISJOINT file sets
     val m4 = sources.IngestOps.readMetaLines(spark, out,
       "metadata/snap-4.txt").toSet
@@ -93,6 +107,47 @@ class CrossProcessSpec extends SparkSpecBase {
     // no debris: every staged file was published and swept by its owner
     assert(L.orphanSweep(spark, out).isEmpty,
       "a clean two-writer run must leave no orphans")
+  }
+
+  test("a copy-on-write delete in this JVM races two appending writer " +
+      "PROCESSES: all three commits land on distinct slots, main ends " +
+      "at the highest, and no row is lost or doubled") {
+    import spark.implicits._
+    val L = sources.LakeOps
+    val out = sources.IngestOps.tmp("events_xproc_delete")
+    L.cloneTree(L.versionedBaseLayout(spark, sf), out)
+    L.setRef(spark, out, "main", 3)
+    val current = L.readLive(spark, out, 1 to 3)
+    val baseline = fingerprint(current)
+    val doomed = $"event_type" === "click" && $"day" === 2
+    val gone = fingerprint(current.filter(doomed))
+    assert(gone._1 > 0, "fixture must have day-2 clicks to delete")
+    val survivors = current.filter($"day" === 2 && !doomed).localCheckpoint()
+    val expectFp = fingerprint(sources.IngestOps.eventsWithParts(spark, sf)
+      .filter($"day".isin(16, 17)))
+    assert(expectFp._1 > 0, "fixture must have day-16/17 rows")
+    val won = raceWorkers(out, "xproc_delete_barrier") {
+      L.rewriteDays(spark, out, 3, survivors, Seq(2))
+    }
+    // three commits on slots 4-6, the delete's among them, no fourth
+    val manifests = (4 to 6).map(n => sources.IngestOps.readMetaFile(spark,
+      out, s"metadata/snap-$n.txt"))
+    assert((4 to 6).contains(won), s"the delete won slot $won")
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(out, "metadata", "snap-7.txt")))
+    assert(manifests.map(_._3.nonEmpty) ==
+      (4 to 6).map(_ == won), "exactly the delete's slot removes files")
+    val added = manifests.flatMap(_._1.map(_.rel))
+    assert(added.distinct.size == added.size, "a file committed twice")
+    assert(L.readRefs(spark, out)("main") == 6)
+    val now = L.readCurrent(spark, out)
+    assert(fingerprint(now) == (baseline._1 - gone._1 + expectFp._1,
+      baseline._2 - gone._2 + expectFp._2),
+      "every commit must land exactly once")
+    assert(now.select("event_id").distinct().count() == now.count(),
+      "a row is doubled")
+    assert(L.orphanSweep(spark, out).isEmpty,
+      "three clean commits must leave no orphans")
   }
 
   test("buildShared crash contract: a build that throws publishes " +

@@ -335,6 +335,24 @@ class EngineSpec extends SparkSpecBase {
       "LakeOps.rewriteDays not found")
   }
 
+  test("one file per snapshot: no code spells a removed.txt file") {
+    // a removal set in a second file has to land before the snapshot's
+    // link, be read beside every manifest, and be swept when the link
+    // never comes; a writer that wins the slot would adopt it. Removals
+    // are entries of the linked snap-N.txt (ManifestEntry.removed)
+    val secondFile = """removed\\*\.txt""".r
+    val offenders = mainStatements.collect {
+      case (file, enclosing, text) if secondFile.findFirstIn(text).isDefined =>
+        s"$file ($enclosing): ${text.trim.take(160)}"
+    }
+    assert(offenders.isEmpty, "removal files beside the snapshot " +
+      "manifest:\n  " + offenders.mkString("\n  "))
+    assert(mainSources.exists { case (file, lines) =>
+      file == "ManifestEntry.scala" &&
+        lines.exists(_.contains("removed: Boolean")) },
+      "ManifestEntry's removal entries not found")
+  }
+
   test("file-system deletes go through IngestOps.deleteOrThrow: no other " +
       "code calls a two-argument delete(path, recursive)") {
     // FileSystem.delete reports a failure by returning false; a caller

@@ -293,7 +293,7 @@ class LakeSpec extends SparkSpecBase {
     val base = L.readCurrent(spark, out)
     val doomed = $"event_type" === "a"
     val survivors = base.filter(!doomed)
-    assert(L.rewriteDays(spark, out, survivors, Seq(1, 2)) == 2)
+    assert(L.rewriteDays(spark, out, 1, survivors, Seq(1, 2)) == 2)
     val live = L.liveFiles(spark, out, 1 to L.readRefs(spark, out)("main"))
     assert(live.nonEmpty && !live.exists(_.startsWith("day=2/")),
       s"emptied partition's stale files survived the delete: $live")
@@ -624,7 +624,7 @@ class LakeSpec extends SparkSpecBase {
     val rows = sources.LakeOps.branchRead(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(rows == Map("audit" -> 18L, "main" -> 15L, "v1" -> 10L), rows)
-    val root = graft.sources.IngestOps.tmp("events_branches")
+    val root = sources.LakeOps.branchesLayout(spark, sf)
     val refs = sources.LakeOps.readRefs(spark, root)
     assert(refs == Map("main" -> 3, "audit" -> 4, "v1" -> 2), refs)
     // main's plan never opens the audit branch's staged files
@@ -640,9 +640,12 @@ class LakeSpec extends SparkSpecBase {
     assert(opened.nonEmpty && opened.intersect(staged).isEmpty,
       s"main read touched staged files: ${opened.intersect(staged)}")
     // moving the ref is all it takes to publish: fast-forward main and
-    // the same by-name read now serves the staged days
-    sources.LakeOps.setRef(spark, root, "main", 4)
-    val after = sources.LakeOps.readRefs(spark, root)("main")
+    // the same by-name read now serves the staged days (on a copy: the
+    // layout is shared)
+    val copy = graft.sources.IngestOps.tmp("events_branches")
+    sources.LakeOps.cloneTree(root, copy)
+    sources.LakeOps.setRef(spark, copy, "main", 4)
+    val after = sources.LakeOps.readRefs(spark, copy)("main")
     assert(after == 4)
   }
 
@@ -816,9 +819,9 @@ class LakeSpec extends SparkSpecBase {
   // an append (appendCommit of day 16), a REPLACE commit compacting
   // snapshot 1's fragments with the fragments as its removal set, and a
   // copy-on-write DELETE (rewriteDays) of day 2's clicks, whose removal
-  // set is day 2's live files. Both replace commits write their removal
-  // manifest before the link, so a kill at 'attempt-written' also
-  // leaves an unlinked snap-4.removed.txt.
+  // set is day 2's live files. Both replace commits carry their removal
+  // entries inside the linked manifest, so a kill before the link leaves
+  // no removal behind.
 
   /** Order-independent exact fingerprint: (row count, multiset checksum
     * of event ids) — wrap-around addition is deterministic. */
@@ -833,6 +836,8 @@ class LakeSpec extends SparkSpecBase {
 
   /** The schema records the linked snapshots (1-4) of `root` name. */
   private def namedRecords(root: String): Set[String] = (1 to 4)
+    .filter(n => java.nio.file.Files.exists(
+      java.nio.file.Paths.get(root, "metadata", s"snap-$n.txt")))
     .flatMap(n => sources.IngestOps.readMetaFile(spark, root,
       s"metadata/snap-$n.txt")._2.get("schema")).toSet
 
@@ -877,17 +882,15 @@ class LakeSpec extends SparkSpecBase {
       val survivors = current.filter($"day" === 2 && !doomed)
         .localCheckpoint()
       ((onStep: String => Unit) =>
-        L.rewriteDays(spark, out, survivors, Seq(2), onStep),
+        L.rewriteDays(spark, out, 3, survivors, Seq(2), onStep),
         (-goneN, -goneSum))
     } else if (replace) {
-      // single-writer rule: a replace commit never enters the retry loop
+      // the retry of a replace commit that loses its slot is the
+      // lost-slot test after this group
       val compacted = L.readLive(spark, out, Seq(1)).localCheckpoint()
-      intercept[IllegalArgumentException](L.commit(spark, out,
-        L.Staged(Nil, sources.TableSchema.written(compacted)),
-        removed = frag, maxAttempts = 2))
       ((onStep: String => Unit) => L.commit(spark, out,
         L.stage(spark, out, onStep)(compacted.repartition($"day")),
-        removed = frag, onStep = onStep), (0L, 0L))
+        Some(L.Removal(3, frag)), onStep = onStep), (0L, 0L))
     } else {
       val rows = sources.IngestOps.eventsWithParts(spark, sf)
         .filter($"day" === 16)
@@ -957,14 +960,12 @@ class LakeSpec extends SparkSpecBase {
       if (kp == "attempt-written")
         assert(swept.exists(_.contains(".attempt-")),
           s"sweep after $kp must reclaim the CAS attempt file: $swept")
-      // and EXACTLY the debris: the published files, plus the unlinked
-      // removal manifest a replace commit wrote before dying
+      // and EXACTLY the debris: the published files, plus the schema
+      // record an evolving append wrote before dying
       assert(swept.filter(_.startsWith("data/")).toSet == published,
         s"sweep after $kp must reclaim exactly the published files")
       assert(swept.filter(s => s.startsWith("metadata/") &&
-        !s.contains(".attempt-")).toSet ==
-        (if (replace && kp == "attempt-written")
-          Set("metadata/snap-4.removed.txt") else newRecord),
+        !s.contains(".attempt-")).toSet == newRecord,
         s"sweep after $kp reclaimed the wrong metadata: $swept")
       assert(fingerprint(L.readLive(spark, out, Seq(1))) == pinned,
         s"snapshot-1 reader changed by the sweep after $kp")
@@ -985,6 +986,173 @@ class LakeSpec extends SparkSpecBase {
     assert(recovered.fieldNames.toSeq == (if (input == "evolve")
       oldSchema.fieldNames.toSeq.init ++ Seq("origin", "day")
       else oldSchema.fieldNames.toSeq), recovered.treeString)
+  }
+
+  // --- replace commits beside other writers --------------------------
+  // A competing commit is injected from the replace commit's onStep hook,
+  // so each race is deterministic: the replace commit validates the
+  // snapshots linked since its base, retries on a lost slot when they do
+  // not conflict with it, and fails loudly when they do.
+
+  /** A clone of the versioned base (main at 3) and a copy-on-write DELETE
+    * of its day-2 clicks, planned at snapshot 3: the clone, the DELETE
+    * (given its onStep), and the (rows, checksum) it removes. */
+  private def day2Delete(name: String)
+      : (String, (String => Unit) => Int, (Long, Long)) = {
+    import spark.implicits._
+    val L = sources.LakeOps
+    val out = sources.IngestOps.tmp(name)
+    L.cloneTree(L.versionedBaseLayout(spark, sf), out)
+    L.setRef(spark, out, "main", 3)
+    val current = L.readLive(spark, out, 1 to 3)
+    val doomed = $"event_type" === "click" && $"day" === 2
+    val gone = fingerprint(current.filter(doomed))
+    assert(gone._1 > 0, "fixture must have day-2 clicks to delete")
+    val survivors = current.filter($"day" === 2 && !doomed).localCheckpoint()
+    (out, onStep => L.rewriteDays(spark, out, 3, survivors, Seq(2), onStep),
+      gone)
+  }
+
+  /** The corpus rows of `day`, re-keyed so they never collide with a
+    * row already in the table. */
+  private def freshRows(day: Int) = {
+    import spark.implicits._
+    sources.IngestOps.eventsWithParts(spark, sf).filter($"day" === day)
+      .select((-$"event_id" - 1L).as("event_id"), $"user_id",
+        $"event_type", $"value", $"day")
+      .localCheckpoint()
+  }
+
+  /** Runs `commit` with an onStep that calls `inject` once, at `step`. */
+  private def injectAt[T](step: String, commit: (String => Unit) => T)(
+      inject: => Unit): T = {
+    var done = false
+    commit(s => if (s == step && !done) { done = true; inject })
+  }
+
+  private def assertNoDoubles(df: org.apache.spark.sql.DataFrame): Unit =
+    assert(df.select("event_id").distinct().count() == df.count(),
+      "a row is doubled")
+
+  test("a copy-on-write delete beside an append to an untouched day: " +
+      "the delete lands on the next slot and both commits hold") {
+    val L = sources.LakeOps
+    val (out, delete, gone) = day2Delete("events_race_untouched")
+    val baseline = fingerprint(L.readCurrent(spark, out))
+    val day16 = freshRows(16)
+    val add = fingerprint(day16)
+    var appended = -1
+    val won = injectAt("data-written", delete) {
+      appended = L.appendCommit(spark, out, day16)
+    }
+    assert(appended == 4 && won == 5, (appended, won))
+    assert(L.readRefs(spark, out)("main") == 5)
+    val current = L.readCurrent(spark, out)
+    assert(fingerprint(current) == (baseline._1 - gone._1 + add._1,
+      baseline._2 - gone._2 + add._2))
+    assertNoDoubles(current)
+  }
+
+  test("a copy-on-write delete beside an append to the day it rewrites " +
+      "fails with a conflict: main stays on the append, no later " +
+      "snapshot exists, and the sweep reclaims the delete's files") {
+    import spark.implicits._
+    val L = sources.LakeOps
+    val (out, delete, _) = day2Delete("events_race_conflict")
+    val baseline = fingerprint(L.readCurrent(spark, out))
+    val day2 = freshRows(2)
+    val add = fingerprint(day2)
+    val before = sources.IngestOps.listDataFiles(spark, s"$out/data")
+    val e = intercept[IllegalStateException] {
+      injectAt("data-written", delete) { L.appendCommit(spark, out, day2) }
+    }
+    assert(e.getMessage.contains("conflicts with snapshot 4") &&
+      e.getMessage.contains("day 2"), e.getMessage)
+    assert(L.readRefs(spark, out)("main") == 4)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(out, "metadata", "snap-5.txt")))
+    val staged = (sources.IngestOps.listDataFiles(spark, s"$out/data") --
+      before -- L.liveFiles(spark, out, Seq(4))).map("data/" + _)
+    assert(staged.nonEmpty && staged.forall(_.startsWith("data/day=2/")),
+      staged)
+    assert(L.orphanSweep(spark, out).filter(_.startsWith("data/")).toSet ==
+      staged)
+    val current = L.readCurrent(spark, out)
+    assert(fingerprint(current) == (baseline._1 + add._1,
+      baseline._2 + add._2))
+    assert(current.filter($"day" === 2 && $"event_type" === "click")
+      .count() > 0, "the failed delete removed rows")
+  }
+
+  test("a copy-on-write delete beside a compaction of the files it " +
+      "replaces fails with a conflict, and no row is doubled") {
+    import spark.implicits._
+    val L = sources.LakeOps
+    val (out, delete, _) = day2Delete("events_race_compaction")
+    val baseline = fingerprint(L.readCurrent(spark, out))
+    val frag = L.liveFiles(spark, out, Seq(1))
+    val compacted = L.readLive(spark, out, Seq(1)).localCheckpoint()
+    val e = intercept[IllegalStateException] {
+      injectAt("data-written", delete) {
+        assert(L.commit(spark, out, L.stage(spark, out)(
+          compacted.repartition($"day")), Some(L.Removal(3, frag))) == 4)
+      }
+    }
+    assert(e.getMessage.contains("conflicts with snapshot 4") &&
+      e.getMessage.contains("removed day=2/"), e.getMessage)
+    assert(L.readRefs(spark, out)("main") == 4)
+    val current = L.readCurrent(spark, out)
+    assert(fingerprint(current) == baseline)
+    assertNoDoubles(current)
+  }
+
+  test("a replace commit that loses its slot to an append retries and " +
+      "wins the next slot") {
+    import spark.implicits._
+    val L = sources.LakeOps
+    val out = sources.IngestOps.tmp("events_race_retry")
+    L.cloneTree(L.versionedBaseLayout(spark, sf), out)
+    L.setRef(spark, out, "main", 3)
+    val baseline = fingerprint(L.readCurrent(spark, out))
+    val frag = L.liveFiles(spark, out, Seq(1))
+    val compacted = L.readLive(spark, out, Seq(1)).localCheckpoint()
+    val day16 = freshRows(16)
+    val add = fingerprint(day16)
+    var appended = -1
+    val won = injectAt("attempt-written", onStep => L.commit(spark, out,
+        L.stage(spark, out, onStep)(compacted.repartition($"day")),
+        Some(L.Removal(3, frag)), maxAttempts = 2, onStep = onStep)) {
+      appended = L.appendCommit(spark, out, day16)
+    }
+    assert(appended == 4 && won == 5, (appended, won))
+    assert(L.readRefs(spark, out)("main") == 5)
+    val current = L.readCurrent(spark, out)
+    assert(fingerprint(current) == (baseline._1 + add._1,
+      baseline._2 + add._2))
+    assertNoDoubles(current)
+    assert(L.liveFiles(spark, out, 1 to 5).intersect(frag).isEmpty)
+    assert(L.orphanSweep(spark, out).isEmpty, "the lost attempt left debris")
+  }
+
+  test("a missing snapshot manifest throws naming it: no reader drops " +
+      "its files, and the orphan sweep deletes none") {
+    val L = sources.LakeOps
+    val out = sources.IngestOps.tmp("events_missing_manifest")
+    L.cloneTree(L.expireBaseLayout(spark, sf), out)
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(out, "metadata", "snap-2.txt"))
+    val data = sources.IngestOps.listDataFiles(spark, s"$out/data")
+    // expiry's reachable set is liveFiles(1 to s) of every ref (main: 5)
+    Seq[() => Any](() => L.liveFiles(spark, out, 1 to 3),
+      () => L.liveFiles(spark, out, 1 to 5), () => L.readCurrent(spark, out),
+      () => L.orphanSweep(spark, out)).foreach { read =>
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("metadata/snap-2.txt"), e.getMessage)
+    }
+    assert(sources.IngestOps.listDataFiles(spark, s"$out/data") == data)
+    // the optional metadata files still read as empty when absent
+    assert(sources.IngestOps.readMetaLines(spark, out,
+      "metadata/parents.txt").isEmpty)
   }
 
   test("eight concurrent writers through the CAS retry loop: every " +
@@ -1114,11 +1282,11 @@ class LakeSpec extends SparkSpecBase {
       assert(fingerprint(L.readLive(spark, out, 1 to 3)) == pinned,
         s"snapshot-3 reader saw a different table $state")
     // the replace-commit, step by step, a reader interleaved after
-    // EVERY intermediate state. Ordering is the protocol under test:
-    // the removal manifest lands BEFORE the link, so at the instant
-    // snapshot 4 becomes visible both its halves (added + removed)
-    // already exist — there is no moment a current reader could see
-    // the compacted copies WITHOUT the fragment removal (doubled rows).
+    // EVERY intermediate state. Both halves (added + removal entries)
+    // are lines of the one linked manifest, so at the instant snapshot 4
+    // becomes visible both exist — there is no moment a current reader
+    // could see the compacted copies WITHOUT the fragment removal
+    // (doubled rows).
     val data = s"$out/data"
     val frag = L.liveFiles(spark, out, Seq(1))
     val compacted = L.readLive(spark, out, Seq(1)).localCheckpoint()
@@ -1129,13 +1297,14 @@ class LakeSpec extends SparkSpecBase {
       .option("compression", "zstd").partitionBy("day").parquet(data)
     val delta = sources.IngestOps.listDataFiles(spark, data) -- before
     assertPinned("after the compacted files landed")
-    // (2) the removal manifest (the replace half) — pre-link, inert
-    sources.IngestOps.writeMetaLines(spark, out,
-      "metadata/snap-4.removed.txt", frag)
-    assertPinned("after the removal manifest landed")
-    // (3) the link publishes snapshot 4 atomically — both halves live
-    assert(L.tryCommit(spark, out, 4,
-      delta.toSeq :+ s"#schema ${L.snapshotSchema(spark, out, 3).name}"))
+    // (2) the manifest with its removal entries (the replace half) is
+    // written to the private attempt file — pre-link, inert; (3) the
+    // link publishes snapshot 4 atomically — both halves live
+    val removals = frag.map(f => sources.ManifestEntry(f, removed = true).line)
+    assert(L.tryCommit(spark, out, 4, delta.toSeq ++ removals :+
+      s"#schema ${L.snapshotSchema(spark, out, 3).name}", step =>
+      if (step == "attempt-written")
+        assertPinned("after the removal manifest landed")))
     assertPinned("after the manifest link")
     assert(fingerprint(L.readLive(spark, out, 1 to 4)) == pinned,
       "the replace commit must be content-preserving the instant it " +

@@ -113,7 +113,8 @@ class MetaSourceSpec extends SparkSpecBase {
     val doomed = rels.filter(_.startsWith("day=1/"))
     assert(doomed.size == 1)
     graft.sources.IngestOps.writeMetaLines(spark, mini,
-      "metadata/snap-2.removed.txt", doomed)
+      "metadata/snap-2.txt",
+      doomed.map(graft.sources.ManifestEntry(_, removed = true).line))
     val parts = metaDf("partitions", mini).orderBy($"day").collect()
     assert(parts.map(_.getInt(0)).toSeq == Seq(2),
       s"removed partition still listed: ${parts.mkString(",")}")
@@ -183,7 +184,7 @@ class MetaSourceSpec extends SparkSpecBase {
         s"adds manifest $n: expected $exp entries in $got")
     }
     val expRm = graft.sources.IngestOps
-      .readMetaLines(spark, root, "metadata/snap-4.removed.txt").size.toLong
+      .readMetaFile(spark, root, "metadata/snap-4.txt")._3.size.toLong
     assert(got.contains((4L, "removes", expRm)) && expRm > 0)
     // full schema serves real byte sizes
     assert(m.collect().forall(_.getLong(4) > 0))
