@@ -90,11 +90,9 @@ object RankLimitToTopKRule extends Rule[LogicalPlan] {
       }
   }
 
-  /** Attach rule + planning strategy to a live session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    TopKPerKeyStrategy.install(spark)
+  /** Attach to a live session (idempotent). */
+  def install(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.contains(this))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ this
-  }
 }

@@ -142,7 +142,8 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
 
 /** Plans the logical node as partial → (exchange) → final. Registered per
   * session via `install` (`spark.experimental.extraStrategies`, same
-  * mechanism as `SparkSessionExtensions.injectPlannerStrategy`).
+  * mechanism as `SparkSessionExtensions.injectPlannerStrategy`), which
+  * `graft.sources.Tables.warmup` calls.
   */
 object TopKPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -159,12 +160,12 @@ object TopKPerKeyStrategy extends SparkStrategy {
         spark.experimental.extraStrategies :+ this
 }
 
-/** Public API: `TopK.perKey(df, keys, order, k)`. */
+/** Public API: `TopK.perKey(df, keys, order, k)`, in a session that ran
+  * `Tables.warmup` (it installs [[TopKPerKeyStrategy]]). */
 object TopK {
   def perKey(df: DataFrame, keyCols: Seq[Column], orderCols: Seq[Column],
       k: Int): DataFrame = {
     val spark = df.sparkSession
-    TopKPerKeyStrategy.install(spark)
     val keys = keyCols.map(GraftBridge.eagerExpression)
     val order = orderCols.map { c =>
       GraftBridge.eagerExpression(c) match {

@@ -499,10 +499,12 @@ object LakeOps {
   /** Next free snapshot slot: max committed + 1 (re-listed per CAS
     * attempt — the cross-process retry loop's re-read of table state);
     * 1 for a table with no metadata yet. */
-  private[graft] def nextSlot(root: String): Int = {
+  private[graft] def nextSlot(root: String): Int = slotAfter(metadataNames(root))
+
+  /** The slot after the highest snapshot manifest among `names`. */
+  private def slotAfter(names: Seq[String]): Int = {
     val snapRe = """snap-(\d+)\.txt""".r
-    metadataNames(root).collect { case snapRe(n) => n.toInt }
-      .maxOption.getOrElse(0) + 1
+    names.collect { case snapRe(n) => n.toInt }.maxOption.getOrElse(0) + 1
   }
 
   /** File names under `root/metadata`; none for a table that has never
@@ -672,8 +674,9 @@ object LakeOps {
   /** Orphan cleanup (Iceberg's `remove_orphan_files`): reclaim every
     * file a crashed writer left that NO committed snapshot references —
     * data files no `snap-*.txt` names, schema records none names, stale
-    * `*.attempt-*` CAS files and `.stage-*` dirs. Every slot below
-    * [[nextSlot]] is read (a missing manifest throws), so a commit that
+    * `*.attempt-*` CAS files and `.stage-*` dirs. `metadata/` is listed
+    * once, and every slot below the highest manifest it holds is read (a
+    * missing manifest throws), so a commit that
     * linked but died before its ref move keeps every file. `graceMs` is
     * Iceberg's `older_than`: younger debris is an IN-FLIGHT writer's
     * working set, so a grace longer than any stage-to-link latency makes
@@ -686,8 +689,8 @@ object LakeOps {
       try java.nio.file.Files.getLastModifiedTime(p).toMillis <= cutoff
       catch { case _: java.io.IOException => false } // vanished: skip
     val meta = java.nio.file.Paths.get(root, "metadata")
-    val manifests = (1 until nextSlot(root)).map(n =>
-      IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt"))
+    val names = metadataNames(root)
+    val manifests = (1 until slotAfter(names)).map(manifest(spark, root, _))
     val referenced = manifests.flatMap(_._1.map(_.rel)).toSet
     val named = manifests.flatMap(_._2.get("schema")).toSet
     // a writer killed at "staged" has published nothing to data/ yet
@@ -700,7 +703,7 @@ object LakeOps {
       new org.apache.hadoop.fs.Path(s"$root/data/$rel"), recursive = false)
     }
     val recordRe = """schema-[-0-9a-f]+\.json""".r
-    val metaOrphans = metadataNames(root).filter {
+    val metaOrphans = names.filter {
       case r @ recordRe() => !named.contains(r)
       case a => a.contains(".attempt-")
     }.filter(a => aged(meta.resolve(a)))
@@ -964,18 +967,38 @@ object LakeOps {
   /** The live entries of `snaps`, per snapshot, each with the name of the
     * schema record the snapshot that added it names (`#schema`). */
   private def liveEras(spark: SparkSession, root: String,
-      snaps: Seq[Int]): Seq[(Option[String], Seq[ManifestEntry])] = {
-    val read = snaps.map(n =>
-      IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt"))
+      snaps: Seq[Int]): Seq[(Option[String], Seq[ManifestEntry])] =
+    erasOf(snaps.map(manifest(spark, root, _)))
+
+  /** [[liveEras]] of the manifests `read`. */
+  private def erasOf(read: Seq[Manifest])
+      : Seq[(Option[String], Seq[ManifestEntry])] = {
     val removed = read.flatMap(_._3.map(_.rel)).toSet
     read.map { case (entries, headers, _) =>
       headers.get("schema") -> entries.filterNot(e => removed(e.rel)) }
   }
 
+  /** A snapshot manifest as [[IngestOps.readMetaFile]] returns it: adds,
+    * headers, removals. */
+  private type Manifest =
+    (Seq[ManifestEntry], Map[String, String], Seq[ManifestEntry])
+
+  /** Snapshot `n`'s manifest, read once. */
+  private def manifest(spark: SparkSession, root: String, n: Int): Manifest =
+    IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt")
+
+  /** The live files of each prefix `1 to s` of the manifests `read` of
+    * snapshots 1, 2, ...: [[liveFiles]] of every prefix, adds and removals
+    * accumulated snapshot by snapshot, so no manifest is read twice. */
+  private def prefixLive(read: Seq[Manifest]): Seq[Set[String]] =
+    read.scanLeft((Vector.empty[String], Set.empty[String])) {
+      case ((adds, gone), (a, _, r)) => (adds ++ a.map(_.rel), gone ++ r.map(_.rel))
+    }.tail.map { case (adds, gone) => adds.filterNot(gone).toSet }
+
   /** The schema record snapshot `n` of `root` names. */
   private[graft] def snapshotSchema(spark: SparkSession, root: String,
       n: Int): TableSchema = namedSchema(spark, root, n,
-    IngestOps.readMetaFile(spark, root, s"metadata/snap-$n.txt")._2)
+    manifest(spark, root, n)._2)
 
   /** The schema record that snapshot `n`'s manifest `headers` name, for a
     * caller that has read the manifest already. */
@@ -1218,13 +1241,25 @@ object LakeOps {
       snaps: Seq[Int], keep: String => Boolean = _ => true): DataFrame = {
     require(snaps.nonEmpty, s"no snapshot of $root to read")
     requireNotExpired(spark, root, snaps.max)
-    val eras = liveEras(spark, root, snaps).zip(snaps).map {
+    scanLive(spark, root, snaps, snaps.map(manifest(spark, root, _)), keep)
+  }
+
+  /** [[readLive]]'s scan from the manifests `read` of `snaps`, which the
+    * caller has read; `file` adds each row's data file path relative to
+    * `data/` as column [[FileColumn]]. */
+  private def scanLive(spark: SparkSession, root: String, snaps: Seq[Int],
+      read: Seq[Manifest], keep: String => Boolean = _ => true,
+      file: Boolean = false): DataFrame = {
+    val eras = erasOf(read).zip(snaps).map {
       case ((s, fs), n) => (s"$root/data", s.getOrElse(throw noRecord(root, n)),
         fs.map(_.rel).filter(keep).map(rel => s"$root/data/$rel"))
     }
     readEras(spark, root, eras,
-      schemaRecord(spark, root, eras(snaps.indexOf(snaps.max))._2))
+      schemaRecord(spark, root, eras(snaps.indexOf(snaps.max))._2), file)
   }
+
+  /** The column [[scanLive]] names each row's data file in. */
+  private val FileColumn = "_file"
 
   /** Scan `eras` — (data dir, schema record name, files) — as one table
     * of schema `current`: the files of each (dir, record) pair are one
@@ -1233,14 +1268,19 @@ object LakeOps {
     * the scans are unioned by name. Records resolve in `root/metadata`. */
   private def readEras(spark: SparkSession, root: String,
       eras: Seq[(String, String, Seq[String])],
-      current: TableSchema): DataFrame = {
+      current: TableSchema, file: Boolean = false): DataFrame = {
     val scans = eras.filter(_._3.nonEmpty).map(e => (e._1, e._2)).distinct
-    if (scans.isEmpty) readFiles(spark, s"$root/data", Nil, current)
-    else scans.map { case (dir, name) =>
+    if (scans.isEmpty) {
+      val df = readFiles(spark, s"$root/data", Nil, current)
+      if (file) df.withColumn(FileColumn, lit(null).cast("string")) else df
+    } else scans.map { case (dir, name) =>
       val record =
         if (name == current.name) current else schemaRecord(spark, root, name)
-      val df = readFiles(spark, dir,
+      val scan = readFiles(spark, dir,
         eras.filter(e => e._1 == dir && e._2 == name).flatMap(_._3), record)
+      // the relative path, as the manifests name the file
+      val df = if (!file) scan else scan.withColumn(FileColumn,
+        substring_index(col("_metadata.file_path"), "/data/", -1))
       if (name == current.name) df else record.projectOnto(df, current)
     }.reduce(_ unionByName _)
   }
@@ -1460,13 +1500,23 @@ object LakeOps {
     * ref-awareness is the difference between cleanup and silently
     * corrupting every clone and tag downstream. */
   def expireSnapshots(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val out = IngestOps.tmp("events_expire")
     cloneTree(expireBaseLayout(spark, dir), out)
+    expireAt(spark, out)
+  }
+
+  /** [[expireSnapshots]]' expiry of the 5-snapshot table at `out`, which
+    * opens each snapshot manifest once: every prefix's live set comes
+    * from the one read ([[prefixLive]]), and so does the final scan. */
+  private[graft] def expireAt(spark: SparkSession, out: String): DataFrame = {
+    import spark.implicits._
     val data = s"$out/data"
+    val refs = readRefs(spark, out)
+    val snaps = 1 to (refs.values.toSeq :+ 5).max
+    val read = snaps.map(manifest(spark, out, _))
+    val live = prefixLive(read)
     // expire: reachable = union of every ref's live view; delete the rest
-    val reachable = readRefs(spark, out).values.toSet
-      .flatMap((s: Int) => liveFiles(spark, out, 1 to s).toSet)
+    val reachable = refs.values.toSet.flatMap((s: Int) => live(s - 1))
     val fs = hfs(spark, data)
     (IngestOps.listDataFiles(spark, data) -- reachable).foreach { rel =>
       IngestOps.deleteOrThrow(fs, new org.apache.hadoop.fs.Path(s"$data/$rel"),
@@ -1479,10 +1529,10 @@ object LakeOps {
     // (the manifests themselves stay — history records are never
     // falsified, the snapshot is just no longer a readable target)
     val remaining = IngestOps.listDataFiles(spark, data)
-    val expired = (1 to 5).filterNot(s =>
-      liveFiles(spark, out, 1 to s).forall(remaining.contains))
+    val expired = (1 to 5).filterNot(s => live(s - 1).forall(remaining.contains))
     writeManifest(spark, out, "expired.txt", expired.map(_.toString))
-    readLive(spark, out, 1 to 5)
+    requireNotExpired(spark, out, 5)
+    scanLive(spark, out, 1 to 5, read.take(5))
       .groupBy($"day".cast("long").as("day"))
       .agg(count(lit(1)).as("n"), dsum($"value").as("sum_value"))
       .orderBy($"day")
@@ -1704,9 +1754,12 @@ object LakeOps {
   /** `branch_read` — read a table BY REF NAME: `main` (a branch at
     * snapshot 3), `audit` (a branch carrying a staged snapshot 4 main
     * readers can't see), and `v1` (a tag pinning snapshot 2). Resolving
-    * a name costs one metadata read; each ref's scan then plans only its
-    * own snapshots' files (ancestry is linear here, as in the emulation
-    * throughout). This is the consumption side of the refs surface
+    * the names costs one metadata read, and each snapshot manifest is
+    * read once; the refs' live sets nest (ancestry is linear here, as in
+    * the emulation throughout), so their union is planned as one scan
+    * that reads each row once, and a broadcast (file, ref) table built
+    * on the driver counts the row for every ref whose live set holds
+    * its file. This is the consumption side of the refs surface
     * [[wapRun]] stages on — at 100 TB, `main` vs `audit` is the
     * difference between production dashboards and the data team's
     * pre-publish validation, on one physical table. The table is
@@ -1714,13 +1767,21 @@ object LakeOps {
   def branchRead(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val out = branchesLayout(spark, dir)
-    val refs = readRefs(spark, out)
-    Seq("audit", "main", "v1").map { name =>
-      readLive(spark, out, 1 to refs(name))
-        .agg(count(lit(1)).as("n"), countDistinct($"day").as("n_days"),
-          dsum($"value").as("sum_value"))
-        .select(lit(name).as("ref"), $"n", $"n_days", $"sum_value")
-    }.reduce(_ unionByName _).orderBy($"ref")
+    val all = readRefs(spark, out)
+    val refs = Seq("audit", "main", "v1").map(n => n -> all(n))
+    val snaps = 1 to refs.map(_._2).max
+    val read = snaps.map(manifest(spark, out, _))
+    val live = prefixLive(read)
+    // (file, ref) for each ref whose live set holds the file: joined to
+    // the one scan of the union, a row counts once per such ref
+    val inRef = refs.flatMap { case (n, s) => live(s - 1).map(_ -> n) }
+    scanLive(spark, out, snaps, read, keep = inRef.map(_._1).toSet,
+      file = true)
+      .join(broadcast(inRef.toDF(FileColumn, "ref")), FileColumn)
+      .groupBy($"ref")
+      .agg(count(lit(1)).as("n"), countDistinct($"day").as("n_days"),
+        dsum($"value").as("sum_value"))
+      .orderBy($"ref")
   }
 
   /** `changelog_diff` — change data feed between two table states: the

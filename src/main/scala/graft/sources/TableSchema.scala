@@ -64,15 +64,17 @@ private[graft] case class TableSchema(data: StructType,
 
   /** `df`, scanned under this schema, projected by field id onto `to`: a
     * field present here is cast to `to`'s type under `to`'s name, an
-    * absent one is `to`'s initial default or NULL, and a field `to`
-    * dropped is not projected. */
+    * absent one is `to`'s initial default or NULL, a field `to`
+    * dropped is not projected, and a column of `df` outside this schema
+    * (a scan's file path) is kept as it is. */
   def projectOnto(df: DataFrame, to: TableSchema): DataFrame = {
     val physical = data.flatMap(f => idOf(f).map(_ -> f.name)).toMap
     df.select(to.data.map { f =>
       idOf(f).flatMap(physical.get).map(col)
         .orElse(defaultOf(f).map(lit)).getOrElse(lit(null))
         .cast(f.dataType).as(f.name)
-    } ++ to.partition.map(f => col(f.name)): _*)
+    } ++ to.partition.map(f => col(f.name)) ++
+      df.columns.filterNot(fields.map(_.name).toSet).map(col): _*)
   }
 
   /** The Iceberg-v2 schema JSON (`schema-id` 0) of these fields. */

@@ -42,6 +42,8 @@ object Tables {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       graft.plans.TimestampPushdownRule.install(spark)
       graft.plans.RankLimitToTopKRule.install(spark)
+      graft.plans.TopKPerKeyStrategy.install(spark)
+      graft.plans.SmallSortRule.install(spark)
       // fork-free local FS (see NioLocalFileSystem); evict any cached
       // default instances so the override takes effect session-wide
       val hc = spark.sparkContext.hadoopConfiguration

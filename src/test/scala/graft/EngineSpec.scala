@@ -402,6 +402,28 @@ class EngineSpec extends SparkSpecBase {
       "ManifestEntry.footer not found")
   }
 
+  test("planner rules are installed from Tables.warmup and from nowhere " +
+      "else") {
+    // a rule or strategy that a code path installs for itself plans
+    // differently in a session that has not yet run that path
+    val ruleObject =
+      """object (\w+) extends (?:Rule\[LogicalPlan\]|SparkStrategy\b)""".r
+    val rules = mainFiles.filter(_._2.contains("package graft.plans"))
+      .flatMap { case (_, text) => ruleObject.findAllMatchIn(text).map(_.group(1)) }
+    val installs = for {
+      (file, enclosing, text) <- mainStatements
+      rule <- rules if s"\\b$rule\\.install\\(".r.findFirstIn(text).isDefined
+    } yield (rule, file, enclosing)
+    def inWarmup(i: (String, String, String)) =
+      i._2 == "Tables.scala" && i._3 == "warmup"
+    val offenders = installs.filterNot(inWarmup).map { case (r, f, e) =>
+      s"$r installed from $f ($e)" } ++
+      rules.filterNot(r => installs.exists(i => i._1 == r && inWarmup(i)))
+        .map(r => s"$r not installed from Tables.warmup")
+    assert(offenders.isEmpty, offenders.mkString("\n  ", "\n  ", ""))
+    assert(rules.contains("SmallSortRule"), s"rules found: $rules")
+  }
+
   test("main entry points are exactly Bench, Verify, DebugRun and " +
       "CommitWorker") {
     // the driver's two mains, the one dev runner, and the commit client

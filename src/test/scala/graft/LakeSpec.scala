@@ -216,6 +216,25 @@ class LakeSpec extends SparkSpecBase {
       .count() > 0, "the merged days lost their origin values")
   }
 
+  test("expire_snapshots opens each of its 5 snapshot manifests once") {
+    import scala.jdk.CollectionConverters._
+    val out = graft.sources.IngestOps.tmp("events_expire_opens")
+    sources.LakeOps.cloneTree(sources.LakeOps.expireBaseLayout(spark, sf), out)
+    spark.sparkContext.hadoopConfiguration.set("fs.opencount.impl",
+      classOf[OpenCountingFileSystem].getName)
+    OpenCountingFileSystem.opens.clear()
+    val rows = sources.LakeOps.expireAt(spark,
+      s"${OpenCountingFileSystem.Scheme}://$out").collect()
+    val opens = OpenCountingFileSystem.opens.asScala.toMap.collect {
+      case (p, n) if p.startsWith(s"$out/metadata/snap-") =>
+        p.stripPrefix(s"$out/") -> n.intValue
+    }
+    assert(opens == (1 to 5).map(n => s"metadata/snap-$n.txt" -> 1).toMap,
+      s"opened: $opens")
+    assert(rows.toSeq == sources.LakeOps.expireSnapshots(spark, sf)
+      .collect().toSeq)
+  }
+
   test("expire_snapshots is ref-aware: unreachable files are deleted, " +
       "tag-pinned files survive, and the tag still answers afterwards") {
     import spark.implicits._

@@ -5,8 +5,9 @@ import org.apache.hadoop.fs.{FSDataInputStream, Path}
 /** The local file system under the `opencount` scheme, counting the opens
   * of each path: a test that reads a tree as `opencount://<absolute path>`
   * (with `fs.opencount.impl` set to this class) sees how often each file
-  * was opened. */
-class OpenCountingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  * was opened. Its statuses are the fork-free ones the `file:` scheme
+  * lists, which also load no permission through a `file:` URI. */
+class OpenCountingFileSystem extends graft.sources.NioRawLocalFileSystem {
   override def getUri: java.net.URI = OpenCountingFileSystem.Uri
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {

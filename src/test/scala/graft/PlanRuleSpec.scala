@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** TimestampPushdownRule: the added raw-nanos conjunct must be exactly
   * equivalent (floor-division boundary cases) and must reach the parquet
-  * scan as a PushedFilter. */
+  * scan as a PushedFilter. SmallSortRule: a small global sort runs in one
+  * partition with no range exchange, and every boundary of the rule. */
 class PlanRuleSpec extends SparkSpecBase {
 
   test("boundary exactness: augmented filters keep every matching row") {
@@ -125,5 +126,123 @@ class PlanRuleSpec extends SparkSpecBase {
     val expected = ev.select(unix_micros($"ts").as("us")).filter(
       $"us" >= 1704844800000000L && $"us" <= 1705017600000000L).count()
     assert(filtered == expected)
+  }
+
+  /** `body` with the session confs `kvs` set, each restored after. */
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** A global sort of every sf0.001 lineitem, an input estimate far below
+    * the 1 MB default `coalescePartitions.minPartitionSize`. */
+  private def smallSort = {
+    import spark.implicits._
+    graft.sources.Tables.lineitem(spark, sf)
+      .select($"l_orderkey", $"l_linenumber", $"l_extendedprice")
+      .orderBy($"l_extendedprice".desc, $"l_orderkey", $"l_linenumber")
+  }
+
+  private def sinkJobs(df: org.apache.spark.sql.DataFrame): Int =
+    jobsOf(df.write.format("noop").mode("overwrite").save())
+
+  /** What a lowered gate restores: the plan of a session without the
+    * rule, the input's estimate being above 1 byte. */
+  private val belowEstimate =
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1"
+
+  test("a small global sort plans no range exchange, returns the same " +
+      "rows in the same order, and runs fewer jobs") {
+    val df = smallSort
+    val rows = df.collect()
+    val finalPlan = df.queryExecution.executedPlan.toString
+    assert(!finalPlan.contains("rangepartitioning"), finalPlan)
+    assert(planNodeNames(df.queryExecution.executedPlan)
+      .contains("CoalesceExec"), finalPlan)
+    val (kept, keptPlan) = withConf(belowEstimate) {
+      val k = smallSort
+      (k.collect(), k.queryExecution.executedPlan.toString)
+    }
+    assert(keptPlan.contains("rangepartitioning"), keptPlan)
+    assert(rows.length == graft.sources.Tables.lineitem(spark, sf).count() &&
+      rows.toSeq == kept.toSeq)
+    val jobs = sinkJobs(smallSort)
+    val keptJobs = withConf(belowEstimate)(sinkJobs(smallSort))
+    assert(jobs < keptJobs, s"rewritten $jobs jobs, range sort $keptJobs")
+  }
+
+  test("a sort whose input estimate is above minPartitionSize keeps its " +
+      "range exchange") {
+    withConf(belowEstimate) {
+      val df = smallSort
+      assert(df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
+      }.isEmpty, df.queryExecution.optimizedPlan.toString)
+      df.collect()
+      assert(df.queryExecution.executedPlan.toString
+        .contains("rangepartitioning"))
+    }
+  }
+
+  test("orderBy(...).limit(k) still plans TakeOrderedAndProject") {
+    val df = smallSort.limit(5)
+    df.collect()
+    val names = planNodeNames(df.queryExecution.executedPlan)
+    assert(names.contains("TakeOrderedAndProjectExec") &&
+      !names.contains("CoalesceExec"), names)
+  }
+
+  test("streaming plans and sessions without AQE partition coalescing " +
+      "are untouched") {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.catalyst.expressions._
+    val out = Seq(AttributeReference("x",
+      org.apache.spark.sql.types.LongType)())
+    def sorted(streaming: Boolean) = Sort(Seq(SortOrder(out.head, Ascending)),
+      global = true, LocalRelation(out, Nil, isStreaming = streaming))
+    // the same tiny sort is rewritten as a batch plan, not as a stream
+    assert(graft.plans.SmallSortRule(sorted(false)) != sorted(false))
+    assert(graft.plans.SmallSortRule(sorted(true)) == sorted(true))
+    for (off <- Seq("spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled"))
+      withConf(off -> "false") {
+        assert(graft.plans.SmallSortRule(sorted(false)) == sorted(false), off)
+        val df = smallSort
+        df.collect()
+        assert(df.queryExecution.executedPlan.toString
+          .contains("rangepartitioning"), off)
+      }
+  }
+
+  test("SmallSortRule is idempotent: a second pass leaves the optimized " +
+      "plan unchanged") {
+    val optimized = smallSort.queryExecution.optimizedPlan
+    assert(optimized.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
+    }.size == 1, optimized.toString)
+    assert(graft.plans.SmallSortRule(optimized) == optimized)
+  }
+
+  test("sf0.01 job counts: the rewritten interactive keys sink to noop in " +
+      "fewer jobs and plan no range exchange") {
+    val sf01 = sf.stripSuffix("sf0.001") + "sf0.01"
+    // (with the rule, with the gate below every estimate: as without it)
+    val expected = Map("add_cols" -> (1, 3), "explode_array" -> (1, 3),
+      "snapshot_read_attime" -> (2, 4), "agg_approx_distinct" -> (3, 5))
+    val got = expected.keys.toSeq.sorted.map { key =>
+      val q = SparkEntry.queries(key)
+      sinkJobs(q(spark, sf01)) // layouts and first-use costs outside
+      val df = q(spark, sf01)
+      val jobs = sinkJobs(df)
+      df.collect()
+      assert(!df.queryExecution.executedPlan.toString
+        .contains("rangepartitioning"), key)
+      key -> (jobs, withConf(belowEstimate)(sinkJobs(q(spark, sf01))))
+    }.toMap
+    assert(got == expected)
   }
 }
