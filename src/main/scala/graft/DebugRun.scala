@@ -4,15 +4,22 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The dev entry point (not part of the driver contract): runs the named
   * queries in order on one warm session and prints, per run, its wall
   * time and row count, then its Spark-job breakdown — job count, summed
-  * job seconds, driver-side seconds (wall minus the job sum) and the 12
+  * job seconds, driver-side seconds (wall minus the job sum), the
+  * classes Janino compiled and their compile milliseconds, and the 12
   * longest jobs by description or call site — so an optimization
   * targets the job that actually costs instead of the key's total.
+  * Each key's whole plan runs into Spark's `noop` sink, as perfbench
+  * runs it (a `count()` would drop final sorts and unneeded
+  * projections); rows come from an observation on top of the plan.
   * Naming a key N times runs it N times: a min-of-N measurement.
   * `scripts/run.sh graft.DebugRun <sfDir> <name...>` */
 object DebugRun {
@@ -60,6 +67,10 @@ object DebugRun {
         }
     })
     val queries = SparkEntry.queries
+    // classes Janino has compiled in this JVM, and their milliseconds
+    def compiled(): (Long, Double) = (
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime / 1e6)
     // DEBUG_SKEW_AQE=1: execute inside the scaled-down skew-detector
     // scope EngineSpec uses, so the final adaptive plan shows the
     // skew-split SMJ at test scale (for plan capture into PLANS.md)
@@ -71,17 +82,24 @@ object DebugRun {
       // the previous key's DEBUG_SHOW jobs are not this run's
       GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
       finished.clear()
+      val (classes0, compileMs0) = compiled()
       val t0 = System.nanoTime()
       // build ONCE: some keys run eager construction-time work (model
       // collects, lazy-checkpoint planting) that explain/show would
       // otherwise repeat per flag
       val df = scoped { queries(n)(spark, sfDir) }
-      // count() executes a DERIVED QueryExecution — in executed-plan
-      // mode run df's own collect so df.queryExecution is the one that
-      // ran (and carries the final adaptive plan)
+      // the noop write and the observation execute DERIVED
+      // QueryExecutions — in executed-plan mode run df's own collect so
+      // df.queryExecution is the one that ran (and carries the final
+      // adaptive plan)
       val cnt = scoped {
         if (sys.env.contains("DEBUG_EXECUTED")) df.collect().length.toLong
-        else df.count()
+        else {
+          val rows = Observation()
+          df.observe(rows, count(lit(1)).as("rows"))
+            .write.format("noop").mode("overwrite").save()
+          rows.get("rows").asInstanceOf[Long]
+        }
       }
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"[debug] $n%-28s $sec%8.2f s  rows=$cnt")
@@ -91,8 +109,10 @@ object DebugRun {
         finished.asScala.toSeq
       }
       val jobSec = jobs.map(_._2).sum
+      val (classes, compileMs) = compiled()
       println(f"[debug]   jobs=${jobs.size} job_s=$jobSec%.3f " +
-        f"driver_s=${sec - jobSec}%.3f")
+        f"driver_s=${sec - jobSec}%.3f compiled=${classes - classes0} " +
+        f"compile_ms=${compileMs - compileMs0}%.0f")
       jobs.sortBy(-_._2).take(12).foreach { case (d, s) =>
         println(f"[debug]   $s%8.3f s  ${d.take(90)}")
       }

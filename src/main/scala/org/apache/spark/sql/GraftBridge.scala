@@ -30,6 +30,11 @@ object GraftBridge {
   def sqlConf(spark: SparkSession): internal.SQLConf =
     spark.asInstanceOf[classic.SparkSession].sessionState.conf
 
+  /** `body` run with `spark` as the thread's active session, so
+    * `SQLConf.get` reads its conf (`withActive` is private[sql]). */
+  def withActive[T](spark: SparkSession)(body: => T): T =
+    spark.asInstanceOf[classic.SparkSession].withActive(body)
+
   /** The (pre-analysis) logical plan backing a Dataset. */
   def plan(df: Dataset[_]): catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan

@@ -424,6 +424,32 @@ class EngineSpec extends SparkSpecBase {
     assert(rules.contains("SmallSortRule"), s"rules found: $rules")
   }
 
+  test("the codegen cache is sized from Tables.warmup, by one constant, " +
+      "and from nowhere else") {
+    // CodeGenerator's cache is JVM-wide and sized once: a second site (a
+    // builder .config, an env or property read) would make its size
+    // depend on which session or process happened to start first
+    val key = """spark\.sql\.codegen\.cache\.maxEntries|CODEGEN_CACHE_MAX_ENTRIES""".r
+    val sets = mainStatements.filter(s => key.findFirstIn(s._3).isDefined)
+    val offenders = sets.collect {
+      case (f, e, _) if f != "Tables.scala" || e != "warmup" => s"$f ($e)"
+    } ++ sets.collect {
+      case (f, e, t) if """sys\.(env|props)|System\.get""".r
+          .findFirstIn(t).isDefined => s"$f ($e) reads the environment"
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n  ", "\n  ", ""))
+    assert(sets.exists(_._3.contains("CodegenCacheEntries")),
+      s"Tables.warmup does not set the cache size: $sets")
+    val constant = mainStatements.collect {
+      case ("Tables.scala", _, t) if t.contains("val CodegenCacheEntries") =>
+        t.trim
+    }
+    assert(constant.size == 1 &&
+      """final val CodegenCacheEntries = [1-9]\d*""".r
+        .findFirstIn(constant.head).isDefined,
+      s"CodegenCacheEntries is not one positive literal: $constant")
+  }
+
   test("main entry points are exactly Bench, Verify, DebugRun and " +
       "CommitWorker") {
     // the driver's two mains, the one dev runner, and the commit client
