@@ -2,6 +2,7 @@
 # Fast runner: java directly against compiled classes + /opt/spark/jars
 # (skips sbt JVM spawn). Usage: scripts/run.sh graft.Verify <args...>
 set -e
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
 CLS="$1"; shift
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -16,5 +17,5 @@ exec java $ADD_OPENS $SPARK_GRAFT_JAVA_OPTS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$CLS" "$@"

@@ -7,9 +7,10 @@
 # ALL 222 keys, writing CORRECTNESS_SF1.json.
 # Usage: scripts/sf1_oracle.sh [sf1_dir]
 set -e
-SF1="${1:-/root/repo/target/sf1}"
-OUT=/root/repo/target/verify_sf1
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
+SF1="${1:-$REPO/target/sf1}"
+OUT="$REPO/target/verify_sf1"
 rm -rf "$OUT"
-"$(dirname "$0")/run.sh" graft.Verify "$SF1" "$OUT"
-python3 "$(dirname "$0")/check_oracle.py" "$SF1" "$OUT" \
-  /root/repo/CORRECTNESS_SF1.json
+"$REPO/scripts/run.sh" graft.Verify "$SF1" "$OUT"
+python3 "$REPO/scripts/check_oracle.py" "$SF1" "$OUT" \
+  "$REPO/CORRECTNESS_SF1.json"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Parse BASELINE_QUERIES.json's flat queries map (only when its sf
@@ -122,22 +121,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pin UTC locally (not only via run.sh/-D): normalizeTs's
-      // NTZ→TimestampType cast is session-TZ-dependent, and prewarm
-      // publishes SHARED fingerprint-keyed layouts other processes read
-      .config("spark.sql.session.timeZone", "UTC")
-      // per-JVM warehouse: the catalog queries DROP/recreate managed
-      // tables, which must never race a concurrent engine process
-      .config("spark.sql.warehouse.dir",
-        graft.sources.IngestOps.tmp("warehouse"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.warmup(spark)
+    val cpus = GraftSession.envCores
+    val spark = GraftSession(cpus)
     // untimed session warmup: exercises parquet reader, shuffle machinery
     // and whole-stage codegen once so the first timed query isn't charged
     // for JVM startup
@@ -205,7 +190,7 @@ object Bench {
     // deltas never contained it.
     def floorProbe(): Double = {
       val t0 = System.nanoTime()
-      spark.range(1).repartition(cpus.toInt).count()
+      spark.range(1).repartition(cpus).count()
       (System.nanoTime() - t0) / 1e9
     }
     (1 to 3).foreach(_ => floorProbe()) // warm the probe's codegen

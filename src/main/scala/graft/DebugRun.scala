@@ -5,7 +5,7 @@ import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -27,16 +27,7 @@ object DebugRun {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        graft.sources.IngestOps.tmp("warehouse"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.warmup(spark)
+    val spark = GraftSession(8)
     // running jobs (label, start ms) by id; the current run's finished
     // jobs (label, seconds); each SQL execution's call site by id
     val started = new ConcurrentHashMap[Int, (String, Long)]

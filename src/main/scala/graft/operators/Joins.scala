@@ -366,27 +366,14 @@ object Joins {
     * numbers change, not the plan shape) and restore the session conf
     * afterwards. */
   private[graft] def withSkewAqeConf[T](spark: SparkSession)(body: => T): T =
-    // serialized with every other session-conf scope: interleaved
-    // save/restore from two threads would strand forceOptimizeSkewedJoin
-    // and the 1k thresholds on the session, force-splitting every later
-    // sort-merge join in the JVM
-    graft.sources.IngestOps.sessionConfLock.synchronized {
-    val tuned = Seq(
+    graft.GraftSession.withConf(spark,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "0.5",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
         "1k",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
-      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")
-    val saved = tuned.map { case (k, _) =>
-      k -> spark.conf.getOption(k) }
-    tuned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-    }
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")(body)
 
   /** Full outer join: customers vs active event users, null-safe key. */
   def joinFullOuter(spark: SparkSession, dir: String): DataFrame = {

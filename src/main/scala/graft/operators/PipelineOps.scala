@@ -108,20 +108,19 @@ object PipelineOps {
     * `f`, restored after — the sliver-sized dedup-graph stages where
     * fixed per-task overhead dominates. */
   private def withReducedShuffle[T](spark: SparkSession, n: Int = 8)(
-      f: => T): T =
+      f: => T): T = {
     // shuffle-partition tuning has no per-plan knob, so the session
-    // conf must flip — serialized through the shared lock so two scopes
-    // can't interleave their save/restore and strand the session at 8
-    // (the conf-race class the lake layer's per-write option fixed).
-    // Residual: unrelated planning on OTHER threads during the scope
-    // still sees 8 — acceptable for these sliver-sized graph stages,
-    // and AQE re-coalesces partitions at runtime regardless.
-    graft.sources.IngestOps.sessionConfLock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, math.min(n, prev.toInt).toString)
-      try f finally spark.conf.set(key, prev)
+    // conf must flip. Residual: unrelated planning on OTHER threads
+    // during the scope still sees the reduced value — acceptable for
+    // these sliver-sized graph stages, and AQE re-coalesces partitions
+    // at runtime regardless. The outer scope holds the conf lock while
+    // the current value is read.
+    val key = "spark.sql.shuffle.partitions"
+    graft.GraftSession.withConf(spark) {
+      val reduced = math.min(n, spark.conf.get(key).toInt)
+      graft.GraftSession.withConf(spark, key -> reduced.toString)(f)
     }
+  }
 
   private def connectedComponentsLoop(nodes: DataFrame,
       edges: DataFrame): DataFrame = {

@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-
 /** Cross-process commit client: one OS process = one independent
   * writer driving [[LakeOps.appendCommit]]'s optimistic retry loop
   * against a shared table root. `commit_conflict_retry` proves the CAS
@@ -21,16 +19,7 @@ object CommitWorker {
   def main(args: Array[String]): Unit = {
     val Array(root, sfDir, dayS, readyFile, goFile) = args.take(5)
     val day = dayS.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        IngestOps.tmp(s"warehouse_worker_$day"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.warmup(spark)
+    val spark = graft.GraftSession(2)
     import spark.implicits._
     val slice = IngestOps.eventsWithParts(spark, sfDir)
       .filter($"day" === day)

@@ -23,6 +23,10 @@ import graft.operators.{dec, dsum}
   */
 object IngestOps {
 
+  /** Where the shared layouts and every JVM's scratch live: the one
+    * spelling of the path (perfbench's build rewrites this literal). */
+  private val sharedRoot = "/root/repo/target/tmp"
+
   /** Per-JVM scratch root: concurrent engine processes (an `sbt test`
     * beside a running bench) previously shared fixed per-query scratch
     * paths and could trash each other's files mid-read. Each JVM now
@@ -32,7 +36,7 @@ object IngestOps {
     * here because every per-query write is Overwrite-mode and stream
     * checkpoints are cleared at query start. */
   private[graft] lazy val scratchRoot: String = {
-    val root = new java.io.File("/root/repo/target/tmp")
+    val root = new java.io.File(sharedRoot)
     root.mkdirs()
     val mine = java.lang.ProcessHandle.current().pid()
     Option(root.listFiles()).getOrElse(Array.empty[java.io.File]).foreach { f =>
@@ -55,7 +59,7 @@ object IngestOps {
     * content-fingerprint-keyed and published atomically by
     * [[buildShared]], so sharing is safe and saves every process
     * rebuilding ingest-time artifacts. */
-  private[graft] def shared(name: String) = s"/root/repo/target/tmp/$name"
+  private[graft] def shared(name: String) = s"$sharedRoot/$name"
 
   /** Where the layout `name` of the corpus at `dir` lives: [[shared]],
     * unless the corpus lies under this JVM's [[scratchRoot]] — it dies
@@ -157,12 +161,6 @@ object IngestOps {
     }
     out
   }
-
-  /** Serializes session-conf save/set/restore scopes (shuffle-partition
-    * tuning has no per-plan knob): two interleaved scopes would strand
-    * the session at the reduced value. Reentrant, so nested scopes on
-    * one thread are fine. */
-  private[graft] val sessionConfLock = new Object
 
   private[graft] def pidAlive(p: Long): Boolean = {
     val h = java.lang.ProcessHandle.of(p)

@@ -58,35 +58,33 @@ object Tables {
     * and `CodeGenerator` is initialized at once, with this session
     * active. A JVM whose first code generation ran before this call
     * already has its cache and keeps the default size. */
-  def warmup(spark: SparkSession = null): Unit = {
+  def warmup(spark: SparkSession): Unit = {
     Class.forName(
       "org.apache.spark.sql.catalyst.util.CollationAwareUTF8String")
-    if (spark != null) {
-      GraftBridge.sqlConf(spark).setConfString(
-        "spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
-      GraftBridge.withActive(spark)(Class.forName(
-        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      graft.plans.TimestampPushdownRule.install(spark)
-      graft.plans.RankLimitToTopKRule.install(spark)
-      graft.plans.TopKPerKeyStrategy.install(spark)
-      graft.plans.SmallSortRule.install(spark)
-      // fork-free local FS (see NioLocalFileSystem); evict any cached
-      // default instances so the override takes effect session-wide
-      val hc = spark.sparkContext.hadoopConfiguration
-      if (hc.get("fs.file.impl") == null) {
-        hc.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
-        org.apache.hadoop.fs.FileSystem.closeAll()
-      }
-      // streaming checkpoint/state commits default to the FileContext
-      // API, which bypasses fs.file.impl and forks a chmod per created
-      // file on libhadoop-less local FS — 0.7-0.9 s of commitTimeMs per
-      // micro-batch on KB-sized state. The FileSystem-based manager
-      // routes through NioLocalFileSystem like everything else.
-      spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
+    GraftBridge.sqlConf(spark).setConfString(
+      "spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    GraftBridge.withActive(spark)(Class.forName(
+      "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"))
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.plans.TimestampPushdownRule.install(spark)
+    graft.plans.RankLimitToTopKRule.install(spark)
+    graft.plans.TopKPerKeyStrategy.install(spark)
+    graft.plans.SmallSortRule.install(spark)
+    // fork-free local FS (see NioLocalFileSystem); evict any cached
+    // default instances so the override takes effect session-wide
+    val hc = spark.sparkContext.hadoopConfiguration
+    if (hc.get("fs.file.impl") == null) {
+      hc.set("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      org.apache.hadoop.fs.FileSystem.closeAll()
     }
+    // streaming checkpoint/state commits default to the FileContext
+    // API, which bypasses fs.file.impl and forks a chmod per created
+    // file on libhadoop-less local FS — 0.7-0.9 s of commitTimeMs per
+    // micro-batch on KB-sized state. The FileSystem-based manager
+    // routes through NioLocalFileSystem like everything else.
+    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      "org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager")
   }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =

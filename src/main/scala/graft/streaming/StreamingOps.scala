@@ -245,52 +245,33 @@ object StreamingOps {
 
   /** Run `body` with a reduced shuffle-partition count: streaming state
     * stores are per shuffle partition, and for these single-micro-batch
-    * drains 8 stores beat 32 on fixed per-store overhead. Restores the
-    * session conf afterwards. */
+    * drains 8 stores beat 32 on fixed per-store overhead. */
   private def withStatePartitions[T](spark: SparkSession, n: Int)
       (body: => T): T =
-    // serialized with every other session-conf scope (IngestOps.
-    // sessionConfLock): interleaved save/restore would strand the
-    // session at the reduced value for all later queries
-    graft.sources.IngestOps.sessionConfLock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, n.toString)
-      try body finally spark.conf.set(key, prev)
-    }
+    graft.GraftSession.withConf(spark,
+      "spark.sql.shuffle.partitions" -> n.toString)(body)
 
   /** Run `body` with the RocksDB state store provider (required by
     * `transformWithState`; the default HDFSBacked provider does not
-    * implement the v2 state primitives). Scoped and restored like
-    * [[withStatePartitions]] — serialized under the shared
-    * session-conf lock so a concurrent key never observes the
-    * swapped provider. */
+    * implement the v2 state primitives). */
   private def withRocksDbStateStore[T](spark: SparkSession)
       (body: => T): T =
-    graft.sources.IngestOps.sessionConfLock.synchronized {
+    graft.GraftSession.withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming." +
+          "state.RocksDBStateStoreProvider"),
       // changelog checkpointing is the production RocksDB mode (and
       // the 100 TB one): a commit uploads the batch's DELTA as a small
       // changelog file; full snapshots move to async maintenance.
       // Without it every commit uploads the whole RocksDB snapshot
       // inline (~0.4 s/store even for KB-sized state).
-      val settings = Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider"),
-        "spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled" -> "true",
-        // row-count tracking forces a get() before every put; these
-        // drains write each key once, so the audit costs more than it
-        // tells (the metric it feeds is numRowsTotal, not correctness)
-        "spark.sql.streaming.stateStore.rocksdb." +
-          "trackTotalNumberOfRows" -> "false")
-      val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
-      settings.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
+      "spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled" -> "true",
+      // row-count tracking forces a get() before every put; these
+      // drains write each key once, so the audit costs more than it
+      // tells (the metric it feeds is numRowsTotal, not correctness)
+      "spark.sql.streaming.stateStore.rocksdb." +
+        "trackTotalNumberOfRows" -> "false")(body)
 
   /** Run `body` without the watermark-advance NO-DATA micro-batch.
     * After the data batch, Spark runs one extra empty batch purely to
@@ -301,12 +282,9 @@ object StreamingOps {
     * harness skips it. Keys whose emission IS eviction (late_drop's
     * append-mode window agg) must NOT use this. */
   private def withoutNoDataBatches[T](spark: SparkSession)
-      (body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, prev)
-  }
+      (body: => T): T =
+    graft.GraftSession.withConf(spark,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
 
   /** The batch schema of the events corpus file (readStream.schema(...)
     * is mandatory for file sources), from its footer with no job. */

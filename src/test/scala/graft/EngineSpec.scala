@@ -450,6 +450,33 @@ class EngineSpec extends SparkSpecBase {
       s"CodegenCacheEntries is not one positive literal: $constant")
   }
 
+  test("sessions are built by GraftSession and by nothing else") {
+    // a hand-built session drifts from the others on master, partitions,
+    // time zone, warehouse or warmup, and plans or reads differently
+    val builders = mainStatements.filter(s =>
+      """SparkSession\s*\.\s*builder\b""".r.findFirstIn(s._3).isDefined)
+    val offenders = builders.collect {
+      case (f, e, _) if f != "GraftSession.scala" => s"$f ($e)"
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n  ", "\n  ", ""))
+    assert(builders.size == 1, s"session builders in GraftSession: $builders")
+  }
+
+  test("session confs are set only by GraftSession.withConf and " +
+      "Tables.warmup") {
+    // a save/set/restore copy outside withConf's lock can interleave with
+    // another scope and strand the session at an overridden value
+    val sets = mainStatements.filter(s =>
+      """\bconf\s*\.\s*(set|unset)\(""".r.findFirstIn(s._3).isDefined)
+    val offenders = sets.collect {
+      case (f, e, t) if !(f == "GraftSession.scala" && e == "withConf") &&
+          !(f == "Tables.scala" && e == "warmup") =>
+        s"$f ($e): ${t.trim.take(120)}"
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n  ", "\n  ", ""))
+    assert(sets.exists(_._2 == "withConf"), "GraftSession.withConf not found")
+  }
+
   test("main entry points are exactly Bench, Verify, DebugRun and " +
       "CommitWorker") {
     // the driver's two mains, the one dev runner, and the commit client

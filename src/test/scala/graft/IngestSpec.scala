@@ -794,17 +794,12 @@ class IngestSpec extends SparkSpecBase {
     //    which has no such hole)
     val keys = Seq("spark.sql.parquet.fieldId.read.enabled" -> "true",
       "spark.sql.parquet.enableVectorizedReader" -> "false")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConf(spark, keys: _*) {
       val native = spark.read.schema(readSchema).parquet(s"$solo/v1")
         .orderBy($"event_id").collect()
       assert(native.map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
         .toSeq == Seq((10L, 1.5, 77L), (11L, 2.5, 78L)),
         "native fieldId.read resolution mis-bound the renamed columns")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -833,18 +828,13 @@ class IngestSpec extends SparkSpecBase {
       .foreach(graft.sources.LakeOps.appendCommit(spark, solo, _))
     val keys = Seq("spark.sql.parquet.fieldId.read.enabled" -> "true",
       "spark.sql.parquet.enableVectorizedReader" -> "true")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConf(spark, keys: _*) {
       val bound = graft.sources.LakeOps.readCurrent(spark, solo)
         .select($"event_id", $"b", $"a").orderBy($"event_id").collect()
       assert(bound.map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
         .toSeq == Seq((10L, 1.5, 77L), (11L, 2.5, 78L), (12L, 3.5, 79L)),
         "the engine read mis-bound under vectorized fieldId.read session " +
           "conf — era reads must resolve by the committed record's ids")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -128,16 +128,6 @@ class PlanRuleSpec extends SparkSpecBase {
     assert(filtered == expected)
   }
 
-  /** `body` with the session confs `kvs` set, each restored after. */
-  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
-    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** A global sort of every sf0.001 lineitem, an input estimate far below
     * the 1 MB default `coalescePartitions.minPartitionSize`. */
   private def smallSort = {
@@ -163,7 +153,7 @@ class PlanRuleSpec extends SparkSpecBase {
     assert(!finalPlan.contains("rangepartitioning"), finalPlan)
     assert(planNodeNames(df.queryExecution.executedPlan)
       .contains("CoalesceExec"), finalPlan)
-    val (kept, keptPlan) = withConf(belowEstimate) {
+    val (kept, keptPlan) = GraftSession.withConf(spark, belowEstimate) {
       val k = smallSort
       (k.collect(), k.queryExecution.executedPlan.toString)
     }
@@ -171,13 +161,14 @@ class PlanRuleSpec extends SparkSpecBase {
     assert(rows.length == graft.sources.Tables.lineitem(spark, sf).count() &&
       rows.toSeq == kept.toSeq)
     val jobs = sinkJobs(smallSort)
-    val keptJobs = withConf(belowEstimate)(sinkJobs(smallSort))
+    val keptJobs =
+      GraftSession.withConf(spark, belowEstimate)(sinkJobs(smallSort))
     assert(jobs < keptJobs, s"rewritten $jobs jobs, range sort $keptJobs")
   }
 
   test("a sort whose input estimate is above minPartitionSize keeps its " +
       "range exchange") {
-    withConf(belowEstimate) {
+    GraftSession.withConf(spark, belowEstimate) {
       val df = smallSort
       assert(df.queryExecution.optimizedPlan.collect {
         case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
@@ -209,7 +200,7 @@ class PlanRuleSpec extends SparkSpecBase {
     assert(graft.plans.SmallSortRule(sorted(true)) == sorted(true))
     for (off <- Seq("spark.sql.adaptive.enabled",
         "spark.sql.adaptive.coalescePartitions.enabled"))
-      withConf(off -> "false") {
+      GraftSession.withConf(spark, off -> "false") {
         assert(graft.plans.SmallSortRule(sorted(false)) == sorted(false), off)
         val df = smallSort
         df.collect()
@@ -241,7 +232,8 @@ class PlanRuleSpec extends SparkSpecBase {
       df.collect()
       assert(!df.queryExecution.executedPlan.toString
         .contains("rangepartitioning"), key)
-      key -> (jobs, withConf(belowEstimate)(sinkJobs(q(spark, sf01))))
+      key -> (jobs, GraftSession.withConf(spark, belowEstimate)(
+        sinkJobs(q(spark, sf01))))
     }.toMap
     assert(got == expected)
   }

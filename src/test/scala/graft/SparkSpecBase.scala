@@ -57,19 +57,5 @@ trait SparkSpecBase extends AnyFunSuite {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // per-JVM warehouse: the catalog queries DROP/recreate managed
-      // tables, which must never race a concurrent engine process
-      .config("spark.sql.warehouse.dir",
-        graft.sources.IngestOps.tmp("warehouse"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.warmup(s)
-    s
-  }
+  lazy val session: SparkSession = GraftSession(4)
 }

@@ -57,9 +57,7 @@ class TwsStateSpec extends SparkSpecBase {
           "state.RocksDBStateStoreProvider"),
       "spark.sql.streaming.stateStore.rocksdb." +
         "changelogCheckpointing.enabled" -> "true")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConf(spark, confs: _*) { try {
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       val q = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(src)
@@ -82,13 +80,7 @@ class TwsStateSpec extends SparkSpecBase {
       val u2 = sink.filter($"user_id" === 2L).collect().toSeq.map(r =>
         (r.getLong(1), r.getLong(2), r.getDouble(3)))
       assert(u2 == Seq((1L, 1L, 1.0)))
-    } finally {
-      spark.catalog.dropTempView("tws_spec")
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
+    } finally spark.catalog.dropTempView("tws_spec") }
   }
 
   test("stream_tws_timers: emitted = batch sessionization cut at the " +
