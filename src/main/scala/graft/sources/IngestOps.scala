@@ -23,9 +23,20 @@ import graft.operators.{dec, dsum}
   */
 object IngestOps {
 
-  /** Where the shared layouts and every JVM's scratch live: the one
-    * spelling of the path (perfbench's build rewrites this literal). */
-  private val sharedRoot = "/root/repo/target/tmp"
+  /** Where the shared layouts and every JVM's scratch live. The literal
+    * is the one spelling of the path, a placeholder that perfbench's
+    * build rewrites to a dir of its own; left as is, it resolves to
+    * `tmp` in the build's `target` dir (the compiled classes or jar sit
+    * in `target/scala-2.13/`), i.e. `<repo>/target/tmp`. */
+  private val sharedRoot: String = {
+    val spelled = "/REPO_ROOT/target/tmp"
+    if (!spelled.startsWith("/REPO_ROOT/")) spelled
+    else {
+      val code = new java.io.File(
+        getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+      new java.io.File(code.getParentFile.getParentFile, "tmp").getPath
+    }
+  }
 
   /** Per-JVM scratch root: concurrent engine processes (an `sbt test`
     * beside a running bench) previously shared fixed per-query scratch
